@@ -231,13 +231,14 @@ object Bench {
       } catch { case _: Throwable => false } // detail is best-effort; the line must print
     val line =
       s"""{$core${if (wroteDetail) s""","detail_file":${jstr(detailPath)}""" else ""}}"""
-    // Belt-and-braces copy of the EXACT stdout line at a FIXED path
-    // (r18 verdict task 2): if a launcher ever mangles stdout again the
-    // line is still recoverable verbatim. Fixed (not per-run) by
-    // design — it is "the last bench run on this box", not an archive.
+    // Belt-and-braces copy of the EXACT stdout line at a fixed path
+    // inside the build tree (r18 verdict task 2): if a launcher ever
+    // mangles stdout again the line is still recoverable verbatim. Fixed
+    // (not per-run) by design — it is "the last bench run of this
+    // checkout", not an archive; SPARK_GRAFT_BENCH_LINE overrides it.
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_LINE",
-        "/tmp/graft_bench_line.json")), (line + "\n").getBytes("UTF-8"))
+        "target/graft_bench_line.json")), (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // the mirror is best-effort too
     println(line)
   }

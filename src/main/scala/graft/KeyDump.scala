@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Codegen-kernel microbench for the SRP keying stage (part of the
   * measurement protocol, next to [[BenchOne]]/[[ScaleUp]]/[[Analyze]]):
-  * times `SimilarityOps.srpKeyedGrown` at pinned (planes, tables)
-  * widths over the SAME input slice — independent of corpus size — and
-  * prints per-stage generated-code sizes and janino bytecode stats.
-  * This is the tool that isolated the never-JIT cliff: under Spark's
-  * default `hugeMethodLimit=65535` the wide-literal keying stage
-  * compiles to a single method over HotSpot's 8000-bytecode JIT
-  * ceiling and runs as interpreted bytecode forever (SCALE.md
-  * "Round-16: the hugeMethodLimit evidence").
+  * times `SimilarityOps.srpKeyed` on the grown `SrpStride` layout at
+  * pinned (planes, tables) widths over the SAME input slice —
+  * independent of corpus size — and prints per-stage generated-code
+  * sizes and janino bytecode stats, the numbers that show whether the
+  * keying method stays under HotSpot's 8000-bytecode JIT ceiling
+  * (SCALE.md "Round-16: the hugeMethodLimit evidence" and the r19
+  * KeyDump rows).
   *
   *   sbt "runMain graft.KeyDump /tmp/sf16x/embeddings.parquet 20000 12:16 13:18 14:20"
   *
@@ -52,7 +51,8 @@ object KeyDump {
       .where(col("vec_id") < rowCap)
     e.count()
     for ((p, t) <- widths) {
-      val keyed = graft.operators.SimilarityOps.srpKeyedGrown(e, p, t, dims = 64)
+      val keyed = graft.operators.SimilarityOps
+        .srpKeyed(e, p, t, dims = 64, stride = graft.operators.SimilarityOps.SrpStride)
         .select(count(col("bk")))
       val codes = org.apache.spark.sql.execution.debug
         .codegenStringSeq(keyed.queryExecution.executedPlan)

@@ -15,37 +15,30 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * generated class's references array) instead of `planes` inlined
   * 64-literal `array(...)` expressions.
   *
-  * Why this exists — the r14-r18 keying shape
+  * Why a fused kernel: the r14-r18 keying expression
   * (`when(dot_product(em, array(<64 literals>)) >= 0, 1L<<pp)` folded
-  * over planes, per table) generated a WSCG projection whose single
-  * method carried every sign literal plus per-Add null-check
-  * boilerplate: 28.6-59.5 KB of bytecode at the production widths
-  * (r18 KeyDump probe), i.e. past HotSpot's 8000-byte JIT ceiling at
-  * EVERY operating point (the never-JIT window PlanLint/JitLimitGateSpec
-  * pin), past janino's 64 KB method limit at 13:18+, and ~10% slower
-  * per key than the string form it replaced. One small loop over a
-  * reference array compiles to a few hundred bytecodes regardless of
-  * width: no literals in code, no CASE WHEN chain, no per-plane
-  * re-entry of the dot-product null ladder — the keying stage JITs at
-  * any (planes, tables) the caps allow.
+  * over planes, per table) generated a WSCG method of 28.6-59.5 KB of
+  * bytecode at the production widths (r18 KeyDump probe) — past
+  * HotSpot's 8000-byte JIT ceiling at every operating point and past
+  * janino's 64 KB method limit at 13:18+. One small loop per table
+  * over a reference array keeps the keying method at 2.7-3.6 K
+  * bytecodes from 12:16 to 15:22 (it grows with tables, not with
+  * planes), so the keying stage JITs at every measured width. [[graft.operators.SimilarityOps.srpKeyed]] is its only
+  * production caller.
   *
-  * Result contract (bit-identical to the unfused tree, pinned by
-  * SrpSignBitsSpec and the oracle hashes): per plane the dot product
-  * accumulates `em[i] * sign[i]` in ascending index order in double —
-  * exactly [[DotProduct]]'s loop — and the key is the same
-  * `prefix + Σ 2^pp` sum (distinct powers of two, so `|` ≡ `+`). Null
-  * propagation matches the old tree's: a null `em`, a wrong-length
-  * `em`, or ANY null element made every per-plane `dot_product` NULL,
-  * every `when` take its 0 branch, and the key collapse to `prefix` —
-  * here those cases return `prefix` directly. NaN: Spark SQL's `>=`
-  * on doubles is NaN-AWARE (`SQLOrderingUtil.compareDoubles` — NaN
-  * compares greater than everything, so a NaN dot SET the bit in the
-  * unfused tree, as it does in DuckDB); the kernel therefore tests
-  * `!(dot < 0.0)`, which is true for NaN and for -0.0 (compareDoubles
-  * treats -0.0 == 0.0), never Java's `dot >= 0.0` (false for NaN).
-  * Float elements widen per element like DotProduct (the f32-transit
-  * contract), though production keying always runs on the pre-cast
-  * double column.
+  * Result contract (pinned by SrpSignBitsSpec's plain-Scala reference
+  * and the oracle hashes): per plane the dot product accumulates
+  * `em[i] * sign[i]` in ascending index order in double — exactly
+  * [[DotProduct]]'s loop and DuckDB's `list_inner_product` — and the
+  * key is `prefix + Σ 2^pp` (distinct powers of two, so `|` ≡ `+`). A
+  * null `em`, a wrong-length `em`, or ANY null element returns `prefix`
+  * (all sign bits 0). NaN: Spark SQL's `>=` on doubles is NaN-AWARE
+  * (`SQLOrderingUtil.compareDoubles` — NaN compares greater than
+  * everything, as in DuckDB), so a NaN dot SETS the bit; the kernel
+  * therefore tests `!(dot < 0.0)`, which is true for NaN and for -0.0,
+  * never Java's `dot >= 0.0` (false for NaN). Float elements widen per
+  * element like DotProduct, though production keying always runs on
+  * the pre-cast double column.
   */
 case class SrpSignBits(
     child: Expression,
@@ -64,8 +57,7 @@ case class SrpSignBits(
 
   override def dataType: DataType = LongType
 
-  // never null: every malformed input maps to `prefix` (all sign bits
-  // 0), exactly where the unfused tree's null ladder landed it
+  // never null: every malformed input maps to `prefix` (all sign bits 0)
   override def nullable: Boolean = false
 
   private def isFloatArray: Boolean = child.dataType match {

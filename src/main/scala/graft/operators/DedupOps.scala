@@ -198,54 +198,15 @@ object DedupOps {
     // aggregates 24.5M pairs into 18.5M groups (key width dominates)
     // while this aggregates a few hundred k into a few k (stage count
     // dominates).
-    if (!jaccardPackKey) {
-      inv.as("a").hint("shuffle_hash").join(inv.as("b"),
-          col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-        .agg(count(lit(1)).as("inter"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-        .where(col("jaccard") >= minJ)
-    } else {
-      // r19 PROBE (verdict task 6, guide §2.3 narrower keys): pack the
-      // carried (doc_id, n_sh) pair into ONE long — doc_id << 20 | n_sh
-      // — so the inverted-index rows shuffle as (pk, sg) instead of
-      // (doc_id, n_sh, sg) and, more importantly, the PAIR aggregate
-      // (whose partial step collapses only ~3% at sf0.1, so its
-      // exchange carries nearly the full 1.27M-pair multiset — Analyze:
-      // dataSize 59 MB) groups by 2 longs instead of 4 columns:
-      // UnsafeRow 48 → 32 B per pair row. pk_a < pk_b ⟺ doc_a < doc_b
-      // because doc_id owns the high bits and equal docs pack equal
-      // pks. Caps guarded LOUDLY: n_sh < 2^20 (a 1M-shingle document),
-      // doc_id < 2^43 (8.8e12 docs) — overflow raises, never corrupts.
-      val pk = when(col("doc_id") < lit(1L << 43) && col("n_sh") < lit(1 << 20),
-        shiftleft(col("doc_id"), 20) + col("n_sh"))
-        .otherwise(raise_error(concat(lit("jaccardPairs packed-key overflow: doc_id="),
-          col("doc_id"), lit(" n_sh="), col("n_sh"))).cast("long"))
-      val pinv = inv.select(pk.as("pk"), col("sg"))
-      pinv.as("a").hint("shuffle_hash").join(pinv.as("b"),
-          col("a.sg") === col("b.sg") && col("a.pk") < col("b.pk"))
-        .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
-        .agg(count(lit(1)).as("inter"))
-        .select(
-          shiftrightunsigned(col("pa"), 20).as("doc_a"),
-          shiftrightunsigned(col("pb"), 20).as("doc_b"),
-          (col("inter").cast("double") /
-            (col("pa").bitwiseAND(lit((1L << 20) - 1)) +
-              col("pb").bitwiseAND(lit((1L << 20) - 1)) - col("inter"))).as("jaccard"))
-        .where(col("jaccard") >= minJ)
-    }
+    inv.as("a").hint("shuffle_hash").join(inv.as("b"),
+        col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
+      .agg(count(lit(1)).as("inter"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
+      .where(col("jaccard") >= minJ)
   }
-
-  /** True when [[jaccardPairs]] should pack (doc_id, n_sh) into one
-    * long shuffle/group key — the r19 measurement probe leg
-    * (-Dgraft.dedup.packkey=1 / SPARK_GRAFT_DEDUP_PACKKEY=1).
-    */
-  private[graft] def jaccardPackKey: Boolean =
-    sys.props.get("graft.dedup.packkey")
-      .orElse(sys.env.get("SPARK_GRAFT_DEDUP_PACKKEY"))
-      .contains("1")
 
   /** [[jaccardPairs]] with a HOT-GRAM CAP: grams whose document
     * frequency exceeds `maxDf` are dropped from every document's

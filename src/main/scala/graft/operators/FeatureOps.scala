@@ -172,7 +172,6 @@ object FeatureOps {
         val e = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), _.cast("double")).as("em"))
-        val n = e.count()
         // labels ride the keyed frame and the cosine evaluates in the
         // bucket join, where both vectors are co-located — the r14
         // restructure shared with annTopKPortableGrown (the r13 shuffle
@@ -186,9 +185,7 @@ object FeatureOps {
         // entry: that single bucket-key exchange (the em column rides
         // it exactly once) plus the bounded parallelized() round-robin
         // are the deliberate array shuffles this query carries.
-        val keyed = SimilarityOps.srpKeyedGrown(SimilarityOps.parallelized(e),
-          SimilarityOps.srpGrownPlanes(n), SimilarityOps.srpGrownTables(n),
-          dims = 64)
+        val keyed = SimilarityOps.SrpGrown.keyed(e, dims = 64)
         val sc = keyed.as("a").hint("merge").join(keyed.as("b"),
             col("a.bk") === col("b.bk") && col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("anchor"), col("a.label").as("la"),

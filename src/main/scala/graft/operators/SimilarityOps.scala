@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
-import graft.functions.{CosineSimilarity, DotProduct}
+import graft.functions.{CosineSimilarity, SrpSignBits}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,55 +114,11 @@ object SimilarityOps {
   def shufflesAreArrayFree(df: DataFrame): Boolean =
     !graft.PlanLint.anyWideShuffle(df.queryExecution.executedPlan)
 
-  /** Random-hyperplane (SRP) bucket key: `planes` sign bits, each from a
-    * deterministic pseudo-random hyperplane. Plane p's component for
-    * dimension d is ±1 derived from xxhash64("p:d") — reproducible, no
-    * stored model. Vectors in the same bucket are ANN candidates.
-    */
-  def srpKey(em: Column, planes: Int, dims: Int, planeOffset: Int = 0): Column = {
-    val bits = (planeOffset until planeOffset + planes).map { p =>
-      // sign(sum_d em[d] * s_pd), s_pd in {-1,+1}
-      val proj = aggregate(
-        zip_with(em, signArray(p, dims), (x, sgn) => x * sgn),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1)).otherwise(lit(0)).cast("string")
-    }
-    concat(bits: _*)
-  }
-
-  /** ±1 pseudo-random sign vector for plane `p` (deterministic). */
-  private def signArray(p: Int, dims: Int): Column =
-    transform(sequence(lit(0), lit(dims - 1)),
-      d => when(pmod(xxhash64(concat(lit(s"$p:"), d.cast("string"))), lit(2)) === 0, lit(1.0))
-        .otherwise(lit(-1.0)))
-
-  /** ANN top-k: SRP-bucketed candidate join, exact cosine inside buckets.
-    * Multi-probe via `tables` independent hash tables raises recall.
-    */
-  def annTopK(d: DataFrame, k: Int, planes: Int, tables: Int, dims: Int): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
-    val keyed = d.select(col("vec_id"), col("em"),
-      explode(array((0 until tables).map(t =>
-        // each table gets its OWN plane set (offset t*planes) — otherwise
-        // all tables hash identically and multi-probe buys nothing
-        concat(lit(s"$t#"), srpKey(col("em"), planes, dims, t * planes))): _*)).as("bk"))
-    val cands = keyed.as("a").join(keyed.as("b"),
-        col("a.bk") === col("b.bk") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("qid"), col("b.vec_id").as("vec_id"),
-        col("a.em").as("qe"), col("b.em").as("ce"))
-      .dropDuplicates("qid", "vec_id")
-    val scored = cands.select(col("qid"), col("vec_id"),
-      CosineSimilarity.cosine_sim("qe", "ce").as("score"))
-    val w = Window.partitionBy("qid").orderBy(desc("score"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long")).where(col("rn") <= k)
-  }
-
   /** Deterministic Rademacher ±1 sign vector for portable-SRP plane
     * `plane`: sign of dim d is the parity of MD5("srp:plane:d")'s first
     * byte. Computed at plan-BUILD time and inlined as literals into both
     * the Spark plan and the DuckDB oracle SQL, so the two engines bucket
-    * bit-identically with zero runtime hashing (unlike [[srpKey]]'s
-    * xxhash64, which DuckDB cannot replicate).
+    * bit-identically with zero runtime hashing.
     */
   def srpSigns(plane: Int, dims: Int): Seq[Double] =
     (0 until dims).map { d =>
@@ -176,14 +132,14 @@ object SimilarityOps {
     * is a candidate iff it collides in ANY table. The join is a bucket
     * EQUI-join — N·tables rows shuffle, never the N² row product of the
     * all-pairs form (which survives only as the ScalaTest truth side).
-    * Projections use the codegen [[DotProduct]] kernel, bit-identical to
-    * DuckDB `list_inner_product`, so the oracle reproduces the buckets
-    * exactly. At 100 TB, `planes` grows with log(n) to keep buckets
-    * bounded; at the test SFs, 3×16 measures recall ≥ 0.95 vs exact
-    * truth at cosine ≥ 0.4 (1.0 at sf0.01).
+    * Keys come from [[srpKeyed]], whose per-plane dot products are
+    * bit-identical to DuckDB `list_inner_product`, so the oracle
+    * reproduces the buckets exactly. At 100 TB, `planes` grows with
+    * log(n) to keep buckets bounded; at the test SFs, 3×16 measures
+    * recall ≥ 0.95 vs exact truth at cosine ≥ 0.4 (1.0 at sf0.01).
     */
   def srpCandidatePairs(e: DataFrame, planes: Int, tables: Int, dims: Int): DataFrame = {
-    val keyed = srpKeyed(e, planes, tables, dims)
+    val keyed = srpKeyed(e, planes, tables, dims, stride = planes)
     keyed.as("a").join(keyed.as("b"),
         col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
@@ -202,7 +158,7 @@ object SimilarityOps {
   def srpPairsAbove(e: DataFrame, planes: Int, tables: Int, dims: Int,
       thresh: Double): DataFrame = {
     CosineSimilarity.register(e.sparkSession)
-    val keyed = srpKeyed(e, planes, tables, dims)
+    val keyed = srpKeyed(e, planes, tables, dims, stride = planes)
     keyed.as("a").join(keyed.as("b"),
         col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id") &&
           CosineSimilarity.cosine_sim("a.em", "b.em") >= thresh)
@@ -301,189 +257,101 @@ object SimilarityOps {
     * round-robin exchange exists only where it is trivially small by
     * construction (few partitions ⇒ bounded bytes).
     */
-  private[operators] def parallelized(df: DataFrame): DataFrame = {
+  private def parallelized(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** True when the SRP bucket exchange should carry the em column as
-    * float64 — the measurement CONTROL leg. Default is the float32
-    * transit ([[srpKeyedGrown]] scaladoc); sys-prop first so a spec can
-    * flip it inside one JVM, env for separate-JVM wave legs.
-    */
-  private[graft] def srpTransitF64: Boolean =
-    sys.props.get("graft.srp.transit")
-      .orElse(sys.env.get("SPARK_GRAFT_SRP_TRANSIT"))
-      .contains("f64")
-
-  /** True when the SRP keying should use the r14-r18 unfused
-    * CASE-WHEN-per-plane expression tree — the measurement CONTROL leg
-    * for the r19 fused [[graft.functions.SrpSignBits]] kernel (same
-    * keys by construction AND by SrpSignBitsSpec's bit-parity pin).
-    * Sys-prop first so a spec can flip it inside one JVM, env for
-    * separate-JVM wave legs.
-    */
-  private[graft] def srpKernelCaseWhen: Boolean =
-    sys.props.get("graft.srp.kernel")
-      .orElse(sys.env.get("SPARK_GRAFT_SRP_KERNEL"))
-      .contains("casewhen")
-
-  /** [[srpKeyed]] on the GROWN key layout: plane indices on the fixed
-    * [[SrpStride]]-per-table stride, so keys of any adaptive
-    * (planes, tables) pair agree with the oracle's substring cut.
+  /** (input columns, `em` as array<float>, bk) with one row per (vector,
+    * hash table): the one SRP keying path. Table t's bit pp reads sign
+    * vector t·`stride`+pp ([[srpSigns]]), so keys agree with the sign
+    * literals the layout's oracle inlines: the fixed 3×16 forms pass
+    * stride = planes, the cap-12 witnesses [[SrpMaxPlanes]], the grown
+    * forms [[SrpStride]].
     *
-    * Since r17 the output `em` is `array<float>` — the FLOAT32 TRANSIT.
-    * SCALE.md's third-decade decomposition isolated the grown family's
-    * only locally spill-bound cost as the N·tables float64-array
-    * bucket-key exchange sort (16.6 GB shuffle / 29.5 GB spill at 1.28M
-    * vectors); the embeddings table stores `list<float>` on disk and
-    * the scan merely WIDENS it to double, so casting back to float for
-    * the exchange is the identity round-trip on every value the engine
-    * ever ships (double→float→double is exact for float-originated
-    * doubles) and halves the payload of the one spill-bound term. The
-    * SRP sign bits are still computed from the double column BEFORE the
-    * cast (same buckets by construction, not just by data), and
+    * The key is ONE BIGINT — table id in the high bits (<<40), sign bits
+    * in the low 40 — computed per table by the fused
+    * [[graft.functions.SrpSignBits]] kernel. The oracles build
+    * `'0'/'1'` string keys instead; (table, sign bits) → key is a
+    * bijection in both encodings and results depend only on bucket
+    * EQUALITY, so every candidate set, score and oracle hash is the same
+    * by construction. What the long key buys is the physics of the one
+    * spill-bound term, the N·tables bucket exchange and its SMJ sort: 8
+    * fixed bytes per UnsafeRow instead of a padded string, and a pure
+    * 8-byte-prefix radix sort (OPTIMIZATION_r18.md). The kernel loops
+    * over a reference-object sign matrix, so its generated method stays
+    * at 2.7-3.6 K bytecodes and JITs from 12:16 to 15:22 (SCALE.md r19
+    * KeyDump rows).
+    *
+    * `em` leaves as array<float> — the FLOAT32 TRANSIT. The embeddings
+    * table stores `list<float>` and the scan merely widens it to double,
+    * so double→float→double is the identity on every value the engine
+    * ships, and the cast halves the payload of the bucket exchange
+    * (SCALE.md third-decade decomposition: 16.6 GB shuffle / 29.5 GB
+    * spill at 1.28M vectors under float64). The sign bits are computed
+    * from the double column BEFORE the cast, and
     * [[graft.functions.CosineSimilarity]] widens float elements back to
-    * double in its kernel — bit-identical scores, so every oracle hash
-    * and the planted-recall gates are unchanged. For a hypothetical
-    * caller whose doubles are NOT float-originated the cast would be a
-    * documented fp32 quantization of the SCORING input (keying is
-    * unquantized either way); no such caller exists in this repo — the
-    * one embeddings source is fp32 parquet, the storage norm for
-    * learned embeddings at 100 TB. `-Dgraft.srp.transit=f64` /
-    * `SPARK_GRAFT_SRP_TRANSIT=f64` restores the float64 transit (the
-    * measured control leg; parity pinned in SimilarityTransitSpec).
+    * double in its kernel — bit-identical buckets and scores. For a
+    * caller whose doubles are NOT float-originated the cast would be an
+    * fp32 quantization of the SCORING input (keying is unquantized
+    * either way); no such caller exists in this repo.
     */
-  def srpKeyedGrown(e: DataFrame, planes: Int, tables: Int, dims: Int): DataFrame = {
-    // r18 ADVICE guard: past these caps the packed key's table and sign
-    // bits would silently collide/overflow (1L<<pp wraps at pp >= 64),
-    // merging buckets across tables — a future cap raise must fail
-    // loudly here instead. Production caps are 36/56, well inside.
-    require(planes >= 1 && planes <= 40,
-      s"srpKeyedGrown: planes=$planes out of [1, 40] — the packed bigint key reserves the low 40 bits for sign bits")
+  def srpKeyed(e: DataFrame, planes: Int, tables: Int, dims: Int, stride: Int): DataFrame = {
+    // Past these caps table ids would collide with sign bits, or tables
+    // would share sign vectors — fail loudly instead of merging buckets.
+    // SrpSignBits itself rejects planes outside [1, 40].
+    require(planes <= stride,
+      s"srpKeyed: planes=$planes exceeds stride=$stride — tables would share sign vectors")
     require(tables >= 1 && tables < (1 << 23),
-      s"srpKeyedGrown: tables=$tables out of [1, 2^23) — the packed bigint key stores the table id at <<40")
-    DotProduct.register(e.sparkSession)
+      s"srpKeyed: tables=$tables out of [1, 2^23) — the packed bigint key stores the table id at <<40")
     val outCols = e.columns.map {
-      case "em" if !srpTransitF64 => col("em").cast("array<float>").as("em")
+      case "em" => col("em").cast("array<float>").as("em")
       case c => col(c)
     }
-    // r18: the bucket key is PACKED INTO ONE BIGINT — table id in the
-    // high bits (<<40; planes cap 36 < 40, tables cap 56 < 2^23), sign
-    // bits summed into the low 40 — instead of the r14-r17
-    // `concat("t#", '0'/'1' × planes)` string. Same bijection
-    // (table, sign bits) → key, so bucket equality — and therefore the
-    // candidate set, every score, and every oracle hash — is unchanged
-    // by construction; what changes is the physics of the ONE
-    // spill-bound term (SCALE.md third-decade decomposition): the
-    // N·tables bucket exchange and its SMJ sort. A long key is 8 bytes
-    // fixed in the UnsafeRow vs 8 + padded(2+planes) for the string
-    // (−24 B/row at width 15), its sort is a pure 8-byte-prefix RADIX
-    // sort (a string key radix-sorts only its first 7 bytes — "t#" + 5
-    // bits — then falls back to full memcmp ties across the whole
-    // bucket population), and the keying projection drops planes+1
-    // UTF8String allocations per (row, table). Measured same-batch in
-    // OPTIMIZATION_r18.md; plan shape unchanged (plans/r18).
-    //
-    // r19: the key is computed by the FUSED codegen kernel
-    // [[graft.functions.SrpSignBits]] — one small per-table loop over a
-    // reference-object sign matrix instead of `planes` CASE WHENs over
-    // inlined 64-literal arrays. Same key bit-for-bit (kernel scaladoc
-    // + SrpSignBitsSpec parity pin + oracle hashes at 3 SFs); what
-    // changes is the generated CODE: the keying method drops from
-    // 28.6-59.5 KB of never-JIT bytecode (r18 KeyDump probe) to a
-    // JIT-able loop, erasing the r18 long-key keying regression (sf1
-    // pairs warm +20%) and closing the janino 64 KB failure mode at
-    // 13:18+ widths. The r14-r18 unfused tree remains available as the
-    // measurement CONTROL leg (-Dgraft.srp.kernel=casewhen /
-    // SPARK_GRAFT_SRP_KERNEL=casewhen), like the f64 transit leg above.
-    val keyCols: Seq[Column] = (0 until tables).map { t =>
-      if (srpKernelCaseWhen) {
-        val bits = (0 until planes).map { pp =>
-          val sgn = srpSigns(t * SrpStride + pp, dims).map(x => s"${x}D").mkString(",")
-          when(expr(s"dot_product(em, array($sgn))") >= 0, lit(1L << pp)).otherwise(lit(0L))
-        }
-        bits.foldLeft(lit(t.toLong << 40).cast("long"))(_ + _)
-      } else {
-        val flat = (0 until planes).flatMap(pp => srpSigns(t * SrpStride + pp, dims))
-        GraftDataset.column(graft.functions.SrpSignBits(
-          GraftDataset.expr(col("em")), t.toLong << 40, planes, dims, flat))
-      }
+    val keyCols = (0 until tables).map { t =>
+      val flat = (0 until planes).flatMap(pp => srpSigns(t * stride + pp, dims))
+      GraftDataset.column(SrpSignBits(
+        GraftDataset.expr(col("em")), t.toLong << 40, planes, dims, flat))
     }
     e.select(outCols :+ explode(array(keyCols: _*)).as("bk"): _*)
   }
 
-  /** [[srpKeyed]] with plane indices laid out on a fixed
-    * [[SrpMaxPlanes]] stride per table (table t's bit pp is plane
-    * t·12+pp regardless of how many bits the key uses), so keys of any
-    * adaptive width agree with the oracle's substring cut.
+  /** An ADAPTIVE SRP key layout: the width rule (corpus size → planes,
+    * tables) and the sign stride its oracle inlines.
     */
-  def srpKeyedScaled(e: DataFrame, planes: Int, tables: Int, dims: Int): DataFrame = {
-    DotProduct.register(e.sparkSession)
-    e.select(col("*"),
-      explode(array((0 until tables).map { t =>
-        val bits = (0 until planes).map { pp =>
-          val sgn = srpSigns(t * SrpMaxPlanes + pp, dims).map(x => s"${x}D").mkString(",")
-          when(expr(s"dot_product(em, array($sgn))") >= 0, lit("1")).otherwise(lit("0"))
-        }
-        concat(lit(s"$t#") +: bits: _*)
-      }: _*)).as("bk"))
+  final case class SrpLayout(planes: Long => Int, tables: Long => Int, stride: Int) {
+    /** [[srpKeyed]] at the widths this layout picks for `e`'s row count
+      * — the one count() job every adaptive form runs at plan build.
+      */
+    def keyed(e: DataFrame, dims: Int): DataFrame = {
+      val n = e.count()
+      srpKeyed(parallelized(e), planes(n), tables(n), dims, stride)
+    }
   }
 
-  /** [[srpPairsAbove]] with the plane count SCALED TO THE CORPUS — the
-    * production form at 100 TB. Fixed planes are the same
-    * fixed-cardinality-blocking defect the round-12 wave measured in
-    * dedup_simhash and string_jaro_winkler: 3 planes × 16 tables is 128
-    * bucket keys FOREVER, so bucket membership grows linearly with the
-    * corpus and in-bucket candidate pairs quadratically (measured 125×
-    * wall-clock at 10× vectors). One extra key bit per corpus doubling
-    * keeps expected bucket size constant, so candidates grow ~linearly;
-    * the LSH trade is per-table recall shrinking polynomially — high-
-    * similarity pairs (the near-dup regime both registered thresholds
-    * target) keep per-table collision ≥ (cos⁻¹-complement)^planes and
-    * survive the 16-table union; borderline pairs lose recall, which
-    * the planted-pair spec gates and the scaladoc math makes explicit.
-    * At 1e9 vectors the cap (12 bits/table) re-saturates — raise
-    * [[SrpMaxPlanes]] and the table count together per the standard
-    * (planes, tables) LSH cost model.
+  /** The GROWN layout, production: [[srpGrownPlanes]] ×
+    * [[srpGrownTables]] on the versioned [[SrpStride]].
     */
-  def srpPairsAboveScaled(e: DataFrame, tables: Int, dims: Int,
-      thresh: Double): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
-    val planes = srpScaledPlanes(e.count())
-    val keyed = srpKeyedScaled(parallelized(e), planes, tables, dims)
-    keyed.as("a").hint("merge").join(keyed.as("b"),
-        col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id") &&
-          CosineSimilarity.cosine_sim("a.em", "b.em") >= thresh)
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        CosineSimilarity.cosine_sim("a.em", "b.em").as("score"))
-      .dropDuplicates("va", "vb")
-  }
+  val SrpGrown: SrpLayout = SrpLayout(srpGrownPlanes, srpGrownTables, SrpStride)
 
-  /** (vec_id, em, bk) with one row per (vector, hash table): the shared
-    * portable-SRP keying of [[srpCandidatePairs]] and [[annTopKPortable]].
+  /** The r13 cap-12 layout, kept as the `_cap12` regression witnesses:
+    * [[srpScaledPlanes]] × [[SrpBaseTables]], cap-as-stride. Its cap
+    * binds at 256k vectors, which is why production moved to
+    * [[SrpGrown]]; below that the widths agree and only the sign
+    * vectors differ.
     */
-  def srpKeyed(e: DataFrame, planes: Int, tables: Int, dims: Int): DataFrame = {
-    DotProduct.register(e.sparkSession)
-    e.select(col("vec_id"), col("em"),
-      explode(array((0 until tables).map { t =>
-        val bits = (0 until planes).map { pp =>
-          val sgn = srpSigns(t * planes + pp, dims).map(x => s"${x}D").mkString(",")
-          when(expr(s"dot_product(em, array($sgn))") >= 0, lit("1")).otherwise(lit("0"))
-        }
-        concat(lit(s"$t#") +: bits: _*)
-      }: _*)).as("bk"))
-  }
+  val SrpCap12: SrpLayout = SrpLayout(srpScaledPlanes, _ => SrpBaseTables, SrpMaxPlanes)
 
   /** Portable-SRP ANN top-k: directed bucket candidates (qid, vec_id),
     * exact cosine rerank, per-qid window top-k. Same bucketing contract
     * as [[srpCandidatePairs]] — the inlined sign literals replay in the
-    * DuckDB oracle, so unlike the xxhash64 [[annTopK]] this variant is
-    * hash-verified end-to-end, not just recall-gated.
+    * DuckDB oracle, so this form is hash-verified end-to-end, not just
+    * recall-gated.
     */
   def annTopKPortable(d: DataFrame, k: Int, planes: Int, tables: Int, dims: Int): DataFrame = {
     CosineSimilarity.register(d.sparkSession)
-    val keyed = srpKeyed(d, planes, tables, dims)
+    val e = d.select(col("vec_id"), col("em"))
+    val keyed = srpKeyed(e, planes, tables, dims, stride = planes)
     // project to bare ids IMMEDIATELY: no threshold exists to evaluate
     // inside the join (top-k), so the join output must stay narrow — a
     // post-join score column would materialize every candidate with both
@@ -494,7 +362,6 @@ object SimilarityOps {
         col("a.bk") === col("b.bk") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("qid"), col("b.vec_id").as("vec_id"))
       .distinct()
-    val e = d.select(col("vec_id"), col("em"))
     val scored = cands
       .join(broadcast(e.select(col("vec_id").as("qid"), col("em").as("qe"))), "qid")
       .join(broadcast(e.select(col("vec_id"), col("em").as("ce"))), "vec_id")
@@ -504,64 +371,29 @@ object SimilarityOps {
     scored.withColumn("rn", row_number().over(w).cast("long")).where(col("rn") <= k)
   }
 
-  /** [[annTopKPortable]] with the plane count SCALED TO THE CORPUS —
-    * the production SRP top-k form at 100 TB. The fixed 3×16 form is
-    * the same fixed-cardinality-blocking defect the round-12 wave
-    * measured across this family: 128 bucket keys forever means bucket
-    * membership grows linearly with the corpus, the directed candidate
-    * multiset quadratically, and the sf1 cold pass DNF'd at 35 min
-    * (~400M-row candidate distinct). One key bit per corpus doubling
-    * ([[srpScaledPlanes]]) keeps expected bucket size ~constant, so the
-    * candidate multiset grows ~linearly (at 20k vectors: 9 planes →
-    * ~39/bucket → ~12M directed candidates vs the fixed form's ~800M).
-    * The 12-bit cap first binds at 256k vectors — past that, raise
-    * [[SrpMaxPlanes]] and the table count together per the (planes,
-    * tables) LSH cost model; at the measured decades the cap is slack.
-    *
-    * Unlike [[annTopKPortable]], there are no broadcast join-backs —
-    * and since r14 no join-backs at all: the exact cosine is computed
-    * in the bucket join where both vectors are co-located (the shared
-    * restructure with [[annTopKPortableGrown]] — the r13 shuffle
-    * join-backs carried the query vector through the second id-keyed
-    * exchange, ~120 GB at 320k vectors).
-    *
-    * Recall trade is the same as [[srpPairsAboveScaled]]: narrower
-    * buckets shrink per-table collision polynomially; near-identical
-    * neighbors (the regime ANN dedup/retrieval targets) survive the
-    * 16-table union with probability ≈ 1 — gated on planted jitter
-    * siblings at the LIVE adaptive width in SimilarityScaleSpec.
+  /** SRP pairs above `thresh` with the plane count SCALED TO THE CORPUS
+    * — the production pair form on [[SrpGrown]], and with [[SrpCap12]]
+    * the r13 regression witness. Fixed planes are the same
+    * fixed-cardinality-blocking defect the round-12 wave measured in
+    * dedup_simhash and string_jaro_winkler: 3 planes × 16 tables is 128
+    * bucket keys FOREVER, so bucket membership grows linearly with the
+    * corpus and in-bucket candidate pairs quadratically (measured 125×
+    * wall-clock at 10× vectors). One extra key bit per corpus doubling
+    * keeps expected bucket size constant, so candidates grow ~linearly;
+    * the LSH trade is per-table recall shrinking polynomially — high-
+    * similarity pairs (the near-dup regime both registered thresholds
+    * target) keep per-table collision ≥ (cos⁻¹-complement)^planes and
+    * survive the table union; borderline pairs lose recall, which the
+    * planted-pair spec gates. The grown layout lifts the plane cap from
+    * 12 to 36 (binds ≈ 1.1 PB, not 256k vectors), grows tables 2 per
+    * plane past width 12 (recall compensation per the (planes, tables)
+    * LSH cost model — see [[SrpGrownTableCap]]), and keys on the
+    * versioned [[SrpStride]] so future cap raises don't re-key.
     */
-  def annTopKPortableScaled(d: DataFrame, k: Int, tables: Int, dims: Int): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
-    val e = d.select(col("vec_id"), col("em"))
-    val planes = srpScaledPlanes(e.count())
-    val keyed = srpKeyedScaled(parallelized(e), planes, tables, dims)
-    // score in the bucket join (both vectors co-located) — the r14
-    // restructure shared with annTopKPortableGrown; see its scaladoc
-    // for the 120 GB join-back shuffle this removes. Results are
-    // bit-identical, so the witness stays pinned to the same oracle.
-    val scored = keyed.as("a").hint("merge").join(keyed.as("b"),
-        col("a.bk") === col("b.bk") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("qid"), col("b.vec_id").as("vec_id"),
-        CosineSimilarity.cosine_sim("a.em", "b.em").as("score"))
-      .dropDuplicates("qid", "vec_id")
-    val w = Window.partitionBy("qid").orderBy(desc("score"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long")).where(col("rn") <= k)
-  }
-
-  /** [[srpPairsAboveScaled]] on the GROWN key layout — the production
-    * pair form. Differences from the cap-12 witness: plane cap 36
-    * (binds ≈ 1.1 PB, not 256k vectors), tables grow 2 per plane past
-    * width 12 (recall compensation per the (planes, tables) LSH cost
-    * model — see [[SrpGrownTableCap]]), and the sign stride is the
-    * versioned [[SrpStride]] so future cap raises don't re-key. Below
-    * 256k vectors the widths equal the cap-12 form's; only the sign
-    * vectors differ.
-    */
-  def srpPairsAboveGrown(e: DataFrame, dims: Int, thresh: Double): DataFrame = {
+  def srpPairsAboveGrown(e: DataFrame, dims: Int, thresh: Double,
+      layout: SrpLayout = SrpGrown): DataFrame = {
     CosineSimilarity.register(e.sparkSession)
-    val n = e.count()
-    val keyed = srpKeyedGrown(parallelized(e), srpGrownPlanes(n), srpGrownTables(n), dims)
+    val keyed = layout.keyed(e, dims)
     keyed.as("a").hint("merge").join(keyed.as("b"),
         col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id") &&
           CosineSimilarity.cosine_sim("a.em", "b.em") >= thresh)
@@ -570,27 +402,36 @@ object SimilarityOps {
       .dropDuplicates("va", "vb")
   }
 
-  /** [[annTopKPortableScaled]] on the GROWN key layout — the production
-    * ANN form: plane cap lifted from 12 to 36 with 2-per-plane table
-    * growth past width 12, and the exact cosine computed IN THE BUCKET
-    * JOIN, where both vectors are already co-located — not by
-    * re-acquiring them afterwards. The r13 "shuffle join-back" rerank
-    * (skinny candidate ids re-join the corpus by qid then by vec_id)
-    * sounded scale-safe but the second id-keyed exchange carries the
-    * just-acquired query vector with every candidate row: at 320k
-    * vectors that is ~225M rows × ~512B ≈ 120 GB of shuffle, which
-    * KILLED the r14 sf16x wave on disk (spill exhausted a 67 GB-free
-    * box) — the same array-through-shuffle class the wide_shuffles
-    * lint exists for, reachable only at scale because small SFs
+  /** [[annTopKPortable]] with the plane count SCALED TO THE CORPUS — the
+    * production SRP top-k form on [[SrpGrown]], and with [[SrpCap12]]
+    * the r13 regression witness. The fixed 3×16 form's 128 bucket keys
+    * forever DNF'd the sf1 cold pass at 35 min (~400M-row candidate
+    * distinct); one key bit per corpus doubling keeps expected bucket
+    * size ~constant, so the candidate multiset grows ~linearly (at 20k
+    * vectors: 9 planes → ~39/bucket → ~12M directed candidates vs the
+    * fixed form's ~800M). Near-identical neighbors (the regime ANN
+    * dedup/retrieval targets) survive the table union with probability
+    * ≈ 1 — gated on planted jitter siblings at the LIVE adaptive width
+    * in SimilarityScaleSpec.
+    *
+    * The exact cosine is computed IN THE BUCKET JOIN, where both
+    * vectors are already co-located — not by re-acquiring them
+    * afterwards. The r13 "shuffle join-back" rerank (skinny candidate
+    * ids re-join the corpus by qid then by vec_id) sounded scale-safe
+    * but the second id-keyed exchange carries the just-acquired query
+    * vector with every candidate row: at 320k vectors that is ~225M rows
+    * × ~512B ≈ 120 GB of shuffle, which KILLED the r14 sf16x wave on
+    * disk — the same array-through-shuffle class the wide_shuffles lint
+    * exists for, reachable only at scale because small SFs
     * auto-broadcast the corpus side. Scoring in the bucket join moves
-    * the arrays exactly once (the N·tables bucket-key exchange, same
-    * as [[srpPairsAboveGrown]]); everything downstream — duplicate
-    * collapse across tables, the per-qid top-k window — is 3 skinny
-    * scalar columns. Scoring the pre-distinct multiset costs ≤ tables
-    * redundant cosines per true pair, linear work that replaces a
+    * the arrays exactly once (the N·tables bucket-key exchange, same as
+    * [[srpPairsAboveGrown]]); everything downstream — duplicate collapse
+    * across tables, the per-qid top-k window — is 3 skinny scalar
+    * columns. Scoring the pre-distinct multiset costs ≤ tables redundant
+    * cosines per true pair, linear work that replaces a
     * quadratically-sized exchange; duplicates are bit-identical so the
-    * dropDuplicates stays deterministic and the oracle (which scores
-    * the DISTINCT candidate set) hash-matches unchanged.
+    * dropDuplicates stays deterministic and the oracle (which scores the
+    * DISTINCT candidate set) hash-matches unchanged.
     *
     * The bucket self-join carries a `merge` hint (here and in every
     * production SRP form): Spark's size estimate for the keyed frame
@@ -604,11 +445,10 @@ object SimilarityOps {
     * SF to the shape the optimizer picks once estimates exceed the
     * threshold, which is also the only shape that survives 100 TB.
     */
-  def annTopKPortableGrown(d: DataFrame, k: Int, dims: Int): DataFrame = {
+  def annTopKPortableGrown(d: DataFrame, k: Int, dims: Int,
+      layout: SrpLayout = SrpGrown): DataFrame = {
     CosineSimilarity.register(d.sparkSession)
-    val e = d.select(col("vec_id"), col("em"))
-    val n = e.count()
-    val keyed = srpKeyedGrown(parallelized(e), srpGrownPlanes(n), srpGrownTables(n), dims)
+    val keyed = layout.keyed(d.select(col("vec_id"), col("em")), dims)
     // r18: ONE exchange on the scalar candidate tail instead of two.
     // The bare dropDuplicates planned hash(qid, vec_id) for the dedup
     // aggregate and then hash(qid) again for the top-k window — and the
@@ -703,13 +543,6 @@ object SimilarityOps {
        |ORDER BY 1, 2""".stripMargin
   }
 
-  /** Oracle for [[srpPairsAboveScaled]]: inlines the FULL
-    * [[SrpMaxPlanes]]×tables sign-literal set, recomputes the adaptive
-    * width from count(*) with the same integer-exact bin-length rule,
-    * and keeps only each table's first `planes` bits (`p % 12 <
-    * width`) — a static SQL string that replays a data-dependent
-    * bucketing at any corpus size.
-    */
   /** Shared oracle prefix for the adaptive-width SRP queries: CTEs
     * `e` (vec_id, label, em), `pl` (the width rule), `s` (the full
     * 12×tables sign-literal set), `bits`, and `keys` (vec_id, tbl,
@@ -733,6 +566,13 @@ object SimilarityOps {
        |          FROM bits GROUP BY vec_id, p // $SrpMaxPlanes)""".stripMargin
   }
 
+  /** Oracle for [[srpPairsAboveGrown]] on [[SrpCap12]]: inlines the FULL
+    * [[SrpMaxPlanes]]×tables sign-literal set, recomputes the adaptive
+    * width from count(*) with the same integer-exact bin-length rule,
+    * and keeps only each table's first `planes` bits (`p % 12 <
+    * width`) — a static SQL string that replays a data-dependent
+    * bucketing at any corpus size.
+    */
   private def srpPairsScaledOracle(tables: Int, thresh: String,
       aName: String, bName: String, dims: Int): String =
     s"""${srpScaledKeysSql(tables, dims)},
@@ -745,7 +585,7 @@ object SimilarityOps {
        |WHERE list_cosine_similarity(ea.em, eb.em) >= $thresh
        |ORDER BY 1, 2""".stripMargin
 
-  /** Oracle for [[annTopKPortableScaled]]: the shared adaptive-width
+  /** Oracle for [[annTopKPortableGrown]] on [[SrpCap12]]: the shared adaptive-width
     * bucketing prefix ([[srpScaledKeysSql]]) + the directed-candidate /
     * rerank / tiebreak tail of [[srpAnnOracle]] — a static SQL string
     * replaying the data-dependent key width from count(*).
@@ -1398,7 +1238,7 @@ object SimilarityOps {
         // single bucket-key array exchange (+ bounded parallelized())
         // as the grown form above.
         val e = emb(s, dir).select(col("vec_id"), col("em"))
-        srpPairsAboveScaled(e, tables = 16, dims = 64, thresh = 0.4)
+        srpPairsAboveGrown(e, dims = 64, thresh = 0.4, SrpCap12)
           .select(col("va").as("vec_a"), col("vb").as("vec_b"),
             round(col("score"), 4).as("score"))
           .orderBy("vec_a", "vec_b")
@@ -1411,9 +1251,7 @@ object SimilarityOps {
       (s, dir) => {
         // SRP-LSH ANN: bucket equi-join + in-bucket exact rerank, using
         // the PORTABLE sign literals so the oracle replays the buckets
-        // and the query is hash-verified (the xxhash64 annTopK form
-        // stays as the zero-literal production variant, recall-gated in
-        // DedupSimilaritySpec).
+        // and the query is hash-verified.
         annTopKPortable(emb(s, dir), k = 5, planes = 3, tables = 16, dims = 64)
           .select(col("qid"), col("vec_id"), round(col("score"), 4).as("score"), col("rn"))
           .orderBy("qid", "rn")
@@ -1461,7 +1299,7 @@ object SimilarityOps {
         // 256k vectors, which is why production moved on).
         // wide_shuffles fixture entry: same single bucket-key array
         // exchange (+ bounded parallelized()) as the grown form.
-        annTopKPortableScaled(emb(s, dir), k = 5, tables = 16, dims = 64)
+        annTopKPortableGrown(emb(s, dir), k = 5, dims = 64, SrpCap12)
           .select(col("qid"), col("vec_id"), round(col("score"), 4).as("score"), col("rn"))
           .orderBy("qid", "rn")
       },

@@ -85,9 +85,9 @@ class CodegenGateSpec extends AnyFunSuite {
   gate("SquaredL2 f32/f64 mixed",  SquaredL2(ref(0, vecFType), ref(1, vecType)), vMixRows)
 
   // r19 fused SRP keying kernel: 2 planes × 3 dims, prefix = table 1.
-  // Rows exercise the whole ladder the unfused tree defined: normal,
-  // all-negative dots, null array, WRONG-LENGTH array, null element,
-  // and NaN (Spark's NaN-aware >= must SET the bit).
+  // Rows exercise the whole ladder of the kernel's scaladoc contract:
+  // normal, all-negative dots, null array, WRONG-LENGTH array, null
+  // element, and NaN (Spark's NaN-aware >= must SET the bit).
   private val srpSigns23 = Seq(1.0, -1.0, 1.0, -1.0, -1.0, 1.0)
   gate("SrpSignBits",
     SrpSignBits(ref(0, vecType), 1L << 40, planes = 2, dims = 3, signs = srpSigns23),

@@ -69,7 +69,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("ANN SRP-LSH recall >= 0.5 vs brute-force top-5 (and exact scores)") {
     val bf = SimilarityOps.bruteForceTopK(emb.where(col("vec_id") < 20), emb, 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val ann = SimilarityOps.annTopK(emb, 5, planes = 4, tables = 8, dims = 64)
+    val ann = SimilarityOps.annTopKPortable(emb, 5, planes = 4, tables = 8, dims = 64)
       .where(col("qid") < 20)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     val recall = ann.intersect(bf).size.toDouble / bf.size

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count}
+import graft.functions.DotProduct
+import graft.operators.SimilarityOps
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{array, col, count, explode, expr, lit, when}
 
 /** Red/green gate for the never-JIT codegen window (r15 verdict task 1).
   *
@@ -16,29 +18,18 @@ import org.apache.spark.sql.functions.{col, count}
   * table: kernel 3.8-4.9×; whole-query warm 2.36×), which is why every
   * graft entry point pins the session limit to 8000.
   *
-  * r19 re-pin: production keying now uses the FUSED
+  * Production keying ([[SimilarityOps.srpKeyed]]) now runs the FUSED
   * [[graft.functions.SrpSignBits]] kernel — one loop over a
   * reference-object sign matrix — whose generated method stays UNDER
-  * the JIT ceiling at every width the caps allow, so the keying stage
-  * JITs even under Spark's default limit (the green fused tests
-  * below). The RED leg therefore runs on the `casewhen` CONTROL kernel
-  * (`-Dgraft.srp.kernel=casewhen`, the preserved r14-r18 tree): it
-  * proves the cliff class still exists where the lint must see it and
-  * keeps [[PlanLint.neverJitStages]] honest. The global 8000 pin stays:
-  * it aligns Spark's gate with HotSpot's for EVERY generated stage,
-  * not just this one, and costs nothing when methods are small.
+  * the JIT ceiling at the production widths (the green fused tests
+  * below pin 12:16 and 15:22). The RED fixture is that r14-r18 tree, rebuilt in this
+  * spec ([[caseWhenKeyed]]): it proves the cliff class still exists
+  * where the lint must see it and keeps [[PlanLint.neverJitStages]]
+  * honest. The global 8000 pin stays: it aligns Spark's gate with
+  * HotSpot's for EVERY generated stage, and costs nothing when methods
+  * are small.
   */
 class JitLimitGateSpec extends SparkSpec {
-
-  private def withKernel[A](mode: String)(body: => A): A = {
-    val prev = sys.props.get("graft.srp.kernel")
-    sys.props("graft.srp.kernel") = mode
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.srp.kernel") = v
-      case None => sys.props.remove("graft.srp.kernel")
-    }
-  }
 
   // AQE off: under AQE the WSCG wrappers only appear at query-stage
   // materialization mid-execution, hiding every stage from a static
@@ -50,30 +41,46 @@ class JitLimitGateSpec extends SparkSpec {
     s
   }
 
-  // The production-grown SRP keying shape. Under the casewhen control
-  // kernel the generated method measured 28,660 bytecodes at 6:16 /
-  // 44,068 at 9:16 / 59,476 at 12:16 (r18 probe) — all inside the
-  // never-JIT window — and exceeds janino's 64 KB per-method limit at
-  // 13:18+. Under the r19 fused kernel the same stage is a small loop
-  // at every width (r19 KeyDump probe). Codegen size depends on
-  // widths, not rows, so an 8-row in-memory frame exercises the exact
-  // production-grown stage.
-  private def keyed(s: SparkSession, planes: Int = 12, tables: Int = 16): DataFrame = {
+  // Codegen size depends on widths, not rows, so an 8-row in-memory
+  // frame exercises the exact production-grown stage.
+  private def rows(s: SparkSession): DataFrame = {
     import s.implicits._
-    val e = (0 until 8).map(i => (i.toLong, Array.tabulate(64)(d => (i * 64 + d) * 0.01)))
+    (0 until 8).map(i => (i.toLong, Array.tabulate(64)(d => (i * 64 + d) * 0.01)))
       .toDF("vec_id", "em")
-    graft.operators.SimilarityOps.srpKeyedGrown(e, planes, tables, dims = 64)
-      .select(count(col("bk")).as("n"))
+  }
+
+  private def countKeys(keyed: DataFrame): DataFrame =
+    keyed.select(count(col("bk")).as("n"))
+
+  // The production-grown SRP keying stage on the fused kernel — a small
+  // loop at every width (r19 KeyDump probe).
+  private def keyed(s: SparkSession, planes: Int = 12, tables: Int = 16): DataFrame =
+    countKeys(SimilarityOps.srpKeyed(rows(s), planes, tables, dims = 64,
+      stride = SimilarityOps.SrpStride))
+
+  // The RED fixture: the r14-r18 keying tree, per table the
+  // `when(dot_product(em, array(<64 literals>)) >= 0, 1L<<pp)` fold over
+  // planes onto the table prefix. Its generated method measured 28,660
+  // bytecodes at 6:16 / 44,068 at 9:16 / 59,476 at 12:16 (r18 probe) —
+  // all inside the never-JIT window — and exceeds janino's 64 KB
+  // per-method limit at 13:18+.
+  private def caseWhenKeyed(s: SparkSession, planes: Int = 12, tables: Int = 16): DataFrame = {
+    DotProduct.register(s)
+    val keyCols: Seq[Column] = (0 until tables).map { t =>
+      (0 until planes).map { pp =>
+        val sgn = SimilarityOps.srpSigns(t * SimilarityOps.SrpStride + pp, 64)
+          .map(x => s"${x}D").mkString(",")
+        when(expr(s"dot_product(em, array($sgn))") >= 0, lit(1L << pp)).otherwise(lit(0L))
+      }.foldLeft(lit(t.toLong << 40).cast("long"))(_ + _)
+    }
+    countKeys(rows(s).select(col("vec_id"), explode(array(keyCols: _*)).as("bk")))
   }
 
   test("RED: under Spark's default hugeMethodLimit the casewhen CONTROL keying is never-JIT bytecode") {
-    withKernel("casewhen") {
-      val offenders = PlanLint.neverJitStages(keyed(sessionWith("65535")))
-      assert(offenders.nonEmpty,
-        "the casewhen control tree no longer exceeds the JIT ceiling — " +
-          "the lint's red fixture (and possibly the control leg itself) is stale")
-      assert(offenders.exists(_._2 > PlanLint.JitBytecodeLimit))
-    }
+    val offenders = PlanLint.neverJitStages(caseWhenKeyed(sessionWith("65535")))
+    assert(offenders.nonEmpty,
+      "the casewhen fixture no longer exceeds the JIT ceiling — the lint's red fixture is stale")
+    assert(offenders.exists(_._2 > PlanLint.JitBytecodeLimit))
   }
 
   test("GREEN r19: the FUSED keying stage stays under the JIT ceiling even at Spark's default limit") {
@@ -88,9 +95,7 @@ class JitLimitGateSpec extends SparkSpec {
 
   test("GREEN: the production hugeMethodLimit=8000 pin keeps the window closed for both kernels") {
     assert(PlanLint.neverJitStages(keyed(sessionWith("8000"))).isEmpty)
-    withKernel("casewhen") {
-      assert(PlanLint.neverJitStages(keyed(sessionWith("8000"))).isEmpty)
-    }
+    assert(PlanLint.neverJitStages(caseWhenKeyed(sessionWith("8000"))).isEmpty)
   }
 
   test("the shared test session carries the production pin every entry point sets") {
@@ -109,19 +114,17 @@ class JitLimitGateSpec extends SparkSpec {
   // "Code grows beyond 64 KB" WARN storm) and Spark falls back to
   // non-WSCG execution at either session setting — measured at
   // identical speed (SCALE.md r16 KeyDump control row). The fused
-  // kernel no longer hits this mode at any cap-legal width, so these
-  // tests pin the CONTROL kernel to keep exercising the failure path —
-  // it is also the canary if a future Spark ever turns the compile
+  // kernel never hits this mode at any cap-legal width, so these tests
+  // run the casewhen fixture to keep exercising the failure path — it
+  // is also the canary if a future Spark ever turns the compile
   // failure into an error instead of a fallback.
   test("widths past janino's method limit (15:22 casewhen) execute correctly via fallback") {
-    withKernel("casewhen") {
-      val a = keyed(sessionWith("65535"), planes = 15, tables = 22)
-        .collect().map(_.getLong(0)).toSeq
-      val b = keyed(sessionWith("8000"), planes = 15, tables = 22)
-        .collect().map(_.getLong(0)).toSeq
-      assert(a === b)
-      assert(a.head === 8L * 22)
-    }
+    val a = caseWhenKeyed(sessionWith("65535"), planes = 15, tables = 22)
+      .collect().map(_.getLong(0)).toSeq
+    val b = caseWhenKeyed(sessionWith("8000"), planes = 15, tables = 22)
+      .collect().map(_.getLong(0)).toSeq
+    assert(a === b)
+    assert(a.head === 8L * 22)
   }
 
   // r17 verdict task 3: the lint's compile-failure tolerance was
@@ -130,16 +133,14 @@ class JitLimitGateSpec extends SparkSpec {
   // narrowed catch tolerates only janino's compile-failure types;
   // everything else falls through the `if` guard and propagates.
   test("GREEN: a real janino 64KB compile failure (15:22 casewhen keying) is tolerated, not thrown") {
-    withKernel("casewhen") {
-      // doCodeGen+compile on the over-limit stage throws inside the lint;
-      // the narrowed catch must classify it and keep auditing.
-      val offenders = PlanLint.neverJitStages(
-        keyed(sessionWith("65535"), planes = 15, tables = 22))
-      // the over-limit stage is excluded (compile failed → runtime falls
-      // back to non-WSCG, so it is not a never-JIT stage); what matters
-      // here is that the call RETURNED instead of propagating
-      assert(offenders.forall(_._2 <= 65535))
-    }
+    // doCodeGen+compile on the over-limit stage throws inside the lint;
+    // the narrowed catch must classify it and keep auditing.
+    val offenders = PlanLint.neverJitStages(
+      caseWhenKeyed(sessionWith("65535"), planes = 15, tables = 22))
+    // the over-limit stage is excluded (compile failed → runtime falls
+    // back to non-WSCG, so it is not a never-JIT stage); what matters
+    // here is that the call RETURNED instead of propagating
+    assert(offenders.forall(_._2 <= 65535))
   }
 
   test("RED: a non-compile exception is classified for propagation, compile failures are not") {

@@ -25,7 +25,7 @@ class SimilarityScaleSpec extends SparkSpec {
       }
     }.toSeq.toDF("vec_id", "em")
 
-    val ann = SimilarityOps.annTopK(corpus, k = 5, planes = 6, tables = 8, dims = 64)
+    val ann = SimilarityOps.annTopKPortableGrown(corpus, k = 5, dims = 64)
       .where(col("qid") % 16 === 0 && col("qid") < 50 * 16)
       .select("qid", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -161,8 +161,8 @@ class SimilarityScaleSpec extends SparkSpec {
         SimilarityOps.annTopKPortableGrown(e, k = 5, dims = 64),
       "srpPairsAboveGrown" ->
         SimilarityOps.srpPairsAboveGrown(e, dims = 64, thresh = 0.4),
-      "srpPairsAboveScaled" ->
-        SimilarityOps.srpPairsAboveScaled(e, tables = 16, dims = 64, thresh = 0.4))
+      "srpPairsAboveGrown cap-12" ->
+        SimilarityOps.srpPairsAboveGrown(e, dims = 64, thresh = 0.4, SimilarityOps.SrpCap12))
     plans.foreach { case (name, df) =>
       val p = df.queryExecution.executedPlan
       assert(!p.toString.contains("BroadcastExchange"),

@@ -6,13 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, transform}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-/** Pins the r17 float32 SRP transit (see [[SimilarityOps.srpKeyedGrown]]
+/** Pins the r17 float32 SRP transit (see [[SimilarityOps.srpKeyed]]
   * scaladoc): the bucket exchange carries `em` as array<float> — halving
   * the one locally spill-bound term of the third-decade cost model — and
-  * this must be a PURE PHYSICAL change: bit-identical results vs the
-  * float64 control leg (`-Dgraft.srp.transit=f64`), because the source
-  * embeddings are fp32 parquet and double→float→double is the identity
-  * on float-originated values.
+  * this must be a PURE PHYSICAL change: every score bit-identical to a
+  * float64 control computed here over the original array<double>
+  * column, because the source embeddings are fp32 parquet and
+  * double→float→double is the identity on float-originated values.
+  * Both adaptive layouts ride the same keying path, so both are checked.
   */
 class SimilarityTransitSpec extends SparkSpec {
 
@@ -21,14 +22,21 @@ class SimilarityTransitSpec extends SparkSpec {
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("em"))
 
-  private def withTransit[A](mode: String)(body: => A): A = {
-    val prev = sys.props.get("graft.srp.transit")
-    sys.props("graft.srp.transit") = mode
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.srp.transit") = v
-      case None => sys.props.remove("graft.srp.transit")
-    }
+  private val layouts = Seq("grown" -> SimilarityOps.SrpGrown, "cap12" -> SimilarityOps.SrpCap12)
+
+  /** `scored`'s (a, b, score) rows next to the float64 control: cosine_sim
+    * recomputed over the double `em` of both ids, both as raw bits.
+    */
+  private def withControl(scored: DataFrame, a: String, b: String): Seq[(Long, Long)] = {
+    CosineSimilarity.register(spark)
+    val e = emb(sf).select(col("vec_id"), col("em"))
+    scored.select(col(a).as("a"), col(b).as("b"), col("score"))
+      .join(e.select(col("vec_id").as("a"), col("em").as("ea")), "a")
+      .join(e.select(col("vec_id").as("b"), col("em").as("eb")), "b")
+      .select(col("score"), CosineSimilarity.cosine_sim("ea", "eb").as("control"))
+      .collect().toSeq
+      .map(r => (java.lang.Double.doubleToLongBits(r.getDouble(0)),
+        java.lang.Double.doubleToLongBits(r.getDouble(1))))
   }
 
   test("kernel: cosine_sim on array<float> widens exactly (bit-identical to the double kernel)") {
@@ -56,15 +64,12 @@ class SimilarityTransitSpec extends SparkSpec {
     }
   }
 
-  test("keyed frame carries float32 em by default, float64 under the control knob") {
+  test("keyed frame carries float32 em for every layout stride") {
     val e = emb(sf).select(col("vec_id"), col("em"))
-    val f32 = SimilarityOps.srpKeyedGrown(e, planes = 4, tables = 2, dims = 64)
-    assert(f32.schema("em").dataType === ArrayType(FloatType),
-      "default transit must be array<float> — the halved exchange payload")
-    withTransit("f64") {
-      val f64 = SimilarityOps.srpKeyedGrown(e, planes = 4, tables = 2, dims = 64)
-      assert(f64.schema("em").dataType.asInstanceOf[ArrayType].elementType.typeName === "double")
-    }
+    for (stride <- Seq(4, SimilarityOps.SrpMaxPlanes, SimilarityOps.SrpStride))
+      assert(SimilarityOps.srpKeyed(e, planes = 4, tables = 2, dims = 64, stride)
+        .schema("em").dataType === ArrayType(FloatType),
+        "the keyed frame must ship array<float> — the halved exchange payload")
   }
 
   // Scores compare UNROUNDED, via doubleToLongBits — rounding to 4
@@ -73,31 +78,25 @@ class SimilarityTransitSpec extends SparkSpec {
   // in the registry queries, not here.
   test("srpPairsAboveGrown: float32 transit is bit-identical to the f64 control leg") {
     val e = emb(sf).select(col("vec_id"), col("em"))
-    def run(): Seq[String] =
-      SimilarityOps.srpPairsAboveGrown(e, dims = 64, thresh = 0.4)
-        .select(col("va"), col("vb"), col("score"))
-        .collect()
-        .map(r => s"${r.get(0)}|${r.get(1)}|" +
-          java.lang.Double.doubleToLongBits(r.getDouble(2)))
-        .sorted.toSeq
-    val f32 = run()
-    val f64 = withTransit("f64")(run())
-    assert(f32.nonEmpty, "parity over an empty result set proves nothing")
-    assert(f32 === f64)
+    for ((name, layout) <- layouts) {
+      val got = withControl(
+        SimilarityOps.srpPairsAboveGrown(e, dims = 64, thresh = 0.4, layout), "va", "vb")
+      assert(got.nonEmpty, s"$name: parity over an empty result set proves nothing")
+      got.foreach { case (score, control) =>
+        assert(score === control, s"$name: float32-transit score diverged from float64")
+      }
+    }
   }
 
   test("annTopKPortableGrown: float32 transit is bit-identical to the f64 control leg") {
     val d = emb(sf)
-    def run(): Seq[String] =
-      SimilarityOps.annTopKPortableGrown(d, k = 5, dims = 64)
-        .select(col("qid"), col("vec_id"), col("score"), col("rn"))
-        .collect()
-        .map(r => s"${r.get(0)}|${r.get(1)}|" +
-          s"${java.lang.Double.doubleToLongBits(r.getDouble(2))}|${r.get(3)}")
-        .sorted.toSeq
-    val f32 = run()
-    val f64 = withTransit("f64")(run())
-    assert(f32.nonEmpty)
-    assert(f32 === f64)
+    for ((name, layout) <- layouts) {
+      val got = withControl(
+        SimilarityOps.annTopKPortableGrown(d, k = 5, dims = 64, layout), "qid", "vec_id")
+      assert(got.nonEmpty, s"$name: parity over an empty result set proves nothing")
+      got.foreach { case (score, control) =>
+        assert(score === control, s"$name: float32-transit score diverged from float64")
+      }
+    }
   }
 }

@@ -1,71 +1,79 @@
 package graft
 
 import graft.operators.SimilarityOps
+import graft.operators.SimilarityOps.{SrpMaxPlanes, SrpStride}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Pins the r19 fused SRP keying kernel ([[graft.functions.SrpSignBits]])
-  * to the r14-r18 unfused CASE-WHEN tree it replaces: the fusion is a
-  * PURE CODEGEN change (one loop over a reference-object sign matrix
-  * instead of planes inlined-literal dot products), so every bucket key
-  * must be bit-identical — including the null/malformed/NaN ladder and
-  * Spark's NaN-aware `>=` semantics — under both codegen and
-  * interpreted evaluation. The control leg is the same production tree,
-  * selected by `-Dgraft.srp.kernel=casewhen`.
+/** Pins the one SRP keying path ([[SimilarityOps.srpKeyed]] over the
+  * fused [[graft.functions.SrpSignBits]] kernel) to a plain-Scala
+  * reference of the kernel's scaladoc contract: table t's key is
+  * `t<<40 | Σ 2^pp` over the planes whose sign vector
+  * `srpSigns(t·stride+pp)` has a non-negative dot with `em`, with the
+  * null / wrong-length / null-element → bare prefix and NaN → bit SET
+  * rules — under both codegen and interpreted evaluation, at the
+  * strides of all three layouts (fixed, cap-12, grown).
   */
 class SrpSignBitsSpec extends SparkSpec {
 
-  private def withKernel[A](mode: String)(body: => A): A = {
-    val prev = sys.props.get("graft.srp.kernel")
-    sys.props("graft.srp.kernel") = mode
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.srp.kernel") = v
-      case None => sys.props.remove("graft.srp.kernel")
-    }
-  }
+  private val dims = 64
 
   private def emb: DataFrame =
     spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("em"))
 
-  private def keys(e: DataFrame, planes: Int, tables: Int): Seq[(Long, Long)] =
-    SimilarityOps.srpKeyedGrown(e, planes, tables, dims = 64)
+  private def keys(e: DataFrame, planes: Int, tables: Int,
+      stride: Int = SrpStride): Seq[(Long, Long)] =
+    SimilarityOps.srpKeyed(e, planes, tables, dims, stride)
       .select(col("vec_id"), col("bk"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
-  test("fused kernel computes bit-identical keys to the casewhen control tree (real embeddings, 3 widths)") {
+  /** The kernel contract in plain Scala: per plane the dot accumulates
+    * `em[i] * sign[i]` in ascending index order in double, and the bit
+    * is set unless `dot < 0` (Spark's NaN-aware `>=`: NaN sets it).
+    */
+  private def reference(e: DataFrame, planes: Int, tables: Int,
+      stride: Int = SrpStride): Seq[(Long, Long)] = {
+    val signs = Array.tabulate(tables, planes)((t, pp) =>
+      SimilarityOps.srpSigns(t * stride + pp, dims).toArray)
+    e.select(col("vec_id"), col("em")).collect().toSeq.flatMap { r =>
+      val em: Option[Array[Double]] =
+        if (r.isNullAt(1)) None
+        else {
+          val v = r.getSeq[Any](1)
+          if (v.length != dims || v.contains(null)) None
+          else Some(v.map(_.asInstanceOf[Double]).toArray)
+        }
+      (0 until tables).map { t =>
+        val bits = em.fold(0L) { x =>
+          (0 until planes).foldLeft(0L) { (acc, pp) =>
+            var dot = 0.0
+            for (i <- 0 until dims) dot += x(i) * signs(t)(pp)(i)
+            if (dot < 0.0) acc else acc | (1L << pp)
+          }
+        }
+        (r.getLong(0), (t.toLong << 40) | bits)
+      }
+    }.sorted
+  }
+
+  test("keys match the plain-Scala reference at every layout's stride (real embeddings)") {
     val e = emb
-    for ((p, t) <- Seq((3, 2), (9, 16), (15, 22))) {
-      val fused = keys(e, p, t)
-      val unfused = withKernel("casewhen")(keys(e, p, t))
-      assert(fused.nonEmpty, s"width $p:$t produced no keys")
-      assert(fused === unfused, s"key divergence at width $p:$t")
+    // (planes, tables, stride): fixed 3×16, a cap-12 width, a grown width
+    for ((p, t, stride) <- Seq((3, 16, 3), (9, 16, SrpMaxPlanes), (15, 22, SrpStride))) {
+      val got = keys(e, p, t, stride)
+      assert(got.nonEmpty, s"width $p:$t stride $stride produced no keys")
+      assert(got === reference(e, p, t, stride), s"key divergence at width $p:$t stride $stride")
     }
   }
 
-  test("fused kernel parity holds on the f64 transit control leg too") {
-    val prev = sys.props.get("graft.srp.transit")
-    sys.props("graft.srp.transit") = "f64"
-    try {
-      val fused = keys(emb, 6, 4)
-      val unfused = withKernel("casewhen")(keys(emb, 6, 4))
-      assert(fused === unfused)
-    } finally prev match {
-      case Some(v) => sys.props("graft.srp.transit") = v
-      case None => sys.props.remove("graft.srp.transit")
-    }
-  }
-
-  // The null/malformed ladder: a null array, a wrong-length array, or
-  // any null ELEMENT made every per-plane dot_product NULL in the
-  // unfused tree, every `when` take its 0 branch, and the key collapse
-  // to the bare table prefix. A NaN element makes every plane's dot
-  // NaN, and Spark's NaN-aware `>=` SETS the bit (NaN compares greater
-  // than everything — same as DuckDB). The fused kernel must reproduce
-  // all four, not just the happy path.
-  test("edge rows: null / wrong-length / null-element / NaN-element keys match the control tree exactly") {
+  // A null array, a wrong-length array, or any null ELEMENT keys to the
+  // bare table prefix. A NaN element makes every plane's dot NaN, and
+  // Spark's NaN-aware `>=` SETS the bit (NaN compares greater than
+  // everything — same as DuckDB). The kernel must reproduce all four,
+  // not just the happy path.
+  test("edge rows: null / wrong-length / null-element / NaN-element keys match the reference exactly") {
     val edge = spark.range(5).toDF("vec_id").selectExpr("vec_id",
       """case
         |  when vec_id = 0 then transform(sequence(1, 64), i -> cast(i - 32 as double))
@@ -76,10 +84,10 @@ class SrpSignBitsSpec extends SparkSpec {
         |end as em""".stripMargin)
     val planes = 5
     val tables = 3
-    val fused = keys(edge, planes, tables)
-    val unfused = withKernel("casewhen")(keys(edge, planes, tables))
-    assert(fused === unfused)
-    val byId = fused.groupBy(_._1)
+    val got = keys(edge, planes, tables)
+    assert(got.nonEmpty)
+    assert(got === reference(edge, planes, tables))
+    val byId = got.groupBy(_._1)
     // null, wrong-length, null-element rows: all sign bits 0 → bare prefix
     for (id <- Seq(1L, 2L, 3L); (_, bk) <- byId(id))
       assert((bk & ((1L << 40) - 1)) === 0L, s"row $id must key to the bare table prefix")
@@ -100,16 +108,18 @@ class SrpSignBitsSpec extends SparkSpec {
       val e = s.read.parquet(s"$sf/embeddings.parquet")
         .select(col("vec_id"),
           transform(col("embedding"), _.cast("double")).as("em"))
-      SimilarityOps.srpKeyedGrown(e, p, t, dims = 64)
-        .select(col("vec_id"), col("bk"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      keys(e, p, t)
     }
-    assert(run("NO_CODEGEN") === run("CODEGEN_ONLY"))
+    val codegen = run("CODEGEN_ONLY")
+    assert(codegen.nonEmpty)
+    assert(run("NO_CODEGEN") === codegen)
   }
 
   test("cap guards fail loudly (r18 ADVICE): planes > 40 or tables >= 2^23 must not silently corrupt keys") {
     val e = emb
-    intercept[IllegalArgumentException](SimilarityOps.srpKeyedGrown(e, 41, 2, 64))
-    intercept[IllegalArgumentException](SimilarityOps.srpKeyedGrown(e, 3, 1 << 23, 64))
+    intercept[IllegalArgumentException](SimilarityOps.srpKeyed(e, 41, 2, dims, SrpStride))
+    intercept[IllegalArgumentException](SimilarityOps.srpKeyed(e, 3, 1 << 23, dims, SrpStride))
+    // a stride narrower than the key would hand tables each other's planes
+    intercept[IllegalArgumentException](SimilarityOps.srpKeyed(e, 13, 2, dims, SrpMaxPlanes))
   }
 }
