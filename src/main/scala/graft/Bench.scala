@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries (GQuery.bench) on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
   *
@@ -10,35 +8,19 @@ import org.apache.spark.sql.SparkSession
   * and undercount the real work.
   */
 object Bench {
+
+  /** Single-JVM local mode: shuffle/broadcast bytes never cross a wire,
+    * so compression is pure CPU overhead at this scale (on a real
+    * cluster these stay at their network-bound defaults).
+    */
+  val LocalCompressionOff: Map[String, String] = Map(
+    "spark.shuffle.compress" -> "false",
+    "spark.shuffle.spill.compress" -> "false",
+    "spark.broadcast.compress" -> "false")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-JVM local mode: shuffle/broadcast bytes never cross a
-      // wire, so compression is pure CPU overhead at this scale (on a
-      // real cluster these stay at their network-bound defaults)
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.broadcast.compress", "false")
-      // HotSpot never JIT-compiles methods over 8000 bytecodes, but
-      // Spark's default hugeMethodLimit (65535) keeps whole-stage
-      // codegen active up to the class-file limit — so a generated
-      // method in (8000, 65535] runs as INTERPRETED BYTECODE forever.
-      // The wide-literal SRP keying stages live exactly there —
-      // measured in SCALE.md "Round-16: the hugeMethodLimit evidence"
-      // (KeyDump table: 47-58 KB bytecode methods at planes 12-13,
-      // kernel 3.8-4.9× the 8000-setting wall on the same input;
-      // whole-query sim_ann_lsh_scaled warm 2.36× at sf1). 8000
-      // re-aligns Spark's gate with the JVM's, as the conf's own doc
-      // suggests; PlanLint.neverJitStages + JitLimitGateSpec keep the
-      // window from silently re-opening.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
+    val spark = GraftSession(extra = LocalCompressionOff)
     spark.sparkContext.setLogLevel("WARN")
 
     val headline = SparkEntry.registry.filter(_.bench)

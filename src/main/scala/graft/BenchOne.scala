@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev micro-bench: time named registry queries (cold + N warm reps) on
   * SPARK_GRAFT_SF_DIR through the same noop sink as [[Bench]].
   *
@@ -13,7 +11,6 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_REPS=0 → cold-only (warm_min omitted): the long
     // scale-wave legs at sf16x+ run minutes each and the cold number is
     // the one the wave tables record.
@@ -23,24 +20,7 @@ object BenchOne {
     // busy_frac instead of relying on "idle box" prose (r15 verdict
     // task 3). Start window sampled before the session exists.
     val busyStart = QuietBox.busyWindow()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_PARTS decouples shuffle partitions from thread
-      // count: per-partition SORT MEMORY is the binding constraint for
-      // the scale legs (sf32x emb_hard_negatives spilled 25 GB through
-      // 32 partitions on the 8g JVM — SCALE.md r16), and a real
-      // cluster sizes partitions by data, not by one node's cores.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // default 8000 — see Bench.scala; SPARK_GRAFT_HML exists so the
-      // before/after evidence legs (SCALE.md r16) can measure the
-      // default-Spark 65535 setting without a code edit
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HML", "8000"))
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
 

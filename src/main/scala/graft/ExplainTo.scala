@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the optimization-round evidence artifact (`plans/rNN/<q>_<tag>.txt`).
   *
@@ -16,16 +14,7 @@ object ExplainTo {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // honor the same env override Bench does (r18 ADVICE): a plan
-      // captured for an AQE-off bench leg must show that leg's shape
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000") // see Bench.scala
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {

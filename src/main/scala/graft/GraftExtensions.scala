@@ -1,72 +1,21 @@
 package graft
 
-import graft.functions.{CosineSimilarity, DotProduct, InterleaveBits, JaroWinkler, Md5GramHashes, NormalizeText, RollingHashGrams, SimHash32, SquaredL2, WindowMin, WordGramHashes}
+import graft.functions.{CosineSimilarity, DotProduct, InterleaveBits, JaroWinkler, Md5GramHashes, NormalizeText, PosWordGrams, RollingHashGrams, SimHash32, SquaredL2, WindowMin, WordGramHashes}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension entry point: makes the engine's custom expressions
-  * available cluster-wide via
-  * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (or `.withExtensions(new GraftExtensions)` in code) — the deployment
-  * path where per-session `register(spark)` calls aren't practical.
+/** Session extension entry point for deployments: makes the engine's
+  * custom expressions, optimizer rules and band-join strategy available
+  * via `--conf spark.sql.extensions=graft.GraftExtensions`.
+  *
+  * Sessions built by [[GraftSession]] get the same function table but
+  * not the rules: the engine's queries add and remove those rules per
+  * query, and its specs compare results with and without each rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash_grams"),
-      new ExpressionInfo(classOf[RollingHashGrams].getName, "rolling_hash_grams"),
-      (exprs: Seq[Expression]) => RollingHashGrams(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("word_gram_hashes"),
-      new ExpressionInfo(classOf[WordGramHashes].getName, "word_gram_hashes"),
-      (exprs: Seq[Expression]) => WordGramHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("window_min"),
-      new ExpressionInfo(classOf[WindowMin].getName, "window_min"),
-      (exprs: Seq[Expression]) => WindowMin(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("md5_gram_hashes"),
-      new ExpressionInfo(classOf[Md5GramHashes].getName, "md5_gram_hashes"),
-      (exprs: Seq[Expression]) => Md5GramHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (exprs: Seq[Expression]) => SimHash32(exprs(0), 0)))
-    e.injectFunction((
-      FunctionIdentifier("z_interleave"),
-      new ExpressionInfo(classOf[InterleaveBits].getName, "z_interleave"),
-      (exprs: Seq[Expression]) => InterleaveBits(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("pos_word_grams"),
-      new ExpressionInfo(classOf[graft.functions.PosWordGrams].getName, "pos_word_grams"),
-      (exprs: Seq[Expression]) => graft.functions.PosWordGrams(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (exprs: Seq[Expression]) => NormalizeText(exprs(0),
-        exprs(1).eval().asInstanceOf[Boolean])))
-    e.injectFunction((
-      FunctionIdentifier("squared_l2"),
-      new ExpressionInfo(classOf[SquaredL2].getName, "squared_l2"),
-      (exprs: Seq[Expression]) => SquaredL2(exprs(0), exprs(1))))
+    GraftExtensions.injectFunctions(e)
     // custom whole-operator path: band join logical node → physical plan
     e.injectPlannerStrategy(_ => graft.plans.BandJoin.BandJoinStrategy)
     // thresholded levenshtein comparisons → bounded banded DP
@@ -78,4 +27,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // No-op until constraints are declared via ConstraintRules.declare*.
     e.injectOptimizerRule(_ => graft.plans.ConstraintRules)
   }
+}
+
+object GraftExtensions {
+
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  /** The engine's SQL functions: one (name, builder) row each. Literal
+    * arguments (gram sizes, seeds, the fold flag) are evaluated once at
+    * analysis time.
+    */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (a => CosineSimilarity(a(0), a(1))),
+    "dot_product" -> (a => DotProduct(a(0), a(1))),
+    "squared_l2" -> (a => SquaredL2(a(0), a(1))),
+    "jaro_winkler" -> (a => JaroWinkler(a(0), a(1))),
+    "z_interleave" -> (a => InterleaveBits(a(0), a(1))),
+    "normalize_text" -> (a => NormalizeText(a(0), a(1).eval().asInstanceOf[Boolean])),
+    "rolling_hash_grams" -> (a => RollingHashGrams(a(0), int(a(1)))),
+    "word_gram_hashes" -> (a => WordGramHashes(a(0), int(a(1)))),
+    "md5_gram_hashes" -> (a => Md5GramHashes(a(0), int(a(1)))),
+    "pos_word_grams" -> (a => PosWordGrams(a(0), int(a(1)))),
+    "window_min" -> (a => WindowMin(a(0), int(a(1)))),
+    "simhash32" -> (a => SimHash32(a(0), 0)),
+    "simhash32s" -> (a => SimHash32(a(0), int(a(1)))))
+
+  def injectFunctions(e: SparkSessionExtensions): Unit =
+    functions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
 }

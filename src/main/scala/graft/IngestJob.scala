@@ -70,15 +70,7 @@ object IngestJob {
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000") // see Bench.scala
-      .getOrCreate()
+    val spark = GraftSession("graft-ingest")
     try {
       val n = run(spark, a)
       println(s"[ingest] wrote $n records to ${a.output}")

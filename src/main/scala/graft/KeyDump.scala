@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Codegen-kernel microbench for the SRP keying stage (part of the
@@ -36,15 +35,9 @@ object KeyDump {
         val Array(p, t) = w.split(":"); (p.toInt, t.toInt)
       }
     }
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("KEYDUMP_HML", "65535"))
-      .config("spark.sql.codegen.factoryMode",
-        sys.env.getOrElse("KEYDUMP_FACTORY", "FALLBACK"))
-      .getOrCreate()
+    val spark = GraftSession(aqe = false, extra = Map(
+      "spark.sql.codegen.hugeMethodLimit" -> sys.env.getOrElse("KEYDUMP_HML", "65535"),
+      "spark.sql.codegen.factoryMode" -> sys.env.getOrElse("KEYDUMP_FACTORY", "FALLBACK")))
     spark.sparkContext.setLogLevel("WARN")
     val e = spark.read.parquet(inputPath)
       .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) as em")

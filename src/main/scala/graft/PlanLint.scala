@@ -343,14 +343,7 @@ object PlanLint {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000") // see Bench.scala
-      .getOrCreate()
+    val spark = GraftSession(aqe = false)
     spark.sparkContext.setLogLevel("ERROR")
 
     val r = audit(spark, sfDir, compileCodegen = true)

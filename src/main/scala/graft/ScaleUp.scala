@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize an N×-scale replica of a testdata SF directory for the
@@ -84,14 +84,7 @@ object ScaleUp {
     fkClosed("lineitem", "orders", "part", "supplier")
     def tableFactor(name: String): Int =
       if (only.isEmpty || only(name)) factor else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000") // see Bench.scala
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
 
     def src_(name: String): DataFrame = Tables.t(spark, src, name)

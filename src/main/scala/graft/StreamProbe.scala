@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Per-micro-batch STATE-STORE metrics for the registry's streaming
   * differentials — the measurement harness behind SCALE.md's streaming
@@ -23,19 +22,12 @@ import org.apache.spark.sql.SparkSession
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val names =
       if (args.nonEmpty) args.toSeq
       else Seq("streaming_latest_upsert", "streaming_tws_upsert",
         "streaming_sessionize", "streaming_neardup_dedup",
         "streaming_kafkalog_tws_upsert", "streaming_absence_alert")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000") // see Bench.scala
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val log = StreamingMetrics.attach(spark)

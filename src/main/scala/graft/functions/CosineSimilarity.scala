@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -106,16 +106,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
 
-  /** Register `cosine_sim` in the session's function registry (idempotent)
-    * — the public extension path for exposing a Catalyst expression to
-    * both SQL and the Column DSL.
-    */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "cosine_sim")(
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-
   /** Column API: cosine similarity of two array<double> columns (by SQL
-    * expression text — call register(spark) once per session first).
+    * expression text).
     */
   def cosine_sim(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 }

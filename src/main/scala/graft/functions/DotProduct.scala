@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -104,11 +104,6 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
 
-  /** Register `dot_product` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "dot_product")(
-      exprs => DotProduct(exprs(0), exprs(1)))
-
-  /** Column API by SQL expression text (call register(spark) first). */
+  /** Column API by SQL expression text. */
   def dot_product(a: String, b: String): Column = expr(s"dot_product($a, $b)")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.expr
@@ -48,11 +48,6 @@ object InterleaveBits {
   /** 32-bit Morton key: a's bits at even positions, b's at odd. */
   def morton16(a: Int, b: Int): Long =
     spread16(a) | (spread16(b) << 1)
-
-  /** Register `z_interleave(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "z_interleave")(
-      exprs => InterleaveBits(exprs(0), exprs(1)))
 
   def z_interleave(a: String, b: String): Column = expr(s"z_interleave($a, $b)")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.expr
@@ -94,11 +94,6 @@ object JaroWinkler {
     (m.toDouble / ls + m.toDouble / lt + (m - halfTrans).toDouble / m) / 3.0
   }
 
-  /** Register `jaro_winkler` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "jaro_winkler")(
-      exprs => JaroWinkler(exprs(0), exprs(1)))
-
-  /** Column API by SQL expression text (call register(spark) first). */
+  /** Column API by SQL expression text. */
   def jaro_winkler(a: String, b: String): Column = expr(s"jaro_winkler($a, $b)")
 }

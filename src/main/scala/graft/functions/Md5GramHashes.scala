@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -92,12 +92,6 @@ object Md5GramHashes {
     }
     out
   }
-
-  /** Register `md5_gram_hashes(text, k)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "md5_gram_hashes")(
-      exprs => Md5GramHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()))
 
   def md5_gram_hashes(textCol: String, k: Int): Column =
     expr(s"md5_gram_hashes($textCol, $k)")

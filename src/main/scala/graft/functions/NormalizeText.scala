@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.expr
@@ -71,13 +71,7 @@ object NormalizeText {
     UTF8String.fromString(out)
   }
 
-  /** Register `normalize_text(text, fold)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "normalize_text")(
-      exprs => NormalizeText(exprs(0),
-        exprs(1).eval().asInstanceOf[Boolean]))
-
-  /** Column API by SQL expression text (call register(spark) first). */
+  /** Column API by SQL expression text. */
   def normalize_text(textCol: String, fold: Boolean): Column =
     expr(s"normalize_text($textCol, $fold)")
 }

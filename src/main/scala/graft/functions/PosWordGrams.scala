@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -52,11 +51,4 @@ case class PosWordGrams(child: Expression, n: Int)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-object PosWordGrams {
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "pos_word_grams")(
-      exprs => PosWordGrams(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -77,12 +77,6 @@ case class RollingHashGrams(child: Expression, k: Int)
 }
 
 object RollingHashGrams {
-
-  /** Register `rolling_hash_grams(text, k)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "rolling_hash_grams")(
-      exprs => RollingHashGrams(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()))
 
   def rolling_hash_grams(textCol: String, k: Int): Column =
     expr(s"rolling_hash_grams($textCol, $k)")

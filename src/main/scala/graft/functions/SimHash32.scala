@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,15 +83,6 @@ object SimHash32 {
     var b = 0
     while (b < 32) { if (2 * cnt(b) > nn) sig |= 1L << b; b += 1 }
     sig
-  }
-
-  /** Register `simhash32(arr)` (seed 0, the historical form) and
-    * `simhash32s(arr, seed)` (idempotent).
-    */
-  def register(spark: SparkSession): Unit = {
-    FnReg.once(spark, "simhash32")(exprs => SimHash32(exprs(0), 0))
-    FnReg.once(spark, "simhash32s")(exprs => SimHash32(exprs(0),
-      exprs(1).eval().asInstanceOf[Int]))
   }
 
   def simhash32(arrCol: String): Column = expr(s"simhash32($arrCol)")

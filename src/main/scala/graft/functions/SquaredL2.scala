@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -105,11 +105,6 @@ case class SquaredL2(left: Expression, right: Expression)
 
 object SquaredL2 {
 
-  /** Register `squared_l2` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "squared_l2")(
-      exprs => SquaredL2(exprs(0), exprs(1)))
-
-  /** Column API by SQL expression text (call register(spark) first). */
+  /** Column API by SQL expression text. */
   def squared_l2(a: String, b: String): Column = expr(s"squared_l2($a, $b)")
 }

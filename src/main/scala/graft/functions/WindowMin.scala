@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -79,12 +79,6 @@ case class WindowMin(child: Expression, w: Int)
 }
 
 object WindowMin {
-
-  /** Register `window_min(arr, w)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "window_min")(
-      exprs => WindowMin(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()))
 
   def window_min(arrCol: String, w: Int): Column =
     expr(s"window_min($arrCol, $w)")

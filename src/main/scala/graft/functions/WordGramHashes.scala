@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -105,12 +105,6 @@ object WordGramHashes {
     }
     new GenericArrayData(java.util.Arrays.copyOf(grams, distinct))
   }
-
-  /** Register `word_gram_hashes(text, n)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    FnReg.once(spark, "word_gram_hashes")(
-      exprs => WordGramHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()))
 
   def word_gram_hashes(textCol: String, n: Int): Column =
     expr(s"word_gram_hashes($textCol, $n)")

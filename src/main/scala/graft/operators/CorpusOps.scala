@@ -79,7 +79,6 @@ object CorpusOps {
     * See `dedup_span_removal` for the per-stage scale notes.
     */
   def spanRemoved(d: DataFrame, n: Int): DataFrame = {
-    graft.functions.PosWordGrams.register(d.sparkSession)
     val gramStarts = d.select(col("doc_id"),
       expr(s"pos_word_grams(text, $n)").as(Seq("start", "gram")))
     val dupGrams = gramStarts.groupBy("gram")
@@ -220,7 +219,6 @@ object CorpusOps {
         // kernel hash, never the string (the oracle joins on the string
         // grams — hash-join ≡ string-join absent collisions, same
         // argument as dedup_ngram_jaccard).
-        graft.functions.WordGramHashes.register(s)
         val inv = docs(s, dir).select(col("doc_id"),
           explode(graft.functions.WordGramHashes.word_gram_hashes("text", 4)).as("g"))
         val evalGrams = inv.where(col("doc_id") % 20 === 0)
@@ -256,7 +254,6 @@ object CorpusOps {
         // removed by the exact join after, so the result is provably
         // identical. (Spark's own runtime-filter rewrite injects exactly
         // this under joins; here it's the explicit library form.)
-        graft.functions.WordGramHashes.register(s)
         val inv = docs(s, dir).select(col("doc_id"),
           explode(graft.functions.WordGramHashes.word_gram_hashes("text", 4)).as("g"))
         val evalGrams = inv.where(col("doc_id") % 20 === 0)

@@ -305,7 +305,6 @@ object CurateOps {
         // expression's ASCII fast path (one byte==char count compare,
         // no Normalizer call) is what a 100 TB mostly-ASCII corpus
         // actually executes.
-        graft.functions.NormalizeText.register(s)
         val d = col("doc_id")
         val raw = when(d % 4 === 0, lit("caf\u00e9")) // precomposed U+00E9
           .when(d % 4 === 1, lit("cafe\u0301")) // e + combining acute U+0301

@@ -105,7 +105,6 @@ object DedupOps {
   def minhashLshPairsFast(d: DataFrame, n: Int, k: Int, bands: Int, minJ: Double): DataFrame = {
     require(k % bands == 0)
     val rows = k / bands
-    graft.functions.WordGramHashes.register(d.sparkSession)
     val withSh = d.select(col("doc_id"),
         graft.functions.WordGramHashes.word_gram_hashes("text", n).as("sh"))
       .where(size(col("sh")) > 0)
@@ -180,7 +179,6 @@ object DedupOps {
     // A .cache() of the shingle arrays was ~10% faster only once the
     // cache was already hot — not worth the executor-memory footprint
     // (caching corpus shingles is exactly what does NOT scale to 100 TB).
-    graft.functions.WordGramHashes.register(d.sparkSession)
     val inv = d.select(col("doc_id"),
         graft.functions.WordGramHashes.word_gram_hashes("text", n).as("sh"))
       .select(col("doc_id"), size(col("sh")).as("n_sh"),
@@ -242,7 +240,6 @@ object DedupOps {
     * more exchange (both join sides shuffle on doc_id vs one groupBy).
     */
   def jaccardPairsCapped(d: DataFrame, n: Int, minJ: Double, maxDf: Long): DataFrame = {
-    graft.functions.WordGramHashes.register(d.sparkSession)
     val inv0 = d.select(col("doc_id"),
       explode(graft.functions.WordGramHashes.word_gram_hashes("text", n)).as("sg"))
     val hot = inv0.groupBy("sg").agg(count(lit(1)).as("df"))
@@ -352,7 +349,6 @@ object DedupOps {
     // transform + 32-round majority fold (kept above as
     // simhashFromHashes, the direct-definition reference), one
     // compiled pass instead of ~4k interpreted lambdas per doc
-    graft.functions.SimHash32.register(d.sparkSession)
     val sigs = d
       .select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
       .select(col("doc_id"), graft.functions.SimHash32.simhash32("tk").as("sig"))
@@ -386,7 +382,6 @@ object DedupOps {
     * corpus wants 128-bit signatures → 4×32-bit bands).
     */
   def simhashPairsWide(d: DataFrame, maxHamming: Int): DataFrame = {
-    graft.functions.SimHash32.register(d.sparkSession)
     val sigs = d
       .select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
       .select(col("doc_id"),
@@ -450,7 +445,6 @@ object DedupOps {
     * suffixes and zero hamming terms cancel exactly.
     */
   def simhashPairsScaled(d: DataFrame, maxHamming: Int): DataFrame = {
-    graft.functions.SimHash32.register(d.sparkSession)
     val nh = simhashHalves(d.count())
     val sigs = d
       .select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))

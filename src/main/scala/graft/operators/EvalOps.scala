@@ -31,7 +31,6 @@ object EvalOps {
     * rank-based metrics see identical tie groups in both engines.
     */
   private def scored(s: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(s)
     val e = Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), (col("label") % 2).cast("int").as("y"),
         transform(col("embedding"), _.cast("double")).as("em"))
@@ -116,7 +115,6 @@ object EvalOps {
         // a corpus-sized pass — then all pairwise math runs on the
         // labels×dims model, never the vectors. 6 dp rounding over a
         // total order.
-        CosineSimilarity.register(s)
         val e = Tables.t(s, dir, "embeddings")
           .select(col("label"),
             transform(col("embedding"), _.cast("double")).as("em"))
@@ -289,7 +287,6 @@ object EvalOps {
         // broadcast against the corpus; both rankings are per-query
         // windows over the scored candidates with deterministic
         // tiebreaks.
-        CosineSimilarity.register(s)
         val e = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), _.cast("double")).as("em"))

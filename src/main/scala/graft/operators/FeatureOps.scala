@@ -98,7 +98,6 @@ object FeatureOps {
         // vote+score tail runs on candidates. Both argmaxes (top-5
         // neighbors, majority label) are WindowGroupLimit-pruned
         // windows with deterministic tiebreaks.
-        CosineSimilarity.register(s)
         val e = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), _.cast("double")).as("em"))
@@ -168,7 +167,6 @@ object FeatureOps {
         // (exchange reuse AQE-dependent) and each branch paid a full
         // window SORT — the two 113M-row windows that OOM-killed the
         // 8g driver at sf6x (SCALE.md r13).
-        CosineSimilarity.register(s)
         val e = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), _.cast("double")).as("em"))

@@ -38,7 +38,6 @@ object FuzzyOps {
     * the production query and its recall audit.
     */
   private def sortedNeighborhoodJw(s: SparkSession, dir: String): DataFrame = {
-    JaroWinkler.register(s)
     val p = Tables.t(s, dir, "part")
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
     def onePass(key: Column): DataFrame = {
@@ -101,7 +100,6 @@ object FuzzyOps {
         // quadratic work. Validated bit-identical to DuckDB's
         // jaro_winkler_similarity on random corpora (see JaroWinkler
         // scaladoc).
-        JaroWinkler.register(s)
         val p = Tables.t(s, dir, "part")
           .select(col("p_partkey"), col("p_name"), col("p_brand"))
         // threshold INSIDE the join condition (the srpPairsAbove
@@ -157,7 +155,6 @@ object FuzzyOps {
         // hash. Deliberately runs the quadratic blocked reference —
         // this is the audit you run on a sample at 100 TB, never the
         // serving path (the dedup_ngram_jaccard_capped precedent).
-        JaroWinkler.register(s)
         val p = Tables.t(s, dir, "part")
           .select(col("p_partkey"), col("p_name"), col("p_brand"))
         val win = sortedNeighborhoodJw(s, dir)
@@ -272,7 +269,6 @@ object FuzzyOps {
         // inverted-index shape as dedup_ngram_jaccard: index rows carry
         // |A| so the pair aggregate yields the score without a sizes
         // join. Emits ORDERED pairs (a != b, both directions possible).
-        graft.functions.WordGramHashes.register(s)
         val inv = docs(s, dir).select(col("doc_id"),
             graft.functions.WordGramHashes.word_gram_hashes("text", 3).as("sh"))
           .select(col("doc_id"), size(col("sh")).as("n_sh"),
@@ -428,7 +424,6 @@ object FuzzyOps {
         // probe + window-top-k plan as sim_topk_bruteforce, scored by
         // the fused codegen DotProduct expression (sequential-order
         // accumulation ⇒ bit-identical to DuckDB list_inner_product).
-        DotProduct.register(s)
         val e = emb(s, dir)
         // probe set capped at 20 (first 2000 ids): a retrieval probe
         // set is a FIXED workload, not a corpus fraction — the

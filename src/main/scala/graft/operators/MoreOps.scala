@@ -523,7 +523,6 @@ object MoreOps {
         // a Generate node — no intermediate gram array per row, unlike
         // explode(ngrams(...)). Bounded to the first 50 docs like
         // text_posexplode to keep output small.
-        graft.functions.PosWordGrams.register(s)
         Tables.t(s, dir, "documents")
           .where(col("doc_id") < 50)
           .select(col("doc_id"),

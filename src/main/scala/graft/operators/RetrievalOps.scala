@@ -83,7 +83,6 @@ object RetrievalOps {
     * sim_topk_bruteforce.
     */
   def denseTopK(e: DataFrame, k: Int): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
     val probe = broadcast(e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("em").as("qe")))
     e.join(probe, col("vec_id") =!= col("qid"))
@@ -135,7 +134,6 @@ object RetrievalOps {
     // 1.0 - 0.7 is 0.30000000000000004 in IEEE arithmetic, and the
     // floor-scaled score must be bit-identical to an oracle that
     // writes the literal 0.3
-    CosineSimilarity.register(cands.sparkSession)
     val base = cands.select(col("doc_id"), col("rel"), col("em")).localCheckpoint()
     def mmrScore(rel: org.apache.spark.sql.Column, maxSim: org.apache.spark.sql.Column) =
       floor((lit(lambda) * rel - lit(penalty) * maxSim) * 1e6).cast("long")
@@ -232,7 +230,6 @@ object RetrievalOps {
         // greedy recursion (recursive CTE carrying the picked-id list);
         // every pick's floor-scaled score is compared, so a single
         // wrong argmax anywhere in the chain fails the hash.
-        CosineSimilarity.register(s)
         val e = emb(s, dir)
         val probe = broadcast(e.orderBy("vec_id").limit(1)
           .select(col("vec_id").as("qid"), col("em").as("qe")))

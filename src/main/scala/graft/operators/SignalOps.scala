@@ -132,7 +132,6 @@ object SignalOps {
           .select(col("vec_id").as("sid"), col("ss").as("css"), col("sv").as("cv"))
         // codegen L2² kernel — bit-identical to the sequential zip_with
         // HOF form and the oracle's list_sum (see SquaredL2)
-        graft.functions.SquaredL2.register(s)
         val d2: Column = graft.functions.SquaredL2.squared_l2("sv", "cv")
         val assigned = sub.join(broadcast(seeds), col("ss") === col("css"))
           .select(col("vec_id"), col("ss"), col("sid"), d2.as("d2"))

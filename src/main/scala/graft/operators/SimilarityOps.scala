@@ -39,7 +39,6 @@ object SimilarityOps {
     * rows at worst — prune with `minScore` to bound it at scale.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    CosineSimilarity.register(queries.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("em").as("qe")))
     val c = corpus.select(col("vec_id"), col("em"))
     val scored = c.join(q, col("vec_id") =!= col("qid"))
@@ -61,7 +60,6 @@ object SimilarityOps {
     */
   def binaryHammingTopK(queries: DataFrame, corpus: DataFrame,
       k: Int, shortlist: Int): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
     def half(from: Int): Column = expr(
       s"""aggregate(sequence(0, 31), 0L,
          |  (acc, d) -> acc + IF(em[d + $from] > 0,
@@ -157,7 +155,6 @@ object SimilarityOps {
     */
   def srpPairsAbove(e: DataFrame, planes: Int, tables: Int, dims: Int,
       thresh: Double): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
     val keyed = srpKeyed(e, planes, tables, dims, stride = planes)
     keyed.as("a").join(keyed.as("b"),
         col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id") &&
@@ -349,7 +346,6 @@ object SimilarityOps {
     * recall-gated.
     */
   def annTopKPortable(d: DataFrame, k: Int, planes: Int, tables: Int, dims: Int): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
     val e = d.select(col("vec_id"), col("em"))
     val keyed = srpKeyed(e, planes, tables, dims, stride = planes)
     // project to bare ids IMMEDIATELY: no threshold exists to evaluate
@@ -392,7 +388,6 @@ object SimilarityOps {
     */
   def srpPairsAboveGrown(e: DataFrame, dims: Int, thresh: Double,
       layout: SrpLayout = SrpGrown): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
     val keyed = layout.keyed(e, dims)
     keyed.as("a").hint("merge").join(keyed.as("b"),
         col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id") &&
@@ -447,7 +442,6 @@ object SimilarityOps {
     */
   def annTopKPortableGrown(d: DataFrame, k: Int, dims: Int,
       layout: SrpLayout = SrpGrown): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
     val keyed = layout.keyed(d.select(col("vec_id"), col("em")), dims)
     // r18: ONE exchange on the scalar candidate tail instead of two.
     // The bare dropDuplicates planned hash(qid, vec_id) for the dedup
@@ -509,7 +503,6 @@ object SimilarityOps {
     * generator for recall tests; deliberately NOT a registered query.
     */
   def exactPairsAbove(e: DataFrame, thresh: Double): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
         CosineSimilarity.cosine_sim("a.em", "b.em").as("score"))
@@ -729,7 +722,6 @@ object SimilarityOps {
     * assignment + fixed-point centroid update. Returns `(cell, ce)`.
     */
   def ivfTrain(corpus: DataFrame, cells: Int, iters: Int): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
     var centroids = corpus.orderBy("vec_id").limit(cells)
       .select(col("vec_id").as("cell"),
         transform(col("qm"), q => q.cast("double") / 1048576.0).as("ce"))
@@ -760,7 +752,6 @@ object SimilarityOps {
       .select(col("vec_id"), col("em"), col("cell"))
 
   def ivfTopK(d: DataFrame, k: Int, cells: Int, nprobe: Int, iters: Int): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
     val corpus = ivfCorpus(d)
     val centroids = ivfTrain(corpus, cells, iters)
 
@@ -877,7 +868,6 @@ object SimilarityOps {
     */
   def pqScored(e: DataFrame, subspaces: Int, subDim: Int,
       nCentroids: Int): DataFrame = {
-    graft.functions.SquaredL2.register(e.sparkSession)
     val sub = e.select(col("vec_id"), posexplode(
         array((0 until subspaces).map(j => slice(col("em"), j * subDim + 1, subDim)): _*)))
       .select(col("vec_id"), col("pos").as("ss"), col("col").as("sv"))
@@ -932,7 +922,6 @@ object SimilarityOps {
 
   def pqAdcTopK(d: DataFrame, k: Int, shortlist: Int, subspaces: Int,
       subDim: Int, nCentroids: Int): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
     val e = d.select(col("vec_id"), col("em"))
     val scored = pqScored(e, subspaces, subDim, nCentroids)
     val codes = pqCodes(scored)
@@ -1057,7 +1046,6 @@ object SimilarityOps {
   def ivfPqTopK(d: DataFrame, k: Int, shortlist: Int, cells: Int,
       nprobe: Int, iters: Int, subspaces: Int, subDim: Int,
       nCentroids: Int): DataFrame = {
-    CosineSimilarity.register(d.sparkSession)
     val e = d.select(col("vec_id"), col("em"))
     val corpus = ivfCorpus(d)
     val centroids = ivfTrain(corpus, cells, iters)
@@ -1431,7 +1419,6 @@ object SimilarityOps {
         // With a genuinely LARGE eval set you'd route the candidate
         // step through the SRP buckets (srpKeyed) instead — same
         // rerank, same output contract.
-        CosineSimilarity.register(s)
         val e = emb(s, dir).select(col("vec_id"), col("em"))
         val ev = e.where(col("vec_id") % 20 === 0 && col("vec_id") < 2000)
           .select(col("vec_id").as("eval_id"), col("em").as("ee"))
@@ -1509,7 +1496,6 @@ object SimilarityOps {
         // row_number over (cosine DESC, cell) — the same argmax-with-
         // tiebreak that hash-matches in sim_topk_bruteforce, so the
         // whole path stays bit-identical to the DuckDB oracle.
-        CosineSimilarity.register(s)
         val e = emb(s, dir).select(col("vec_id"), col("em"))
         // Seeds = the 8 lowest vec_ids actually PRESENT (TakeOrdered, no
         // assumption that ids 0..7 exist in every scale/filter of the

@@ -413,8 +413,6 @@ object TextOps {
         // reproduces them bit-for-bit; a production deployment would
         // swap in a true O(n) Rabin-Karp rolling recurrence as a custom
         // Expression (same selected positions, cheaper per char).
-        graft.functions.WindowMin.register(s)
-        graft.functions.Md5GramHashes.register(s)
         docs(s, dir)
           .where(length(col("text")) >= 11)
           // per-gram md5 via the fused kernel — bit-identical to the
@@ -460,8 +458,6 @@ object TextOps {
         // and codepoint windows aligned — guarded by TextOpsSpec's
         // ascii-fixture test). The expression is additionally
         // equivalence-tested against a brute-force reference.
-        graft.functions.RollingHashGrams.register(s)
-        graft.functions.WindowMin.register(s)
         docs(s, dir)
           .where(length(col("text")) >= 11)
           .select(col("doc_id"),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
-import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -156,7 +155,6 @@ object WaveOps {
         // the full-dim rerank reads only |probes|·k candidates. Slice
         // semantics: slice(em,1,16) ≡ DuckDB em[1:16]; both cosines are
         // the sequential-order codegen kernel, so ranks are bit-stable.
-        CosineSimilarity.register(s)
         val e = emb(s, dir)
         // probe set capped at 20 — same fixed-workload rationale (and
         // same unchanged-at-driver-SFs argument) as sim_mips_topk; the

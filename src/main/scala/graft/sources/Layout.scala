@@ -76,7 +76,6 @@ object Layout {
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
       files: Int = 8): Unit = {
     import org.apache.spark.sql.functions._
-    graft.functions.InterleaveBits.register(df.sparkSession)
     val stats = df.agg(
       min(colA).cast("double"), max(colA).cast("double"),
       min(colB).cast("double"), max(colB).cast("double")).head()

@@ -787,7 +787,6 @@ object VersionedTable {
   def optimizeZorder(spark: SparkSession, dir: String,
       colA: String, colB: String, files: Int = 8): (Long, Int) = {
     import org.apache.spark.sql.functions.{col, max, min}
-    graft.functions.InterleaveBits.register(spark)
     val cur = read(spark, dir, None)
     val st = cur.agg(
       min(col(colA).cast("double")), max(col(colA).cast("double")),

@@ -47,7 +47,6 @@ class AsOfCosineSpec extends SparkSpec {
   }
 
   test("cosine_sim expression is bit-identical to the HOF composition") {
-    CosineSimilarity.register(spark)
     val e = Tables.t(spark, sf, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("em"))
       .limit(50)
@@ -61,7 +60,6 @@ class AsOfCosineSpec extends SparkSpec {
   }
 
   test("rolling_hash_grams: O(n) incremental == brute-force per-gram polynomial") {
-    RollingHashGrams.register(spark)
     val B = 1000003L
     def brute(sr: String, k: Int): Seq[Long] = {
       val b = sr.getBytes("UTF-8")
@@ -81,7 +79,6 @@ class AsOfCosineSpec extends SparkSpec {
   }
 
   test("window_min: monotonic deque == per-position array_min(slice) HOF") {
-    graft.functions.WindowMin.register(spark)
     val rnd = new scala.util.Random(7)
     val cases = Seq(
       Seq.empty[Long], Seq(5L), Seq(3L, 1L, 2L), Seq(1L, 1L, 1L, 1L),
@@ -98,7 +95,6 @@ class AsOfCosineSpec extends SparkSpec {
   }
 
   test("md5_gram_hashes: fused kernel == conv(substring(md5)) HOF form") {
-    graft.functions.Md5GramHashes.register(spark)
     val rnd = new scala.util.Random(11)
     val cases = Seq("", "short", "exactly8", "the quick brown fox jumps",
       // non-ASCII: kernel must window by CODEPOINT boundaries like the
@@ -121,7 +117,6 @@ class AsOfCosineSpec extends SparkSpec {
   }
 
   test("simhash32: fused kernel == md5-transform + majority-fold HOF form") {
-    graft.functions.SimHash32.register(spark)
     val docs = Seq(
       "", "one", "the quick brown fox jumps over the lazy dog",
       "a a a a b", "x y z x y z x y z w",
@@ -137,7 +132,6 @@ class AsOfCosineSpec extends SparkSpec {
   }
 
   test("cosine_sim handles zero vectors and SQL registration") {
-    CosineSimilarity.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(0D, 0D), array(1D, 2D)) AS z, " +
         "cosine_sim(array(1D, 0D), array(1D, 0D)) AS one").head()

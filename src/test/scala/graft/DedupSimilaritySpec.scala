@@ -28,7 +28,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("word_gram_hashes kernel is distinctness-equivalent to the string shingle pipeline") {
-    graft.functions.WordGramHashes.register(spark)
     val edge = Seq(
       (1L, "a b c d a b c d"),           // repeated grams collapse
       (2L, "  a   b  "),                 // multi-space runs, < n tokens

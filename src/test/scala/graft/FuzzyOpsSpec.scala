@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, JaroWinkler}
+import graft.functions.JaroWinkler
 import graft.operators.{FuzzyOps, SimilarityOps}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,7 +35,6 @@ class FuzzyOpsSpec extends SparkSpec {
   }
 
   test("JaroWinkler expression evaluates through codegen and SQL") {
-    JaroWinkler.register(spark)
     val out = Seq(("martha", "marhta"), ("abc", "abc"))
       .toDF("a", "b")
       .select(expr("jaro_winkler(a, b)").as("jw"))
@@ -48,7 +47,6 @@ class FuzzyOpsSpec extends SparkSpec {
   }
 
   test("DotProduct expression is bit-identical to the HOF dot form") {
-    DotProduct.register(spark)
     val e = Tables.t(spark, sf, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("em"))
       .limit(50)
@@ -60,7 +58,6 @@ class FuzzyOpsSpec extends SparkSpec {
   }
 
   test("DotProduct nulls out on length mismatch and null elements (no silent truncation)") {
-    DotProduct.register(spark)
     val rows = Seq(
       (1L, Seq(1.0, 2.0), Seq(3.0, 4.0)),          // well-formed → 11.0
       (2L, Seq(1.0, 2.0, 5.0), Seq(3.0, 4.0)),     // length mismatch → null

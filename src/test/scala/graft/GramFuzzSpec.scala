@@ -33,7 +33,6 @@ class GramFuzzSpec extends SparkSpec {
       .filter(_.length == n).map(_.mkString(" ")).toSet.size
 
   test("WordGramHashes matches reference + DSL pipeline on 300 fuzzed docs") {
-    graft.functions.WordGramHashes.register(spark)
     val rnd = new scala.util.Random(42)
     val docs = (0 until 300).map(i => (i.toLong, randomDoc(rnd)))
     for (n <- Seq(2, 3, 5)) {
@@ -54,7 +53,6 @@ class GramFuzzSpec extends SparkSpec {
   }
 
   test("PosWordGrams generator matches the explode(ngrams) pipeline on fuzzed docs") {
-    graft.functions.PosWordGrams.register(spark)
     val rnd = new scala.util.Random(7)
     val docs = (0 until 200).map(i => (i.toLong, randomDoc(rnd))) :+
       (999L, "") :+ (1000L, "solo") :+ (1001L, "   ")
@@ -79,7 +77,6 @@ class GramFuzzSpec extends SparkSpec {
   }
 
   test("gram hashes are stable across evaluation paths (eval vs codegen)") {
-    graft.functions.WordGramHashes.register(spark)
     val d = Seq((1L, "a b c d e f g")).toDF("doc_id", "text")
     val viaPlan = d.select(graft.functions.WordGramHashes.word_gram_hashes("text", 3))
       .as[Seq[Long]].head

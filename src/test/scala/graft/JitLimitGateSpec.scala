@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.DotProduct
 import graft.operators.SimilarityOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, col, count, explode, expr, lit, when}
@@ -65,7 +64,6 @@ class JitLimitGateSpec extends SparkSpec {
   // all inside the never-JIT window — and exceeds janino's 64 KB
   // per-method limit at 13:18+.
   private def caseWhenKeyed(s: SparkSession, planes: Int = 12, tables: Int = 16): DataFrame = {
-    DotProduct.register(s)
     val keyCols: Seq[Column] = (0 until tables).map { t =>
       (0 until planes).map { pp =>
         val sgn = SimilarityOps.srpSigns(t * SimilarityOps.SrpStride + pp, 64)

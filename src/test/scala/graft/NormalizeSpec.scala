@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class NormalizeSpec extends SparkSpec {
   import spark.implicits._
 
-  NormalizeText.register(spark)
-
   private def norm(s: String, fold: Boolean): String =
     Seq(s).toDF("w")
       .select(expr(s"normalize_text(w, $fold)").as("n"))

@@ -172,7 +172,6 @@ object PropertySpec extends Properties("graft") {
     * combining-mark forms.
     */
   property("normalize_text codegen == interpreted; idempotent in both modes") = {
-    graft.functions.NormalizeText.register(spark)
     val piece = Gen.oneOf("abc", "caf\u00e9", "cafe\u0301", "\u00fc", "u\u0308",
       "na\u00efve", " ", "x")
     forAll(Gen.listOf(piece).map(_.take(12).mkString)) { s0 =>

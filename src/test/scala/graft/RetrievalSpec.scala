@@ -15,7 +15,6 @@ class RetrievalSpec extends SparkSpec {
     .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("em"))
 
   private lazy val slate = {
-    CosineSimilarity.register(spark)
     val probe = broadcast(emb.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("em").as("qe")))
     emb.join(probe, col("vec_id") =!= col("qid"))

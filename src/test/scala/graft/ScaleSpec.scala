@@ -132,31 +132,6 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("GraftExtensions injects cosine_sim (a live context can't re-apply extensions, so inspect the injection list)") {
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(exts)
-    // the injected-function buffer is private[sql]; read it reflectively
-    val f = exts.getClass.getDeclaredFields
-      .find(_.getName.contains("injectedFunctions")).get
-    f.setAccessible(true)
-    val injected = f.get(exts).asInstanceOf[scala.collection.mutable.Buffer[
-      (org.apache.spark.sql.catalyst.FunctionIdentifier, _, Seq[
-        org.apache.spark.sql.catalyst.expressions.Expression] => org.apache.spark.sql.catalyst.expressions.Expression)]]
-    assert(injected.exists(_._1.funcName == "cosine_sim"))
-    // and the builder produces a working expression
-    val (_, _, builder) = injected.find(_._1.funcName == "cosine_sim").get
-    val e = builder(Seq(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(Array(1.0, 2.0)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(Array(2.0, 4.0))))
-    assert(math.abs(e.eval(null).asInstanceOf[Double] - 1.0) < 1e-12)
-    // normalize_text rides the same deployment path
-    val (_, _, nb) = injected.find(_._1.funcName == "normalize_text").get
-    val ne = nb(Seq(
-      org.apache.spark.sql.catalyst.expressions.Literal.create("café"),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(true)))
-    assert(ne.eval(null).toString == "cafe")
-  }
-
   test("broadcast(dim) produces BroadcastHashJoin, fact side unshuffled") {
     val p = Tables.t(spark, sf, "part")
     val li = Tables.t(spark, sf, "lineitem")

@@ -28,7 +28,6 @@ class SimilarityTransitSpec extends SparkSpec {
     * recomputed over the double `em` of both ids, both as raw bits.
     */
   private def withControl(scored: DataFrame, a: String, b: String): Seq[(Long, Long)] = {
-    CosineSimilarity.register(spark)
     val e = emb(sf).select(col("vec_id"), col("em"))
     scored.select(col(a).as("a"), col(b).as("b"), col("score"))
       .join(e.select(col("vec_id").as("a"), col("em").as("ea")), "a")
@@ -40,7 +39,6 @@ class SimilarityTransitSpec extends SparkSpec {
   }
 
   test("kernel: cosine_sim on array<float> widens exactly (bit-identical to the double kernel)") {
-    CosineSimilarity.register(spark)
     // float-originated values, including negatives, zeros, and a
     // zero-norm row (kernel contract: 0.0, not NaN)
     val rows = spark.read.parquet(s"$sf/embeddings.parquet")

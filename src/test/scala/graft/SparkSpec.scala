@@ -11,14 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000") // see Bench.scala
-      .getOrCreate()
+    val s = GraftSession("graft-tests", cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
