@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Ingest
 import graft.sources.Sources
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Runnable job driver — the Spark form of the reference CLI
@@ -22,7 +22,13 @@ import org.apache.spark.sql.functions._
   * for `Sources.kafkaBatch(spark, brokers, topic)` — same pipeline.)
   *
   * Semantics per SURVEY §2A: lenient fixed-schema JSON parse, latest-wins
-  * dedup by offset, JSON-lines overwrite snapshot.
+  * dedup by offset, JSON-lines snapshot that replaces the previous one.
+  *
+  * One pass: the job is a single Spark write that parses each record
+  * once ([[Ingest.parseTagged]]) and reports its counts from that write
+  * ([[Report]]) — there is no trailing `count()`. The snapshot is
+  * published atomically ([[Ingest.writeSnapshotJson]]): a failed run
+  * leaves the previous snapshot in place.
   */
 object IngestJob {
 
@@ -45,8 +51,25 @@ object IngestJob {
     a
   }
 
-  /** The job body, session-injected for tests. */
-  def run(spark: SparkSession, a: Args): Long = {
+  /** What one run did, counted in the run's own write (no second job).
+    * `recordsIn` and `recordsCorrupt` count the scanned records (after
+    * `--limit`) and the malformed ones among them; `keysOut` is the rows
+    * written. The offsets span every scanned record, malformed included;
+    * they are `None` when nothing was scanned.
+    */
+  case class Report(recordsIn: Long, recordsCorrupt: Long, keysOut: Long,
+      offsetMin: Option[Long], offsetMax: Option[Long]) {
+    def line(output: String): String =
+      s"[ingest] read $recordsIn records ($recordsCorrupt corrupt), wrote $keysOut keys to $output; " +
+        s"offsets ${offsetMin.fold("-")(_.toString)}..${offsetMax.fold("-")(_.toString)}"
+  }
+
+  /** The job body, session-injected for tests: one Spark write. Its
+    * counters ride that write as `Dataset.observe` metrics — on the
+    * tagged records before the malformed ones are dropped, and on the
+    * snapshot rows — so nothing is scanned, parsed or shuffled twice.
+    */
+  def report(spark: SparkSession, a: Args): Report = {
     val raw: DataFrame = a.format match {
       case "kafka-parquet" => spark.read.parquet(a.input)
       case "jsonl" =>
@@ -63,17 +86,33 @@ object IngestJob {
     require(a.limit <= Int.MaxValue,
       s"--limit ${a.limit} exceeds the supported cap of ${Int.MaxValue}")
     val capped = if (a.limit > 0) raw.limit(a.limit.toInt) else raw
-    val snapshot = Sources.kafkaShapedToSnapshot(capped, scoped = a.scoped)
+    val scanned = Observation()
+    val written = Observation()
+    val snapshot = Sources.kafkaShapedToSnapshot(capped, scoped = a.scoped,
+      observeTagged = _.observe(scanned,
+        count(lit(1)).as("records_in"),
+        count_if(!col(Ingest.ParsedOk)).as("records_corrupt"),
+        min("offset").as("offset_min"),
+        max("offset").as("offset_max")))
+      .observe(written, count(lit(1)).as("keys_out"))
     Ingest.writeSnapshotJson(snapshot, a.output)
-    snapshot.count()
+    val in = scanned.get
+    def offset(name: String) = Option(in(name)).map(_.asInstanceOf[Long])
+    Report(
+      recordsIn = in("records_in").asInstanceOf[Long],
+      recordsCorrupt = in("records_corrupt").asInstanceOf[Long],
+      keysOut = written.get("keys_out").asInstanceOf[Long],
+      offsetMin = offset("offset_min"),
+      offsetMax = offset("offset_max"))
   }
+
+  /** The number of keys written — [[report]]'s `keysOut`. */
+  def run(spark: SparkSession, a: Args): Long = report(spark, a).keysOut
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
     val spark = GraftSession("graft-ingest")
-    try {
-      val n = run(spark, a)
-      println(s"[ingest] wrote $n records to ${a.output}")
-    } finally spark.stop()
+    try println(report(spark, a).line(a.output))
+    finally spark.stop()
   }
 }

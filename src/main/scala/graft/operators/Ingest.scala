@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
+import java.io.IOException
+import java.util.UUID
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -18,10 +21,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (`HadoopKafkaConsumer.java:92-101,139-148`).
   *
   * Here that becomes a declarative DataFrame pipeline:
-  * `from_json` (null on malformed = skip-bad-records) → `groupBy(key)`
-  * + `max_by(struct(payload), version)` (one shuffle, partial map-side
-  * aggregation — strictly better than the reference's per-reducer
-  * in-heap HashMap which cannot spill) → `to_json` → overwrite sink.
+  * `from_json` once per record (malformed = skip-bad-records, or a
+  * dead-letter slice) → `groupBy(key)` + `max_by(struct(payload),
+  * version)` (one shuffle, partial map-side aggregation — strictly
+  * better than the reference's per-reducer in-heap HashMap which cannot
+  * spill) → `to_json` → a sink that publishes the snapshot through a
+  * temp directory and a rename, so a failed write keeps the old one.
   *
   * The `events` testdata table is the Kafka-topic analog
   * (`event_id` ↔ offset/version, `user_id` ↔ message id, `props` ↔ JSON
@@ -34,8 +39,38 @@ object Ingest {
     StructField("id", LongType),
     StructField("msg", StringType)))
 
+  /** Name of the boolean column [[parseTagged]] adds: true when the
+    * record's JSON parsed, false when it is malformed.
+    */
+  val ParsedOk = "__parsed_ok"
+
+  /** The one parse step under [[parseLenient]] and [[parseWithDlq]]:
+    * `df` plus the parsed struct `__j` (the schema's fields, `null` when
+    * absent) and [[ParsedOk]]. No row is dropped.
+    *
+    * `from_json` is evaluated once per record. It sits inside a
+    * one-element `inline(array(struct(...)))` — a Generate node — which
+    * the optimizer cannot push a filter on `__j` through, nor collapse
+    * into the projection above it. Without that barrier a filter on the
+    * parsed struct is pushed below the projection with the `from_json`
+    * alias copied into it, and each record is parsed once per reference
+    * (three times in the lenient path). Works on batch and streaming
+    * frames.
+    */
+  def parseTagged(df: DataFrame, jsonCol: String, schema: StructType): DataFrame = {
+    // from_json in PERMISSIVE mode yields an all-null row (not a null
+    // struct) on malformed input, so null-struct checks can't detect it;
+    // a corrupt-record sentinel column can.
+    val withCorrupt = StructType(schema.fields :+ StructField("_corrupt", StringType))
+    val j = from_json(col(jsonCol), withCorrupt,
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
+    df.select(df.columns.toIndexedSeq.map(col) :+ inline(array(struct(j.as("__j")))): _*)
+      .withColumn(ParsedOk, col("__j").isNotNull && col("__j._corrupt").isNull)
+  }
+
   /** Lenient fixed-schema JSON parse: malformed rows dropped (reference
     * skip-bad-records), missing fields defaulted (`MyKafkaMessage.java:9-12`).
+    * Tag ([[parseTagged]]), then [[keepParsed]].
     *
     * `defaults` maps field name → default literal; fields absent from the
     * map pass through as-is (nullable).
@@ -44,21 +79,28 @@ object Ingest {
       df: DataFrame,
       jsonCol: String,
       schema: StructType,
+      defaults: Map[String, Column]): DataFrame =
+    keepParsed(parseTagged(df, jsonCol, schema), jsonCol, schema, defaults)
+
+  /** The lenient tail over [[parseTagged]]'s rows: filter out malformed
+    * records, then apply `defaults`. Output: the tagged frame's source
+    * columns minus `jsonCol`, then the schema's fields. Callers that count
+    * the tagged rows (`Dataset.observe`) put the observation between the
+    * two steps.
+    */
+  def keepParsed(
+      tagged: DataFrame,
+      jsonCol: String,
+      schema: StructType,
       defaults: Map[String, Column]): DataFrame = {
-    // from_json in PERMISSIVE mode yields an all-null row (not a null
-    // struct) on malformed input, so null-struct checks can't detect it;
-    // a corrupt-record sentinel column can.
-    val withCorrupt = StructType(schema.fields :+ StructField("_corrupt", StringType))
-    val parsed = df
-      .withColumn("__j", from_json(col(jsonCol), withCorrupt,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
-      .where(col("__j").isNotNull && col("__j._corrupt").isNull) // malformed → dropped
     val fields = schema.fields.map { f =>
       defaults.get(f.name)
         .map(d => coalesce(col(s"__j.${f.name}"), d).as(f.name))
         .getOrElse(col(s"__j.${f.name}").as(f.name))
     }
-    parsed.select(df.columns.toIndexedSeq.map(col) ++ fields: _*).drop("__j", jsonCol)
+    val source = tagged.columns.filterNot(Set(jsonCol, "__j", ParsedOk))
+    tagged.where(col(ParsedOk))
+      .select(source.toIndexedSeq.map(col) ++ fields: _*)
   }
 
   /** Dead-letter split: parse like [[parseLenient]] but KEEP malformed
@@ -68,18 +110,16 @@ object Ingest {
     * (`MyKafkaMessage.java:9-12` lenient Gson + the consumer's
     * keep-if-parsed loop); a production feed needs the drop COUNTED and
     * the payloads QUARANTINED for replay after the producer bug is fixed.
-    * Map-only: one from_json per row, no shuffle — route the 'corrupt'
-    * slice to a quarantine sink and the 'ok' slice onward.
+    * Map-only: the same one-`from_json` [[parseTagged]] step, no shuffle —
+    * route the 'corrupt' slice to a quarantine sink and the 'ok' slice
+    * onward.
     */
   def parseWithDlq(df: DataFrame, jsonCol: String, schema: StructType): DataFrame = {
-    val withCorrupt = StructType(schema.fields :+ StructField("_corrupt", StringType))
-    val parsed = df.withColumn("__j", from_json(col(jsonCol), withCorrupt,
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
     val fields = schema.fields.map(f => col(s"__j.${f.name}").as(f.name))
-    parsed.select(
+    parseTagged(df, jsonCol, schema).select(
       df.columns.toIndexedSeq.map(col) ++
-        (when(col("__j").isNull || col("__j._corrupt").isNotNull, lit("corrupt"))
-          .otherwise(lit("ok")).as("disposition") +: fields.toIndexedSeq): _*)
+        (when(col(ParsedOk), lit("ok")).otherwise(lit("corrupt")).as("disposition")
+          +: fields.toIndexedSeq): _*)
   }
 
   /** Latest-wins dedup: keep, per `keys`, the row with the maximal
@@ -116,13 +156,42 @@ object Ingest {
       version: Seq[String], payloadCol: String): DataFrame =
     latestWins(df, keys, version).where(col(payloadCol).isNotNull)
 
-  /** Reference sink: overwrite the output directory with one JSON object
-    * per line (`HadoopKafkaConsumer.java:92-101,139-148` — delete-then-
-    * write snapshot ≡ `mode("overwrite")`).
+  /** Reference sink: replace the output directory with one JSON object
+    * per line (`HadoopKafkaConsumer.java:92-101,139-148`).
+    *
+    * The reference deletes the old snapshot and then writes the new one,
+    * so a failed write leaves nothing. Here the rows go to a sibling
+    * `<path>.tmp-<uuid>` first; only after that write succeeds is the
+    * snapshot swapped in with two Hadoop `FileSystem` renames (old
+    * directory to `<path>.old-<uuid>`, temp directory to `path`), and the
+    * old directory deleted. A failed write deletes the temp directory and
+    * leaves the previous snapshot untouched. Between the two renames there
+    * is a short window in which `path` does not exist; a reader that lands
+    * in it sees a missing snapshot, never a partial one. If the second
+    * rename fails, the old directory is renamed back.
     */
-  def writeSnapshotJson(df: DataFrame, path: String): Unit =
-    df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
-      .write.mode("overwrite").text(path)
+  def writeSnapshotJson(df: DataFrame, path: String): Unit = {
+    val fs = new Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val dest = fs.makeQualified(new Path(path))
+    def sibling(tag: String) = new Path(dest.getParent, s"${dest.getName}.$tag-${UUID.randomUUID()}")
+    val tmp = sibling("tmp")
+    try df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
+      .write.text(tmp.toString)
+    catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    val old = if (fs.exists(dest)) Some(sibling("old")) else None
+    old.foreach { o =>
+      if (!fs.rename(dest, o)) {
+        fs.delete(tmp, true)
+        throw new IOException(s"could not move the previous snapshot $dest aside")
+      }
+    }
+    if (!fs.rename(tmp, dest)) {
+      old.foreach(fs.rename(_, dest))
+      fs.delete(tmp, true)
+      throw new IOException(s"could not publish the snapshot at $dest")
+    }
+    old.foreach(fs.delete(_, true))
+  }
 
   // ---------------------------------------------------------------- queries
 

@@ -50,15 +50,22 @@ object Sources {
     * yields) to the deduped snapshot rows. `scoped=true` reproduces the
     * reference's per-partition dedup (`KafkaContext.java:103`);
     * `false` is the principled global dedup.
+    *
+    * One `from_json` per record ([[Ingest.parseTagged]]). `observeTagged`
+    * sees every tagged record — `partition`, `offset`, `value`,
+    * [[Ingest.ParsedOk]] — before malformed ones are dropped; `IngestJob`
+    * hangs its `Dataset.observe` counters there.
     */
-  def kafkaShapedToSnapshot(df: DataFrame, scoped: Boolean): DataFrame = {
-    val parsed = Ingest.parseLenient(
+  def kafkaShapedToSnapshot(df: DataFrame, scoped: Boolean,
+      observeTagged: DataFrame => DataFrame = identity): DataFrame = {
+    val tagged = Ingest.parseTagged(
       df.select(col("partition"), col("offset"),
         col("value").cast("string").as("value")), // byte[]→UTF-8, the intent
       // of KafkaContext.java:107 (whose String.valueOf(byte[]) is a bug)
       jsonCol = "value",
-      schema = Ingest.msgSchema,
-      defaults = Map("id" -> lit(0L), "msg" -> lit("")))
+      schema = Ingest.msgSchema)
+    val parsed = Ingest.keepParsed(observeTagged(tagged), jsonCol = "value",
+      schema = Ingest.msgSchema, defaults = Map("id" -> lit(0L), "msg" -> lit("")))
     val keys = if (scoped) Seq("partition", "id") else Seq("id")
     Ingest.latestWins(parsed, keys, version = Seq("offset"))
       .select((Seq(col("id"), col("msg")) ++

@@ -708,7 +708,8 @@ object StreamingIngest {
     * with the deduped latest state of THAT batch plus what `latestWins`
     * already folded (callers feed this from `latestWinsUpdates` for a
     * full-state snapshot, or from a raw stream for per-batch snapshots).
-    * JSON-lines overwrite, like the reference sink.
+    * JSON lines through [[Ingest.writeSnapshotJson]], so each batch's
+    * snapshot replaces the last one atomically.
     */
   def snapshotSink(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
     df.writeStream

@@ -1,10 +1,27 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 /** End-to-end job driver: CLI parse + full pipeline to a snapshot dir. */
 class IngestJobSpec extends SparkSpec {
   import spark.implicits._
+
+  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A kafka-shaped parquet input (`partition, offset, value: binary`). */
+  private def kafkaParquet(rows: Seq[(Int, Long, String)], files: Int = 1): String = {
+    val in = tmp("job_in")
+    rows.toDF("partition", "offset", "value")
+      .withColumn("value", col("value").cast("binary"))
+      .repartition(files)
+      .write.mode("overwrite").parquet(in)
+    in
+  }
 
   test("arg parsing: defaults, flags, errors") {
     val a = IngestJob.parseArgs(Array(
@@ -15,46 +32,105 @@ class IngestJobSpec extends SparkSpec {
   }
 
   test("kafka-parquet job: parse, dedup latest, overwrite JSON snapshot") {
-    val in = java.nio.file.Files.createTempDirectory("job_in").toString
-    val out = java.nio.file.Files.createTempDirectory("job_out").toString
-    Seq(
+    val in = kafkaParquet(Seq(
       (0, 1L, """{"id":7,"msg":"old"}"""),
       (0, 9L, """{"id":7,"msg":"new"}"""),
       (1, 2L, """{"id":8,"msg":"x"}"""),
-      (1, 3L, "broken")
-    ).toDF("partition", "offset", "value")
-      .withColumn("value", col("value").cast("binary"))
-      .write.mode("overwrite").parquet(in)
+      (1, 3L, "broken")))
+    val out = tmp("job_out")
 
     val n = IngestJob.run(spark,
       IngestJob.Args(input = in, format = "kafka-parquet", output = out))
     assert(n == 2)
+    assert(n == spark.read.text(out).count(), "the count returned is the rows written")
     val lines = spark.read.text(out).as[String].collect().sorted
     assert(lines.toSeq == Seq("""{"id":7,"msg":"new"}""", """{"id":8,"msg":"x"}"""))
 
     // rerun with different data → overwrite, not append (reference
     // delete-then-write, HadoopKafkaConsumer.java:139-147)
-    val in2 = java.nio.file.Files.createTempDirectory("job_in2").toString
-    Seq((0, 1L, """{"id":1,"msg":"only"}""")).toDF("partition", "offset", "value")
-      .withColumn("value", col("value").cast("binary"))
-      .write.mode("overwrite").parquet(in2)
+    val in2 = kafkaParquet(Seq((0, 1L, """{"id":1,"msg":"only"}""")))
     IngestJob.run(spark, IngestJob.Args(input = in2, output = out))
     assert(spark.read.text(out).as[String].collect().toSeq ==
       Seq("""{"id":1,"msg":"only"}"""))
   }
 
   test("jsonl format + limit cap") {
-    val in = java.nio.file.Files.createTempDirectory("job_jl").toString
-    val out = java.nio.file.Files.createTempDirectory("job_jlout").toString
+    val in = tmp("job_jl")
+    val out = tmp("job_jlout")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(in, "d.jsonl"),
       Seq.tabulate(10)(i => s"""{"id":$i,"msg":"m$i"}""").mkString("\n"))
     val n = IngestJob.run(spark,
       IngestJob.Args(input = in, format = "jsonl", output = out, limit = 4))
     assert(n == 4) // limit caps scanned records (reference kafka.limit)
+    assert(n == spark.read.text(out).count(), "the count returned is the rows written")
     // a limit beyond Int.MaxValue must be rejected, not overflow toInt
     // into a silent negative cap
     intercept[IllegalArgumentException](IngestJob.run(spark,
       IngestJob.Args(input = in, format = "jsonl", output = out,
         limit = Int.MaxValue + 1L)))
+  }
+
+  test("report: planted corrupt records are counted, keys and offsets match the construction") {
+    // 600 records over 60 ids, offsets 100..699; every 7th record is
+    // planted corrupt (truncated or not JSON at all)
+    val rows = (0 until 600).map { i =>
+      val v =
+        if (i % 7 == 3) s"""{"id":${i % 60},"ms"""
+        else if (i % 7 == 5) s"garbage#$i"
+        else s"""{"id":${i % 60},"msg":"m$i"}"""
+      (i % 3, 100L + i, v)
+    }
+    val planted = (0 until 600).count(i => i % 7 == 3 || i % 7 == 5)
+    val keys = (0 until 600).filterNot(i => i % 7 == 3 || i % 7 == 5).map(_ % 60).distinct.size
+    val out = tmp("job_rep")
+    val r = IngestJob.report(spark,
+      IngestJob.Args(input = kafkaParquet(rows, files = 3), output = out))
+    assert(r == IngestJob.Report(recordsIn = 600, recordsCorrupt = planted,
+      keysOut = keys, offsetMin = Some(100L), offsetMax = Some(699L)))
+    assert(spark.read.text(out).count() == keys)
+    assert(r.line(out) ==
+      s"[ingest] read 600 records ($planted corrupt), wrote $keys keys to $out; offsets 100..699")
+  }
+
+  test("empty input: 0 keys, an empty snapshot, and no wait on the counters") {
+    val in = kafkaParquet(Seq.empty)
+    val out = tmp("job_empty")
+    val r = Await.result(Future(IngestJob.report(spark,
+      IngestJob.Args(input = in, output = out))), 2.minutes)
+    assert(r == IngestJob.Report(0, 0, 0, None, None))
+    assert(spark.read.text(out).count() == 0)
+  }
+
+  test("single pass: one run reads each input record exactly once") {
+    val n = 2000
+    val in = kafkaParquet(
+      (0 until n).map(i => (i % 4, i.toLong, s"""{"id":${i % 50},"msg":"m$i"}""")), files = 4)
+    val out = tmp("job_pass")
+    val marker = "ingest-job-spec-marker"
+    val read = new AtomicLong()
+    @volatile var markerJob = -1
+    @volatile var markerDone = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone = true
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      IngestJob.run(spark, IngestJob.Args(input = in, output = out))
+      // events reach a listener in order: once the marker job's end is
+      // seen, every task of the run has been counted
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60.seconds.toNanos
+      while (!markerDone && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerDone, "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    assert(read.get == n, s"records read over one run: ${read.get}, input: $n")
   }
 }

@@ -1,8 +1,12 @@
 package graft
 
 import graft.operators.Ingest
+import graft.sources.Sources
+import graft.streaming.StreamingIngest
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
 
 /** Reference-parity edge-case corpus (FIXTURES.md §A) + property tests
   * (SURVEY.md §5.3, seeded-random inputs) for the lenient parse and
@@ -69,6 +73,59 @@ class IngestSpec extends SparkSpec {
     Ingest.writeSnapshotJson(Seq((2L, "new")).toDF("id", "msg"), dir)
     val lines = spark.read.text(dir).as[String].collect()
     assert(lines.toSeq == Seq("""{"id":2,"msg":"new"}"""))
+  }
+
+  test("snapshot publish is atomic: a write that fails mid-task keeps the previous snapshot byte-identical") {
+    val parent = java.nio.file.Files.createTempDirectory("snap_atomic")
+    val dir = parent.resolve("snapshot")
+    Ingest.writeSnapshotJson(Seq((1L, "old"), (2L, "kept")).toDF("id", "msg"), dir.toString)
+    def contents(): Map[String, Seq[Byte]] = {
+      val files = java.nio.file.Files.list(dir)
+      try files.iterator().asScala.map(f =>
+        f.getFileName.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally files.close()
+    }
+    val before = contents()
+    assert(before.keys.exists(_.startsWith("part-")))
+    // the planted row fails its task after other rows were written
+    val failing = spark.range(0, 400, 1, 4).select(col("id"),
+      when(col("id") === 333L, raise_error(lit("planted write failure")))
+        .otherwise(lit("new")).as("msg"))
+    val e = intercept[Exception](Ingest.writeSnapshotJson(failing, dir.toString))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted write failure")))
+    assert(contents() == before, "the previous snapshot must survive a failed write")
+    val siblings = {
+      val l = java.nio.file.Files.list(parent)
+      try l.iterator().asScala.map(_.getFileName.toString).toList finally l.close()
+    }
+    assert(siblings == List("snapshot"), s"no temp or old directory may be left: $siblings")
+    // and a good write still replaces it
+    Ingest.writeSnapshotJson(Seq((3L, "next")).toDF("id", "msg"), dir.toString)
+    assert(spark.read.text(dir.toString).as[String].collect().toSeq == Seq("""{"id":3,"msg":"next"}"""))
+  }
+
+  test("plan shape: every lenient and DLQ parse path evaluates from_json once per record") {
+    def jsonParses(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+      }.sum
+    // a computed frame, not a local Seq: the optimizer would evaluate a
+    // projection over local rows at plan time and leave no parse to count
+    val id = col("id")
+    val frame = spark.range(0, 2).select(id.cast("int").as("partition"), (id + 1).as("offset"),
+      when(id === 0, lit("""{"id":7,"msg":"a"}""")).otherwise(lit("broken")).as("value"))
+    val kafka = frame.withColumn("value", col("value").cast("binary"))
+    val paths = Seq(
+      "kafkaShapedToSnapshot global" -> Sources.kafkaShapedToSnapshot(kafka, scoped = false),
+      "kafkaShapedToSnapshot scoped" -> Sources.kafkaShapedToSnapshot(kafka, scoped = true),
+      "parseKafkaShaped (batch)" -> StreamingIngest.parseKafkaShaped(frame),
+      "parseLenient" -> Ingest.parseLenient(frame, "value", Ingest.msgSchema,
+        Map("id" -> lit(0L), "msg" -> lit(""))),
+      "parseWithDlq" -> Ingest.parseWithDlq(frame, "value", Ingest.msgSchema))
+    for ((name, df) <- paths) assert(jsonParses(df) == 1, name)
+    // and the shared step still computes what the lenient path keeps
+    assert(StreamingIngest.parseKafkaShaped(frame).collect().toSeq == Seq(Row(7L, "a", 1L)))
   }
 
   test("DLQ split: conserves every row, quarantines raw payloads, agrees with the lenient drop") {
