@@ -8,7 +8,7 @@ import graft.plans.AsOfJoin
 import graft.sources.Sources
 import graft.streaming.StreamingIngest
 import graft.streaming.StreamingIngest.KeyedRecord
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -19,6 +19,15 @@ object Extras {
 
   /** Typed row for the Dataset[T]-surface query. */
   case class TypedEvent(user_id: Long, event_type: String, value: Double)
+
+  /** The events file stream as upserts: user → latest event type, by event id. */
+  private def eventsAsKeyed(s: SparkSession, dir: String): Dataset[KeyedRecord] = {
+    import s.implicits._
+    Sources.eventsStream(s, dir)
+      .select(col("user_id").as("id"), col("event_type").as("msg"),
+        col("event_id").as("version"))
+      .as[KeyedRecord]
+  }
 
   val all: Seq[GQuery] = Seq(
 
@@ -411,22 +420,8 @@ object Extras {
         // independent, so batch slicing isn't part of the contract here;
         // the multi-batch replay-order property is exercised by the
         // MemoryStream suites in StreamingSpec.
-        import s.implicits._
-        val src = Sources.eventsStream(s, dir)
-          .select(col("user_id").as("id"), col("event_type").as("msg"),
-            col("event_id").as("version"))
-          .as[KeyedRecord]
-        s.catalog.dropTempView("latest_upsert_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.latestWinsUpdates(src)
-            .writeStream.format("memory").queryName("latest_upsert_sink")
-            .outputMode("update").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        Ingest.latestWins(s.table("latest_upsert_sink"),
-            keys = Seq("id"), version = Seq("version"))
-          .select(col("id"), col("msg"), col("version"))
-          .orderBy("id")
+        StreamingIngest.drainUpserts(
+          StreamingIngest.latestWinsUpdates(eventsAsKeyed(s, dir)), "latest_upsert_sink")
       },
       Some("""SELECT user_id AS id, arg_max(event_type, event_id) AS msg,
              |       max(event_id) AS version
@@ -439,35 +434,12 @@ object Extras {
         // transformWithState (StatefulProcessor + RocksDB store) form of
         // the upsert — the driver gate now certifies the modern state
         // API against the identical batch arg_max oracle. The provider
-        // conf is set for the query and restored after (the two state
-        // APIs use different store layouts).
-        import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val src = Sources.eventsStream(s, dir)
-            .select(col("user_id").as("id"), col("event_type").as("msg"),
-              col("event_id").as("version"))
-            .as[KeyedRecord]
-          s.catalog.dropTempView("tws_upsert_sink")
-          StreamingIngest.withStateShards(s, 8) {
-            val q = StreamingIngest.latestWinsUpdatesTws(src)
-              .writeStream.format("memory").queryName("tws_upsert_sink")
-              .outputMode("update").start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          Ingest.latestWins(s.table("tws_upsert_sink"),
-              keys = Seq("id"), version = Seq("version"))
-            .select(col("id"), col("msg"), col("version"))
-            .orderBy("id").localCheckpoint()
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(providerKey, v)
-            case None => s.conf.unset(providerKey)
-          }
+        // conf is scoped to the query (the two state APIs use different
+        // store layouts).
+        StreamingIngest.withRocksDbState(s) {
+          StreamingIngest.drainUpserts(
+            StreamingIngest.latestWinsUpdatesTws(eventsAsKeyed(s, dir)), "tws_upsert_sink")
+            .localCheckpoint()
         }
       },
       Some("""SELECT user_id AS id, arg_max(event_type, event_id) AS msg,
@@ -595,11 +567,7 @@ object Extras {
         // microsecond precision.
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        StreamingIngest.withRocksDbState(s) {
           val maxTs = Tables.t(s, dir, "events")
             .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
           val bulk = Sources.eventsStream(s, dir)
@@ -626,11 +594,6 @@ object Extras {
             .groupBy("user_id")
             .agg(count(lit(1)).as("n_unconverted"))
             .orderBy("user_id").localCheckpoint()
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(providerKey, v)
-            case None => s.conf.unset(providerKey)
-          }
         }
       },
       Some("""WITH v AS (SELECT user_id, ts::TIMESTAMP AS t FROM events

@@ -171,22 +171,6 @@ object KafkaLogOps {
       .as[KeyedRecord]
   }
 
-  private def drainToSink(s: SparkSession, src: org.apache.spark.sql.Dataset[KeyedRecord],
-      sink: String, tws: Boolean): DataFrame = {
-    s.catalog.dropTempView(sink)
-    StreamingIngest.withStateShards(s, 8) {
-      val updates =
-        if (tws) StreamingIngest.latestWinsUpdatesTws(src)
-        else StreamingIngest.latestWinsUpdates(src)
-      val q = updates.writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    Ingest.latestWins(s.table(sink), keys = Seq("id"), version = Seq("version"))
-      .select(col("id"), col("msg"), col("version"))
-      .orderBy("id")
-  }
-
   /** Second fixture: the events stream with EVENT TIME in the payload
     * (`us` = epoch micros), for the watermarked-window differential.
     */
@@ -310,7 +294,8 @@ object KafkaLogOps {
         // unchanged. Same oracle, so any drift introduced by the source
         // machinery (lost/duplicated offset spans, broken per-partition
         // order) fails the hash compare.
-        drainToSink(s, parsedGlobal(s, dir), "kafkalog_upsert_sink", tws = false)
+        StreamingIngest.drainUpserts(
+          StreamingIngest.latestWinsUpdates(parsedGlobal(s, dir)), "kafkalog_upsert_sink")
       },
       Some(upsertOracle)),
 
@@ -320,19 +305,11 @@ object KafkaLogOps {
         // Same replay through the transformWithState + RocksDB form —
         // the modern state API certified against the identical batch
         // oracle with the real source in front of it.
-        import s.implicits._
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          drainToSink(s, parsedGlobal(s, dir), "kafkalog_tws_upsert_sink", tws = true)
+        StreamingIngest.withRocksDbState(s) {
+          StreamingIngest.drainUpserts(
+            StreamingIngest.latestWinsUpdatesTws(parsedGlobal(s, dir)),
+            "kafkalog_tws_upsert_sink")
             .localCheckpoint()
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(providerKey, v)
-            case None => s.conf.unset(providerKey)
-          }
         }
       },
       Some(upsertOracle)),
@@ -665,31 +642,14 @@ object KafkaLogOps {
             get_json_object(col("value"), "$.id").cast("long").as("id"),
             get_json_object(col("value"), "$.msg").as("msg"),
             get_json_object(col("value"), "$.ver").cast("long").as("version"))
-          .as[StreamingIngest.KeyedRecord]
-        val sink = "kafkalog_tombstone_upsert_sink"
-        s.catalog.dropTempView(sink)
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          StreamingIngest.withStateShards(s, 8) {
-            val q = StreamingIngest.latestWinsUpdatesTombstonesTws(src)
-              .writeStream.format("memory").queryName(sink)
-              .outputMode("update").start()
-            try q.processAllAvailable() finally q.stop()
-          }
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(providerKey, v)
-            case None => s.conf.unset(providerKey)
-          }
+          .as[KeyedRecord]
+        StreamingIngest.withRocksDbState(s) {
+          StreamingIngest.drainUpserts(
+            StreamingIngest.latestWinsUpdatesTombstonesTws(src),
+            "kafkalog_tombstone_upsert_sink")
+            .where(col("msg").isNotNull) // final tombstone = deleted key
+            .localCheckpoint()
         }
-        Ingest.latestWins(s.table(sink), keys = Seq("id"), version = Seq("version"))
-          .where(col("msg").isNotNull) // final tombstone = deleted key
-          .select(col("id"), col("msg"), col("version"))
-          .orderBy("id")
-          .localCheckpoint()
       },
       Some("""SELECT user_id AS id, arg_max(event_type, event_id) AS msg,
              |       CAST(max(event_id) AS BIGINT) AS version

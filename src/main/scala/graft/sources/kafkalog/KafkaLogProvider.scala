@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -201,17 +201,33 @@ class KafkaLogBatch(dir: String,
 
 class KafkaLogMicroBatchStream(dir: String, maxOffsetsPerTrigger: Option[Long],
     assigned: Option[Set[Int]] = None)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  // Per-partition end offsets frozen by an AvailableNow trigger; None
+  // for the other triggers, which follow the live log.
+  @volatile private var frozenEnd: Option[Map[Int, Long]] = None
 
   // Per-trigger discovery (listing + head/tail reads, never a full scan),
   // so records appended between triggers are picked up — the log behaves
-  // like a live topic, not a frozen snapshot.
+  // like a live topic, not a frozen snapshot. Under AvailableNow each
+  // end is capped at the frozen one, so the run drains exactly what was
+  // there when it started (a partition created since admits nothing).
   private def discover(): Seq[(Int, Seq[String], Long, Long)] =
     KafkaLog.listPartitions(dir)
       .filter { case (p, _) => assigned.forall(_.contains(p)) }
       .map { case (p, segs) =>
-        (p, segs, KafkaLog.headOffset(segs), KafkaLog.endOffset(segs))
+        val head = KafkaLog.headOffset(segs)
+        val end = KafkaLog.endOffset(segs)
+        (p, segs, head, frozenEnd.fold(end)(f => math.min(end, f.getOrElse(p, head))))
       }
+
+  /** AvailableNow: freeze each partition's end offset once; admission
+    * control still splits the backlog into `maxOffsetsPerTrigger`-sized
+    * batches (Spark's fallback for sources without this interface reads
+    * everything in one batch).
+    */
+  override def prepareForTriggerAvailableNow(): Unit =
+    frozenEnd = Some(discover().map { case (p, _, _, end) => p -> end }.toMap)
 
   override def initialOffset(): Offset =
     KafkaLogOffset(discover().map { case (p, _, head, _) => p -> head }.toMap)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming form of the reference job (SURVEY.md §7 step 3,
   * BASELINE.json north star: "Structured Streaming Kafka source + HDFS
@@ -18,9 +18,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   *     horizon (bounded state, the cheap tier);
   *  2. `latestWinsUpdates` — true latest-wins upsert via
   *     `flatMapGroupsWithState`: emits a key only when a strictly newer
-  *     version arrives (exact reference semantics, made incremental);
-  *  3. `snapshotSink` — `foreachBatch` + overwrite: the honest streaming
-  *     equivalent of the reference's delete-then-write snapshot.
+  *     version arrives (exact reference semantics, made incremental).
+  *     Every latest-wins state machine here — both state APIs, the
+  *     bootstrapped and the tombstone forms — applies one rule,
+  *     [[newerThan]];
+  *  3. the snapshot — `KafkaLogOps.foldSnapshot` on
+  *     [[graft.streaming.GenFold]]: each micro-batch merges its delta
+  *     into the previous committed generation and publishes a new one
+  *     behind a `_SUCCESS` marker, so a replayed batch rewrites its own
+  *     generation and the snapshot always holds every key seen so far.
   *
   * Kafka-shaped input: any streaming DataFrame with
   * `(partition INT, offset LONG, value STRING)` columns — exactly what
@@ -50,14 +56,36 @@ object StreamingIngest {
     * see the capped value (Verify/Bench/specs run the registry
     * single-threaded, so this never bites in practice).
     */
-  def withStateShards[T](s: SparkSession, n: Int)(body: => T): T = s.synchronized {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
+  def withStateShards[T](s: SparkSession, n: Int)(body: => T): T =
     // A non-numeric conf (possible via user override) must degrade to
     // no-op, not throw before the query even starts.
-    val capped = prev.toIntOption.map(p => math.min(p, n))
-    capped.foreach(c => s.conf.set(key, c.toString))
-    try body finally if (capped.isDefined) s.conf.set(key, prev)
+    withConf(s, "spark.sql.shuffle.partitions",
+      _.flatMap(_.toIntOption).map(p => math.min(p, n).toString))(body)
+
+  /** Run `body` with the RocksDB state store provider, restoring (or
+    * unsetting) the prior provider after, even when `body` throws.
+    * `transformWithState` needs it (multiple state variables are column
+    * families); streams started inside keep it, since the provider is
+    * fixed at a query's first batch and persists in its checkpoint.
+    * Same threading caveat as [[withStateShards]].
+    */
+  def withRocksDbState[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass", _ => Some(
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
+
+  /** Set session conf `key` to `next(effective value)` for `body`, then
+    * restore the prior setting — unset again if it was only a default.
+    * `next` returning `None` leaves the conf untouched.
+    */
+  private def withConf[T](s: SparkSession, key: String,
+      next: Option[String] => Option[String])(body: => T): T = s.synchronized {
+    val prev = s.conf.getAll.get(key) // explicit setting only, not the default
+    val value = next(s.conf.getOption(key))
+    value.foreach(s.conf.set(key, _))
+    try body finally if (value.isDefined) prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
   }
 
   /** One keyed record in flight: payload + version (the Kafka offset in
@@ -85,6 +113,17 @@ object StreamingIngest {
     df.withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark(keys)
 
+  /** The latest-wins update rule for one key: the incoming row with the
+    * highest `(version, msg)`, emitted only if its version is strictly
+    * greater than the stored one (`prevVersion`; `None` = no state yet).
+    * The `msg` tiebreak is null-safe, so a tombstone (null msg) loses a
+    * tied version to a payload and the choice never depends on arrival
+    * order.
+    */
+  def newerThan(prevVersion: Option[Long], rows: Iterator[KeyedRecord]): Option[KeyedRecord] =
+    rows.maxByOption(r => (r.version, Option(r.msg)))
+      .filter(b => prevVersion.forall(_ < b.version))
+
   /** Tier 2: exact latest-wins upsert stream. Emits `(id, msg, version)`
     * whenever a strictly newer version arrives for a key; state holds one
     * record per live key (the 100 TB design point: state is O(live keys),
@@ -97,17 +136,27 @@ object StreamingIngest {
       .flatMapGroupsWithState[KeyedRecord, KeyedRecord](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (_: Long, recs: Iterator[KeyedRecord], state: GroupState[KeyedRecord]) =>
-          // max_by(version) within the batch, tie-broken on msg for determinism
-          val incoming = recs.maxByOption(r => (r.version, r.msg))
-          val best = (incoming.toSeq ++ state.getOption.toSeq)
-            .maxByOption(r => (r.version, r.msg))
-          best match {
-            case Some(b) if !state.getOption.exists(_.version >= b.version) =>
-              state.update(b)
-              Iterator.single(b)
-            case _ => Iterator.empty
-          }
+          newerThan(state.getOption.map(_.version), recs)
+            .map { b => state.update(b); b }.iterator
       }
+  }
+
+  /** Drain an upsert stream into the in-memory sink `sink` (state capped
+    * at 8 shards, see [[withStateShards]]) and reduce its update log to
+    * the final latest-wins state `(id, msg, version)` ordered by `id`.
+    * A tombstone that wins its key stays in the result as a null `msg`.
+    */
+  def drainUpserts(updates: Dataset[KeyedRecord], sink: String): DataFrame = {
+    val s = updates.sparkSession
+    s.catalog.dropTempView(sink)
+    withStateShards(s, 8) {
+      val q = updates.writeStream.format("memory").queryName(sink)
+        .outputMode("update").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    Ingest.latestWins(s.table(sink), keys = Seq("id"), version = Seq("version"))
+      .select(col("id"), col("msg"), col("version"))
+      .orderBy("id")
   }
 
   /** One (band-bucket, document) event of the streaming near-dup
@@ -254,36 +303,38 @@ object StreamingIngest {
     * explicit named state variables (typed ValueState here; List/Map
     * state and per-key timers exist for richer operators), TTL support,
     * and a RocksDB-backed store. Semantics are IDENTICAL to
-    * [[latestWinsUpdates]] — `StreamingSpec` differentially replays the
-    * same corpus through both and asserts equal update logs.
+    * [[latestWinsUpdates]] — `Round4dStreamSpec` differentially replays
+    * the same corpus through both and asserts equal update logs.
+    *
+    * It also serves the BOOTSTRAPPED form ([[latestWinsResumed]]): when
+    * the query carries an initial state, `handleInitialState` seeds each
+    * key's ValueState from the snapshot row before the first batch, and
+    * the same rule then suppresses any delta record not newer than it.
+    * Without an initial state Spark never calls that hook.
     */
   class LatestWinsProcessor
-      extends StatefulProcessor[Long, KeyedRecord, KeyedRecord] {
+      extends StatefulProcessorWithInitialState[Long, KeyedRecord, KeyedRecord, KeyedRecord] {
     @transient private var latest: ValueState[KeyedRecord] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       latest = getHandle.getValueState[KeyedRecord](
         "latest", org.apache.spark.sql.Encoders.product[KeyedRecord], TTLConfig.NONE)
 
+    override def handleInitialState(key: Long, snap: KeyedRecord,
+        tv: TimerValues): Unit =
+      latest.update(snap)
+
     override def handleInputRows(key: Long, rows: Iterator[KeyedRecord],
         tv: TimerValues): Iterator[KeyedRecord] = {
-      val prev = if (latest.exists()) Some(latest.get()) else None
-      val incoming = rows.maxByOption(r => (r.version, r.msg))
-      val best = (incoming.toSeq ++ prev.toSeq).maxByOption(r => (r.version, r.msg))
-      best match {
-        case Some(b) if !prev.exists(_.version >= b.version) =>
-          latest.update(b)
-          Iterator.single(b)
-        case _ => Iterator.empty
-      }
+      val prev = if (latest.exists()) Some(latest.get().version) else None
+      newerThan(prev, rows).map { b => latest.update(b); b }.iterator
     }
   }
 
   /** Tier 2, modern form: [[latestWinsUpdates]] via `transformWithState`.
-    * Requires the RocksDB state store provider (set
-    * `spark.sql.streaming.stateStore.providerClass` to
-    * `...RocksDBStateStoreProvider`); state remains O(live keys), now
-    * with optional TTL aging for bounded-retention snapshots.
+    * Requires the RocksDB state store provider (start the query inside
+    * [[withRocksDbState]]); state remains O(live keys), now with
+    * optional TTL aging for bounded-retention snapshots.
     */
   def latestWinsUpdatesTws(ds: Dataset[KeyedRecord]): Dataset[KeyedRecord] = {
     import ds.sparkSession.implicits._
@@ -318,19 +369,12 @@ object StreamingIngest {
 
     override def handleInputRows(key: Long, rows: Iterator[KeyedRecord],
         tv: TimerValues): Iterator[KeyedRecord] = {
-      val prevVer = Seq(
-        (if (latest.exists()) Some(latest.get()) else None),
-        (if (tomb.exists()) Some(tomb.get()) else None))
-        .flatten.map(_.version).maxOption
-      // null-safe tiebreak: a tombstone (null msg) on a tied version
-      // sorts below any real payload instead of NPE-ing the comparator
-      rows.maxByOption(r => (r.version, Option(r.msg).getOrElse(""))) match {
-        case Some(b) if !prevVer.exists(_ >= b.version) =>
-          if (b.msg == null) { latest.clear(); tomb.update(b) }
-          else { latest.update(b); tomb.clear() }
-          Iterator.single(b)
-        case _ => Iterator.empty
-      }
+      val prevVer = Seq(latest, tomb).filter(_.exists()).map(_.get().version).maxOption
+      newerThan(prevVer, rows).map { b =>
+        if (b.msg == null) { latest.clear(); tomb.update(b) }
+        else { latest.update(b); tomb.clear() }
+        b
+      }.iterator
     }
   }
 
@@ -350,51 +394,18 @@ object StreamingIngest {
         OutputMode.Update)
   }
 
-  /** Latest-wins with BOOTSTRAPPED state — the pipeline-migration form:
-    * a new streaming job takes over from an existing batch snapshot
-    * without replaying history. `handleInitialState` seeds each key's
-    * ValueState from the snapshot row before the first batch; the
-    * update semantics are [[LatestWinsProcessor]]'s unchanged, so a
-    * stale delta record older than the snapshot is correctly
-    * suppressed. `InitStateSpec` proves snapshot + delta ≡ full-history
-    * replay.
-    */
-  class LatestWinsWithInitProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, KeyedRecord, KeyedRecord, KeyedRecord] {
-    @transient private var latest: ValueState[KeyedRecord] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      latest = getHandle.getValueState[KeyedRecord](
-        "latest", org.apache.spark.sql.Encoders.product[KeyedRecord], TTLConfig.NONE)
-
-    override def handleInitialState(key: Long, snap: KeyedRecord,
-        tv: TimerValues): Unit =
-      latest.update(snap)
-
-    override def handleInputRows(key: Long, rows: Iterator[KeyedRecord],
-        tv: TimerValues): Iterator[KeyedRecord] = {
-      val prev = if (latest.exists()) Some(latest.get()) else None
-      val incoming = rows.maxByOption(r => (r.version, r.msg))
-      val best = (incoming.toSeq ++ prev.toSeq).maxByOption(r => (r.version, r.msg))
-      best match {
-        case Some(b) if !prev.exists(_.version >= b.version) =>
-          latest.update(b)
-          Iterator.single(b)
-        case _ => Iterator.empty
-      }
-    }
-  }
-
-  /** [[latestWinsUpdatesTws]] resuming FROM a batch snapshot: only the
-    * delta streams; keys the delta never touches stay at their snapshot
-    * value in the store.
+  /** [[latestWinsUpdatesTws]] resuming FROM a batch snapshot — the
+    * pipeline-migration form: a new streaming job takes over from an
+    * existing batch snapshot without replaying history. Only the delta
+    * streams; keys the delta never touches stay at their snapshot value
+    * in the store. `InitStateSpec` proves snapshot + delta ≡
+    * full-history replay.
     */
   def latestWinsResumed(delta: Dataset[KeyedRecord],
       snapshot: Dataset[KeyedRecord]): Dataset[KeyedRecord] = {
     import delta.sparkSession.implicits._
     delta.groupByKey(_.id)
-      .transformWithState(new LatestWinsWithInitProcessor,
+      .transformWithState(new LatestWinsProcessor,
         TimeMode.None(), OutputMode.Update,
         snapshot.groupByKey(_.id))
   }
@@ -703,25 +714,6 @@ object StreamingIngest {
       .transformWithState(new SequenceProcessor(pattern),
         TimeMode.None(), OutputMode.Append)
   }
-
-  /** Tier 3: snapshot sink — every micro-batch rewrites the output dir
-    * with the deduped latest state of THAT batch plus what `latestWins`
-    * already folded (callers feed this from `latestWinsUpdates` for a
-    * full-state snapshot, or from a raw stream for per-batch snapshots).
-    * JSON lines through [[Ingest.writeSnapshotJson]], so each batch's
-    * snapshot replaces the last one atomically.
-    */
-  def snapshotSink(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Ingest.writeSnapshotJson(
-          Ingest.latestWins(batch, keys = Seq("id"), version = Seq("version")),
-          path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** One event entering streaming sessionization. */
   case class SessEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)

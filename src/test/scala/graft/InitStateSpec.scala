@@ -15,9 +15,6 @@ class InitStateSpec extends SparkSpec {
   import spark.implicits._
   implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   test("snapshot + delta through initial-state tws equals full-history latest-wins") {
     // history = the events table keyed by user; snapshot folds the first
     // 60%, delta replays the rest PLUS stale duplicates of early rows
@@ -32,9 +29,7 @@ class InitStateSpec extends SparkSpec {
       .as[KeyedRecord]
     val delta = all.drop(cut) ++ all.take(20) // stale re-deliveries
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-    try {
+    StreamingIngest.withRocksDbState(spark) {
       val ms = MemoryStream[KeyedRecord]
       val q = latestWinsResumed(ms.toDS(), snapshot)
         .writeStream.format("memory").queryName("resumed_upsert")
@@ -45,11 +40,6 @@ class InitStateSpec extends SparkSpec {
           q.processAllAvailable()
         }
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     // final state = snapshot overridden by emitted updates
     val updates = Ingest.latestWins(spark.table("resumed_upsert"),

@@ -346,7 +346,12 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("AvailableNow trigger drains the log under admission control") {
-    val dir = tmp("availnow"); fixture(dir)
+    // DENSE offsets (3 partitions × 20, no gaps), so the offset-unit cap
+    // admits exactly 13 rows per batch: 60 rows must take 5 batches
+    val dir = tmp("availnow")
+    KafkaLog.write((for (p <- 0 until 3; i <- 0 until 20)
+      yield (p, i.toLong, s"""{"id":$i,"msg":"p${p}m$i"}"""))
+      .toDF("partition", "offset", "value"), dir)
     spark.catalog.dropTempView("kl_now")
     val q = spark.readStream.format("kafkalog")
       .option("maxOffsetsPerTrigger", 13)
@@ -355,5 +360,8 @@ class KafkaLogSourceSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination(60000) finally q.stop()
     assert(spark.table("kl_now").count() == 60)
+    val sizes = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    assert(sizes.length == 5 && sizes.forall(_ <= 13) && sizes.sum == 60,
+      s"AvailableNow must keep the per-batch cap: batches ${sizes.mkString(",")}")
   }
 }

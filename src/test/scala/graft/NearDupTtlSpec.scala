@@ -20,18 +20,6 @@ class NearDupTtlSpec extends SparkSpec {
   import spark.implicits._
   implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocks[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-    try body finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   /** TTL forces TimeMode.ProcessingTime, under which the stateful
     * operator keeps requesting follow-up batches to advance its clock —
     * a long-lived query never reports "no new data", so
@@ -43,7 +31,7 @@ class NearDupTtlSpec extends SparkSpec {
     * restarts double as proof that the TTL'd state survives recovery.
     */
   private def runTws(batches: Seq[Seq[BandedDoc]], name: String,
-      ttl: TTLConfig, sleepMs: Long = 0): Seq[DupHit] = withRocks {
+      ttl: TTLConfig, sleepMs: Long = 0): Seq[DupHit] = StreamingIngest.withRocksDbState(spark) {
     val root = java.nio.file.Files.createTempDirectory(s"ndttl_$name").toFile
     val out = new java.io.File(root, "out").getAbsolutePath
     val ckpt = new java.io.File(root, "ckpt").getAbsolutePath

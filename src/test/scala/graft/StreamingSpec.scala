@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Structured Streaming suite (SURVEY.md §5.4): MemoryStream → stateful
   * dedup → memory sink; late/duplicate arrival; windowed aggregation with
-  * watermark; snapshot sink overwrite.
+  * watermark. The streaming snapshot (`KafkaLogOps.foldSnapshot`) is
+  * covered across restarts in `KafkaLogSourceSpec`.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -84,31 +85,23 @@ class StreamingSpec extends SparkSpec {
   test("tombstone upsert: deletes clear keys, markers suppress late stragglers") {
     // two state variables (live value + delete marker) = multiple column
     // families, which needs the RocksDB provider
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[KeyedRecord]
-    val q = StreamingIngest.latestWinsUpdatesTombstonesTws(ms.toDS())
-      .writeStream.format("memory").queryName("lwt_test").outputMode("update").start()
-    try {
-      ms.addData(KeyedRecord(1, "a", 10), KeyedRecord(2, "x", 5))
-      q.processAllAvailable()
-      ms.addData(KeyedRecord(1, null, 15)) // tombstone: key 1 deleted
-      q.processAllAvailable()
-      ms.addData(KeyedRecord(1, "late", 12)) // older than the marker → suppressed
-      q.processAllAvailable()
-      ms.addData(KeyedRecord(2, null, 7), KeyedRecord(2, "back", 9)) // delete then re-insert
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    val rows = StreamingIngest.withRocksDbState(spark) {
+      val ms = MemoryStream[KeyedRecord]
+      val q = StreamingIngest.latestWinsUpdatesTombstonesTws(ms.toDS())
+        .writeStream.format("memory").queryName("lwt_test").outputMode("update").start()
+      try {
+        ms.addData(KeyedRecord(1, "a", 10), KeyedRecord(2, "x", 5))
+        q.processAllAvailable()
+        ms.addData(KeyedRecord(1, null, 15)) // tombstone: key 1 deleted
+        q.processAllAvailable()
+        ms.addData(KeyedRecord(1, "late", 12)) // older than the marker → suppressed
+        q.processAllAvailable()
+        ms.addData(KeyedRecord(2, null, 7), KeyedRecord(2, "back", 9)) // delete then re-insert
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table("lwt_test").as[KeyedRecord].collect()
+        .sortBy(r => (r.id, r.version))
     }
-    val rows = spark.table("lwt_test").as[KeyedRecord].collect()
-      .sortBy(r => (r.id, r.version))
     assert(rows.toSeq == Seq(
       KeyedRecord(1, "a", 10), KeyedRecord(1, null, 15),
       KeyedRecord(2, "x", 5), KeyedRecord(2, "back", 9)),
@@ -326,18 +319,5 @@ class StreamingSpec extends SparkSpec {
     assert(emitted.toSet == Set(
       KeyedRecord(1L, "a", 1L), KeyedRecord(2L, "b", 2L), KeyedRecord(1L, "c", 5L)),
       s"unexpected update log: ${emitted.toSeq}")
-  }
-
-  test("snapshotSink: foreachBatch overwrite keeps only latest state per key") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_snap").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream_ckpt").toString
-    val ms = MemoryStream[KeyedRecord]
-    ms.addData(KeyedRecord(1, "a", 1), KeyedRecord(1, "b", 9), KeyedRecord(2, "z", 4))
-    val q = StreamingIngest.snapshotSink(ms.toDF(), dir, ckpt)
-    q.awaitTermination()
-    val lines = spark.read.text(dir).as[String].collect().sorted
-    assert(lines.toSeq == Seq(
-      """{"id":1,"msg":"b","version":9}""",
-      """{"id":2,"msg":"z","version":4}"""))
   }
 }

@@ -80,36 +80,31 @@ class TwsRecoverySpec extends SparkSpec {
     */
   private def drive(log: String, ckpt: String, out: String,
       bombAtBatch: Option[Long], bombAfterBatch: Option[Long] = None): Unit = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try StreamingIngest.withStateShards(spark, 4) {
-      val parsed = spark.readStream.format("kafkalog")
-        .option("maxOffsetsPerTrigger", 10)
-        .load(log)
-        .select(from_json(col("value"), schema).as("r"))
-        .select(col("r.id"), col("r.msg"), col("r.version"))
-        .as[KeyedRecord]
-      val q = StreamingIngest.latestWinsUpdatesTws(parsed)
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[KeyedRecord], bid: Long) =>
-          if (bombAtBatch.exists(bid >= _))
-            throw new RuntimeException("injected crash")
-          batch.write.mode("overwrite").parquet(s"$out/gen-$bid")
-          TwsRecoverySpec.bump(out, bid)
-          if (bombAfterBatch.exists(bid >= _))
-            throw new RuntimeException("injected crash after sink write")
-        }
-        .start()
-      try q.processAllAvailable()
-      catch { case _: Throwable => () } // injected crash surfaces here
-      finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
+    StreamingIngest.withRocksDbState(spark) {
+      StreamingIngest.withStateShards(spark, 4) {
+        val parsed = spark.readStream.format("kafkalog")
+          .option("maxOffsetsPerTrigger", 10)
+          .load(log)
+          .select(from_json(col("value"), schema).as("r"))
+          .select(col("r.id"), col("r.msg"), col("r.version"))
+          .as[KeyedRecord]
+        val q = StreamingIngest.latestWinsUpdatesTws(parsed)
+          .writeStream
+          .outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[KeyedRecord], bid: Long) =>
+            if (bombAtBatch.exists(bid >= _))
+              throw new RuntimeException("injected crash")
+            batch.write.mode("overwrite").parquet(s"$out/gen-$bid")
+            TwsRecoverySpec.bump(out, bid)
+            if (bombAfterBatch.exists(bid >= _))
+              throw new RuntimeException("injected crash after sink write")
+          }
+          .start()
+        try q.processAllAvailable()
+        catch { case _: Throwable => () } // injected crash surfaces here
+        finally q.stop()
+      }
     }
   }
 
