@@ -186,17 +186,19 @@ object Bench {
       java.lang.Long.toString(System.currentTimeMillis(), 36)
     val core = f""""metric":"total","value":$total%.3f,"unit":"sec","queries":${fmt2(cold)},"warm_total":$totalWarm%.3f,"queries_warm":${fmt2(warmMin)},"warm_reps":$warmReps,"legacy12_total":$legacyCold%.3f,"legacy12_warm_total":$legacyWarm%.3f,"warmup_errors":${strArr(warmupErrors)},"query_errors":${strArr(queryErrors)},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"busy_frac_start":$busyFrac%.4f,"busy_frac_end":$busyFracEnd%.4f,"contended":$contended,"run_id":"$runId","sf":"$sfDir""""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      s"/tmp/gbd_$runId.json")
+      s"target/gbd_$runId.json")
     // Rotate stale default-stem sidecars before writing this run's
-    // (r17 advisor: unique per-run paths otherwise accumulate in /tmp
-    // forever). Only the default stems are swept — an env-pinned
+    // (r17 advisor: unique per-run paths otherwise accumulate in
+    // `target/` forever). Like the line mirror below, the sidecar is an
+    // output read after the JVM exits, so it lives in the build tree,
+    // not in scratch. Only the default stems are swept — an env-pinned
     // SPARK_GRAFT_BENCH_DETAIL path is the caller's to manage. A prior
     // artifact's detail_file dangling after the sweep is the accepted
     // cost: the run_id stamped in both emissions is what binds a saved
     // line to a sidecar, and a reader who archives a bench run archives
     // the sidecar with it.
     try {
-      val listing = java.nio.file.Files.list(java.nio.file.Paths.get("/tmp"))
+      val listing = java.nio.file.Files.list(java.nio.file.Paths.get("target"))
       try listing.forEach { p =>
         val n = p.getFileName.toString
         if ((n.startsWith("gbd_") || n.startsWith("graft_bench_detail_")) &&

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * 65535 = Spark's default, i.e. the BEFORE leg; pass 8000 for the
   * engine's production setting), KEYDUMP_FACTORY sets
   * spark.sql.codegen.factoryMode, KEYDUMP_CODE=1 dumps each stage's
-  * generated source to /tmp/keydump_p<planes>_t<tables>_s<stageIdx>.java.
+  * generated source to target/keydump/p<planes>_t<tables>_s<stageIdx>.java.
   */
 object KeyDump {
   def main(args: Array[String]): Unit = {
@@ -56,12 +56,14 @@ object KeyDump {
         println(f"[keydump] planes=$p tables=$t wall=$secs%.2f s " +
           s"stages=${codes.size} codeChars=${codes.map(_._2.length).mkString(",")} " +
           s"bytecodeStats=${codes.map(_._3.toString).mkString(";")}")
-        if (sys.env.contains("KEYDUMP_CODE"))
+        if (sys.env.contains("KEYDUMP_CODE")) {
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target/keydump"))
           codes.zipWithIndex.foreach { case ((_, code, bcs), i) =>
-            val name = s"/tmp/keydump_p${p}_t${t}_s$i.java"
+            val name = s"target/keydump/p${p}_t${t}_s$i.java"
             java.nio.file.Files.write(java.nio.file.Paths.get(name), code.getBytes)
             println(s"[keydump] wrote $name bytecodeStats=$bcs")
           }
+        }
       } catch { case ex: Throwable =>
         println(s"[keydump] planes=$p tables=$t FAILED: " +
           ex.toString.take(300))

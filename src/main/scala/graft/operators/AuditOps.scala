@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,10 +135,7 @@ object AuditOps {
         import graft.sources.VersionedTable
         val orders = Tables.t(s, dir, "orders")
         val cut = lit("1997-01-01").cast("timestamp")
-        val root = s"/tmp/graft_vtab/${new java.io.File(dir).getName}/orders"
-        val f = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(new org.apache.hadoop.conf.Configuration())
-        f.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Scratch.dir("orders")
         VersionedTable.append(
           orders.where(col("o_orderdate") < cut)
             .select("o_orderkey", "o_orderdate", "o_totalprice"), root)
@@ -181,10 +178,7 @@ object AuditOps {
         // files, which is what the hash compare certifies.
         import graft.sources.VersionedTable
         val orders = Tables.t(s, dir, "orders")
-        val root = s"/tmp/graft_vtab/${new java.io.File(dir).getName}/orders_stats"
-        val f = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(new org.apache.hadoop.conf.Configuration())
-        f.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Scratch.dir("orders_stats")
         VersionedTable.appendWithStats(
           orders.select(col("o_orderkey"), col("o_totalprice"),
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("od"))
@@ -227,10 +221,7 @@ object AuditOps {
         val orders = Tables.t(s, dir, "orders")
         val base = orders.select(col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))
-        val root = s"/tmp/graft_vtab/${new java.io.File(dir).getName}/orders_merge"
-        val f = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(new org.apache.hadoop.conf.Configuration())
-        f.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Scratch.dir("orders_merge")
         VersionedTable.append(base, root)
         val delta = base.where(col("k") % 37 === 0 && col("k") % 53 =!= 0)
           .select(col("k"), (col("cents") + 100).as("cents"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -588,9 +588,7 @@ object CorpusOps {
         // pruning fails the oracle. At 100 TB the term dirs become
         // term-bucketed files, same economics. The hash compare
         // certifies the index serves EXACTLY the scan-and-filter truth.
-        val r = s"/tmp/graft_invidx/${new java.io.File(dir).getName}/postings"
-        val p = new org.apache.hadoop.fs.Path(r)
-        p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
+        val r = Scratch.dir("postings")
         docs(s, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"),
             explode(array_distinct(TextOps.tokens(col("text")))).as("term"))

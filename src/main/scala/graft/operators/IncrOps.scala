@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -209,7 +209,7 @@ object IncrOps {
         // of scanning the fact table.
         import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
-        val mvPath = s"/tmp/graft_mv/${new java.io.File(dir).getName}/monthly_orders"
+        val mvPath = Scratch.dir("monthly_orders")
         monthlyPartials(orders).write.mode("overwrite").parquet(mvPath)
         val mat = s.read.parquet(mvPath)
         SummaryRewriteRule.clear()
@@ -223,7 +223,7 @@ object IncrOps {
               col("n_orders"), col("cents").as("revenue_cents"))
             .orderBy("month")
           val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, "graft_mv")
+            q.queryExecution.optimizedPlan, mvPath)
           val out = q.withColumn("used_mv", lit(usedMv))
           // force the plan while the rule is active — the cached
           // QueryExecution is what Verify executes after this returns
@@ -261,7 +261,7 @@ object IncrOps {
         // sum/count division.
         import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
-        val mvPath = s"/tmp/graft_mv/${new java.io.File(dir).getName}/monthly_avg_orders"
+        val mvPath = Scratch.dir("monthly_avg_orders")
         monthlyAvgPartials(orders).write.mode("overwrite").parquet(mvPath)
         SummaryRewriteRule.clear()
         SummaryRewriteRule.register("monthly_avg_orders",
@@ -278,7 +278,7 @@ object IncrOps {
               col("avg_cents"))
             .orderBy("month")
           val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, "monthly_avg_orders")
+            q.queryExecution.optimizedPlan, mvPath)
           val out = q.withColumn("used_mv", lit(usedMv))
           out.queryExecution.optimizedPlan
           out
@@ -311,7 +311,7 @@ object IncrOps {
         // fail the hash compare.
         import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
-        val mvPath = s"/tmp/graft_mv/${new java.io.File(dir).getName}/monthly_orders_f"
+        val mvPath = Scratch.dir("monthly_orders_f")
         monthlyPartials(orders).write.mode("overwrite").parquet(mvPath)
         SummaryRewriteRule.clear()
         SummaryRewriteRule.register("monthly_orders_f",
@@ -330,7 +330,7 @@ object IncrOps {
               col("n_orders"), col("cents").as("revenue_cents"))
             .orderBy("month")
           val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, "monthly_orders_f")
+            q.queryExecution.optimizedPlan, mvPath)
           val out = q.withColumn("used_mv", lit(usedMv))
           out.queryExecution.optimizedPlan
           out
@@ -363,11 +363,8 @@ object IncrOps {
         // double-merges, or mis-merges fails the hash compare.
         import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
         val (path, n) = KafkaLogOps.eventsTimedLog(s, dir)
-        val out = s"/tmp/graft_incr_agg/${new java.io.File(dir).getName}/state"
-        val ckpt = out + ".ck"
-        val f = graft.sources.kafkalog.KafkaLog.fs(out)
-        f.delete(new org.apache.hadoop.fs.Path(out), true)
-        f.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+        val out = Scratch.dir("incr_agg_state")
+        val ckpt = Scratch.dir("incr_agg_ckpt")
         val timedSchema = StructType(Seq(
           StructField("us", LongType), StructField("event_type", StringType),
           StructField("value", DoubleType)))
@@ -412,11 +409,8 @@ object IncrOps {
         import graft.plans.SummaryRewriteRule
         import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
         val (path, n) = KafkaLogOps.eventsTimedLog(s, dir)
-        val out = s"/tmp/graft_mv_serve/${new java.io.File(dir).getName}/state"
-        val ckpt = out + ".ck"
-        val f = graft.sources.kafkalog.KafkaLog.fs(out)
-        f.delete(new org.apache.hadoop.fs.Path(out), true)
-        f.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+        val out = Scratch.dir("mv_serve_state")
+        val ckpt = Scratch.dir("mv_serve_ckpt")
         val timedSchema = StructType(Seq(
           StructField("us", LongType), StructField("event_type", StringType),
           StructField("value", DoubleType)))
@@ -448,13 +442,14 @@ object IncrOps {
         SummaryRewriteRule.clear()
         SummaryRewriteRule.register("daily_events",
           baseAgg, graft.streaming.GenFold.read(s, out, aggSchema))
+        val mvPath = graft.streaming.GenFold.latestGen(out).get
         val added = !s.experimental.extraOptimizations.contains(SummaryRewriteRule)
         if (added) s.experimental.extraOptimizations =
           s.experimental.extraOptimizations :+ SummaryRewriteRule
         try {
           val q = baseAgg.orderBy("day", "event_type")
           val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, "graft_mv_serve")
+            q.queryExecution.optimizedPlan, mvPath)
           val res = q.withColumn("used_mv", lit(usedMv))
           res.queryExecution.optimizedPlan
           res
@@ -489,7 +484,7 @@ object IncrOps {
           .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
           .agg(count(lit(1)).as("n_orders"),
             sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-        val mvPath = s"/tmp/graft_mv/${new java.io.File(dir).getName}/daily_orders"
+        val mvPath = Scratch.dir("daily_orders")
         dailyPartials.write.mode("overwrite").parquet(mvPath)
         SummaryRewriteRule.clear()
         SummaryRewriteRule.register("daily_orders", dailyPartials,
@@ -503,7 +498,7 @@ object IncrOps {
               col("n_orders"), col("cents").as("revenue_cents"))
             .orderBy("month")
           val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, "daily_orders")
+            q.queryExecution.optimizedPlan, mvPath)
           val out = q.withColumn("used_mv", lit(usedMv))
           out.queryExecution.optimizedPlan
           out

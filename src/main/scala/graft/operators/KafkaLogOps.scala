@@ -1,10 +1,9 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import graft.sources.kafkalog.KafkaLog
 import graft.streaming.StreamingIngest
 import graft.streaming.StreamingIngest.KeyedRecord
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -39,12 +38,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   */
 object KafkaLogOps {
 
-  /** Memoized fixture build: kafkalog dir + record count per testdata
-    * dir. The count sizes the admission cap; the build is a distributed
-    * write (see [[KafkaLog.write]]), re-done once per JVM per dir.
+  /** Memoized fixture builds, keyed by (testdata dir, fixture name):
+    * each fixture is a distributed write (see [[KafkaLog.write]]) into
+    * its own [[Scratch]] directory, done once per JVM per dir.
     */
   private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
+
+  private def fixture[T <: AnyRef](dir: String, name: String)(build: String => T): T =
+    built.computeIfAbsent((dir, name), _ => build(Scratch.dir(name))).asInstanceOf[T]
 
   /** The events table in kafkalog frame shape (see object doc for the
     * partition/offset derivation).
@@ -56,31 +58,25 @@ object KafkaLogOps {
       to_json(struct(col("user_id").as("id"), col("event_type").as("msg")))
         .as("value"))
 
+  /** The events log and its record count, which sizes the admission cap. */
   def eventsLog(s: SparkSession, dir: String): (String, Long) =
-    built.computeIfAbsent(dir, _ => {
-      val out = s"/tmp/graft_kafkalog/${new java.io.File(dir).getName}/events"
-      KafkaLog.fs(out).delete(new Path(out), true)
+    fixture(dir, "events") { out =>
       KafkaLog.write(eventsAsLogFrame(s, dir), out)
       (out, Tables.t(s, dir, "events").count())
-    })
+    }
 
   /** Third fixture: a separate copy of the events log, COMPACTED in
     * place by [[graft.sources.kafkalog.KafkaLogCompaction]] (key = the
     * payload's `$.id`, i.e. the user). Separate because compaction
     * mutates the log and the other fixtures replay full history.
     */
-  private val builtCompacted = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[graft.sources.kafkalog.KafkaLogCompaction.PartitionCompaction])]()
-
   def compactedEventsLog(s: SparkSession, dir: String)
       : (String, Seq[graft.sources.kafkalog.KafkaLogCompaction.PartitionCompaction]) =
-    builtCompacted.computeIfAbsent(dir, _ => {
-      val out = s"/tmp/graft_kafkalog/${new java.io.File(dir).getName}/events_compacted"
-      KafkaLog.fs(out).delete(new Path(out), true)
+    fixture(dir, "events_compacted") { out =>
       KafkaLog.write(eventsAsLogFrame(s, dir), out)
       val report = graft.sources.kafkalog.KafkaLogCompaction.compact(s, out)
       (out, report)
-    })
+    }
 
   /** Fourth fixture: an events log partitioned BY KEY (`user_id % 4`,
     * the compacted-topic layout contract — Kafka's partitioner sends a
@@ -89,13 +85,8 @@ object KafkaLogOps {
     * as tombstones. Offsets are the raw event_ids: globally unique and
     * per-partition increasing, exercising sparse-offset segments.
     */
-  private val builtTombstoned =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def tombstonedEventsLog(s: SparkSession, dir: String): String =
-    builtTombstoned.computeIfAbsent(dir, _ => {
-      val out = s"/tmp/graft_kafkalog/${new java.io.File(dir).getName}/events_tombstoned"
-      KafkaLog.fs(out).delete(new Path(out), true)
+    fixture(dir, "events_tombstoned") { out =>
       KafkaLog.write(Tables.t(s, dir, "events").select(
         (col("user_id") % 4).cast("int").as("partition"),
         col("event_id").as("offset"),
@@ -104,7 +95,7 @@ object KafkaLogOps {
       graft.sources.kafkalog.KafkaLogCompaction.compact(s, out,
         tombstone = Some(get_json_object(col("value"), "$.msg") === "error"))
       out
-    })
+    }
 
   /** Fifth fixture: the key-partitioned events log UNCOMPACTED, with
     * 'error' events carried as Kafka-style null-value tombstones (the
@@ -121,13 +112,8 @@ object KafkaLogOps {
     * gapped (compacted-topic) offset shape keeps its deliberate
     * coverage in the fourth fixture and StateScaleSpec.
     */
-  private val builtKeyed =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   def keyedEventsLog(s: SparkSession, dir: String): (String, Long) =
-    builtKeyed.computeIfAbsent(dir, _ => {
-      val out = s"/tmp/graft_kafkalog/${new java.io.File(dir).getName}/events_keyed"
-      KafkaLog.fs(out).delete(new Path(out), true)
+    fixture(dir, "events_keyed") { out =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("partition").orderBy("event_id")
       KafkaLog.write(Tables.t(s, dir, "events")
@@ -141,7 +127,7 @@ object KafkaLogOps {
             col("event_id").as("ver")))
             .as("value")), out)
       (out, Tables.t(s, dir, "events").count())
-    })
+    }
 
   /** readStream through the source with a cap forcing ≥4 micro-batches
     * at any scale factor — the admission-control path is part of every
@@ -174,17 +160,12 @@ object KafkaLogOps {
   /** Second fixture: the events stream with EVENT TIME in the payload
     * (`us` = epoch micros), for the watermarked-window differential.
     */
-  private val builtTimed =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   private val timedSchema = StructType(Seq(
     StructField("us", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
   def eventsTimedLog(s: SparkSession, dir: String): (String, Long) =
-    builtTimed.computeIfAbsent(dir, _ => {
-      val out = s"/tmp/graft_kafkalog/${new java.io.File(dir).getName}/events_timed"
-      KafkaLog.fs(out).delete(new Path(out), true)
+    fixture(dir, "events_timed") { out =>
       val ev = Tables.t(s, dir, "events")
       KafkaLog.write(ev.select(
         (col("event_id") % 4).cast("int").as("partition"),
@@ -192,7 +173,7 @@ object KafkaLogOps {
         to_json(struct(expr("ts_ns div 1000").as("us"), col("event_type"),
           col("value"))).as("value")), out)
       (out, ev.count())
-    })
+    }
 
   /** On-disk snapshot row shape: the reference's `{"id","msg"}` payload
     * plus `version`, which the incremental fold needs (the reference
@@ -256,10 +237,8 @@ object KafkaLogOps {
         // between two topics, executed offline on Spark's real source
         // AND sink machinery.
         import s.implicits._
-        val out = s"/tmp/graft_kafkalog/${new java.io.File(dir).getName}/duplex_out"
-        val f = KafkaLog.fs(out)
-        f.delete(new Path(out), true)
-        f.delete(new Path(out + ".ck"), true)
+        val scratch = Scratch.dir("duplex_out")
+        val out = s"$scratch/log"
         StreamingIngest.withStateShards(s, 8) {
           val q = StreamingIngest.latestWinsUpdates(parsedGlobal(s, dir))
             .select((col("id") % 4).cast("int").as("partition"),
@@ -270,7 +249,7 @@ object KafkaLogOps {
             // simply appended as a new record (Kafka-producer semantics)
             .outputMode("update")
             .option("path", out)
-            .option("checkpointLocation", out + ".ck")
+            .option("checkpointLocation", s"$scratch/ck")
             .start()
           try q.processAllAvailable() finally q.stop()
         }
@@ -380,9 +359,8 @@ object KafkaLogOps {
         // `version` alongside the reference's {"id","msg"} payload —
         // the reference needs no version on disk only because it
         // re-reads the whole topic every run.
-        import java.nio.file.Files
-        val out = Files.createTempDirectory("klsnap_out").toString
-        val ckpt = Files.createTempDirectory("klsnap_ckpt").toString
+        val out = Scratch.dir("klsnap_out")
+        val ckpt = Scratch.dir("klsnap_ckpt")
         KafkaLogOps.foldSnapshot(parsedGlobal(s, dir).toDF, out, ckpt)
         KafkaLogOps.readSnapshot(s, out)
           .select(col("id"), to_json(struct(col("id"), col("msg"))).as("json"))
@@ -538,9 +516,7 @@ object KafkaLogOps {
         // real source's admission loop (≥4 micro-batches).
         import graft.sources.VersionedTable
         val (path, n) = eventsLog(s, dir)
-        val root = s"/tmp/graft_vtab/${new java.io.File(dir).getName}/events_stream"
-        val f = new Path(root).getFileSystem(new org.apache.hadoop.conf.Configuration())
-        f.delete(new Path(root), true)
+        val root = Scratch.dir("events_stream")
         val src = s.readStream.format("kafkalog")
           .option("maxOffsetsPerTrigger", math.max(1L, n / 4))
           .load(path)

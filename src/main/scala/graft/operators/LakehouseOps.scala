@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,14 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object LakehouseOps {
 
-  private def root(dir: String, name: String): String = {
-    val r = s"/tmp/graft_vtab/${new java.io.File(dir).getName}/$name"
-    val f = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    f.delete(new org.apache.hadoop.fs.Path(r), true)
-    r
-  }
-
   private def orders(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "orders")
 
@@ -58,7 +50,7 @@ object LakehouseOps {
         // shrank (silently-dead maintenance must fail the gate, same
         // discipline as versioned_pruned_scan).
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_binpack")
+        val r = Scratch.dir("orders_binpack")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -103,7 +95,7 @@ object LakehouseOps {
         // (max/4) so the box selects ~25% per dimension at EVERY scale
         // factor.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_zorder")
+        val r = Scratch.dir("orders_zorder")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -148,7 +140,7 @@ object LakehouseOps {
         // are sized by row count so the bloom density — not the file
         // count — is the scale-invariant.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_bloom")
+        val r = Scratch.dir("orders_bloom")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -180,7 +172,7 @@ object LakehouseOps {
         // leaks v1 files (cost regression AND wrong rows) or drops a
         // delta file shifts a count and fails the hash.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_incr")
+        val r = Scratch.dir("orders_incr")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -223,7 +215,7 @@ object LakehouseOps {
         // the three asserted flags make a silently-skipped conflict or
         // a refused disjoint commit fail the oracle, not just a spec.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_occ")
+        val r = Scratch.dir("orders_occ")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -282,7 +274,7 @@ object LakehouseOps {
         // compare; a feed that leaked a carried row, lost a delete, or
         // swapped pre/post images fails the hash.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_cdf")
+        val r = Scratch.dir("orders_cdf")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -335,7 +327,7 @@ object LakehouseOps {
         // 100 TB: cost follows the delta's key locality, not table
         // size.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_merge_pruned")
+        val r = Scratch.dir("orders_merge_pruned")
         val src = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -398,7 +390,7 @@ object LakehouseOps {
         // O(delta) feed — the consumption loop that makes a 100 TB
         // dashboard refresh cost the day's changes, not the table.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_cdf_apply")
+        val r = Scratch.dir("orders_cdf_apply")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -460,7 +452,7 @@ object LakehouseOps {
         // files, backfilled wrongly, or leaked the new column into v1
         // fails the hash.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_evolve")
+        val r = Scratch.dir("orders_evolve")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -517,7 +509,7 @@ object LakehouseOps {
         // rewrite (boundable by [[graft.sources.VersionedTable.mergePruned]]
         // when commits are key-clustered) + an O(files) vacuum listing.
         import graft.sources.VersionedTable
-        val r = root(dir, "orders_purge")
+        val r = Scratch.dir("orders_purge")
         val base = orders(s, dir).select(
           col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100).cast("long").as("cents"),

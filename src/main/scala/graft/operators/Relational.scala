@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -103,7 +103,7 @@ object Relational {
         // footer sweep); mergeSchema here IS the semantics under test.
         val orders = t(s, dir, "orders")
         val cut = lit("1997-01-01").cast("timestamp")
-        val base = s"/tmp/graft_evo/${new java.io.File(dir).getName}"
+        val base = Scratch.dir("evo")
         orders.where(col("o_orderdate") < cut)
           .select("o_orderkey", "o_totalprice")
           .write.mode("overwrite").parquet(s"$base/gen1")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,13 +55,6 @@ object RuntimeFilterOps {
     }
   }
 
-  private def root(dir: String, name: String): String = {
-    val r = s"/tmp/graft_rtf/${new java.io.File(dir).getName}/$name"
-    val p = new org.apache.hadoop.fs.Path(r)
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
-    r
-  }
-
   /** Pin every phase of `df`'s QueryExecution while the scoping confs
     * are still active — what Verify executes later is this frozen plan.
     */
@@ -87,7 +80,7 @@ object RuntimeFilterOps {
         // key must match the INFERRED partition-column type (int — a
         // string dim makes the key `cast(year)`, which defeats
         // pruning-key extraction).
-        val r = root(dir, "orders_by_year")
+        val r = Scratch.dir("orders_by_year")
         Tables.t(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -95,7 +88,7 @@ object RuntimeFilterOps {
           .write.mode("overwrite").partitionBy("year").parquet(r)
         val fact = s.read.parquet(r)
         import s.implicits._
-        val rd = root(dir, "year_dim")
+        val rd = Scratch.dir("year_dim")
         Seq((1996, 1), (1997, 0), (1998, 1), (1999, 0))
           .toDF("year", "pick").write.mode("overwrite").parquet(rd)
         val dim = s.read.parquet(rd)
@@ -179,8 +172,8 @@ object RuntimeFilterOps {
         val base = new java.io.File(dir).getName.replace('.', '_')
         val to = s"graft_bkt_orders_$base"
         val tc = s"graft_bkt_customer_$base"
-        val ro = root(dir, "bkt_orders")
-        val rc = root(dir, "bkt_customer")
+        val ro = Scratch.dir("bkt_orders")
+        val rc = Scratch.dir("bkt_customer")
         s.sql(s"DROP TABLE IF EXISTS $to")
         s.sql(s"DROP TABLE IF EXISTS $tc")
         Tables.t(s, dir, "orders")
@@ -261,7 +254,7 @@ object RuntimeFilterOps {
         // reads the pinned plan's PushedFilters for the equality AND
         // the range predicate; the hash certifies the round-trip lost
         // no rows and the pushdown dropped none it shouldn't.
-        val r = root(dir, "orders_orc")
+        val r = Scratch.dir("orders_orc")
         Tables.t(s, dir, "orders").select(
             col("o_orderkey").as("k"),
             round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -297,7 +290,7 @@ object RuntimeFilterOps {
         // shifts rows/columns and fails the hash, not just a count.
         // Schema is explicit on read (never inferred — inference is a
         // second pass over 100 TB and type-drifts on edge values).
-        val r = root(dir, "orders_csv")
+        val r = Scratch.dir("orders_csv")
         Tables.t(s, dir, "orders").select(
             col("o_orderkey").as("k"),
             round(col("o_totalprice") * 100).cast("long").as("cents"),

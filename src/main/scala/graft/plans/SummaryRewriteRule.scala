@@ -103,21 +103,27 @@ object SummaryRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
   /** Names of currently registered views (diagnostics). */
   def registered: Seq[String] = mvs.asScala.map(_.name).toSeq
 
-  /** Does any leaf of `plan` scan files under a path containing
-    * `pathFragment`? The did-the-rewrite-fire probe for tests and the
-    * registry differential — leaf `toString` truncates file paths, so
-    * this inspects the file index itself.
+  /** Does any leaf of `plan` scan the directory `dir` itself? Both
+    * sides are qualified the same way and compared whole, so a view at
+    * `.../monthly_orders_f` never counts as `.../monthly_orders`. The
+    * did-the-rewrite-fire probe for tests and the registry differential
+    * — leaf `toString` truncates file paths, so this inspects the file
+    * index itself.
     */
-  def scansPath(plan: LogicalPlan, pathFragment: String): Boolean =
+  def scansPath(plan: LogicalPlan, dir: String): Boolean = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def qualified(p: org.apache.hadoop.fs.Path) = p.getFileSystem(conf).makeQualified(p)
+    val want = qualified(new org.apache.hadoop.fs.Path(dir))
     plan.collectLeaves().exists {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.exists(_.toString.contains(pathFragment))
+            h.location.rootPaths.exists(qualified(_) == want)
           case _ => false
         }
       case _ => false
     }
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (mvs.isEmpty) plan

@@ -152,10 +152,7 @@ object Layout {
       require(f.renameTo(new java.io.File(dir, "del-" + f.getName)),
         s"could not move ${f.getName} into $dir")
     }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-    }
-    rm(tmpF)
+    graft.Scratch.deleteTree(tmpF)
     (hit.size, all.size, rowsBefore - rowsKept)
   }
 
@@ -212,10 +209,7 @@ object Layout {
     val bak = new java.io.File(dir + ".compact_old")
     require(dirF.renameTo(bak), s"could not move $dir aside")
     require(new java.io.File(tmp).renameTo(dirF), s"could not move $tmp into place")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-    }
-    rm(bak)
+    graft.Scratch.deleteTree(bak)
     (before.size, parquetFiles(dirF).size)
   }
 }

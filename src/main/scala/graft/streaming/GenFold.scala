@@ -43,12 +43,16 @@ object GenFold {
       .sorted
   }
 
+  /** The directory of the latest committed generation, if any. */
+  def latestGen(out: String): Option[String] =
+    committedGens(out).lastOption.map(g => s"$out/gen-$g")
+
   /** The latest COMMITTED state (empty frame with `schema` before the
     * first commit — or when every present gen is torn).
     */
   def read(s: SparkSession, out: String, schema: StructType): DataFrame =
-    committedGens(out).lastOption match {
-      case Some(g) => s.read.schema(schema).json(s"$out/gen-$g")
+    latestGen(out) match {
+      case Some(gen) => s.read.schema(schema).json(gen)
       case None => s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }

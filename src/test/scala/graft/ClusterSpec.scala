@@ -74,7 +74,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("partitioned parquet write prunes partitions on read (PartitionFilters)") {
-    val dir = java.nio.file.Files.createTempDirectory("part_events").toString
+    val dir = Scratch.dir("part_events")
     Tables.t(spark, sf, "events")
       .select("event_id", "user_id", "event_type", "value")
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)

@@ -3,8 +3,6 @@ package graft
 import graft.sources.kafkalog.{KafkaLog, KafkaLogCompaction}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Scale gate for kafkalog compaction: a 1M-record / 100k-key log (10×
   * update factor, 8 partitions) compacts correctly and in bounded time.
   * The cleaner's cost model — one stats aggregate + one survivor
@@ -18,7 +16,7 @@ class CompactionScaleSpec extends SparkSpec {
   import spark.implicits._
 
   test("1M-record / 100k-key log compacts to exactly the per-key maxima, in bounded time") {
-    val dir = Files.createTempDirectory("kafkalog_compact_scale").toString + "/log"
+    val dir = Scratch.dir("kafkalog_compact_scale") + "/log"
     val keys = 100000L
     val records = 1000000L
     // key of record i cycles 0..keys-1; partition = key % 8 (keyed

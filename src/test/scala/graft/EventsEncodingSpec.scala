@@ -12,7 +12,7 @@ class EventsEncodingSpec extends SparkSpec {
   import spark.implicits._
 
   test("normalizeEvents yields identical ts/ts_ns from nanos-long and micros-timestamp encodings") {
-    val tmp = java.nio.file.Files.createTempDirectory("events-enc").toString
+    val tmp = Scratch.dir("events-enc")
     val micros = Seq(
       (1L, 1700000000123456L, 10L, "click", 1.5),
       (2L, 1700000000999999L, 11L, "view", 2.5),

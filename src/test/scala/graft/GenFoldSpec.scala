@@ -6,8 +6,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import java.nio.file.Files
-
 /** The generalized generation fold (GenFold — extracted from the
   * kafkalog snapshot fold): a maintained aggregate table equals the
   * from-scratch aggregate regardless of batch cuts, resumes from its
@@ -34,7 +32,7 @@ class GenFoldSpec extends SparkSpec {
       .map(r => r._1 -> (r._2, r._3)).toMap
 
   test("folded aggregate equals the from-scratch aggregate across batch cuts") {
-    val dir = Files.createTempDirectory("genfold").toString
+    val dir = Scratch.dir("genfold")
     val ms = MemoryStream[(String, Long)]
     val src = ms.toDF().toDF("k", "v")
     ms.addData(("a", 1L), ("b", 2L))
@@ -46,7 +44,7 @@ class GenFoldSpec extends SparkSpec {
   }
 
   test("a resumed fold continues from its checkpoint without re-folding history") {
-    val dir = Files.createTempDirectory("genfold_resume").toString
+    val dir = Scratch.dir("genfold_resume")
     val ms = MemoryStream[(String, Long)]
     ms.addData(("a", 1L))
     GenFold.fold(ms.toDF().toDF("k", "v"), s"$dir/state", s"$dir/ck", aggSchema)(merge)
@@ -59,7 +57,7 @@ class GenFoldSpec extends SparkSpec {
   }
 
   test("a torn (uncommitted) generation is invisible; recovery re-folds only that batch") {
-    val dir = Files.createTempDirectory("genfold_torn").toString
+    val dir = Scratch.dir("genfold_torn")
     val ms = MemoryStream[(String, Long)]
     ms.addData(("a", 1L))
     GenFold.fold(ms.toDF().toDF("k", "v"), s"$dir/state", s"$dir/ck", aggSchema)(merge)

@@ -89,21 +89,9 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("no file under src/main or src/test builds a session outside GraftSession") {
-    val root = Iterator.iterate(new java.io.File(".").getAbsoluteFile)(_.getParentFile)
-      .takeWhile(_ != null)
-      .find(d => new java.io.File(d, "build.sbt").isFile &&
-        new java.io.File(d, "src/main").isDirectory)
-      .getOrElse(fail("no project root above the working directory"))
     val needle = "SparkSession" + ".builder"
-    val sources = Seq("src/main", "src/test").flatMap { d =>
-      val walk = java.nio.file.Files.walk(new java.io.File(root, d).toPath)
-      try walk.filter(_.toString.endsWith(".scala")).toArray.toSeq
-        .map(_.asInstanceOf[java.nio.file.Path])
-      finally walk.close()
-    }
-    val hits = sources.filter(p => java.nio.file.Files.readString(p).contains(needle))
-      .map(p => root.toPath.relativize(p).toString)
-    assert(sources.size > 100, s"scanned only ${sources.size} files")
+    val hits = SourceTree.files.collect { case (p, text) if text.contains(needle) => p }
+    assert(SourceTree.files.size > 100, s"scanned only ${SourceTree.files.size} files")
     assert(hits == Seq("src/main/scala/graft/GraftSession.scala"), hits.mkString(", "))
   }
 }

@@ -11,11 +11,9 @@ import scala.concurrent.duration._
 class IngestJobSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** A kafka-shaped parquet input (`partition, offset, value: binary`). */
   private def kafkaParquet(rows: Seq[(Int, Long, String)], files: Int = 1): String = {
-    val in = tmp("job_in")
+    val in = Scratch.dir("job_in")
     rows.toDF("partition", "offset", "value")
       .withColumn("value", col("value").cast("binary"))
       .repartition(files)
@@ -37,7 +35,7 @@ class IngestJobSpec extends SparkSpec {
       (0, 9L, """{"id":7,"msg":"new"}"""),
       (1, 2L, """{"id":8,"msg":"x"}"""),
       (1, 3L, "broken")))
-    val out = tmp("job_out")
+    val out = Scratch.dir("job_out")
 
     val n = IngestJob.run(spark,
       IngestJob.Args(input = in, format = "kafka-parquet", output = out))
@@ -55,8 +53,8 @@ class IngestJobSpec extends SparkSpec {
   }
 
   test("jsonl format + limit cap") {
-    val in = tmp("job_jl")
-    val out = tmp("job_jlout")
+    val in = Scratch.dir("job_jl")
+    val out = Scratch.dir("job_jlout")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(in, "d.jsonl"),
       Seq.tabulate(10)(i => s"""{"id":$i,"msg":"m$i"}""").mkString("\n"))
     val n = IngestJob.run(spark,
@@ -82,7 +80,7 @@ class IngestJobSpec extends SparkSpec {
     }
     val planted = (0 until 600).count(i => i % 7 == 3 || i % 7 == 5)
     val keys = (0 until 600).filterNot(i => i % 7 == 3 || i % 7 == 5).map(_ % 60).distinct.size
-    val out = tmp("job_rep")
+    val out = Scratch.dir("job_rep")
     val r = IngestJob.report(spark,
       IngestJob.Args(input = kafkaParquet(rows, files = 3), output = out))
     assert(r == IngestJob.Report(recordsIn = 600, recordsCorrupt = planted,
@@ -94,7 +92,7 @@ class IngestJobSpec extends SparkSpec {
 
   test("empty input: 0 keys, an empty snapshot, and no wait on the counters") {
     val in = kafkaParquet(Seq.empty)
-    val out = tmp("job_empty")
+    val out = Scratch.dir("job_empty")
     val r = Await.result(Future(IngestJob.report(spark,
       IngestJob.Args(input = in, output = out))), 2.minutes)
     assert(r == IngestJob.Report(0, 0, 0, None, None))
@@ -105,7 +103,7 @@ class IngestJobSpec extends SparkSpec {
     val n = 2000
     val in = kafkaParquet(
       (0 until n).map(i => (i % 4, i.toLong, s"""{"id":${i % 50},"msg":"m$i"}""")), files = 4)
-    val out = tmp("job_pass")
+    val out = Scratch.dir("job_pass")
     val marker = "ingest-job-spec-marker"
     val read = new AtomicLong()
     @volatile var markerJob = -1

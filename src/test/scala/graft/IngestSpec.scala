@@ -68,7 +68,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("snapshot sink overwrites pre-existing output (HadoopKafkaConsumer.java:139-147)") {
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    val dir = Scratch.dir("snap")
     Ingest.writeSnapshotJson(Seq((1L, "old")).toDF("id", "msg"), dir)
     Ingest.writeSnapshotJson(Seq((2L, "new")).toDF("id", "msg"), dir)
     val lines = spark.read.text(dir).as[String].collect()
@@ -76,7 +76,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("snapshot publish is atomic: a write that fails mid-task keeps the previous snapshot byte-identical") {
-    val parent = java.nio.file.Files.createTempDirectory("snap_atomic")
+    val parent = java.nio.file.Paths.get(Scratch.dir("snap_atomic"))
     val dir = parent.resolve("snapshot")
     Ingest.writeSnapshotJson(Seq((1L, "old"), (2L, "kept")).toDF("id", "msg"), dir.toString)
     def contents(): Map[String, Seq[Byte]] = {

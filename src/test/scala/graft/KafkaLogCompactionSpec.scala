@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 /** Log compaction (KafkaLogCompaction — Kafka's cleaner semantics over a
   * kafkalog directory): survivor selection, offset preservation,
@@ -16,9 +15,6 @@ import java.nio.file.Files
   */
 class KafkaLogCompactionSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"kafkalog_compact_$name").toString + "/log"
 
   private def writeLog(dir: String, rows: (Int, Long, String)*): Unit =
     KafkaLog.write(rows.toDF("partition", "offset", "value"), dir)
@@ -31,7 +27,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   private def rec(k: String, v: Int): String = s"""{"k":"$k","v":$v}"""
 
   test("compact keeps the highest-offset record per (partition, key), offsets preserved") {
-    val dir = tmp("basic")
+    val dir = Scratch.dir("basic") + "/log"
     writeLog(dir,
       (0, 0L, rec("a", 1)), (0, 1L, rec("b", 1)), (0, 2L, rec("a", 2)),
       (0, 5L, rec("c", 1)), (0, 7L, rec("a", 3)),
@@ -50,7 +46,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("null-key records are retained as-is") {
-    val dir = tmp("nullkey")
+    val dir = Scratch.dir("nullkey") + "/log"
     writeLog(dir,
       (0, 0L, rec("a", 1)), (0, 1L, "not json"), (0, 2L, rec("a", 2)),
       (0, 3L, "{}"))
@@ -60,7 +56,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("tombstones: latest-record deletes drop the key; overtaken deletes do not") {
-    val dir = tmp("tomb")
+    val dir = Scratch.dir("tomb") + "/log"
     writeLog(dir,
       (0, 0L, rec("a", 1)),
       (0, 1L, rec("b", 1)),
@@ -84,7 +80,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("tombstones off: the default predicate keeps plain cleaner behavior") {
-    val dir = tmp("tomboff")
+    val dir = Scratch.dir("tomboff") + "/log"
     writeLog(dir,
       (0, 0L, rec("a", 1)), (0, 1L, """{"k":"a","del":1}"""))
     KafkaLogCompaction.compact(spark, dir, keyOf)
@@ -94,7 +90,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("dirty-ratio gate skips clean partitions and re-compaction is a no-op scan") {
-    val dir = tmp("dirty")
+    val dir = Scratch.dir("dirty") + "/log"
     // p0: 4 records, 2 keys -> dirty 0.5; p1: all distinct -> dirty 0
     writeLog(dir,
       (0, 0L, rec("a", 1)), (0, 1L, rec("a", 2)), (0, 2L, rec("b", 1)),
@@ -112,7 +108,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("latest-wins over the compacted log equals latest-wins over full history") {
-    val dir = tmp("invariant")
+    val dir = Scratch.dir("invariant") + "/log"
     val history = (0 until 200).map { i =>
       ((i % 3), (i / 3).toLong, rec(s"k${i % 17}", i))
     }
@@ -130,7 +126,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("a compacted log accepts batch appends and offsets continue past the survivors") {
-    val dir = tmp("append")
+    val dir = Scratch.dir("append") + "/log"
     writeLog(dir, (0, 0L, rec("a", 1)), (0, 1L, rec("a", 2)), (0, 2L, rec("b", 1)))
     KafkaLogCompaction.compact(spark, dir, keyOf)
     Seq((0, 0L, rec("a", 3)))
@@ -149,7 +145,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("recover completes a swap that crashed after the manifest write") {
-    val dir = tmp("crash1")
+    val dir = Scratch.dir("crash1") + "/log"
     writeLog(dir, (0, 0L, rec("a", 1)), (0, 1L, rec("a", 2)))
     // construct the post-step-2 state by hand: staged tmp + manifest,
     // old segments still visible
@@ -171,7 +167,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("recover completes a swap that crashed between rename and manifest delete") {
-    val dir = tmp("crash2")
+    val dir = Scratch.dir("crash2") + "/log"
     writeLog(dir, (0, 0L, rec("a", 1)), (0, 1L, rec("a", 2)))
     val f = KafkaLog.fs(dir)
     val olds = KafkaLog.listPartitions(dir).toMap.apply(0).map(new Path(_).getName)
@@ -191,7 +187,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("recover discards a torn manifest and leaves the uncompacted log intact") {
-    val dir = tmp("crash3")
+    val dir = Scratch.dir("crash3") + "/log"
     writeLog(dir, (0, 0L, rec("a", 1)), (0, 1L, rec("a", 2)))
     val f = KafkaLog.fs(dir)
     val mf = f.create(new Path(s"$dir/p=0/_compact"), true)
@@ -209,7 +205,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
       .write.format("kafkalog").mode("append").save(dir)
 
   test("retention drops whole segments below the cutoff, never the active one") {
-    val dir = tmp("retention")
+    val dir = Scratch.dir("retention") + "/log"
     // three sink epochs -> three segments per partition touched
     appendBatch(dir, (0, 0L, "a0"), (0, 1L, "a1"), (1, 0L, "b0"))
     appendBatch(dir, (0, 0L, "a2"), (1, 0L, "b1"))
@@ -227,7 +223,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("a partially-covering segment survives retention (segment granularity)") {
-    val dir = tmp("retention_partial")
+    val dir = Scratch.dir("retention_partial") + "/log"
     appendBatch(dir, (0, 0L, "x0"), (0, 1L, "x1"), (0, 2L, "x2"))
     appendBatch(dir, (0, 0L, "x3"))
     // cutoff 2 lands inside the first segment -> it must survive whole
@@ -239,7 +235,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("streaming from earliest after retention starts at the new head") {
-    val dir = tmp("retention_stream")
+    val dir = Scratch.dir("retention_stream") + "/log"
     appendBatch(dir, (0, 0L, "r0"), (0, 1L, "r1"))
     appendBatch(dir, (0, 0L, "r2"), (0, 1L, "r3"))
     KafkaLogRetention.truncateBefore(dir, 2L)
@@ -254,7 +250,7 @@ class KafkaLogCompactionSpec extends SparkSpec {
   }
 
   test("streaming replay from a compacted log yields the same latest-wins state") {
-    val dir = tmp("stream")
+    val dir = Scratch.dir("stream") + "/log"
     writeLog(dir,
       (0, 0L, """{"id":1,"msg":"m1"}"""), (0, 1L, """{"id":2,"msg":"m2"}"""),
       (0, 2L, """{"id":1,"msg":"m3"}"""), (1, 0L, """{"id":3,"msg":"m4"}"""))

@@ -5,8 +5,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import java.nio.file.Files
-
 /** The kafkalog streaming SINK: producer-style offset assignment,
   * epoch-keyed exactly-once commit, append across epochs, restart-replay
   * idempotence, and a full stream→transform→stream pipeline whose output
@@ -17,14 +15,11 @@ class KafkaLogSinkSpec extends SparkSpec {
   import spark.implicits._
   implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"kafkalog_sink_$name").toString + "/log"
-
   private def readLog(dir: String) =
     spark.read.format("kafkalog").load(dir).as[(Int, Long, String)]
 
   test("sink assigns contiguous per-partition offsets in input-offset order") {
-    val dir = tmp("assign")
+    val dir = Scratch.dir("assign") + "/log"
     val ms = MemoryStream[(Int, Long, String)]
     val q = ms.toDF().toDF("partition", "offset", "value")
       .writeStream.format("kafkalog")
@@ -43,7 +38,7 @@ class KafkaLogSinkSpec extends SparkSpec {
   }
 
   test("epochs append: each batch's segment continues the partition's offsets") {
-    val dir = tmp("append")
+    val dir = Scratch.dir("append") + "/log"
     val ms = MemoryStream[(Int, Long, String)]
     val q = ms.toDF().toDF("partition", "offset", "value")
       .writeStream.format("kafkalog")
@@ -65,7 +60,7 @@ class KafkaLogSinkSpec extends SparkSpec {
   }
 
   test("restart replays the last epoch without duplicating it (exactly-once)") {
-    val dir = tmp("replay")
+    val dir = Scratch.dir("replay") + "/log"
     val ck = dir + ".ck"
     def writeBatch(data: Seq[(Int, Long, String)]): Unit = {
       val ms = MemoryStream[(Int, Long, String)]
@@ -86,7 +81,7 @@ class KafkaLogSinkSpec extends SparkSpec {
   }
 
   test("batch INSERT INTO appends segments that interleave with streaming epochs") {
-    val dir = tmp("insert")
+    val dir = Scratch.dir("insert") + "/log"
     // epoch 0 via the streaming sink
     val ms = MemoryStream[(Int, Long, String)]
     val q = ms.toDF().toDF("partition", "offset", "value")
@@ -114,8 +109,8 @@ class KafkaLogSinkSpec extends SparkSpec {
   }
 
   test("duplex pipeline: kafkalog -> latest-wins -> kafkalog matches the batch oracle") {
-    val in = tmp("duplex_in")
-    val out = tmp("duplex_out")
+    val in = Scratch.dir("duplex_in") + "/log"
+    val out = Scratch.dir("duplex_out") + "/log"
     // input topic: keyed JSON updates with growing versions, 2 partitions
     val rows = for (i <- 0 until 60)
       yield (i % 2, i.toLong / 2, s"""{"id":${i % 7},"msg":"m$i"}""")

@@ -16,11 +16,6 @@ import java.nio.file.{Files, Paths}
 class KafkaLogSourceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"kafkalog_$name").toString
-    d
-  }
-
   /** 3 partitions × 20 records, offsets with gaps (compacted-topic
     * shape), JSON values.
     */
@@ -31,7 +26,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("batch read round-trips the written log") {
-    val dir = tmp("batch"); fixture(dir)
+    val dir = Scratch.dir("batch"); fixture(dir)
     val got = spark.read.format("kafkalog").load(dir)
       .orderBy("partition", "offset").as[(Int, Long, String)].collect()
     assert(got.length == 60)
@@ -44,7 +39,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("batch startingOffsets/endingOffsets bound the read per partition") {
-    val dir = tmp("range"); fixture(dir)
+    val dir = Scratch.dir("range"); fixture(dir)
     // fixture offsets per partition p: p, p+3, p+6, ... p+57 (stride 3)
     val got = spark.read.format("kafkalog")
       .option("startingOffsets", """{"0":10,"1":-2,"2":30}""")
@@ -62,7 +57,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("batch limit caps records per partition like the reference's kafka.limit") {
-    val dir = tmp("limit"); fixture(dir)
+    val dir = Scratch.dir("limit"); fixture(dir)
     val got = spark.read.format("kafkalog")
       .option("limit", 7)
       .load(dir)
@@ -84,7 +79,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("batch offset options reject nonsense loudly") {
-    val dir = tmp("badrange"); fixture(dir)
+    val dir = Scratch.dir("badrange"); fixture(dir)
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
     val inverted = intercept[Exception] {
@@ -105,7 +100,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("maxOffsetsPerTrigger bounds every micro-batch and loses nothing") {
-    val dir = tmp("admission"); fixture(dir)
+    val dir = Scratch.dir("admission"); fixture(dir)
     spark.catalog.dropTempView("kl_adm")
     val q = spark.readStream.format("kafkalog")
       .option("maxOffsetsPerTrigger", 13)
@@ -125,9 +120,9 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("recovers from checkpoint after a mid-stream failure, exactly once") {
-    val dir = tmp("recover"); fixture(dir)
-    val ckpt = tmp("recover_ckpt")
-    val out = tmp("recover_out")
+    val dir = Scratch.dir("recover"); fixture(dir)
+    val ckpt = Scratch.dir("recover_ckpt")
+    val out = Scratch.dir("recover_out")
     def run(bombAtBatch: Option[Long]): Unit = {
       val q = spark.readStream.format("kafkalog")
         .option("maxOffsetsPerTrigger", 13)
@@ -156,7 +151,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("picks up records appended between triggers") {
-    val dir = tmp("append"); fixture(dir)
+    val dir = Scratch.dir("append"); fixture(dir)
     spark.catalog.dropTempView("kl_app")
     val q = spark.readStream.format("kafkalog").load(dir)
       .writeStream.format("memory").queryName("kl_app").start()
@@ -176,7 +171,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("out-of-order offsets in a segment fail the read loudly") {
-    val dir = tmp("corrupt")
+    val dir = Scratch.dir("corrupt")
     val v = new String(java.util.Base64.getEncoder.encode("x".getBytes("UTF-8")))
     Files.createDirectories(Paths.get(s"$dir/p=0"))
     Files.writeString(Paths.get(s"$dir/p=0/seg.txt"), s"5\t$v\n3\t$v\n")
@@ -195,7 +190,7 @@ class KafkaLogSourceSpec extends SparkSpec {
     // writer strips the wraps — without that, a long value splits across
     // lines and corrupts the log (caught live by the windowed
     // differential's JSON payloads)
-    val dir = tmp("long")
+    val dir = Scratch.dir("long")
     val long = "{\"k\":\"" + ("x" * 500) + "\"}"
     KafkaLog.write(Seq((0, 1L, long)).toDF("partition", "offset", "value"), dir)
     val got = spark.read.format("kafkalog").load(dir)
@@ -232,8 +227,8 @@ class KafkaLogSourceSpec extends SparkSpec {
 
   test("snapshot fold: dir-as-state survives restart and folds only the delta") {
     import graft.operators.KafkaLogOps
-    val dir = tmp("snap"); fixture(dir)
-    val out = tmp("snap_out"); val ckpt = tmp("snap_ckpt")
+    val dir = Scratch.dir("snap"); fixture(dir)
+    val out = Scratch.dir("snap_out"); val ckpt = Scratch.dir("snap_ckpt")
     // (id, msg, version): id cycles 0..6 per fixture; version = offset
     // is unique per partition but ties across partitions, so order the
     // cross-partition tiebreak explicitly like the ops do
@@ -284,7 +279,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("pure SQL can DDL and query a kafkalog table") {
-    val dir = tmp("sql"); fixture(dir)
+    val dir = Scratch.dir("sql"); fixture(dir)
     spark.sql("DROP TABLE IF EXISTS klog_sql")
     spark.sql(s"CREATE TABLE klog_sql USING kafkalog OPTIONS (path '$dir')")
     try {
@@ -329,7 +324,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   }
 
   test("partitions option assigns a subset, batch and streaming") {
-    val dir = tmp("assign"); fixture(dir)
+    val dir = Scratch.dir("assign"); fixture(dir)
     val batch = spark.read.format("kafkalog")
       .option("partitions", "0, 2")
       .load(dir).as[(Int, Long, String)].collect()
@@ -348,7 +343,7 @@ class KafkaLogSourceSpec extends SparkSpec {
   test("AvailableNow trigger drains the log under admission control") {
     // DENSE offsets (3 partitions × 20, no gaps), so the offset-unit cap
     // admits exactly 13 rows per batch: 60 rows must take 5 batches
-    val dir = tmp("availnow")
+    val dir = Scratch.dir("availnow")
     KafkaLog.write((for (p <- 0 until 3; i <- 0 until 20)
       yield (p, i.toLong, s"""{"id":$i,"msg":"p${p}m$i"}"""))
       .toDF("partition", "offset", "value"), dir)

@@ -16,7 +16,7 @@ class LayoutSpec extends SparkSpec {
     // directories based on the dim filter's runtime result, the
     // partition-level analog of the runtime bloom filter.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dpp").toString
+    val dir = Scratch.dir("dpp")
     val ev = Tables.t(spark, sf, "events")
       .select("event_id", "event_type", "value")
     Layout.writePartitioned(ev, dir, Seq("event_type"))
@@ -24,7 +24,7 @@ class LayoutSpec extends SparkSpec {
     // the dim must be a SCANNED relation with a live Filter — a
     // LocalRelation constant-folds the predicate away and DPP's
     // "selective predicate on the build side" precondition fails
-    val dimDir = java.nio.file.Files.createTempDirectory("dpp_dim").toString
+    val dimDir = Scratch.dir("dpp_dim")
     Seq(("purchase", 1), ("click", 2)).toDF("et", "grp")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("grp") === 1)
@@ -68,7 +68,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("partitioned write prunes directories at file-listing time") {
-    val dir = java.nio.file.Files.createTempDirectory("layout_part").toString
+    val dir = Scratch.dir("layout_part")
     val ev = Tables.t(spark, sf, "events").select("event_id", "user_id", "event_type")
     Layout.writePartitioned(ev, dir, Seq("event_type"))
     val one = spark.read.parquet(dir).where(col("event_type") === "click")
@@ -79,7 +79,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite backfills ONE partition, leaving the rest intact") {
-    val dir = java.nio.file.Files.createTempDirectory("layout_dpo").toString
+    val dir = Scratch.dir("layout_dpo")
     val ev = Tables.t(spark, sf, "events").select("event_id", "user_id", "event_type")
     Layout.writePartitioned(ev, dir, Seq("event_type"))
     val before = spark.read.parquet(dir)
@@ -106,7 +106,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deleteWhere rewrites only the files holding target rows; others untouched on disk") {
-    val dir = java.nio.file.Files.createTempDirectory("layout_del").toString + "/t"
+    val dir = Scratch.dir("layout_del") + "/t"
     val ev = Tables.t(spark, sf, "events").select("event_id", "user_id", "event_type")
     // range layout on user_id → each file covers a user range, so one
     // user's rows live in exactly one file (the pruning showcase)
@@ -135,7 +135,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("file index routes a point lookup to only the files holding the key") {
-    val dir = java.nio.file.Files.createTempDirectory("layout_idx").toString + "/t"
+    val dir = Scratch.dir("layout_idx") + "/t"
     val ev = Tables.t(spark, sf, "events").select("event_id", "user_id", "event_type")
     // hash-distribute on event_id so user_id values SPAN files: min/max
     // row-group stats cannot prune this lookup — the index is the only
@@ -161,7 +161,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deleteWhere with no matches is a no-op; null predicate rows survive") {
-    val dir = java.nio.file.Files.createTempDirectory("layout_del0").toString + "/t"
+    val dir = Scratch.dir("layout_del0") + "/t"
     import spark.implicits._
     Seq((1L, Some("a")), (2L, None), (3L, Some("x"))).toDF("id", "tag")
       .coalesce(1).write.parquet(dir)
@@ -176,7 +176,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("clustered write carries sorted row groups (min/max prune-able)") {
-    val dir = java.nio.file.Files.createTempDirectory("layout_clust").toString
+    val dir = Scratch.dir("layout_clust")
     val ord = Tables.t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     Layout.writeClustered(ord, dir, Seq("o_orderkey"), files = 4)
     val stats = spark.read.parquet(dir)
@@ -199,8 +199,8 @@ class LayoutSpec extends SparkSpec {
   test("z-order clustering prunes on the SECOND dimension; linear sort cannot") {
     import spark.implicits._
     val ord = Tables.t(spark, sf, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    val zDir = java.nio.file.Files.createTempDirectory("layout_z").toString
-    val linDir = java.nio.file.Files.createTempDirectory("layout_lin").toString
+    val zDir = Scratch.dir("layout_z")
+    val linDir = Scratch.dir("layout_lin")
     Layout.writeZOrdered(ord, zDir, "o_custkey", "o_totalprice", files = 8)
     Layout.writeClustered(ord, linDir, Seq("o_custkey"), files = 8)
     // nothing lost in the rewrite
@@ -227,7 +227,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact merges a many-small-file directory, preserving rows exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val dir = Scratch.dir("compact") + "/t"
     val src = Tables.t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     src.repartition(32).write.parquet(dir) // simulate a chatty sink
     val expected = src.orderBy("o_orderkey").collect().toSeq
@@ -239,7 +239,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("nested-schema pruning: reading one struct field prunes the rest from the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("nested_prune").toString
+    val dir = Scratch.dir("nested_prune")
     Tables.t(spark, sf, "orders")
       .select(col("o_orderkey"),
         struct(col("o_custkey").as("cust"), col("o_orderpriority").as("prio"),

@@ -32,7 +32,7 @@ class NearDupTtlSpec extends SparkSpec {
     */
   private def runTws(batches: Seq[Seq[BandedDoc]], name: String,
       ttl: TTLConfig, sleepMs: Long = 0): Seq[DupHit] = StreamingIngest.withRocksDbState(spark) {
-    val root = java.nio.file.Files.createTempDirectory(s"ndttl_$name").toFile
+    val root = new java.io.File(Scratch.dir(s"ndttl_$name"))
     val out = new java.io.File(root, "out").getAbsolutePath
     val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
     val ms = MemoryStream[BandedDoc]

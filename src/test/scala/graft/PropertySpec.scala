@@ -242,7 +242,7 @@ object PropertySpec extends Properties("graft") {
             k.map(kk => s"""{"k":"$kk"}""").getOrElse("no key here"))
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory("compact_prop").toString + "/log"
+      val dir = Scratch.dir("compact_prop") + "/log"
       KafkaLog.write(rows.toDF("partition", "offset", "value"), dir)
       def read() = spark.read.format("kafkalog").load(dir)
         .as[(Int, Long, String)].collect().toSet
@@ -318,7 +318,7 @@ object PropertySpec extends Properties("graft") {
   property("changeFeed applied to v1 reconstructs v2 (round-trip law)") =
     forAll(keyedTableAndDelta) { case (base, delta) =>
       import graft.sources.VersionedTable
-      val dir = java.nio.file.Files.createTempDirectory("cdf_prop").toString + "/t"
+      val dir = Scratch.dir("cdf_prop") + "/t"
       VersionedTable.append(base.toDF("k", "payload"), dir)
       VersionedTable.merge(spark, dir,
         delta.toDF("k", "payload", "del"), keys = Seq("k"), deleteFlag = "del")
@@ -343,8 +343,8 @@ object PropertySpec extends Properties("graft") {
       // images); same payloads through both merge paths
       val base = base0.map { case (k, p) => (f"$k%06d", p) }
       val delta = delta0.map { case (k, p, d) => (f"$k%06d", p, d) }
-      val full = java.nio.file.Files.createTempDirectory("mp_full").toString + "/t"
-      val pruned = java.nio.file.Files.createTempDirectory("mp_pru").toString + "/t"
+      val full = Scratch.dir("mp_full") + "/t"
+      val pruned = Scratch.dir("mp_pru") + "/t"
       val baseDf = base.toDF("k", "payload").repartitionByRange(3, col("k"))
       VersionedTable.append(baseDf, full)
       VersionedTable.appendWithStats(baseDf, pruned, "k")

@@ -45,7 +45,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = Scratch.dir("graft_wh")
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
     val o = Tables.t(s2, sf, "orders")

@@ -32,7 +32,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JSON-lines snapshot round-trip: write then read yields the same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
+    val dir = Scratch.dir("jsonl")
     val rows = Seq((1L, "a"), (2L, "b"), (3L, ""))
     Ingest.writeSnapshotJson(rows.toDF("id", "msg"), dir)
     val back = Sources.readJsonLines(spark, dir, Ingest.msgSchema)
@@ -41,7 +41,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves rows and pushes filters to the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = Scratch.dir("graft_orc")
     val ev = Tables.t(spark, sf, "events")
       .select("event_id", "user_id", "event_type", "value")
     Sources.writeOrc(ev, dir)
@@ -59,7 +59,7 @@ class SourcesSpec extends SparkSpec {
     // later writers add columns; mergeSchema reads must surface the
     // union with nulls for the missing side.
     import org.apache.spark.sql.functions.lit
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString
+    val dir = Scratch.dir("evolve")
     Seq((1L, "a")).toDF("id", "msg").write.parquet(dir + "/w1")
     Seq((2L, "b", 9L)).toDF("id", "msg", "version").write.parquet(dir + "/w2")
     val merged = spark.read.option("mergeSchema", "true")
@@ -74,7 +74,7 @@ class SourcesSpec extends SparkSpec {
     // Row provenance (which file did this row come from) without any
     // extra column in the data — the debugging/incremental-processing
     // hook at scale.
-    val dir = java.nio.file.Files.createTempDirectory("meta").toString + "/t"
+    val dir = Scratch.dir("meta") + "/t"
     Tables.t(spark, sf, "region").write.parquet(dir)
     val withMeta = spark.read.parquet(dir)
       .select(col("r_regionkey"), col("_metadata.file_name").as("fn"),
@@ -85,7 +85,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV strict: explicit schema, malformed rows dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("csv").toString
+    val dir = Scratch.dir("csv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "d.csv"),
       "id,msg\n1,hello\nnot-a-long,world\n3,ok\n")
     val got = Sources.readCsvStrict(spark, dir,

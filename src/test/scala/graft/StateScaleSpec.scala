@@ -6,8 +6,6 @@ import graft.streaming.StreamingIngest.KeyedRecord
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** State-cardinality scale gate for the streaming latest-wins upsert:
   * the claim "state is O(live keys) in a sharded RocksDB store, strictly
   * better than the reference's unbounded in-heap HashMap
@@ -37,7 +35,7 @@ class StateScaleSpec extends SparkSpec {
   test("latestWinsUpdatesTws: 1M keys, flat per-batch cost, bounded heap") {
     val keys = 1000000L
     val records = 2 * keys // every key gets version 0 (m0) then version 1 (m1)
-    val dir = Files.createTempDirectory("kafkalog_state_scale").toString
+    val dir = Scratch.dir("kafkalog_state_scale")
     KafkaLog.write(
       spark.range(records).select(
         (col("id") % 8).cast("int").as("partition"),

@@ -284,9 +284,9 @@ class StreamingSpec extends SparkSpec {
     // restart from the same checkpoint with a file source, and (a) old
     // input is not reprocessed, (b) flatMapGroupsWithState state is
     // restored — a late LOWER version after restart must not re-emit.
-    val srcDir = java.nio.file.Files.createTempDirectory("restart_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("restart_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("restart_out").toString
+    val srcDir = Scratch.dir("restart_src")
+    val ckpt = Scratch.dir("restart_ckpt")
+    val outDir = Scratch.dir("restart_out")
     val schema = "id LONG, msg STRING, version LONG"
     def writeBatch(name: String, rows: Seq[(Long, String, Long)]): Unit = {
       val f = new java.io.File(srcDir, name)

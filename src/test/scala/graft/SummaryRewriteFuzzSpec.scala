@@ -4,8 +4,6 @@ import graft.plans.SummaryRewriteRule
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Differential FUZZ over the view-rewrite tiers: for a randomized mix
   * of view grain × query grain × aggregate set × predicate shape, the
   * invariant is that the query's result with the rule INSTALLED equals
@@ -35,7 +33,7 @@ class SummaryRewriteFuzzSpec extends SparkSpec {
 
   private lazy val mvDirs: Map[String, String] =
     Seq("day", "month").map { grain =>
-      val d = Files.createTempDirectory(s"graft_mv_fuzz_$grain").toString + "/v"
+      val d = Scratch.dir(s"mv_fuzz_$grain") + "/v"
       viewDf(grain).write.mode("overwrite").parquet(d)
       grain -> d
     }.toMap
@@ -86,7 +84,7 @@ class SummaryRewriteFuzzSpec extends SparkSpec {
       try {
         val q = buildQuery(qGrain, aggPick, predPick)
         val usedMv = SummaryRewriteRule.scansPath(
-          q.queryExecution.optimizedPlan, "graft_mv_fuzz_")
+          q.queryExecution.optimizedPlan, mvDirs(viewGrain))
         if (usedMv) fired += 1
         assert(canon(q) == expected,
           s"case $i diverged: view=$viewGrain query=$qGrain agg=$aggPick " +

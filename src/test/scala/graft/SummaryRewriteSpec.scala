@@ -5,8 +5,6 @@ import graft.plans.SummaryRewriteRule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** The materialized-view aggregate-rewrite rule: fires on an exact
   * match (and on column subsets), preserves results and downstream
   * operator wiring (exprIds), and refuses anything it cannot prove —
@@ -16,7 +14,7 @@ class SummaryRewriteSpec extends SparkSpec {
 
   private lazy val orders = Tables.t(spark, sf, "orders")
   private lazy val mvDir = {
-    val d = Files.createTempDirectory("graft_mv_spec").toString + "/monthly"
+    val d = Scratch.dir("mv_spec") + "/monthly"
     IncrOps.monthlyPartials(orders).write.mode("overwrite").parquet(d)
     d
   }
@@ -35,7 +33,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   private def scansMv(df: DataFrame): Boolean =
-    SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, "graft_mv_spec")
+    SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, mvDir)
 
   test("exact-match aggregate rewrites to the summary scan with identical results") {
     val expected = IncrOps.monthlyPartials(orders)
@@ -203,7 +201,7 @@ class SummaryRewriteSpec extends SparkSpec {
   private def centsE = round(col("o_totalprice") * 100).cast("long")
 
   private lazy val avgMvDir = {
-    val d = Files.createTempDirectory("graft_mv_spec_avg").toString + "/avg"
+    val d = Scratch.dir("mv_spec_avg") + "/avg"
     IncrOps.monthlyAvgPartials(orders).write.mode("overwrite").parquet(d)
     d
   }
@@ -222,7 +220,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   private def scansAvgMv(df: DataFrame): Boolean =
-    SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, "graft_mv_spec_avg")
+    SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, avgMvDir)
 
   test("derived avg: avg(x) is served from stored sum(x)+count(x)") {
     val build = () => orders
@@ -261,7 +259,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("derived avg rolls up: MONTH avg from a DAY sum/count view") {
-    val dayAvgDir = Files.createTempDirectory("graft_mv_spec_davg").toString + "/davg"
+    val dayAvgDir = Scratch.dir("mv_spec_davg") + "/davg"
     val dayAvg = orders.groupBy(date_trunc("day", col("o_orderdate")).as("day"))
       .agg(sum(centsE).as("cents"), count(centsE).as("n_vals"))
     dayAvg.write.mode("overwrite").parquet(dayAvgDir)
@@ -276,8 +274,7 @@ class SummaryRewriteSpec extends SparkSpec {
       spark.experimental.extraOptimizations :+ SummaryRewriteRule
     try {
       val q = build()
-      assert(SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan,
-        "graft_mv_spec_davg"),
+      assert(SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, dayAvgDir),
         "rollup derived avg did not fire:\n" + q.queryExecution.optimizedPlan)
       assert(q.collect().toSeq == expected.toSeq)
     } finally {
@@ -297,7 +294,7 @@ class SummaryRewriteSpec extends SparkSpec {
     // Bag equality refuses; the rollup tier then serves it CORRECTLY
     // (both duplicate keys rebase to the month column, the count
     // re-sums over priorities), so the assertion is result equality.
-    val dupDir = Files.createTempDirectory("graft_mv_spec_dup").toString + "/dup"
+    val dupDir = Scratch.dir("mv_spec_dup") + "/dup"
     val mv = orders.groupBy(date_trunc("month", col("o_orderdate")).as("month"),
         col("o_orderpriority").as("prio"))
       .agg(count(lit(1)).as("n"))
@@ -331,7 +328,7 @@ class SummaryRewriteSpec extends SparkSpec {
       sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
 
   private lazy val dayMvDir = {
-    val d = Files.createTempDirectory("graft_mv_spec_day").toString + "/daily"
+    val d = Scratch.dir("mv_spec_day") + "/daily"
     dailyPartials.write.mode("overwrite").parquet(d)
     d
   }
@@ -350,7 +347,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   private def scansDayMv(df: DataFrame): Boolean =
-    SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, "graft_mv_spec_day")
+    SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, dayMvDir)
 
   test("rollup: a MONTH aggregate is served from the DAY view by re-aggregation") {
     val expected = IncrOps.monthlyPartials(orders).orderBy("month").collect()
@@ -385,7 +382,7 @@ class SummaryRewriteSpec extends SparkSpec {
       assert(scansDayMv(wk), "week-from-day rollup did not fire")
     }
     // a week-grained view cannot serve month queries (misaligned buckets)
-    val weekDir = Files.createTempDirectory("graft_mv_spec_week").toString + "/weekly"
+    val weekDir = Scratch.dir("mv_spec_week") + "/weekly"
     val weekly = orders.groupBy(date_trunc("week", col("o_orderdate")).as("w"))
       .agg(count(lit(1)).as("n"))
     weekly.write.mode("overwrite").parquet(weekDir)
@@ -396,8 +393,7 @@ class SummaryRewriteSpec extends SparkSpec {
     try {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("m"))
         .agg(count(lit(1)).as("n"))
-      assert(!SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan,
-        "graft_mv_spec_week"),
+      assert(!SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, weekDir),
         "month wrongly served from week buckets:\n" + q.queryExecution.optimizedPlan)
     } finally {
       spark.experimental.extraOptimizations =
@@ -418,7 +414,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("rollup: floating-point sums refuse (re-summation is order-sensitive)") {
-    val dblDir = Files.createTempDirectory("graft_mv_spec_dbl").toString + "/dbl"
+    val dblDir = Scratch.dir("mv_spec_dbl") + "/dbl"
     val dbl = orders.groupBy(date_trunc("day", col("o_orderdate")).as("day"))
       .agg(sum(col("o_totalprice")).as("s"))
     dbl.write.mode("overwrite").parquet(dblDir)
@@ -429,8 +425,8 @@ class SummaryRewriteSpec extends SparkSpec {
     try {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("m"))
         .agg(sum(col("o_totalprice")).as("s"))
-      assert(!SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan,
-        "graft_mv_spec_dbl"), "double sum wrongly rolled up")
+      assert(!SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, dblDir),
+        "double sum wrongly rolled up")
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
@@ -483,5 +479,14 @@ class SummaryRewriteSpec extends SparkSpec {
       assert(scansMv(joined))
       assert(joined.count() == IncrOps.monthlyPartials(orders).count())
     }
+  }
+
+  test("scansPath matches the whole directory, not a name prefix") {
+    val d = Scratch.dir("mv_prefix")
+    spark.range(1).write.parquet(s"$d/monthly_orders_f")
+    val plan = spark.read.parquet(s"$d/monthly_orders_f").queryExecution.optimizedPlan
+    assert(SummaryRewriteRule.scansPath(plan, s"$d/monthly_orders_f"))
+    assert(!SummaryRewriteRule.scansPath(plan, s"$d/monthly_orders"),
+      "a view at monthly_orders_f must not count as monthly_orders")
   }
 }

@@ -6,8 +6,6 @@ import graft.streaming.StreamingIngest.KeyedRecord
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import java.nio.file.Files
-
 /** CRASH-RECOVERY differential for the stateful streaming path — the
   * exactly-once claim the reference's delete-and-rewrite snapshot never
   * had (`HadoopKafkaConsumer.java:92-101` re-reads the whole topic
@@ -44,9 +42,6 @@ class TwsRecoverySpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("msg", StringType),
     StructField("version", LongType)))
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"twsrec_$name").toString
 
   /** 1 partition × 40 dense offsets → exactly 4 batches under cap 10.
     * Versions are carried IN the payload (not the offset), with stale
@@ -118,15 +113,15 @@ class TwsRecoverySpec extends SparkSpec {
       }.toMap
 
   test("tws upsert killed after batch 2 of 4 resumes to the one-shot result") {
-    val log = tmp("log"); fixture(log)
+    val log = Scratch.dir("log"); fixture(log)
 
-    val outA = tmp("outA")
-    drive(log, tmp("ckA"), outA, bombAtBatch = None)
+    val outA = Scratch.dir("outA")
+    drive(log, Scratch.dir("ckA"), outA, bombAtBatch = None)
     val a = gens(outA)
     assert(a.keySet == Set(0L, 1L, 2L, 3L), s"one-shot must run 4 batches, got ${a.keySet}")
 
-    val outB = tmp("outB")
-    val ckB = tmp("ckB")
+    val outB = Scratch.dir("outB")
+    val ckB = Scratch.dir("ckB")
     drive(log, ckB, outB, bombAtBatch = Some(2))
     val mid = gens(outB)
     assert(mid.keySet == Set(0L, 1L),
@@ -172,13 +167,13 @@ class TwsRecoverySpec extends SparkSpec {
     // micro-batch could commit, so the restart MUST re-run an
     // already-visible batch — the sink's overwrite-per-batch-id
     // discipline is what makes that replay invisible in the result.
-    val log = tmp("log2"); fixture(log)
+    val log = Scratch.dir("log2"); fixture(log)
 
-    val outA = tmp("outA2")
-    drive(log, tmp("ckA2"), outA, bombAtBatch = None)
+    val outA = Scratch.dir("outA2")
+    drive(log, Scratch.dir("ckA2"), outA, bombAtBatch = None)
     val a = gens(outA)
 
-    val outC = tmp("outC"); val ckC = tmp("ckC")
+    val outC = Scratch.dir("outC"); val ckC = Scratch.dir("ckC")
     drive(log, ckC, outC, bombAtBatch = None, bombAfterBatch = Some(3))
     assert(gens(outC).keySet == Set(0L, 1L, 2L, 3L),
       "batch 3's sink write must be visible even though its commit never landed")

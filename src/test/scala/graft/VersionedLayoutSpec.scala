@@ -3,8 +3,6 @@ package graft
 import graft.sources.VersionedTable
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Layout maintenance on the versioned table: bin-pack OPTIMIZE,
   * Z-order re-clustering with multi-column manifest stats, bloom-filter
   * point-lookup skipping, tagged/legacy manifest coexistence, and the
@@ -16,15 +14,12 @@ import java.nio.file.Files
 class VersionedLayoutSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"vlay_$name").toString + "/t"
-
   private def keyed(from: Int, to: Int) =
     (from to to).map(i => (i.toLong, f"$i%06d", (i * 37 % 1000).toLong))
       .toDF("k", "k6", "payload")
 
   test("optimizeBinPack: fewer files, identical rows, old version time-travelable") {
-    val dir = tmp("binpack")
+    val dir = Scratch.dir("binpack") + "/t"
     (0 until 4).foreach(i =>
       VersionedTable.append(keyed(i * 100 + 1, i * 100 + 100).repartition(5), dir))
     val before = VersionedTable.read(spark, dir).orderBy("k").collect()
@@ -40,7 +35,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("optimizeBinPack can re-record stats for the compacted files") {
-    val dir = tmp("binstats")
+    val dir = Scratch.dir("binstats") + "/t"
     VersionedTable.append(keyed(1, 300).repartition(12), dir)
     VersionedTable.optimizeBinPack(spark, dir, targetBytes = 1L << 26,
       statsCols = Seq("k6"))
@@ -51,7 +46,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("optimizeZorder: per-file stats on both columns; 2-D box prunes and stays exact") {
-    val dir = tmp("zorder")
+    val dir = Scratch.dir("zorder") + "/t"
     // two independent uniform dimensions, hash-scattered at commit time
     val df = (1 to 4000)
       .map { i =>
@@ -77,7 +72,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("readPrunedMulti is conservative for files lacking the predicate column's stats") {
-    val dir = tmp("mixed")
+    val dir = Scratch.dir("mixed") + "/t"
     // legacy single-column stats entries on k6...
     VersionedTable.appendWithStats(keyed(1, 100).repartitionByRange(4, $"k6"), dir, "k6")
     // ...then a tagged commit with stats on payload only
@@ -94,7 +89,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("bloom lookup: no false negatives on any key; absent keys plan ~no files") {
-    val dir = tmp("bloom")
+    val dir = Scratch.dir("bloom") + "/t"
     VersionedTable.appendAnnotated(keyed(1, 2000).repartition(8), dir,
       bloomCols = Seq("k"), bloomBits = 1 << 14)
     // every present key must return its exact row (no-false-negative)
@@ -114,7 +109,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("bloom entries coexist with stats entries on the same file") {
-    val dir = tmp("bloomstats")
+    val dir = Scratch.dir("bloomstats") + "/t"
     VersionedTable.appendAnnotated(keyed(1, 500).repartitionByRange(4, $"k6"), dir,
       statsCols = Seq("k6"), bloomCols = Seq("k"), bloomBits = 1 << 13)
     val (r1, p1, t1) = VersionedTable.readPrunedMulti(
@@ -125,7 +120,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("readChanges: exactly the appended delta; empty span; rejects rewritten chains") {
-    val dir = tmp("changes")
+    val dir = Scratch.dir("changes") + "/t"
     VersionedTable.append(keyed(1, 100), dir)
     VersionedTable.append(keyed(101, 150), dir)
     VersionedTable.append(keyed(151, 180), dir)
@@ -142,7 +137,7 @@ class VersionedLayoutSpec extends SparkSpec {
   }
 
   test("annotations never plan away a sought row even under adversarial clustering") {
-    val dir = tmp("adv")
+    val dir = Scratch.dir("adv") + "/t"
     // all files share one k6 value range boundary value: stats straddle
     val df = (1 to 400).map(i => (i.toLong, "000100", i.toLong)).toDF("k", "k6", "payload")
     VersionedTable.appendAnnotated(df.repartition(4), dir,

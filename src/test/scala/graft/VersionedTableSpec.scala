@@ -4,8 +4,6 @@ import graft.sources.VersionedTable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** The versioned-table commit core: append/overwrite chains, time
   * travel, snapshot isolation of resolved readers, the crash points of
   * the commit protocol (orphan data files, tmp manifests), the publish
@@ -14,13 +12,10 @@ import java.nio.file.Files
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"vtab_$name").toString + "/t"
-
   private def nums(from: Int, to: Int) = (from to to).toDF("n")
 
   test("append chain: each version sees the union so far; time travel sees the past") {
-    val dir = tmp("chain")
+    val dir = Scratch.dir("chain") + "/t"
     val v1 = VersionedTable.append(nums(1, 10), dir)
     val v2 = VersionedTable.append(nums(11, 20), dir)
     val v3 = VersionedTable.append(nums(21, 30), dir)
@@ -32,7 +27,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("overwrite starts a new file set; the pre-overwrite version stays readable") {
-    val dir = tmp("ovw")
+    val dir = Scratch.dir("ovw") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     val v2 = VersionedTable.overwrite(nums(100, 104), dir)
     assert(v2 == 2L)
@@ -41,7 +36,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("snapshot isolation: a resolved reader is immune to later commits") {
-    val dir = tmp("iso")
+    val dir = Scratch.dir("iso") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     val snapshot = VersionedTable.read(spark, dir) // resolves v1's file list
     VersionedTable.append(nums(11, 200), dir)
@@ -50,7 +45,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("crash garbage is invisible: orphan data files and tmp manifests don't read") {
-    val dir = tmp("crash")
+    val dir = Scratch.dir("crash") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     // crash between stage and publish: a data file no manifest names
     nums(900, 999).write.mode("overwrite").parquet(s"$dir/.stage_dead")
@@ -71,7 +66,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("publish race: concurrent appends both land, on distinct versions, none lost") {
-    val dir = tmp("race")
+    val dir = Scratch.dir("race") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     val t1 = new Thread(() => VersionedTable.append(nums(11, 20), dir))
     val t2 = new Thread(() => VersionedTable.append(nums(21, 30), dir))
@@ -87,7 +82,7 @@ class VersionedTableSpec extends SparkSpec {
     // the (aged) sentinel-less tip as a complete legacy version — not
     // an in-flight claim to hide and, after the grace window, REWRITE
     // in place (which would silently discard the committed file list).
-    val dir = tmp("legacy")
+    val dir = Scratch.dir("legacy") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     VersionedTable.append(nums(11, 30), dir)
     val f = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
@@ -124,7 +119,7 @@ class VersionedTableSpec extends SparkSpec {
   test("crashed empty claim: one racer takes over, the rest rebase, none lost") {
     sys.props("graft.versioned.grace.ms") = "300"
     try {
-      val dir = tmp("tkover")
+      val dir = Scratch.dir("tkover") + "/t"
       VersionedTable.append(nums(1, 10), dir)
       // a writer that crashed right after its exclusive create: an
       // EMPTY claim on v2 that will never complete on its own
@@ -149,7 +144,7 @@ class VersionedTableSpec extends SparkSpec {
   test("an abandoned takeover marker ages out instead of wedging the version") {
     sys.props("graft.versioned.grace.ms") = "300"
     try {
-      val dir = tmp("stale")
+      val dir = Scratch.dir("stale") + "/t"
       VersionedTable.append(nums(1, 10), dir)
       val mdir = s"$dir/_manifests"
       // crashed writer (empty claim) AND crashed recoverer (stale marker)
@@ -165,7 +160,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum reclaims crashed fill tmps and orphaned checksum sidecars") {
-    val dir = tmp("fillvac")
+    val dir = Scratch.dir("fillvac") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     VersionedTable.append(nums(11, 20), dir)
     // every successful LOCAL commit orphans its fill tmp's checksum
@@ -199,7 +194,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum drops old versions' exclusive files but never a retained snapshot's") {
-    val dir = tmp("vac")
+    val dir = Scratch.dir("vac") + "/t"
     VersionedTable.append(nums(1, 10), dir)       // v1
     VersionedTable.overwrite(nums(11, 20), dir)   // v2: v1's files now exclusive to v1
     VersionedTable.append(nums(21, 30), dir)      // v3 shares v2's files
@@ -216,7 +211,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("manifest stats skip files outside the range without changing results") {
-    val dir = tmp("stats")
+    val dir = Scratch.dir("stats") + "/t"
     // range-partitioned commit → tight per-file [min,max] spans
     val df = (1 to 1000).toDF("n").withColumn("k", format_string("%06d", col("n")))
       .repartitionByRange(8, col("k"))
@@ -233,7 +228,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("stats-less and stats entries coexist; stats-less files are never skipped") {
-    val dir = tmp("mixed")
+    val dir = Scratch.dir("mixed") + "/t"
     VersionedTable.append((1 to 50).toDF("n")
       .withColumn("k", format_string("%06d", col("n"))), dir) // no stats
     VersionedTable.appendWithStats((51 to 100).toDF("n")
@@ -246,7 +241,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("merge: updates replace, inserts add, deletes remove — atomically, time-travelably") {
-    val dir = tmp("merge")
+    val dir = Scratch.dir("merge") + "/t"
     VersionedTable.append(
       (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "payload"), dir)
     val delta = Seq(
@@ -264,7 +259,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("changeFeed classifies merge effects; carried rows never surface") {
-    val dir = tmp("cdf")
+    val dir = Scratch.dir("cdf") + "/t"
     VersionedTable.append(
       (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "payload"), dir)
     val delta = Seq(
@@ -280,7 +275,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("changeFeed across an OPTIMIZE commit is empty: layout is not data change") {
-    val dir = tmp("cdf_opt")
+    val dir = Scratch.dir("cdf_opt") + "/t"
     (0 until 3).foreach(i => VersionedTable.append(
       (1 to 30).filter(_ % 3 == i).map(j => (j.toLong, s"v$j"))
         .toDF("k", "payload").repartition(4), dir))
@@ -290,7 +285,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("changeFeed scans only manifest-diff files, not the whole table") {
-    val dir = tmp("cdf_bound")
+    val dir = Scratch.dir("cdf_bound") + "/t"
     // files land clustered by key range, so a replace of ONE file is a
     // genuine partial rewrite; the feed's input must be bounded by it
     VersionedTable.append(
@@ -312,7 +307,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("mergePruned rewrites only key-overlapping files; carried lines keep stats") {
-    val dir = tmp("mp")
+    val dir = Scratch.dir("mp") + "/t"
     val base = (1 to 400).map(i => (f"$i%06d", s"v$i")).toDF("k", "payload")
     VersionedTable.appendWithStats(base.repartitionByRange(8, col("k")), dir, "k")
     // delta confined to the low end of the domain + one true insert
@@ -338,7 +333,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("mergePruned with no overlapping file appends pure inserts, rewrites nothing") {
-    val dir = tmp("mp_ins")
+    val dir = Scratch.dir("mp_ins") + "/t"
     VersionedTable.appendWithStats(
       (1 to 50).map(i => (f"$i%06d", s"v$i")).toDF("k", "payload")
         .repartitionByRange(4, col("k")), dir, "k")
@@ -351,7 +346,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("streaming commits are replay-idempotent per (queryId, batchId)") {
-    val dir = tmp("txn")
+    val dir = Scratch.dir("txn") + "/t"
     val b0 = (1 to 10).toDF("n")
     assert(VersionedTable.appendStream(b0, dir, "q1", 0L).contains(1L))
     // crash-before-checkpoint replay: same query, same batch → skipped
@@ -369,7 +364,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum keeps files referenced through STATS manifest entries") {
-    val dir = tmp("vacstats")
+    val dir = Scratch.dir("vacstats") + "/t"
     VersionedTable.appendWithStats((1 to 100).toDF("n")
       .withColumn("k", format_string("%06d", col("n")))
       .repartitionByRange(4, col("k")), dir, "k")
@@ -382,7 +377,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("history reports one row per retained version with its file count") {
-    val dir = tmp("hist")
+    val dir = Scratch.dir("hist") + "/t"
     VersionedTable.append(nums(1, 10), dir)
     VersionedTable.append(nums(11, 20), dir)
     val h = VersionedTable.history(dir)
@@ -393,7 +388,7 @@ class VersionedTableSpec extends SparkSpec {
   // ---- replace commits: optimistic-concurrency conflict detection ----
 
   test("disjoint replaces from the same snapshot both commit, either order") {
-    val dir = tmp("occ_disjoint")
+    val dir = Scratch.dir("occ_disjoint") + "/t"
     VersionedTable.append(nums(1, 10).repartition(2), dir)
     VersionedTable.append(nums(11, 20).repartition(2), dir)
     val (_, all) = VersionedTable.currentSnapshot(dir)
@@ -410,7 +405,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("overlapping replace aborts with CommitConflictException; retry from fresh snapshot lands") {
-    val dir = tmp("occ_conflict")
+    val dir = Scratch.dir("occ_conflict") + "/t"
     VersionedTable.append(nums(1, 20).repartition(2), dir)
     val (_, files) = VersionedTable.currentSnapshot(dir)
     def slice(fs: Seq[String]) = spark.read.parquet(fs.map(p => s"$dir/$p"): _*)
@@ -429,7 +424,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("injected race on the same victim file: exactly one replace wins, the loser conflicts") {
-    val dir = tmp("occ_race")
+    val dir = Scratch.dir("occ_race") + "/t"
     VersionedTable.append(nums(1, 100).repartition(1), dir)
     val (_, files) = VersionedTable.currentSnapshot(dir)
     val victim = Seq(files.head)
