@@ -4,6 +4,7 @@ import graft.operators.Ingest
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.GraftParquet
 
 /** Runnable job driver — the Spark form of the reference CLI
   * (`HadoopKafkaConsumer.java:105-203`: options `-o/-t/-g/-b/-p`,
@@ -25,10 +26,15 @@ import org.apache.spark.sql.functions._
   * dedup by offset, JSON-lines snapshot that replaces the previous one.
   *
   * One pass: the job is a single Spark write that parses each record
-  * once ([[Ingest.parseTagged]]) and reports its counts from that write
-  * ([[Report]]) — there is no trailing `count()`. The snapshot is
-  * published atomically ([[Ingest.writeSnapshotJson]]): a failed run
-  * leaves the previous snapshot in place.
+  * once ([[Ingest.parseTagged]]: the byte-level kernel, with `from_json`
+  * for the records it declines) and reports its counts from that write
+  * ([[Report]]) — there is no trailing `count()`. The kafka-parquet scan
+  * is planned from one footer read on the driver
+  * ([[org.apache.spark.sql.graftinternal.GraftParquet.footerSchema]]),
+  * not by schema inference's own Spark job, so a run starts two Spark
+  * jobs: the write's two adaptive stages. The snapshot is published
+  * atomically ([[Ingest.writeSnapshotJson]]): a failed run leaves the
+  * previous snapshot in place.
   */
 object IngestJob {
 
@@ -71,7 +77,11 @@ object IngestJob {
     */
   def report(spark: SparkSession, a: Args): Report = {
     val raw: DataFrame = a.format match {
-      case "kafka-parquet" => spark.read.parquet(a.input)
+      case "kafka-parquet" =>
+        // the schema inference would give, from one footer read here: no
+        // Spark job just to plan the scan
+        GraftParquet.footerSchema(spark, a.input)
+          .fold(spark.read.parquet(a.input))(spark.read.schema(_).parquet(a.input))
       case "jsonl" =>
         // JSON lines with no envelope: synthesize partition 0, offset =
         // input order is NOT available from a plain file → use a stable

@@ -1,11 +1,13 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
+import graft.functions.FlatJsonParse
 import java.io.IOException
 import java.util.UUID
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.GraftDataset
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Reference-parity ingest pipeline, re-expressed Spark-first.
@@ -21,12 +23,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (`HadoopKafkaConsumer.java:92-101,139-148`).
   *
   * Here that becomes a declarative DataFrame pipeline:
-  * `from_json` once per record (malformed = skip-bad-records, or a
-  * dead-letter slice) → `groupBy(key)` + `max_by(struct(payload),
-  * version)` (one shuffle, partial map-side aggregation — strictly
-  * better than the reference's per-reducer in-heap HashMap which cannot
-  * spill) → `to_json` → a sink that publishes the snapshot through a
-  * temp directory and a rename, so a failed write keeps the old one.
+  * one parse per record — a byte-level kernel, with `from_json` for the
+  * records it declines (malformed = skip-bad-records, or a dead-letter
+  * slice) → `groupBy(key)` + `max_by(struct(payload), version)` (one
+  * shuffle between a partial and a final sort aggregate — unlike the
+  * reference's per-reducer in-heap HashMap, the sort can spill) →
+  * `to_json` → a sink that publishes the snapshot through a temp
+  * directory and a rename, so a failed write keeps the old one.
   *
   * The `events` testdata table is the Kafka-topic analog
   * (`event_id` ↔ offset/version, `user_id` ↔ message id, `props` ↔ JSON
@@ -48,12 +51,19 @@ object Ingest {
     * `df` plus the parsed struct `__j` (the schema's fields, `null` when
     * absent) and [[ParsedOk]]. No row is dropped.
     *
-    * `from_json` is evaluated once per record. It sits inside a
+    * The parse is `coalesce(FlatJsonParse(json), from_json(json))`. The
+    * byte-level kernel ([[graft.functions.FlatJsonParse]]) returns the
+    * struct `from_json` would for the flat records it is sure of, and
+    * null for the rest; `coalesce` evaluates `from_json` only for those
+    * declined records (in the benchmark's log, the malformed 1%). So
+    * `from_json` stays the single definition of the semantics.
+    *
+    * The parse is evaluated once per record. It sits inside a
     * one-element `inline(array(struct(...)))` — a Generate node — which
     * the optimizer cannot push a filter on `__j` through, nor collapse
     * into the projection above it. Without that barrier a filter on the
-    * parsed struct is pushed below the projection with the `from_json`
-    * alias copied into it, and each record is parsed once per reference
+    * parsed struct is pushed below the projection with the parse alias
+    * copied into it, and each record is parsed once per reference
     * (three times in the lenient path). Works on batch and streaming
     * frames.
     */
@@ -61,11 +71,12 @@ object Ingest {
     // from_json in PERMISSIVE mode yields an all-null row (not a null
     // struct) on malformed input, so null-struct checks can't detect it;
     // a corrupt-record sentinel column can.
-    val withCorrupt = StructType(schema.fields :+ StructField("_corrupt", StringType))
-    val j = from_json(col(jsonCol), withCorrupt,
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
+    val exact = from_json(col(jsonCol), FlatJsonParse.withCorrupt(schema),
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> FlatJsonParse.Corrupt))
+    val fast = GraftDataset.column(FlatJsonParse(GraftDataset.expr(col(jsonCol)), schema))
+    val j = coalesce(fast, exact)
     df.select(df.columns.toIndexedSeq.map(col) :+ inline(array(struct(j.as("__j")))): _*)
-      .withColumn(ParsedOk, col("__j").isNotNull && col("__j._corrupt").isNull)
+      .withColumn(ParsedOk, col("__j").isNotNull && col(s"__j.${FlatJsonParse.Corrupt}").isNull)
   }
 
   /** Lenient fixed-schema JSON parse: malformed rows dropped (reference
@@ -110,7 +121,7 @@ object Ingest {
     * (`MyKafkaMessage.java:9-12` lenient Gson + the consumer's
     * keep-if-parsed loop); a production feed needs the drop COUNTED and
     * the payloads QUARANTINED for replay after the producer bug is fixed.
-    * Map-only: the same one-`from_json` [[parseTagged]] step, no shuffle —
+    * Map-only: the same one-parse [[parseTagged]] step, no shuffle —
     * route the 'corrupt' slice to a quarantine sink and the 'ok' slice
     * onward.
     */
@@ -128,11 +139,13 @@ object Ingest {
     * can tie; the reference's Kafka offset is unique per partition so it
     * never ties there, `HadoopKafkaConsumer.java:69-78`).
     *
-    * Single hash-aggregate: one shuffle on `keys`, map-side partial
-    * `max_by` combine. At 100 TB this is the minimal-movement plan — no
-    * window sort, no secondary shuffle; skewed keys are handled by the
-    * partial aggregation (hot key reduces to one row per map task before
-    * the exchange).
+    * One shuffle on `keys`, with a map-side partial `max_by` combine:
+    * the plan is `SortAggregate` → `Exchange` → `Sort` → `SortAggregate`.
+    * `max_by`'s buffer holds a struct, which is not fixed-width, so Spark
+    * cannot use a hash aggregate here; each side sorts its rows by key
+    * instead. There is no window and no second shuffle, and skewed keys
+    * are handled by the partial aggregation (a hot key reduces to one
+    * row per map task before the exchange).
     */
   def latestWins(df: DataFrame, keys: Seq[String], version: Seq[String]): DataFrame = {
     val payload = df.columns.filterNot(keys.contains)
@@ -144,7 +157,7 @@ object Ingest {
   /** Latest-wins with KAFKA TOMBSTONE semantics: a record whose
     * `payloadCol` is NULL deletes its key — the upsert-stream contract
     * of a compacted Kafka topic (null value ⇒ tombstone). Same single
-    * hash-aggregate as [[latestWins]]; the tombstone check is one
+    * aggregate as [[latestWins]]; the tombstone check is one
     * filter on the winning row AFTER the aggregate, so deletes cost no
     * extra shuffle and a delete→re-insert sequence resolves by version
     * order like any other pair of records. (Kafka's cleaner keeps

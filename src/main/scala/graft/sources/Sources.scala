@@ -51,7 +51,9 @@ object Sources {
     * reference's per-partition dedup (`KafkaContext.java:103`);
     * `false` is the principled global dedup.
     *
-    * One `from_json` per record ([[Ingest.parseTagged]]). `observeTagged`
+    * One parse per record ([[Ingest.parseTagged]]: the byte-level
+    * kernel, and `from_json` only for the records it declines).
+    * `observeTagged`
     * sees every tagged record — `partition`, `offset`, `value`,
     * [[Ingest.ParsedOk]] — before malformed ones are dropped; `IngestJob`
     * hangs its `Dataset.observe` counters there.

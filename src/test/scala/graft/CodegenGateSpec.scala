@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -36,6 +36,8 @@ class CodegenGateSpec extends AnyFunSuite {
     case (s: UTF8String, _)             => s.toString
     case (a: ArrayData, ArrayType(et, _)) =>
       a.toObjectArray(et).map(norm(_, et)).toSeq
+    case (r: InternalRow, st: StructType) =>
+      st.fields.toSeq.zipWithIndex.map { case (f, i) => norm(r.get(i, f.dataType), f.dataType) }
     case (x, _)                         => x
   }
 
@@ -183,4 +185,31 @@ class CodegenGateSpec extends AnyFunSuite {
     InternalRow(3, 5),
     InternalRow(0, 65535),
     InternalRow(null, 1)))
+
+  // taken records give a struct (fields + null _corrupt), declined ones
+  // and null input give null
+  private val jsonRows = Seq(
+    InternalRow(utf8("""{"id":7,"msg":"a","extra":[1,{"x":null}]}""")),
+    InternalRow(utf8("""{"msg":"only"}""")),
+    InternalRow(utf8("""{"id":7,"id":8}""")),
+    InternalRow(utf8("not json")),
+    InternalRow(null))
+  gate("FlatJsonParse msgSchema", FlatJsonParse(ref(0, StringType), graft.operators.Ingest.msgSchema), jsonRows)
+  gate("FlatJsonParse binary input cast",
+    FlatJsonParse(Cast(ref(0, BinaryType), StringType), graft.operators.Ingest.msgSchema),
+    Seq(InternalRow("""{"id":1,"msg":"b"}""".getBytes("UTF-8")), InternalRow(null)))
+
+  test("FlatJsonParse: compiled rows carry the fields, a null _corrupt, and null where declined") {
+    val proj = GenerateUnsafeProjection.generate(
+      Seq(FlatJsonParse(ref(0, StringType), graft.operators.Ingest.msgSchema)))
+    def out(row: InternalRow) = {
+      val r = proj(row)
+      if (r.isNullAt(0)) null else norm(r.getStruct(0, 3), FlatJsonParse.withCorrupt(graft.operators.Ingest.msgSchema))
+    }
+    assert(out(jsonRows(0)) === Seq(7L, "a", null))
+    assert(out(jsonRows(1)) === Seq(null, "only", null))
+    assert(out(jsonRows(2)) === null)
+    assert(out(jsonRows(3)) === null)
+    assert(out(jsonRows(4)) === null)
+  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end job driver: CLI parse + full pipeline to a snapshot dir. */
 class IngestJobSpec extends SparkSpec {
@@ -99,36 +100,87 @@ class IngestJobSpec extends SparkSpec {
     assert(spark.read.text(out).count() == 0)
   }
 
-  test("single pass: one run reads each input record exactly once") {
-    val n = 2000
-    val in = kafkaParquet(
-      (0 until n).map(i => (i % 4, i.toLong, s"""{"id":${i % 50},"msg":"m$i"}""")), files = 4)
-    val out = Scratch.dir("job_pass")
-    val marker = "ingest-job-spec-marker"
-    val read = new AtomicLong()
+  /** Runs `body` with `listener` attached and returns once the listener
+    * has seen every event of it: a marker job is run after `body`, and
+    * events reach a listener in order, so once the marker job's end is
+    * seen every earlier job and task has been counted. The marker job's
+    * events reach `listener` too; [[isMarker]] tells its start apart.
+    */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
     @volatile var markerJob = -1
     @volatile var markerDone = false
-    val listener = new SparkListener {
+    val watch = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerJob = e.jobId
+        if (isMarker(e)) markerJob = e.jobId
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob) markerDone = true
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
+    sc.addSparkListener(watch)
     try {
-      IngestJob.run(spark, IngestJob.Args(input = in, output = out))
-      // events reach a listener in order: once the marker job's end is
-      // seen, every task of the run has been counted
+      body
       sc.setJobGroup(marker, marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 60.seconds.toNanos
       while (!markerDone && System.nanoTime() < deadline) Thread.sleep(20)
       assert(markerDone, "listener never saw the marker job")
-    } finally sc.removeSparkListener(listener)
+    } finally {
+      sc.removeSparkListener(watch)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val marker = "ingest-job-spec-marker"
+
+  private def isMarker(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)
+
+  test("single pass: one run reads each input record exactly once") {
+    val n = 2000
+    val in = kafkaParquet(
+      (0 until n).map(i => (i % 4, i.toLong, s"""{"id":${i % 50},"msg":"m$i"}""")), files = 4)
+    val out = Scratch.dir("job_pass")
+    val read = new AtomicLong()
+    listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    })(IngestJob.run(spark, IngestJob.Args(input = in, output = out)))
     assert(read.get == n, s"records read over one run: ${read.get}, input: $n")
+  }
+
+  test("a kafka-parquet run starts 2 Spark jobs: the write's two stages, no schema-inference job") {
+    val in = kafkaParquet(
+      (0 until 400).map(i => (i % 4, i.toLong, s"""{"id":${i % 30},"msg":"m$i"}""")), files = 4)
+    val out = Scratch.dir("job_jobs")
+    val jobs = new AtomicLong()
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!isMarker(e)) jobs.incrementAndGet()
+    })(IngestJob.run(spark, IngestJob.Args(input = in, output = out)))
+    assert(jobs.get == 2, s"Spark jobs started by one run: ${jobs.get}")
+  }
+
+  test("a kafka-parquet input without `value` fails before publishing; the previous snapshot stays") {
+    val out = java.nio.file.Paths.get(Scratch.dir("job_novalue")).resolve("snapshot")
+    IngestJob.run(spark, IngestJob.Args(
+      input = kafkaParquet(Seq((0, 1L, """{"id":1,"msg":"kept"}"""))), output = out.toString))
+    def contents(): Map[String, Seq[Byte]] = {
+      val files = java.nio.file.Files.list(out)
+      try files.iterator().asScala.map(f =>
+        f.getFileName.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally files.close()
+    }
+    val before = contents()
+    val in = Scratch.dir("job_novalue_in")
+    Seq((0, 1L), (0, 2L)).toDF("partition", "offset").write.mode("overwrite").parquet(in)
+    intercept[org.apache.spark.sql.AnalysisException](
+      IngestJob.run(spark, IngestJob.Args(input = in, output = out.toString)))
+    assert(contents() == before, "the previous snapshot must survive an input without `value`")
+    val siblings = {
+      val l = java.nio.file.Files.list(out.getParent)
+      try l.iterator().asScala.map(_.getFileName.toString).toList finally l.close()
+    }
+    assert(siblings == List("snapshot"), s"no temp or old directory may be left: $siblings")
   }
 }

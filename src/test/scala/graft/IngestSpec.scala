@@ -3,7 +3,11 @@ package graft
 import graft.operators.Ingest
 import graft.sources.Sources
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import graft.functions.FlatJsonParse
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import scala.jdk.CollectionConverters._
@@ -12,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * (SURVEY.md §5.3, seeded-random inputs) for the lenient parse and
   * latest-wins dedup.
   */
-class IngestSpec extends SparkSpec {
+class IngestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def src(rows: (Int, Long, String)*) =
@@ -106,10 +110,12 @@ class IngestSpec extends SparkSpec {
   }
 
   test("plan shape: every lenient and DLQ parse path evaluates from_json once per record") {
-    def jsonParses(df: org.apache.spark.sql.DataFrame): Int =
+    def nodes(df: org.apache.spark.sql.DataFrame)(pick: PartialFunction[Expression, Expression]): Int =
       df.queryExecution.optimizedPlan.collect { case p =>
-        p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+        p.expressions.map(_.collect(pick).size).sum
       }.sum
+    def jsonParses(df: org.apache.spark.sql.DataFrame): Int = nodes(df) { case j: JsonToStructs => j }
+    def kernels(df: org.apache.spark.sql.DataFrame): Int = nodes(df) { case k: FlatJsonParse => k }
     // a computed frame, not a local Seq: the optimizer would evaluate a
     // projection over local rows at plan time and leave no parse to count
     val id = col("id")
@@ -123,9 +129,24 @@ class IngestSpec extends SparkSpec {
       "parseLenient" -> Ingest.parseLenient(frame, "value", Ingest.msgSchema,
         Map("id" -> lit(0L), "msg" -> lit(""))),
       "parseWithDlq" -> Ingest.parseWithDlq(frame, "value", Ingest.msgSchema))
-    for ((name, df) <- paths) assert(jsonParses(df) == 1, name)
+    for ((name, df) <- paths) {
+      assert(jsonParses(df) == 1, name)
+      assert(kernels(df) == 1, name)
+    }
     // and the shared step still computes what the lenient path keeps
     assert(StreamingIngest.parseKafkaShaped(frame).collect().toSeq == Seq(Row(7L, "a", 1L)))
+  }
+
+  test("plan shape: latestWins plans one exchange and no window") {
+    // max_by's struct buffer is not fixed-width, so this is a
+    // SortAggregate pair around the exchange, not a hash aggregate
+    val id = col("id")
+    val df = Ingest.latestWins(
+      spark.range(0, 100).select((id % 7).as("k"), id.as("v"), id.cast("string").as("p")),
+      keys = Seq("k"), version = Seq("v"))
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, plan)
   }
 
   test("DLQ split: conserves every row, quarantines raw payloads, agrees with the lenient drop") {
