@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * single-column sort only prunes its own column).
   *
   * Inputs are int ranks already scaled to [0, 65535] by the caller
-  * (`Layout.writeZOrdered` does the min/max scaling); values are masked
-  * to 16 bits here so out-of-range inputs cannot corrupt the key.
+  * (`VersionedTable.optimizeZorder` does the min/max scaling); values
+  * are masked to 16 bits here so out-of-range inputs cannot corrupt the
+  * key.
   * Codegen'd (static call); null if either side is null.
   */
 case class InterleaveBits(left: Expression, right: Expression)

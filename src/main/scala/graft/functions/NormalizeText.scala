@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,8 +68,4 @@ object NormalizeText {
       }
     UTF8String.fromString(out)
   }
-
-  /** Column API by SQL expression text. */
-  def normalize_text(textCol: String, fold: Boolean): Column =
-    expr(s"normalize_text($textCol, $fold)")
 }

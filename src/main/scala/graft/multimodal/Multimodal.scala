@@ -24,16 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical media-table schema. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("bytes", BinaryType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("n_frames", IntegerType)))
-
   /** Deterministic fake media derived from any string column — gives
     * tests a binary payload without bundling fixtures. (Not a stub of
     * anything: test scaffolding.)

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale stances:
   *  - the diff is ONE full-outer join co-partitioned on the key — both
-  *    sides shuffle once; on bucketed layouts (`sources/Layout`
-  *    `writeBucketed`) the exchange disappears entirely. Rows compare
+  *    sides shuffle once; on tables bucketed by the key (`bucketBy`)
+  *    the exchange disappears entirely. Rows compare
   *    by a single row-hash expression, not column-by-column, so the
   *    compare cost is one md5 per row regardless of width, and the
   *    output is the per-class summary (a |classes|-row frame), never a

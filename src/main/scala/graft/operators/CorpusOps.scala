@@ -24,25 +24,6 @@ object CorpusOps {
 
   private val stopList = TextOps.stopwords.map("'" + _ + "'").mkString(",")
 
-  /** Mergeable quantile sketch (Greenwald-Khanna via percentile_approx)
-    * over per-doc token counts — with HLL (agg_approx_distinct) and CMS
-    * (terms_cms_topk) this completes the sketch family: each executor
-    * summarizes its split in O(accuracy) space and partials merge
-    * associatively, so the exchange is constant-size at any corpus
-    * scale. This is the 100 TB form of docs_token_quantiles (whose
-    * registered exact path pays a global sort); cut points are engine-
-    * specific, so it is quality-gated against exact percentiles in
-    * CorpusOpsSpec rather than oracle-hashed.
-    */
-  def tokenQuantileSketch(d: DataFrame, ps: Seq[Double]): DataFrame =
-    d.select(size(TextOps.tokens(col("text"))).as("n_tokens"))
-      .agg(percentile_approx(col("n_tokens"),
-        array(ps.map(lit): _*), lit(10000)).as("qs"))
-      .select(posexplode(col("qs")).as(Seq("i", "n_tokens_q")))
-      .select(element_at(array(ps.map(lit): _*), col("i") + 1).as("p"),
-        col("n_tokens_q").cast("long").as("n_tokens_q"))
-      .orderBy("p")
-
   /** Count-Min-Sketch bigram frequency estimates (term, est_cnt): the
     * sketch IS a DataFrame — d×w counter cells built by one hash
     * aggregate over (row, bucket) keys, probed by min-over-rows. The
@@ -929,10 +910,9 @@ object CorpusOps {
         // EXACT type-1 (discrete) percentiles of per-doc token counts:
         // global sort + row_number, pick rank ceil(p·n) — identical
         // integer rank math in both engines, so the result is oracle-
-        // hashable (percentile_approx cut points are engine-specific;
-        // that mergeable-sketch form stays as tokenQuantileSketch below,
-        // quality-gated in CorpusOpsSpec, and is the preferred form at
-        // 100 TB where the exact path's global sort is the bottleneck).
+        // hashable (percentile_approx cut points are engine-specific,
+        // though its mergeable sketch is the preferred form at 100 TB,
+        // where the exact path's global sort is the bottleneck).
         val ps = Seq(0.25, 0.5, 0.75, 0.95)
         val tok = docs(s, dir)
           .select(size(TextOps.tokens(col("text"))).as("n_tokens"))

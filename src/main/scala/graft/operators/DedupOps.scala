@@ -33,14 +33,6 @@ object DedupOps {
   def portableHash(s: Column, seed: Int): Column =
     conv(substring(md5(concat(lit(s"$seed:"), s).cast("binary")), 1, 8), 16, 10).cast("long")
 
-  /** MinHash signature: array of `k` min-hashes over the shingle set.
-    * HOF form (one md5 PER SEED per gram) — superseded in the
-    * registered pipeline by [[minhashSigs]], the one-md5 + affine-
-    * rehash construction; kept as the direct-definition reference.
-    */
-  def minhashSignature(sh: Column, k: Int): Column =
-    array((0 until k).map(i => array_min(transform(sh, x => portableHash(x, i)))): _*)
-
   /** Modulus of the universal-hash family: the smallest prime > 2^32. */
   val MinhashP = 4294967311L
 

@@ -5,15 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Layout maintenance AS VERSIONED COMMITS — the operational layer on
-  * top of [[graft.sources.VersionedTable]]'s commit core. Where
-  * [[graft.sources.Layout]] maintains raw parquet directories with
-  * rename swaps (a reader racing the swap has a visibility window),
-  * these run the same jobs as atomic table versions: OPTIMIZE
+  * top of [[graft.sources.VersionedTable]]'s commit core: OPTIMIZE
   * (bin-pack), OPTIMIZE ZORDER (multi-dimensional clustering with
   * per-file stats recorded in the manifest), bloom-filter point-lookup
-  * skipping, and append-only incremental reads. Readers keep snapshot
-  * isolation throughout, and every maintenance step stays
-  * time-travelable.
+  * skipping, and append-only incremental reads. Each rewrite lands as
+  * one atomic table version, never as a rename swap of a raw parquet
+  * directory that a concurrent reader could see half done. Readers
+  * keep snapshot isolation throughout, and every maintenance step
+  * stays time-travelable.
   *
   * Scale stances:
   *  - bin-pack is a coalesce (no shuffle) sized from actual on-disk

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew tooling for 100 TB keys that don't distribute (SURVEY.md §7 /
@@ -42,27 +42,5 @@ object Skew {
       .groupBy(keys.map(col): _*)
       .agg(max_by(struct(payload.toIndexedSeq.map(col): _*), struct(version.map(col): _*)).as("__latest"))
     stage2.select(keys.map(col) ++ payload.map(c => col(s"__latest.`$c`").as(c)): _*)
-  }
-
-  /** Statically salted equi-join for a hot-keyed BIG side against a
-    * small-but-not-broadcastable dimension: the big side salts each row
-    * deterministically (hash of `saltFrom` columns — no RNG, replayable),
-    * the small side replicates `saltBuckets`× via explode, and the join
-    * keys on (key, salt) so one hot key spreads over `saltBuckets`
-    * tasks. AQE's runtime skew split covers sort-merge joins
-    * after-the-fact; the static form is for when the skew is KNOWN and
-    * the planner must never see a single monster partition (e.g. a
-    * null-heavy or celebrity key in a recurring pipeline). Inner-join
-    * semantics; row multiplicity preserved exactly (each big row meets
-    * each matching small row exactly once — in exactly one bucket).
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltBuckets: Int, saltFrom: Seq[String]): DataFrame = {
-    require(saltBuckets > 1)
-    val salted = big.withColumn("__salt",
-      pmod(xxhash64(saltFrom.map(col): _*), lit(saltBuckets)))
-    val replicated = small.withColumn("__salt",
-      explode(array((0 until saltBuckets).map(i => lit(i.toLong)): _*)))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 }

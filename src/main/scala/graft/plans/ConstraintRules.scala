@@ -67,9 +67,6 @@ object ConstraintRules extends Rule[LogicalPlan]
 
   def clear(): Unit = { keys.clear(); fks.clear() }
 
-  def declared: Seq[String] =
-    (keys.asScala.map(_.name) ++ fks.asScala.map(_.name)).toSeq
-
   /** Look through pruning Projects AND the `isnotnull(key)` filters
     * InferFiltersFromConstraints derives from the join condition.
     * MATCHING-ONLY: the surviving side is kept verbatim (its isnotnull

@@ -100,9 +100,6 @@ object SummaryRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
 
   def clear(): Unit = mvs.clear()
 
-  /** Names of currently registered views (diagnostics). */
-  def registered: Seq[String] = mvs.asScala.map(_.name).toSeq
-
   /** Does any leaf of `plan` scan the directory `dir` itself? Both
     * sides are qualified the same way and compared whole, so a view at
     * `.../monthly_orders_f` never counts as `.../monthly_orders`. The

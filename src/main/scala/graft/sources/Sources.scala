@@ -3,10 +3,10 @@ package graft.sources
 import graft.operators.Ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Source surface (SURVEY.md §2A #1-5): Kafka wiring + file sources with
-  * the reference's lenient-JSON semantics.
+/** Source surface (SURVEY.md §2A #1-5): Kafka wiring, the kafka-shaped
+  * snapshot pipeline with the reference's lenient-JSON semantics, and
+  * the parquet-backed streaming sources.
   */
 object Sources {
 
@@ -114,34 +114,4 @@ object Sources {
     val raw = spark.read.parquet(s"$dir/documents.parquet").schema
     spark.readStream.schema(raw).parquet(s"$dir/documents*.parquet")
   }
-
-  /** JSON-lines file source with the reference's lenient parse: explicit
-    * schema (never inferred — fixed compile-time schema parity,
-    * `MyKafkaMessage.java:6-7`), malformed lines dropped, missing fields
-    * defaulted. Reads the format [[Ingest.writeSnapshotJson]] writes.
-    */
-  def readJsonLines(spark: SparkSession, path: String, schema: StructType,
-      defaults: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame =
-    Ingest.parseLenient(
-      spark.read.text(path).withColumnRenamed("value", "__line"),
-      jsonCol = "__line", schema = schema, defaults = defaults)
-
-  /** CSV with explicit schema, header, and DROPMALFORMED — same
-    * skip-bad-records stance as the JSON path.
-    */
-  def readCsvStrict(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema)
-      .option("header", "true")
-      .option("mode", "DROPMALFORMED")
-      .csv(path)
-
-  /** ORC read with explicit schema — the other columnar format of the
-    * reference's HDFS ecosystem; predicate pushdown and column pruning
-    * work the same as parquet (SourcesSpec asserts the round trip).
-    */
-  def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
 }

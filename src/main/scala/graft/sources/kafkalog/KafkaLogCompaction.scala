@@ -296,43 +296,3 @@ object KafkaLogCompaction {
     } catch { case _: Exception => None }
   }
 }
-
-/** RETENTION for the `kafkalog` format — Kafka's `delete` cleanup policy:
-  * drop whole segments once every record in them falls below a cutoff
-  * offset. Segment-granular like the broker's retention (a segment is
-  * deleted or kept in full, never split), and the ACTIVE (last) segment
-  * of a partition is never deleted, so the partition's end offset — the
-  * producer's next-offset source — always remains readable.
-  *
-  * Retention and compaction compose exactly as Kafka's two cleanup
-  * policies do: compaction bounds the log by |keys|, retention bounds it
-  * by history depth. Both leave offset GAPS, which the read path
-  * documents as legal; a checkpointed consumer whose stored offset falls
-  * below the new head simply reads nothing for the missing span —
-  * admission arithmetic is in offset units, so progress is unaffected.
-  *
-  * Cost: one tail-read per segment (endOffset) + the deletes — no data
-  * is scanned or rewritten, which is why retention is the FIRST lever
-  * at 100 TB (compaction rewrites survivors; retention only unlinks).
-  * Deletes are independent per segment, so a crash mid-retention just
-  * leaves more history than asked — re-run to finish; no recovery
-  * protocol is needed.
-  */
-object KafkaLogRetention {
-
-  /** Delete every non-active segment whose records ALL lie below
-    * `cutoff` (exclusive — a segment survives if any record's offset is
-    * >= cutoff). Returns segments deleted per partition.
-    */
-  def truncateBefore(dir: String, cutoff: Long): Map[Int, Int] = {
-    val f = KafkaLog.fs(dir)
-    KafkaLog.listPartitions(dir).map { case (p, segs) =>
-      // endOffset(seg) is one past the segment's last offset, so the
-      // whole segment is below the cutoff iff endOffset <= cutoff
-      val deletable = segs.dropRight(1)
-        .filter(s => KafkaLog.endOffset(Seq(s)) <= cutoff)
-      deletable.foreach(s => f.delete(new Path(s), false))
-      p -> deletable.size
-    }.toMap
-  }
-}

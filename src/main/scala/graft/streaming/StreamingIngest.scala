@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming form of the reference job (SURVEY.md §7 step 3,
   * BASELINE.json north star: "Structured Streaming Kafka source + HDFS
@@ -19,9 +19,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   *  2. `latestWinsUpdates` — true latest-wins upsert via
   *     `flatMapGroupsWithState`: emits a key only when a strictly newer
   *     version arrives (exact reference semantics, made incremental).
-  *     Every latest-wins state machine here — both state APIs, the
-  *     bootstrapped and the tombstone forms — applies one rule,
-  *     [[newerThan]];
+  *     Every latest-wins state machine here — on either state API, with
+  *     or without tombstones — applies one rule, [[newerThan]];
   *  3. the snapshot — `KafkaLogOps.foldSnapshot` on
   *     [[graft.streaming.GenFold]]: each micro-batch merges its delta
   *     into the previous committed generation and publishes a new one
@@ -226,78 +225,6 @@ object StreamingIngest {
       }
   }
 
-  /** One stored member of a near-dup band bucket (flat encoder — the
-    * element type of the TTL-able ListState below).
-    */
-  case class BucketMember(doc_id: Long, mh: Seq[Long])
-
-  /** [[nearDupHits]] as a Spark 4 [[StatefulProcessor]] with per-member
-    * state TTL — the bounded-retention form SCALE.md promises for
-    * 100 TB: each bucket member ages out `ttl` after it was written, so
-    * an idle bucket's state drains to zero instead of growing with
-    * corpus lifetime. Matching semantics are IDENTICAL to the fMGWS
-    * form (same sorted scan, same smallest-qualifying-id flag) when no
-    * member has expired; with a TTL, a doc whose only near-partner
-    * aged out is NOT flagged — that is the dedup-horizon contract
-    * (`NearDupTtlSpec` proves both properties).
-    */
-  class NearDupProcessor(minAgree: Double, ttl: TTLConfig)
-      extends StatefulProcessor[String, BandedDoc, DupHit] {
-    @transient private var members: ListState[BucketMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[BucketMember](
-        "members", org.apache.spark.sql.Encoders.product[BucketMember], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[BandedDoc],
-        tv: TimerValues): Iterator[DupHit] = {
-      var ids = Vector.empty[Long]
-      var sigs = Vector.empty[Seq[Long]]
-      members.get().foreach { m => ids = ids :+ m.doc_id; sigs = sigs :+ m.mh }
-      val out = Vector.newBuilder[DupHit]
-      val fresh = Vector.newBuilder[BucketMember]
-      for (e <- rows.toSeq.sortBy(_.doc_id)) {
-        var bestId = -1L
-        var bestAgree = 0.0
-        var i = 0
-        while (i < ids.length) {
-          if (ids(i) < e.doc_id && (bestId < 0 || ids(i) < bestId)) {
-            val s = sigs(i)
-            var k = 0
-            var eq = 0
-            while (k < 32) { if (s(k) == e.mh(k)) eq += 1; k += 1 }
-            val a = eq / 32.0
-            if (a >= minAgree) { bestId = ids(i); bestAgree = a }
-          }
-          i += 1
-        }
-        if (bestId >= 0) out += DupHit(e.doc_id, bestId, bestAgree)
-        ids = ids :+ e.doc_id
-        sigs = sigs :+ e.mh
-        fresh += BucketMember(e.doc_id, e.mh)
-      }
-      // append-only state write: existing members keep their original
-      // TTL clock (a put() would refresh every member's expiry on each
-      // touched batch, silently unbounding the horizon for hot buckets)
-      members.appendList(fresh.result().toArray)
-      out.result().iterator
-    }
-  }
-
-  /** [[nearDupHits]] through `transformWithState`. `ttl = TTLConfig.NONE`
-    * reproduces the fMGWS form exactly; a finite TTL bounds state to the
-    * dedup horizon (members written more than `ttl` ago stop matching).
-    * TTL requires processing-time mode; without one the processor runs
-    * in TimeMode.None.
-    */
-  def nearDupHitsTws(ds: Dataset[BandedDoc], minAgree: Double,
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[DupHit] = {
-    import ds.sparkSession.implicits._
-    val mode = if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    ds.groupByKey(_.bk)
-      .transformWithState(new NearDupProcessor(minAgree, ttl), mode, OutputMode.Append)
-  }
-
   /** Latest-wins as a Spark 4 [[StatefulProcessor]] — the
     * `transformWithState` successor API to flatMapGroupsWithState:
     * explicit named state variables (typed ValueState here; List/Map
@@ -305,24 +232,13 @@ object StreamingIngest {
     * and a RocksDB-backed store. Semantics are IDENTICAL to
     * [[latestWinsUpdates]] — `Round4dStreamSpec` differentially replays
     * the same corpus through both and asserts equal update logs.
-    *
-    * It also serves the BOOTSTRAPPED form ([[latestWinsResumed]]): when
-    * the query carries an initial state, `handleInitialState` seeds each
-    * key's ValueState from the snapshot row before the first batch, and
-    * the same rule then suppresses any delta record not newer than it.
-    * Without an initial state Spark never calls that hook.
     */
-  class LatestWinsProcessor
-      extends StatefulProcessorWithInitialState[Long, KeyedRecord, KeyedRecord, KeyedRecord] {
+  class LatestWinsProcessor extends StatefulProcessor[Long, KeyedRecord, KeyedRecord] {
     @transient private var latest: ValueState[KeyedRecord] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       latest = getHandle.getValueState[KeyedRecord](
         "latest", org.apache.spark.sql.Encoders.product[KeyedRecord], TTLConfig.NONE)
-
-    override def handleInitialState(key: Long, snap: KeyedRecord,
-        tv: TimerValues): Unit =
-      latest.update(snap)
 
     override def handleInputRows(key: Long, rows: Iterator[KeyedRecord],
         tv: TimerValues): Iterator[KeyedRecord] = {
@@ -333,8 +249,7 @@ object StreamingIngest {
 
   /** Tier 2, modern form: [[latestWinsUpdates]] via `transformWithState`.
     * Requires the RocksDB state store provider (start the query inside
-    * [[withRocksDbState]]); state remains O(live keys), now with
-    * optional TTL aging for bounded-retention snapshots.
+    * [[withRocksDbState]]); state remains O(live keys).
     */
   def latestWinsUpdatesTws(ds: Dataset[KeyedRecord]): Dataset[KeyedRecord] = {
     import ds.sparkSession.implicits._
@@ -394,22 +309,6 @@ object StreamingIngest {
         OutputMode.Update)
   }
 
-  /** [[latestWinsUpdatesTws]] resuming FROM a batch snapshot — the
-    * pipeline-migration form: a new streaming job takes over from an
-    * existing batch snapshot without replaying history. Only the delta
-    * streams; keys the delta never touches stay at their snapshot value
-    * in the store. `InitStateSpec` proves snapshot + delta ≡
-    * full-history replay.
-    */
-  def latestWinsResumed(delta: Dataset[KeyedRecord],
-      snapshot: Dataset[KeyedRecord]): Dataset[KeyedRecord] = {
-    import delta.sparkSession.implicits._
-    delta.groupByKey(_.id)
-      .transformWithState(new LatestWinsProcessor,
-        TimeMode.None(), OutputMode.Update,
-        snapshot.groupByKey(_.id))
-  }
-
   /** One event keyed to a (user, time-bucket) rate-limit cell. */
   case class BucketEvent(user_id: Long, bucket: Long, ts_us: Long, event_id: Long)
 
@@ -443,143 +342,8 @@ object StreamingIngest {
       }
   }
 
-  /** Sessionization as a Spark 4 [[StatefulProcessor]] with EVENT-TIME
-    * TIMERS — the transformWithState twin of [[sessionize]]: sessions
-    * close either when a same-user event arrives past the gap (emitted
-    * from handleInputRows) or when the watermark passes last + gap (the
-    * registered timer fires into handleExpiredTimer). Timer bookkeeping
-    * is explicit — each batch moves the per-key close timer to the new
-    * session end — where fMGWS hid it in setTimeoutTimestamp. State is
-    * one SessState per live session; `StreamingSpec` differentially
-    * replays the same corpus through both forms.
-    */
-  class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, SessEvent, SessOut] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[SessState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessState](
-        "sess", org.apache.spark.sql.Encoders.product[SessState], TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[SessEvent],
-        tv: TimerValues): Iterator[SessOut] = {
-      val evs = rows.toArray.sortBy(_.ts.getTime)
-      var closed = List.empty[SessOut]
-      var cur = if (st.exists()) Some(st.get()) else None
-      evs.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s0) if t - s0.last <= gapMs =>
-            cur = Some(SessState(s0.start, math.max(s0.last, t), s0.n + 1, s0.sv + e.value))
-          case Some(s0) =>
-            closed ::= SessOut(uid, new java.sql.Timestamp(s0.start), s0.n, s0.sv)
-            cur = Some(SessState(t, t, 1L, e.value))
-          case None =>
-            cur = Some(SessState(t, t, 1L, e.value))
-        }
-      }
-      cur.foreach { s0 =>
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        st.update(s0)
-        getHandle.registerTimer(s0.last + gapMs)
-      }
-      closed.reverseIterator
-    }
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessOut] = {
-      if (st.exists()) {
-        val s0 = st.get()
-        if (info.getExpiryTimeInMs() >= s0.last + gapMs) {
-          st.clear()
-          Iterator.single(SessOut(uid, new java.sql.Timestamp(s0.start), s0.n, s0.sv))
-        } else Iterator.empty
-      } else Iterator.empty
-    }
-  }
-
-  /** [[sessionize]] on the transformWithState API (RocksDB store,
-    * event-time timers).
-    */
-  def sessionizeTws(ds: Dataset[SessEvent], gapMs: Long): Dataset[SessOut] = {
-    import ds.sparkSession.implicits._
-    ds.withWatermark("ts", "0 seconds")
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append)
-  }
-
-  /** One event entering the streaming funnel. */
+  /** One user event: a view, click or purchase at `ts`. */
   case class FunnelEvent(user_id: Long, ts: java.sql.Timestamp, event_type: String)
-
-  /** One completed funnel conversion. */
-  case class FunnelHit(user_id: Long, t_first: java.sql.Timestamp,
-      t_convert: java.sql.Timestamp)
-
-  /** Streaming FUNNEL state machine on [[StatefulProcessor]] MapState —
-    * the incremental twin of the batch windowed funnel: per user, the
-    * map holds the earliest qualifying timestamp per stage; an event
-    * advances stage i only if it lands within `stepMs` of stage i−1's
-    * time, and completing the final stage emits exactly one conversion.
-    * State is |stages| longs per live user (bounded, TTL-able), not an
-    * event buffer. Equals the batch conditional-min chain whenever each
-    * user's events arrive in event-time order (the replay the test
-    * drives); a production flow adds a lateness buffer in front.
-    */
-  class FunnelProcessor(stages: Seq[String], stepMs: Long)
-      extends StatefulProcessor[Long, FunnelEvent, FunnelHit] {
-    @transient private var st: org.apache.spark.sql.streaming.MapState[String, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getMapState[String, Long]("stages",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-
-    // state carries epoch-MICROS: Timestamp.getTime is millis and would
-    // silently truncate the micro-precision event times (caught by the
-    // batch differential)
-    private def micros(t: java.sql.Timestamp): Long =
-      t.getTime / 1000 * 1000000L + t.getNanos / 1000
-    private def fromMicros(us: Long): java.sql.Timestamp = {
-      val t = new java.sql.Timestamp(us / 1000)
-      t.setNanos((us % 1000000L).toInt * 1000)
-      t
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[FunnelEvent],
-        tv: TimerValues): Iterator[FunnelHit] = {
-      val evs = rows.toArray.sortBy(e => micros(e.ts))
-      var hits = List.empty[FunnelHit]
-      evs.foreach { e =>
-        val i = stages.indexOf(e.event_type)
-        if (i >= 0 && !st.containsKey(stages(i))) {
-          val t = micros(e.ts)
-          val ok =
-            if (i == 0) true
-            else st.containsKey(stages(i - 1)) && {
-              val p = st.getValue(stages(i - 1))
-              t > p && t <= p + stepMs * 1000L
-            }
-          if (ok) {
-            st.updateValue(stages(i), t)
-            if (i == stages.length - 1)
-              hits ::= FunnelHit(uid,
-                fromMicros(st.getValue(stages.head)), fromMicros(t))
-          }
-        }
-      }
-      hits.reverseIterator
-    }
-  }
-
-  /** Streaming funnel over the standard view→click→purchase stages. */
-  def funnelUpdates(ds: Dataset[FunnelEvent], stages: Seq[String],
-      stepMs: Long): Dataset[FunnelHit] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(stages, stepMs),
-        TimeMode.None(), OutputMode.Append)
-  }
 
   /** One unconverted view: the CEP-negation alert. */
   case class AbsAlert(user_id: Long, view_us: Long)
@@ -656,63 +420,6 @@ object StreamingIngest {
       .groupByKey(_.user_id)
       .transformWithState(new AbsenceProcessor(horizonUs),
         TimeMode.EventTime(), OutputMode.Append)
-  }
-
-  /** One match of the streaming sequence pattern. */
-  case class SeqMatch(user_id: Long, match_start: java.sql.Timestamp)
-
-  /** Streaming MATCH_RECOGNIZE-shape detection on [[StatefulProcessor]]
-    * ListState: the per-user state is the last k−1 (type, time) events
-    * — a BOUNDED buffer trimmed on every append, never the history —
-    * and a consecutive view→click→purchase triple emits the match at
-    * the view's timestamp. The incremental twin of the batch lead()
-    * pattern query; `SeqStreamSpec` replays the full events table and
-    * compares match sets exactly.
-    */
-  class SequenceProcessor(pattern: Seq[String])
-      extends StatefulProcessor[Long, FunnelEvent, SeqMatch] {
-    @transient private var buf: org.apache.spark.sql.streaming.ListState[(String, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getListState[(String, Long)]("tail",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaLong), TTLConfig.NONE)
-
-    private def micros(t: java.sql.Timestamp): Long =
-      t.getTime / 1000 * 1000000L + t.getNanos / 1000
-    private def fromMicros(us: Long): java.sql.Timestamp = {
-      val t = new java.sql.Timestamp(us / 1000)
-      t.setNanos((us % 1000000L).toInt * 1000)
-      t
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[FunnelEvent],
-        tv: TimerValues): Iterator[SeqMatch] = {
-      val evs = rows.toArray.sortBy(e => micros(e.ts))
-      var tail: Vector[(String, Long)] =
-        if (buf.exists()) buf.get().toVector else Vector.empty
-      var out = List.empty[SeqMatch]
-      evs.foreach { e =>
-        tail = (tail :+ (e.event_type, micros(e.ts))).takeRight(pattern.length)
-        if (tail.length == pattern.length &&
-            tail.map(_._1) == pattern)
-          out ::= SeqMatch(uid, fromMicros(tail.head._2))
-      }
-      // ListState.put rejects empty arrays — for a 1-element pattern the
-      // retained tail is empty, so clear instead
-      val keep = tail.takeRight(pattern.length - 1)
-      if (keep.isEmpty) buf.clear() else buf.put(keep.toArray)
-      out.reverseIterator
-    }
-  }
-
-  /** Streaming consecutive-pattern matches for `pattern`. */
-  def sequenceMatches(ds: Dataset[FunnelEvent], pattern: Seq[String]): Dataset[SeqMatch] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new SequenceProcessor(pattern),
-        TimeMode.None(), OutputMode.Append)
   }
 
   /** One event entering streaming sessionization. */

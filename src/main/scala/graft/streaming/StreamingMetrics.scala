@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming OBSERVABILITY: a bounded in-memory progress log fed by a
-  * `StreamingQueryListener`, queryable as a DataFrame. This is the ops
+  * `StreamingQueryListener`, read as a list of rows. This is the ops
   * surface the reference pipeline has none of (its job runs blind:
   * `HadoopKafkaConsumer.java` reports nothing per batch) and that any
   * production stream needs: per-micro-batch input rows, processing rate,
@@ -15,16 +15,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - the listener runs on the driver's listener bus — it must never
   *    block or grow unboundedly, so the log is a fixed-capacity ring
   *    (oldest progress evicted) and recording is O(1) per batch;
-  *  - reading the log builds a LOCAL DataFrame (the ring is
-  *    driver-memory-sized by construction), so dashboards/alerts can
-  *    join/aggregate it with plain SQL;
+  *  - [[ProgressLog.snapshot]] copies the ring into a local list (the
+  *    ring is driver-memory-sized by construction), which
+  *    `spark.createDataFrame` turns into a frame for SQL dashboards;
   *  - listeners are session-global: [[attach]] returns the handle used
   *    to [[detach]], so suites and co-resident jobs do not leak
   *    listeners into each other.
   */
 object StreamingMetrics {
 
-  /** One micro-batch observation (a row of the metrics frame).
+  /** One micro-batch observation (a row of the progress log).
     * `stateRows` is the store's LIVE total after the batch (the leak
     * detector: it must track live keys, not history); `stateRowsUpdated`
     * / `stateRowsRemoved` are the batch's write traffic (the cost
@@ -77,12 +77,6 @@ object StreamingMetrics {
     def snapshot: Seq[BatchProgress] = ring.synchronized {
       import scala.jdk.CollectionConverters._
       ring.asScala.toList
-    }
-
-    /** The captured progress as a queryable frame. */
-    def asDataFrame(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      snapshot.toDF()
     }
   }
 

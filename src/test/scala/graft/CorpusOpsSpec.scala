@@ -99,22 +99,6 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
-  test("approx token quantiles sit within 2 of exact percentiles") {
-    val approx = CorpusOps.tokenQuantileSketch(
-        Tables.t(spark, sf, "documents"), Seq(0.25, 0.5, 0.75, 0.95))
-      .select(col("p"), col("n_tokens_q")).as[(Double, Long)].collect().toMap
-    val exact = Tables.t(spark, sf, "documents")
-      .select(size(graft.operators.TextOps.tokens(col("text"))).as("n"))
-      .agg(expr("percentile(n, array(0.25, 0.5, 0.75, 0.95))").as("qs"))
-      .select(explode(col("qs"))).as[Double].collect()
-    val exactByP = Seq(0.25, 0.5, 0.75, 0.95).zip(exact).toMap
-    assert(approx.size == 4)
-    approx.foreach { case (p, q) =>
-      assert(math.abs(q - exactByP(p)) <= 2.0,
-        s"quantile $p: approx $q vs exact ${exactByP(p)}")
-    }
-  }
-
   test("Tables cache returns the same relation until invalidated") {
     val a = Tables.t(spark, sf, "documents")
     assert(Tables.t(spark, sf, "documents") eq a,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Ingest
-import graft.sources.kafkalog.{KafkaLog, KafkaLogCompaction, KafkaLogRetention}
+import graft.sources.kafkalog.{KafkaLog, KafkaLogCompaction}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -204,41 +204,13 @@ class KafkaLogCompactionSpec extends SparkSpec {
     rows.toDF("partition", "offset", "value")
       .write.format("kafkalog").mode("append").save(dir)
 
-  test("retention drops whole segments below the cutoff, never the active one") {
-    val dir = Scratch.dir("retention") + "/log"
-    // three sink epochs -> three segments per partition touched
-    appendBatch(dir, (0, 0L, "a0"), (0, 1L, "a1"), (1, 0L, "b0"))
-    appendBatch(dir, (0, 0L, "a2"), (1, 0L, "b1"))
-    appendBatch(dir, (0, 0L, "a3"))
-    // p0 offsets 0..3 across segs [0,1],[2],[3]; p1 offsets 0..1 across [0],[1]
-    val deleted = KafkaLogRetention.truncateBefore(dir, 3L)
-    // p0: seg [0,1] end=2<=3 deleted, seg [2] end=3<=3 deleted, active [3] kept
-    // p1: seg [0] end=1<=3 deleted, active [1] kept even though below cutoff
-    assert(deleted == Map(0 -> 2, 1 -> 1))
-    assert(readLog(dir).collect().toSet == Set((0, 3L, "a3"), (1, 1L, "b1")))
-    // offsets continue past retention: the active segment still anchors ends
-    appendBatch(dir, (0, 0L, "a4"), (1, 0L, "b2"))
-    assert(readLog(dir).collect().toSet == Set(
-      (0, 3L, "a3"), (0, 4L, "a4"), (1, 1L, "b1"), (1, 2L, "b2")))
-  }
-
-  test("a partially-covering segment survives retention (segment granularity)") {
-    val dir = Scratch.dir("retention_partial") + "/log"
-    appendBatch(dir, (0, 0L, "x0"), (0, 1L, "x1"), (0, 2L, "x2"))
-    appendBatch(dir, (0, 0L, "x3"))
-    // cutoff 2 lands inside the first segment -> it must survive whole
-    assert(KafkaLogRetention.truncateBefore(dir, 2L) == Map(0 -> 0))
-    assert(readLog(dir).count() == 4)
-    // idempotent + monotone: a later cutoff finishes the job
-    assert(KafkaLogRetention.truncateBefore(dir, 3L) == Map(0 -> 1))
-    assert(readLog(dir).collect().toSet == Set((0, 3L, "x3")))
-  }
-
   test("streaming from earliest after retention starts at the new head") {
     val dir = Scratch.dir("retention_stream") + "/log"
     appendBatch(dir, (0, 0L, "r0"), (0, 1L, "r1"))
     appendBatch(dir, (0, 0L, "r2"), (0, 1L, "r3"))
-    KafkaLogRetention.truncateBefore(dir, 2L)
+    // retention: the head segment (offsets 0-1) is deleted whole
+    val head = KafkaLog.listPartitions(dir).toMap.apply(0).head
+    assert(KafkaLog.fs(dir).delete(new Path(head), false))
     spark.catalog.dropTempView("retention_sink")
     val q = spark.readStream.format("kafkalog")
       .option("maxOffsetsPerTrigger", 1)

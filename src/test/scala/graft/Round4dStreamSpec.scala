@@ -5,11 +5,9 @@ import graft.streaming.StreamingIngest.KeyedRecord
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** transformWithState (Spark 4 StatefulProcessor API) gates: the modern
+/** transformWithState (Spark 4 StatefulProcessor API) gate: the modern
   * latest-wins upsert must emit the exact update log of the
-  * flatMapGroupsWithState form on the same replay — and so must the
-  * bootstrapped entry point seeded with an empty snapshot, which runs the
-  * same processor with an initial state.
+  * flatMapGroupsWithState form on the same replay.
   */
 class Round4dStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -43,12 +41,9 @@ class Round4dStreamSpec extends SparkSpec {
       KeyedRecord(1, "a", 10), KeyedRecord(1, "b", 20),
       KeyedRecord(2, "x", 5), KeyedRecord(2, "x2", 6),
       KeyedRecord(3, "new", 1))
-    val empty = spark.emptyDataset[KeyedRecord]
     val logs = Map(
       "fMGWS" -> replay("fmgws_test")(StreamingIngest.latestWinsUpdates),
-      "tws" -> replay("tws_test")(StreamingIngest.latestWinsUpdatesTws),
-      "resumed(empty)" -> replay("tws_resumed_test")(
-        StreamingIngest.latestWinsResumed(_, empty)))
+      "tws" -> replay("tws_test")(StreamingIngest.latestWinsUpdatesTws))
     logs.foreach { case (api, rows) => assert(rows == expect, s"$api update log") }
   }
 }

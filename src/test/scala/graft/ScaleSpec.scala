@@ -26,24 +26,6 @@ class ScaleSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("saltedJoin ≡ plain join on a skewed key, hot key spread across buckets") {
-    val rnd = new scala.util.Random(13)
-    val big = (1 to 4000).map { i =>
-      val k = if (rnd.nextDouble() < 0.6) 7L else rnd.nextInt(40).toLong
-      (k, i.toLong)
-    }.toDF("k", "payload")
-    val dim = (0L until 40L).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = big.join(dim, "k").as[(Long, Long, String)].collect().sorted.toSeq
-    val salted = Skew.saltedJoin(big, dim, "k", saltBuckets = 8, saltFrom = Seq("payload"))
-      .select("k", "payload", "name").as[(Long, Long, String)].collect().sorted.toSeq
-    assert(salted == plain)
-    // the hot key's rows must actually spread across several salt buckets
-    val spread = big.where(col("k") === 7L)
-      .select(pmod(xxhash64(col("payload")), lit(8)).as("s"))
-      .distinct().count()
-    assert(spread >= 6, s"hot key only hit $spread of 8 buckets")
-  }
-
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
     val wh = Scratch.dir("graft_wh")
     val s2 = spark.newSession()

@@ -4,8 +4,9 @@ import graft.operators.Ingest
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
-/** Source-path parity: kafka-shaped end-to-end pipeline, JSON-lines
-  * round-trip, CSV strict mode.
+/** Source-path parity: kafka-shaped end-to-end pipeline, the JSON-lines
+  * snapshot read back, and the file-format behaviours the engine's
+  * queries rely on (ORC pushdown, schema merging, `_metadata`).
   */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -35,7 +36,7 @@ class SourcesSpec extends SparkSpec {
     val dir = Scratch.dir("jsonl")
     val rows = Seq((1L, "a"), (2L, "b"), (3L, ""))
     Ingest.writeSnapshotJson(rows.toDF("id", "msg"), dir)
-    val back = Sources.readJsonLines(spark, dir, Ingest.msgSchema)
+    val back = spark.read.schema(Ingest.msgSchema).json(dir)
       .as[(Long, String)].collect().sorted
     assert(back.toSeq == rows.sorted)
   }
@@ -44,8 +45,8 @@ class SourcesSpec extends SparkSpec {
     val dir = Scratch.dir("graft_orc")
     val ev = Tables.t(spark, sf, "events")
       .select("event_id", "user_id", "event_type", "value")
-    Sources.writeOrc(ev, dir)
-    val back = Sources.readOrc(spark, dir, ev.schema)
+    ev.write.mode("overwrite").orc(dir)
+    val back = spark.read.schema(ev.schema).orc(dir)
     assert(back.count() == ev.count())
     assert(back.except(ev).isEmpty && ev.except(back).isEmpty)
     val filtered = back.where(col("event_type") === "click").select("event_id")
@@ -82,15 +83,5 @@ class SourcesSpec extends SparkSpec {
     val rows = withMeta.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getString(1).endsWith(".parquet") && r.getLong(2) > 0))
-  }
-
-  test("CSV strict: explicit schema, malformed rows dropped") {
-    val dir = Scratch.dir("csv")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "d.csv"),
-      "id,msg\n1,hello\nnot-a-long,world\n3,ok\n")
-    val got = Sources.readCsvStrict(spark, dir,
-      org.apache.spark.sql.types.StructType(Ingest.msgSchema.fields))
-      .as[(Long, String)].collect().sorted
-    assert(got.toSeq == Seq((1L, "hello"), (3L, "ok")))
   }
 }

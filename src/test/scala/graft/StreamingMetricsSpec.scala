@@ -37,7 +37,7 @@ class StreamingMetricsSpec extends SparkSpec {
         "stateful dedup must report live state rows")
       assert(rows.forall(_.queryName == "metrics_probe"))
       // frame view carries the same observations
-      val df = log.asDataFrame(spark)
+      val df = log.snapshot.toDF()
       assert(df.agg(sum("numInputRows")).collect()(0).getLong(0) == 4)
     } finally StreamingMetrics.detach(spark, log)
   }
