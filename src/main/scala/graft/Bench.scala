@@ -18,6 +18,21 @@ object Bench {
     "spark.shuffle.spill.compress" -> "false",
     "spark.broadcast.compress" -> "false")
 
+  /** A JSON string literal: quote, backslash and ALL control chars
+    * below 0x20 escaped. An exception message carrying a raw tab or CR,
+    * or a tab in builder-authored oracle SQL, would otherwise make the
+    * bench line or Verify's `oracle_sql.json` unparseable.
+    */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(extra = LocalCompressionOff)
@@ -138,19 +153,6 @@ object Bench {
       "dedup_ngram_jaccard", "sim_topk_bruteforce", "asof_join")
     val legacyCold = cold.filter(p => legacy12(p._1)).map(_._2).sum
     val legacyWarm = warmMin.filter(p => legacy12(p._1)).map(_._2).sum
-    // JSON string escape shared with Verify's rule: backslash, quote, and
-    // ALL control chars <0x20 — an exception message carrying a raw tab
-    // or CR would otherwise make the artifact unparseable, the exact
-    // failure mode the in-band error arrays exist to prevent.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def strArr(xs: Iterable[String]) = xs.map(jstr).mkString("[", ",", "]")
     // Machine-load context: this host is shared with the driver's own
     // jobs, and a loaded machine once inflated a single-rep artifact

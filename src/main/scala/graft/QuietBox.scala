@@ -1,14 +1,15 @@
 package graft
 
-/** Quiet-box self-labeling shared by [[Bench]] and [[BenchOne]]: the
+/** Quiet-box self-labeling shared by [[Bench]] and `Probe time`: the
   * /proc/stat busy-fraction over a 1.5 s SLEEP window, sampled while
   * this process is idle, so the sample sees OTHER processes' load.
   * This host is shared with the driver's own jobs and its speed varies
   * ~2× between sessions; a wall-clock number without a contention
   * label is uninterpretable later (a loaded box once inflated a
   * single-rep artifact 3.5× — SCALE.md r8). Threshold 0.05 = more than
-  * ~1.6 of the box's 32 hardware threads busy during the window (an
-  * idle box samples <0.01; the driver's concurrent jobs sample 0.1+).
+  * 5% of the box's hardware threads busy during the window: ~1.6 of 32,
+  * 0.2 of 4 (an idle box samples <0.01; the driver's concurrent jobs
+  * sample 0.1+).
   * A /proc/stat read failure reports -1 and (unknowably) not
   * contended. End-of-run windows should be sampled AFTER
   * `spark.stop()` so the session's own GC/JIT/daemon threads don't

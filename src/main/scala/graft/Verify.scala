@@ -58,20 +58,8 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(s"[verify] errored queries: " +
         failed.map(_._1).sorted.mkString(","))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Manifest: the AUTHORITATIVE list of attempted queries, written as a
     // flat file (not a dir, so dir-globbing compares skip it). The local
@@ -79,7 +67,7 @@ object Verify {
     // set of output dirs it happens to find — a query whose __error
     // artifact write ALSO failed would otherwise still vanish silently.
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      ran.keySet.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      ran.keySet.toSeq.sorted.map(Bench.jstr).mkString("[", ",", "]"))
     spark.stop()
     // The coverage gate's teeth: a silent drop (attempted but no artifact
     // on disk, not even the __error row) must fail the PROCESS, not just

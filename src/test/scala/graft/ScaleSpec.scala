@@ -4,9 +4,9 @@ import graft.operators.{Ingest, Skew}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale-mechanics suite: salted aggregation equivalence, bucketed
-  * co-located joins (no exchange in plan), extension-registered
-  * functions, broadcast plan shape.
+/** Scale-mechanics suite: salted aggregation equivalence, runtime skew
+  * splits and filters, extension-registered functions, broadcast plan
+  * shape. (`LayoutSpec` pins the bucketed co-located join.)
   */
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
@@ -24,25 +24,6 @@ class ScaleSpec extends SparkSpec {
     val salted = Skew.saltedLatestWins(df, Seq("id"), Seq("version"), saltBuckets = 16)
       .orderBy("id").collect().toSeq
     assert(salted == plain)
-  }
-
-  test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
-    val wh = Scratch.dir("graft_wh")
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
-    val o = Tables.t(s2, sf, "orders")
-    val c = Tables.t(s2, sf, "customer")
-    o.write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey")
-      .option("path", s"$wh/orders_b").saveAsTable("orders_b")
-    c.write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey")
-      .option("path", s"$wh/customer_b").saveAsTable("customer_b")
-    val joined = s2.table("orders_b")
-      .join(s2.table("customer_b"), col("o_custkey") === col("c_custkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join should not shuffle:\n$plan")
-    assert(joined.count() == o.count()) // every order has its customer
-    s2.sql("DROP TABLE IF EXISTS orders_b"); s2.sql("DROP TABLE IF EXISTS customer_b")
   }
 
   test("AQE splits a skewed join partition at runtime") {

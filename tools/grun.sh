@@ -2,7 +2,7 @@
 # Direct JVM runner for graft mains — same flags as the sbt fork
 # (build.sbt javaOptions: JDK17 add-opens + 8g default heap) without
 # sbt's launcher/compile overhead, so serial measurement legs spend
-# their wall on the engine. Usage: tools/grun.sh graft.BenchOne q1 ...
+# their wall on the engine. Usage: tools/grun.sh graft.Probe time q1 ...
 set -e
 cd "$(dirname "$0")/.."
 OPENS=""
