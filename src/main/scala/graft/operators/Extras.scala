@@ -433,14 +433,10 @@ object Extras {
         // The SAME differential replay through the Spark 4
         // transformWithState (StatefulProcessor + RocksDB store) form of
         // the upsert — the driver gate now certifies the modern state
-        // API against the identical batch arg_max oracle. The provider
-        // conf is scoped to the query (the two state APIs use different
-        // store layouts).
-        StreamingIngest.withRocksDbState(s) {
-          StreamingIngest.drainUpserts(
-            StreamingIngest.latestWinsUpdatesTws(eventsAsKeyed(s, dir)), "tws_upsert_sink")
-            .localCheckpoint()
-        }
+        // API against the identical batch arg_max oracle. The drain
+        // runs the transformWithState plan on the RocksDB store.
+        StreamingIngest.drainUpserts(
+          StreamingIngest.latestWinsUpdatesTws(eventsAsKeyed(s, dir)), "tws_upsert_sink")
       },
       Some("""SELECT user_id AS id, arg_max(event_type, event_id) AS msg,
              |       max(event_id) AS version
@@ -464,14 +460,7 @@ object Extras {
               .cast("long").as("bucket"),
             expr("ts_ns div 1000").as("ts_us"), col("event_id"))
           .as[StreamingIngest.BucketEvent]
-        s.catalog.dropTempView("srl_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.earliestWinsUpdates(src)
-            .writeStream.format("memory").queryName("srl_sink")
-            .outputMode("update").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("srl_sink")
+        StreamingIngest.drainTable(StreamingIngest.earliestWinsUpdates(src), "srl_sink", "update")
           .groupBy("user_id", "bucket")
           .agg(min_by(col("event_id"), struct(col("ts_us"), col("event_id")))
             .as("event_id"))
@@ -505,31 +494,16 @@ object Extras {
         // invariance itself is proven in StreamingSpec's scrambled
         // multi-batch replays.
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        // one scalar aggregate for the sentinel clock — not a bulk collect
-        val maxTs = Tables.t(s, dir, "events")
-          .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
         val bulk = Sources.eventsStream(s, dir)
           .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("value"))
-        val ms = MemoryStream[StreamingIngest.SessEvent]
+        val ms = MemoryStream[StreamingIngest.SessEvent](s)
         val src = bulk.union(ms.toDF()).as[StreamingIngest.SessEvent]
-        s.catalog.dropTempView("sessionize_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.sessionize(src, gapMs = 30L * 60 * 1000)
-            .writeStream.format("memory").queryName("sessionize_sink")
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable() // the file-source bulk batch
-            // sentinel batches: first advances the watermark past every
-            // live timeout, second lets the timeouts fire
-            (1 to 2).foreach { i =>
-              ms.addData(StreamingIngest.SessEvent(-1L,
-                new java.sql.Timestamp(maxTs + i * 36000000L), 0.0))
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        s.table("sessionize_sink")
+        // sentinel rounds: the first advances the watermark past every
+        // live timeout, the second lets the timeouts fire
+        StreamingIngest.drainTable(StreamingIngest.sessionize(src, gapMs = 30L * 60 * 1000),
+            "sessionize_sink",
+            flush = StreamingIngest.sentinelSteps(Sources.eventsEndMs(s, dir), 2, 36000000L) {
+              t => ms.addData(StreamingIngest.SessEvent(-1L, t, 0.0)) })
           .where(col("user_id") =!= -1L)
           .select(col("user_id"),
             date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -566,35 +540,19 @@ object Extras {
         // equal the batch NOT EXISTS anti-join per user, at full
         // microsecond precision.
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        StreamingIngest.withRocksDbState(s) {
-          val maxTs = Tables.t(s, dir, "events")
-            .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
-          val bulk = Sources.eventsStream(s, dir)
-            .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-              col("event_type"))
-          val ms = MemoryStream[StreamingIngest.FunnelEvent]
-          val src = bulk.union(ms.toDF()).as[StreamingIngest.FunnelEvent]
-          s.catalog.dropTempView("absence_sink")
-          StreamingIngest.withStateShards(s, 8) {
-            val q = StreamingIngest.absenceAlerts(src, horizonUs = 3600L * 1000000L)
-              .writeStream.format("memory").queryName("absence_sink")
-              .outputMode("append").start()
-            try {
-              q.processAllAvailable()
-              (1 to 2).foreach { i =>
-                ms.addData(StreamingIngest.FunnelEvent(-1L,
-                  new java.sql.Timestamp(maxTs + i * 36000000L), "sentinel"))
-                q.processAllAvailable()
-              }
-            } finally q.stop()
-          }
-          s.table("absence_sink")
-            .where(col("user_id") =!= -1L)
-            .groupBy("user_id")
-            .agg(count(lit(1)).as("n_unconverted"))
-            .orderBy("user_id").localCheckpoint()
-        }
+        val bulk = Sources.eventsStream(s, dir)
+          .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
+            col("event_type"))
+        val ms = MemoryStream[StreamingIngest.FunnelEvent](s)
+        val src = bulk.union(ms.toDF()).as[StreamingIngest.FunnelEvent]
+        StreamingIngest.drainTable(StreamingIngest.absenceAlerts(src, horizonUs = 3600L * 1000000L),
+            "absence_sink",
+            flush = StreamingIngest.sentinelSteps(Sources.eventsEndMs(s, dir), 2, 36000000L) {
+              t => ms.addData(StreamingIngest.FunnelEvent(-1L, t, "sentinel")) })
+          .where(col("user_id") =!= -1L)
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n_unconverted"))
+          .orderBy("user_id")
       },
       Some("""WITH v AS (SELECT user_id, ts::TIMESTAMP AS t FROM events
              |           WHERE event_type = 'view'),
@@ -620,28 +578,15 @@ object Extras {
         // date_trunc oracle as the batch time_tumbling query —
         // incremental emission must reconstruct the batch answer exactly.
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val maxTs = Tables.t(s, dir, "events")
-          .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
         val bulk = Sources.eventsStream(s, dir)
           .select(col("ts").cast("timestamp").as("ts"), col("event_type"), col("value"))
-        val ms = MemoryStream[(java.sql.Timestamp, String, Double)]
+        val ms = MemoryStream[(java.sql.Timestamp, String, Double)](s)
         val src = bulk.union(ms.toDF().toDF("ts", "event_type", "value"))
-        s.catalog.dropTempView("swc_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.windowedCounts(src,
-              eventTimeCol = "ts", delay = "10 minutes", window0 = "1 hour")
-            .writeStream.format("memory").queryName("swc_sink")
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable() // the file-source bulk batch
-            (1 to 2).foreach { i =>
-              ms.addData((new java.sql.Timestamp(maxTs + i * 7200000L), "___wm", 0.0))
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        s.table("swc_sink")
+        StreamingIngest.drainTable(StreamingIngest.windowedCounts(src,
+              eventTimeCol = "ts", delay = "10 minutes", window0 = "1 hour"),
+            "swc_sink",
+            flush = StreamingIngest.sentinelSteps(Sources.eventsEndMs(s, dir), 2, 7200000L) {
+              t => ms.addData((t, "___wm", 0.0)) })
           .where(col("event_type") =!= "___wm")
           .select(date_format(col("ws"), "yyyy-MM-dd HH:mm:ss").as("ws"),
             col("event_type"), col("n"), round(col("sv"), 2).as("sv"))
@@ -684,14 +629,7 @@ object Extras {
             explode(DedupOps.lshBandKeys(col("mh"), 8, 4)).as("bk"))
           .select(col("bk"), col("doc_id"), col("mh"))
           .as[StreamingIngest.BandedDoc]
-        s.catalog.dropTempView("neardup_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.nearDupHits(src, minAgree = 0.5)
-            .writeStream.format("memory").queryName("neardup_sink")
-            .outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("neardup_sink")
+        StreamingIngest.drainTable(StreamingIngest.nearDupHits(src, minAgree = 0.5), "neardup_sink")
           .groupBy("doc_id")
           .agg(min(struct(col("dup_of"), col("agree"))).as("m"))
           .select(col("doc_id"), col("m.dup_of").as("dup_of"),
@@ -747,13 +685,7 @@ object Extras {
           col("user_id") === col("buser") &&
             col("bts") >= col("vts") &&
             col("bts") <= col("vts") + expr("INTERVAL 1 HOUR"))
-        s.catalog.dropTempView("ssj_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = joined.writeStream.format("memory").queryName("ssj_sink")
-            .outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("ssj_sink")
+        StreamingIngest.drainTable(joined, "ssj_sink")
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_attr"), round(sum("value"), 2).as("sv"))
           .orderBy("user_id")

@@ -239,19 +239,16 @@ object KafkaLogOps {
         import s.implicits._
         val scratch = Scratch.dir("duplex_out")
         val out = s"$scratch/log"
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.latestWinsUpdates(parsedGlobal(s, dir))
+        StreamingIngest.drain(StreamingIngest.latestWinsUpdates(parsedGlobal(s, dir))
             .select((col("id") % 4).cast("int").as("partition"),
               col("version").as("offset"),
-              to_json(struct(col("id"), col("msg"), col("version"))).as("value"))
-            .writeStream.format("kafkalog")
+              to_json(struct(col("id"), col("msg"), col("version"))).as("value"))) {
+          _.format("kafkalog")
             // fMGWS emits per-key UPDATES; to a log sink every update is
             // simply appended as a new record (Kafka-producer semantics)
             .outputMode("update")
             .option("path", out)
             .option("checkpointLocation", s"$scratch/ck")
-            .start()
-          try q.processAllAvailable() finally q.stop()
         }
         Ingest.latestWins(
             s.read.format("kafkalog").load(out)
@@ -284,12 +281,9 @@ object KafkaLogOps {
         // Same replay through the transformWithState + RocksDB form —
         // the modern state API certified against the identical batch
         // oracle with the real source in front of it.
-        StreamingIngest.withRocksDbState(s) {
-          StreamingIngest.drainUpserts(
-            StreamingIngest.latestWinsUpdatesTws(parsedGlobal(s, dir)),
-            "kafkalog_tws_upsert_sink")
-            .localCheckpoint()
-        }
+        StreamingIngest.drainUpserts(
+          StreamingIngest.latestWinsUpdatesTws(parsedGlobal(s, dir)),
+          "kafkalog_tws_upsert_sink")
       },
       Some(upsertOracle)),
 
@@ -306,34 +300,22 @@ object KafkaLogOps {
         // two streaming sources, each tracking its own offsets — the
         // sentinel rows are the only driver-side data).
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val (path, n) = eventsTimedLog(s, dir)
-        val maxUs = Tables.t(s, dir, "events")
-          .agg(max(expr("ts_ns div 1000"))).head().getLong(0)
         val bulk = s.readStream.format("kafkalog")
           .option("maxOffsetsPerTrigger", math.max(1L, n / 4))
           .load(path)
           .select(from_json(col("value"), timedSchema).as("j"))
           .select(timestamp_micros(col("j.us")).as("ts"),
             col("j.event_type").as("event_type"), col("j.value").as("value"))
-        val ms = MemoryStream[(java.sql.Timestamp, String, Double)]
+        val ms = MemoryStream[(java.sql.Timestamp, String, Double)](s)
         val src = bulk.union(ms.toDF().toDF("ts", "event_type", "value"))
-        s.catalog.dropTempView("klw_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = StreamingIngest.windowedCounts(src,
-              eventTimeCol = "ts", delay = "10 minutes", window0 = "1 hour")
-            .writeStream.format("memory").queryName("klw_sink")
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable() // the kafkalog bulk, in >=4 batches
-            (1 to 2).foreach { i =>
-              ms.addData((new java.sql.Timestamp(maxUs / 1000 + i * 7200000L),
-                "___wm", 0.0))
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        s.table("klw_sink")
+        // the kafkalog bulk drains in >=4 batches, then the sentinels
+        StreamingIngest.drainTable(StreamingIngest.windowedCounts(src,
+              eventTimeCol = "ts", delay = "10 minutes", window0 = "1 hour"),
+            "klw_sink",
+            flush = StreamingIngest.sentinelSteps(
+              graft.sources.Sources.eventsEndMs(s, dir), 2, 7200000L) {
+              t => ms.addData((t, "___wm", 0.0)) })
           .where(col("event_type") =!= "___wm")
           .select(date_format(col("ws"), "yyyy-MM-dd HH:mm:ss").as("ws"),
             col("event_type"), col("n"), round(col("sv"), 2).as("sv"))
@@ -524,13 +506,12 @@ object KafkaLogOps {
             get_json_object(col("value"), "$.id").cast("long").as("id"),
             get_json_object(col("value"), "$.msg").as("msg"))
         @volatile var lastBatch = -1L
-        val q = src.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+        StreamingIngest.drain(src) {
+          _.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             VersionedTable.appendStream(batch.toDF(), root, "vsink", bid)
             lastBatch = math.max(lastBatch, bid)
           }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        }
         val replayed = VersionedTable.appendStream(
           s.range(5).select(col("id"), lit("dup").as("msg")), root, "vsink", lastBatch)
         VersionedTable.read(s, root)
@@ -572,12 +553,8 @@ object KafkaLogOps {
               (col("eff_to").isNull || col("version") < col("eff_to")))
           .select(col("version").as("event_id"), col("id").as("user_id"),
             col("state"))
-        val sink = "scd2_enrich_sink"
-        s.catalog.dropTempView(sink)
-        val q = enriched.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(sink).orderBy("event_id").localCheckpoint()
+        StreamingIngest.drainTable(enriched, "scd2_enrich_sink")
+          .orderBy("event_id").localCheckpoint()
       },
       Some("""WITH o AS (SELECT user_id, ts, event_id, event_type,
              |                  lag(event_type) OVER (PARTITION BY user_id
@@ -619,13 +596,10 @@ object KafkaLogOps {
             get_json_object(col("value"), "$.msg").as("msg"),
             get_json_object(col("value"), "$.ver").cast("long").as("version"))
           .as[KeyedRecord]
-        StreamingIngest.withRocksDbState(s) {
-          StreamingIngest.drainUpserts(
-            StreamingIngest.latestWinsUpdatesTombstonesTws(src),
-            "kafkalog_tombstone_upsert_sink")
-            .where(col("msg").isNotNull) // final tombstone = deleted key
-            .localCheckpoint()
-        }
+        StreamingIngest.drainUpserts(
+          StreamingIngest.latestWinsUpdatesTombstonesTws(src),
+          "kafkalog_tombstone_upsert_sink")
+          .where(col("msg").isNotNull) // final tombstone = deleted key
       },
       Some("""SELECT user_id AS id, arg_max(event_type, event_id) AS msg,
              |       CAST(max(event_id) AS BIGINT) AS version

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.GQuery
 import graft.sources.Sources
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,13 +63,7 @@ object StreamEdgeOps {
               col("event_type"), col("value")))
         val dd = StreamingIngest.dedupWithinWatermark(
           src, eventTimeCol = "ts", delay = "744 hours", keys = Seq("event_id"))
-        s.catalog.dropTempView("sdw_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = dd.writeStream.format("memory").queryName("sdw_sink")
-            .outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("sdw_sink")
+        StreamingIngest.drainTable(dd, "sdw_sink")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             countDistinct(col("event_id")).as("n_ids"),
@@ -92,16 +86,13 @@ object StreamEdgeOps {
         // resolves. The per-user reduce counts views, matches, and
         // matched value — against the batch LEFT JOIN oracle.
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val maxTs = Tables.t(s, dir, "events")
-          .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
-        val msV = MemoryStream[(java.sql.Timestamp, Long)]
+        val msV = MemoryStream[(java.sql.Timestamp, Long)](s)
         val v = Sources.eventsStream(s, dir)
           .where(col("event_type") === "view")
           .select(col("ts").cast("timestamp").as("vts"), col("user_id"))
           .union(msV.toDF().toDF("vts", "user_id"))
           .withWatermark("vts", "1 hour")
-        val msB = MemoryStream[(java.sql.Timestamp, Long, Double)]
+        val msB = MemoryStream[(java.sql.Timestamp, Long, Double)](s)
         val b = Sources.eventsStream(s, dir)
           .where(col("event_type") === "purchase")
           .select(col("ts").cast("timestamp").as("bts"),
@@ -113,21 +104,11 @@ object StreamEdgeOps {
             col("bts") >= col("vts") &&
             col("bts") <= col("vts") + expr("INTERVAL 1 HOUR"),
           "left_outer")
-        s.catalog.dropTempView("soj_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = joined.writeStream.format("memory").queryName("soj_sink")
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable() // the bulk batch from both file scans
-            (1 to 2).foreach { i =>
-              val t = new java.sql.Timestamp(maxTs + i * 7200000L)
+        StreamingIngest.drainTable(joined, "soj_sink",
+            flush = StreamingIngest.sentinelSteps(Sources.eventsEndMs(s, dir), 2, 7200000L) { t =>
               msV.addData((t, -1L))
               msB.addData((t, -1L, 0.0))
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        s.table("soj_sink")
+            })
           .where(col("user_id") >= 0)
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_rows"),
@@ -163,10 +144,8 @@ object StreamEdgeOps {
         // stages and their hours — which land days past the data — are
         // dropped batch-side below.
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val maxTs = Tables.t(s, dir, "events")
-          .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
-        val ms = MemoryStream[(java.sql.Timestamp, Long)]
+        val endMs = Sources.eventsEndMs(s, dir)
+        val ms = MemoryStream[(java.sql.Timestamp, Long)](s)
         val src = Sources.eventsStream(s, dir)
           .select(col("ts").cast("timestamp").as("ts"), col("user_id"))
           .union(ms.toDF().toDF("ts", "user_id"))
@@ -177,25 +156,14 @@ object StreamEdgeOps {
           .groupBy(window(col("window"), "1 hour"))
           .agg(sum("n").as("n_events"),
             count(lit(1)).as("n_user_quarters"))
-        s.catalog.dropTempView("scw_sink")
-        StreamingIngest.withStateShards(s, 8) {
-          val q = hours.writeStream.format("memory").queryName("scw_sink")
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            // three rounds, not two: each stateful stage closes against
-            // the watermark of the PREVIOUS batch, so the chained second
-            // aggregate trails the first by one more advance
-            (1 to 3).foreach { i =>
-              ms.addData((new java.sql.Timestamp(maxTs + i * 7200000L), -1L))
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        s.table("scw_sink")
-          // drop the sentinel hours (first lands 2h past maxTs; real
-          // hours all start <= maxTs)
-          .where(col("window.start") <= lit(new java.sql.Timestamp(maxTs)))
+        // three sentinel rounds, not two: each stateful stage closes
+        // against the watermark of the PREVIOUS batch, so the chained
+        // second aggregate trails the first by one more advance
+        StreamingIngest.drainTable(hours, "scw_sink",
+            flush = StreamingIngest.sentinelSteps(endMs, 3, 7200000L) { t => ms.addData((t, -1L)) })
+          // drop the sentinel hours (first lands 2h past endMs; real
+          // hours all start <= endMs)
+          .where(col("window.start") <= lit(new java.sql.Timestamp(endMs)))
           .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hs"),
             col("n_events"), col("n_user_quarters"))
           .orderBy("hs")

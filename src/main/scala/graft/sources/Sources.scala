@@ -92,7 +92,9 @@ object Sources {
     * unioning streaming sources, each keeping its own offsets. The bulk
     * data rides the file source through the executors; the driver
     * contributes exactly the 1-2 sentinel rows the closing protocol
-    * needs (see `streaming_sessionize` / `streaming_windowed_counts`).
+    * needs, stamped past [[eventsEndMs]] by
+    * `StreamingIngest.sentinelSteps` (see `streaming_sessionize` /
+    * `streaming_windowed_counts`).
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -105,6 +107,14 @@ object Sources {
         // "must be a directory")
         .parquet(s"$dir/events*.parquet"))
   }
+
+  /** The last event time of the `events` table in epoch ms: the clock
+    * the watermark sentinels count from. One scalar aggregate, not a
+    * bulk collect.
+    */
+  def eventsEndMs(spark: SparkSession, dir: String): Long =
+    graft.Tables.t(spark, dir, "events")
+      .agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0).getTime
 
   /** File-source stream over the documents table (same glob rationale
     * as [[eventsStream]]) — executors read the parquet directly, the

@@ -60,14 +60,12 @@ object GenFold {
   /** Drain `src` (a streaming frame) into the generation-fold at `out`:
     * for each micro-batch, `merge(previousState, batch)` produces the
     * next full state, persisted as JSON lines. Blocks until the stream
-    * is drained (processAllAvailable), like every differential driver
-    * in this package.
+    * is drained ([[StreamingIngest.drain]]).
     */
   def fold(src: DataFrame, out: String, ckpt: String, schema: StructType)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val q = src.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamingIngest.drain(src) {
+      _.option("checkpointLocation", ckpt).foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sess = batch.sparkSession
         if (!committedGens(out).contains(batchId)) {
           val prev = read(sess, out, schema)
@@ -83,7 +81,6 @@ object GenFold {
           f.delete(new Path(s"$out/gen-$g"), true)
         }
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
   }
 }

@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.operators.Ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming form of the reference job (SURVEY.md §7 step 3,
   * BASELINE.json north star: "Structured Streaming Kafka source + HDFS
@@ -27,6 +28,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   *     behind a `_SUCCESS` marker, so a replayed batch rewrites its own
   *     generation and the snapshot always holds every key seen so far.
   *
+  * Every streaming query in the engine runs through one entry point,
+  * [[drain]]: it starts the stream, drains it, runs the flush steps
+  * (watermark sentinels, [[sentinelSteps]]) and stops it. It also owns
+  * the two session settings a stream depends on, the state-shard cap
+  * and the state store provider, so no query names either.
+  *
   * Kafka-shaped input: any streaming DataFrame with
   * `(partition INT, offset LONG, value STRING)` columns — exactly what
   * `spark.readStream.format("kafka")` yields after
@@ -35,42 +42,78 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   */
 object StreamingIngest {
 
-  /** Run `body` (which starts and drains a streaming query) with
-    * `spark.sql.shuffle.partitions` capped at `n`, restoring the prior
-    * value after. Streaming state sharding is fixed at the FIRST batch
-    * by this conf (it persists in the checkpoint), so it is a deliberate
-    * sizing decision, not something to inherit from the batch session:
-    * each state partition pays a store open/commit per micro-batch, and
-    * a job whose live-key cardinality is thousands gains nothing from
-    * hundreds of shards. On a production cluster you'd size it to
-    * key-cardinality / executor count; the differential queries here cap
-    * it so local[32] doesn't pay 32 store commits per 1-row sentinel
-    * batch. Restores BEFORE the returned batch DataFrame executes, so
-    * only the stream is affected.
-    *
-    * Not reentrant across threads: the cap is a read-modify-write of the
-    * SESSION-shared conf, so two concurrent `withStateShards` on one
-    * session could restore the wrong value. Calls are serialized on the
-    * session; queries from OTHER threads reading the conf mid-body still
-    * see the capped value (Verify/Bench/specs run the registry
-    * single-threaded, so this never bites in practice).
-    */
-  def withStateShards[T](s: SparkSession, n: Int)(body: => T): T =
-    // A non-numeric conf (possible via user override) must degrade to
-    // no-op, not throw before the query even starts.
-    withConf(s, "spark.sql.shuffle.partitions",
-      _.flatMap(_.toIntOption).map(p => math.min(p, n).toString))(body)
+  private val ShardsKey = "spark.sql.shuffle.partitions"
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `body` with the RocksDB state store provider, restoring (or
-    * unsetting) the prior provider after, even when `body` throws.
-    * `transformWithState` needs it (multiple state variables are column
-    * families); streams started inside keep it, since the provider is
-    * fixed at a query's first batch and persists in its checkpoint.
-    * Same threading caveat as [[withStateShards]].
+  /** The state-shard cap every drained stream runs under. */
+  val StateShards = 8
+
+  /** Run `ds` as a streaming query to the end of its input and stop it.
+    * `sink` sets up the writer (format, output mode, checkpoint,
+    * `foreachBatch`); the query starts, drains (`processAllAvailable`),
+    * then runs each `flush` step in turn, draining again after each, and
+    * is always stopped, even when a step or the stream throws. Returns
+    * the stopped query, whose progress log stays readable.
+    *
+    * Two session confs are scoped to the stream and restored after
+    * (unset again if they were only defaults):
+    *  - `spark.sql.shuffle.partitions` is capped at [[StateShards]].
+    *    State sharding is fixed at a query's first batch by this conf
+    *    (it persists in the checkpoint), so it is a sizing decision, not
+    *    something to inherit from the batch session: each state
+    *    partition pays a store open and commit per micro-batch, and a
+    *    stream with thousands of live keys gains nothing from more
+    *    shards. The cap never raises the session's value.
+    *  - the state store provider is RocksDB when the analyzed plan holds
+    *    a `transformWithState` node (its state variables are column
+    *    families, which only RocksDB has); any other stream keeps the
+    *    session's provider.
+    *
+    * Not reentrant across threads: both scopes read-modify-write the
+    * SESSION-shared conf. Drains are serialized on the session, but a
+    * query on another thread reading the conf mid-drain sees the scoped
+    * values (Verify, Bench and the specs run the registry on one thread).
     */
-  def withRocksDbState[T](s: SparkSession)(body: => T): T =
-    withConf(s, "spark.sql.streaming.stateStore.providerClass", _ => Some(
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
+  def drain[T](ds: Dataset[T], flush: Seq[() => Unit] = Nil)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val s = ds.sparkSession
+    val tws = ds.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
+    // A non-numeric partition conf (possible via user override) leaves
+    // the cap off rather than failing the query before it starts.
+    withConf(s, ShardsKey, _.flatMap(_.toIntOption).map(p => math.min(p, StateShards).toString)) {
+      withConf(s, ProviderKey, _ => Option.when(tws)(RocksDb)) {
+        val q = sink(ds.writeStream).start()
+        try {
+          q.processAllAvailable()
+          flush.foreach { step => step(); q.processAllAvailable() }
+        } finally q.stop()
+        q
+      }
+    }
+  }
+
+  /** [[drain]] into the in-memory table `name` (dropped first) in output
+    * `mode`; returns the table.
+    */
+  def drainTable[T](ds: Dataset[T], name: String, mode: String = "append",
+      flush: Seq[() => Unit] = Nil): DataFrame = {
+    val s = ds.sparkSession
+    s.catalog.dropTempView(name)
+    drain(ds, flush)(_.format("memory").queryName(name).outputMode(mode))
+    s.table(name)
+  }
+
+  /** Flush steps that close a stream's tail by the sentinel-union
+    * pattern ([[graft.sources.Sources.eventsStream]]): round `i` of
+    * `rounds` calls `push` with the time `endMs + i * stepMs`, and `push`
+    * adds that round's watermark sentinel rows to the memory streams
+    * unioned into the query.
+    */
+  def sentinelSteps(endMs: Long, rounds: Int, stepMs: Long)(
+      push: java.sql.Timestamp => Unit): Seq[() => Unit] =
+    (1 to rounds).map(i => () => push(new java.sql.Timestamp(endMs + i * stepMs)))
 
   /** Set session conf `key` to `next(effective value)` for `body`, then
     * restore the prior setting — unset again if it was only a default.
@@ -140,23 +183,16 @@ object StreamingIngest {
       }
   }
 
-  /** Drain an upsert stream into the in-memory sink `sink` (state capped
-    * at 8 shards, see [[withStateShards]]) and reduce its update log to
-    * the final latest-wins state `(id, msg, version)` ordered by `id`.
-    * A tombstone that wins its key stays in the result as a null `msg`.
+  /** Drain an upsert stream into the in-memory table `sink` and reduce
+    * its update log to the final latest-wins state `(id, msg, version)`
+    * ordered by `id`. A tombstone that wins its key stays in the result
+    * as a null `msg`.
     */
-  def drainUpserts(updates: Dataset[KeyedRecord], sink: String): DataFrame = {
-    val s = updates.sparkSession
-    s.catalog.dropTempView(sink)
-    withStateShards(s, 8) {
-      val q = updates.writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    Ingest.latestWins(s.table(sink), keys = Seq("id"), version = Seq("version"))
+  def drainUpserts(updates: Dataset[KeyedRecord], sink: String): DataFrame =
+    Ingest.latestWins(drainTable(updates, sink, "update"),
+        keys = Seq("id"), version = Seq("version"))
       .select(col("id"), col("msg"), col("version"))
       .orderBy("id")
-  }
 
   /** One (band-bucket, document) event of the streaming near-dup
     * filter: the LSH band key, the doc id, and the 32-hash portable
@@ -248,8 +284,8 @@ object StreamingIngest {
   }
 
   /** Tier 2, modern form: [[latestWinsUpdates]] via `transformWithState`.
-    * Requires the RocksDB state store provider (start the query inside
-    * [[withRocksDbState]]); state remains O(live keys).
+    * Runs on the RocksDB state store, which [[drain]] selects for it;
+    * state remains O(live keys).
     */
   def latestWinsUpdatesTws(ds: Dataset[KeyedRecord]): Dataset[KeyedRecord] = {
     import ds.sparkSession.implicits._

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamingIngest
 import graft.streaming.StreamingIngest.{AbsAlert, FunnelEvent, absenceAlerts}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -14,10 +15,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 class AbsenceStreamSpec extends SparkSpec {
   import spark.implicits._
-  implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val H = 3600L * 1000000L // 1h in micros
 
   private def ts(us: Long): java.sql.Timestamp = {
@@ -27,28 +24,13 @@ class AbsenceStreamSpec extends SparkSpec {
   }
 
   private def run(batches: Seq[Seq[FunnelEvent]], closeUs: Long): Set[(Long, Long)] = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-    spark.catalog.dropTempView("absence_edge_sink")
-    try {
-      val ms = MemoryStream[FunnelEvent]
-      val q = absenceAlerts(ms.toDS(), horizonUs = H)
-        .writeStream.format("memory").queryName("absence_edge_sink")
-        .outputMode("append").start()
-      try {
-        batches.foreach { b => ms.addData(b.toIndexedSeq); q.processAllAvailable() }
-        (1 to 2).foreach { i =>
-          ms.addData(FunnelEvent(-1L, ts(closeUs + i * H * 10), "sentinel"))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-    spark.table("absence_edge_sink").as[AbsAlert].collect()
+    val ms = MemoryStream[FunnelEvent](spark)
+    val steps = batches.map[() => Unit](b => () => ms.addData(b.toIndexedSeq)) ++
+      StreamingIngest.sentinelSteps(closeUs / 1000, 2, 10 * H / 1000) {
+        t => ms.addData(FunnelEvent(-1L, t, "sentinel")) }
+    StreamingIngest.drainTable(absenceAlerts(ms.toDS(), horizonUs = H), "absence_edge_sink",
+        flush = steps)
+      .as[AbsAlert].collect()
       .filter(_.user_id != -1L).map(a => (a.user_id, a.view_us)).toSet
   }
 

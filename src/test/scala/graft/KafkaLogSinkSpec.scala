@@ -118,24 +118,17 @@ class KafkaLogSinkSpec extends SparkSpec {
       rows.toDF("partition", "offset", "value"), in)
     // stream: parse, latest-wins upsert, re-emit as a keyed update topic
     // (id hashes to the output partition; version orders within epoch)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
     val src = spark.readStream.format("kafkalog")
       .option("maxOffsetsPerTrigger", "20").load(in)
     val updates = StreamingIngest.latestWinsUpdatesTws(
       StreamingIngest.parseKafkaShaped(src)
         .as[StreamingIngest.KeyedRecord])
-    val q = updates
+    StreamingIngest.drain(updates
       .select((col("id") % 2).cast("int").as("partition"),
         col("version").as("offset"),
-        to_json(struct(col("id"), col("msg"), col("version"))).as("value"))
-      .writeStream.format("kafkalog")
-      .option("path", out).option("checkpointLocation", out + ".ck")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+        to_json(struct(col("id"), col("msg"), col("version"))).as("value"))) {
+      _.format("kafkalog").option("path", out).option("checkpointLocation", out + ".ck")
+    }
     // the OUTPUT topic replayed through latest-wins equals the batch
     // latest-wins over the original input (same contract the
     // streaming_kafkalog_upsert differential pins, now THROUGH the sink)
@@ -158,10 +151,6 @@ class KafkaLogSinkSpec extends SparkSpec {
       val offs = rs.map(_._2).sorted
       assert(offs.zipWithIndex.forall { case (o, i) => o == i.toLong },
         "sink offsets must be dense from 0 per partition")
-    }
-    } finally prevProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 }

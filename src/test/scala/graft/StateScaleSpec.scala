@@ -43,60 +43,47 @@ class StateScaleSpec extends SparkSpec {
         concat(lit("m"), (col("id") / keys).cast("string")).as("value")),
       dir)
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = spark.readStream.format("kafkalog")
-        .option("maxOffsetsPerTrigger", records / 4)
-        .load(dir)
-        .select((col("offset") % keys).as("id"), col("value").as("msg"),
-          col("offset").as("version"))
-        .as[KeyedRecord]
-      // foreachBatch reports sink.numOutputRows as -1, so the update-log
-      // size is counted here (count() fully executes each batch)
-      val emitted = new java.util.concurrent.atomic.AtomicLong
-      val q = StreamingIngest.latestWinsUpdatesTws(src)
-        .writeStream.outputMode("update")
-        .foreachBatch { (b: Dataset[KeyedRecord], _: Long) =>
-          emitted.addAndGet(b.count()): Unit
-        }
-        .start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val wallSec = (System.nanoTime() - t0) / 1e9
-
-      val prog = q.recentProgress.filter(_.numInputRows > 0)
-      val durations = prog.map(_.batchDuration / 1000.0)
-      val stateRows = prog.flatMap(_.stateOperators.map(_.numRowsTotal)).max
-      val outputRows = emitted.get()
-      System.gc()
-      val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) >> 20
-      println(f"[state-scale] keys=$keys records=$records batches=${prog.length} " +
-        f"wall=$wallSec%.1fs durations=${durations.map(d => f"$d%.1f").mkString(",")}s " +
-        f"stateRows=$stateRows outputRows=$outputRows heapMB=$heapMb")
-
-      assert(prog.length >= 4, s"admission must split the replay, got ${prog.length} batches")
-      assert(stateRows == keys, s"state must hold exactly one row per key, got $stateRows")
-      // every key's final m1 record strictly supersedes m0, so at least
-      // one update per key must have been emitted; at most one per
-      // (key, version)
-      assert(outputRows >= keys && outputRows <= records,
-        s"update log out of range: $outputRows")
-      // flat per-batch cost: the last batch faces a 1M-key store but the
-      // same admission-sized input — allow 3x the median for noise, which
-      // still rules out O(stored-keys) per-batch scans
-      val median = durations.sorted.apply(durations.length / 2)
-      assert(durations.last < math.max(3 * median, 30.0),
-        s"per-batch cost grew with state: ${durations.mkString(",")}")
-      assert(heapMb < 4096,
-        s"1M keys must live in RocksDB, not the JVM heap ($heapMb MB used)")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
+    val src = spark.readStream.format("kafkalog")
+      .option("maxOffsetsPerTrigger", records / 4)
+      .load(dir)
+      .select((col("offset") % keys).as("id"), col("value").as("msg"),
+        col("offset").as("version"))
+      .as[KeyedRecord]
+    // foreachBatch reports sink.numOutputRows as -1, so the update-log
+    // size is counted here (count() fully executes each batch)
+    val emitted = new java.util.concurrent.atomic.AtomicLong
+    val t0 = System.nanoTime()
+    val q = StreamingIngest.drain(StreamingIngest.latestWinsUpdatesTws(src)) {
+      _.outputMode("update").foreachBatch { (b: Dataset[KeyedRecord], _: Long) =>
+        emitted.addAndGet(b.count()): Unit
       }
     }
+    val wallSec = (System.nanoTime() - t0) / 1e9
+
+    val prog = q.recentProgress.filter(_.numInputRows > 0)
+    val durations = prog.map(_.batchDuration / 1000.0)
+    val stateRows = prog.flatMap(_.stateOperators.map(_.numRowsTotal)).max
+    val outputRows = emitted.get()
+    System.gc()
+    val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) >> 20
+    println(f"[state-scale] keys=$keys records=$records batches=${prog.length} " +
+      f"wall=$wallSec%.1fs durations=${durations.map(d => f"$d%.1f").mkString(",")}s " +
+      f"stateRows=$stateRows outputRows=$outputRows heapMB=$heapMb")
+
+    assert(prog.length >= 4, s"admission must split the replay, got ${prog.length} batches")
+    assert(stateRows == keys, s"state must hold exactly one row per key, got $stateRows")
+    // every key's final m1 record strictly supersedes m0, so at least
+    // one update per key must have been emitted; at most one per
+    // (key, version)
+    assert(outputRows >= keys && outputRows <= records,
+      s"update log out of range: $outputRows")
+    // flat per-batch cost: the last batch faces a 1M-key store but the
+    // same admission-sized input — allow 3x the median for noise, which
+    // still rules out O(stored-keys) per-batch scans
+    val median = durations.sorted.apply(durations.length / 2)
+    assert(durations.last < math.max(3 * median, 30.0),
+      s"per-batch cost grew with state: ${durations.mkString(",")}")
+    assert(heapMb < 4096,
+      s"1M keys must live in RocksDB, not the JVM heap ($heapMb MB used)")
   }
 }

@@ -84,24 +84,17 @@ class StreamingSpec extends SparkSpec {
 
   test("tombstone upsert: deletes clear keys, markers suppress late stragglers") {
     // two state variables (live value + delete marker) = multiple column
-    // families, which needs the RocksDB provider
-    val rows = StreamingIngest.withRocksDbState(spark) {
-      val ms = MemoryStream[KeyedRecord]
-      val q = StreamingIngest.latestWinsUpdatesTombstonesTws(ms.toDS())
-        .writeStream.format("memory").queryName("lwt_test").outputMode("update").start()
-      try {
-        ms.addData(KeyedRecord(1, "a", 10), KeyedRecord(2, "x", 5))
-        q.processAllAvailable()
-        ms.addData(KeyedRecord(1, null, 15)) // tombstone: key 1 deleted
-        q.processAllAvailable()
-        ms.addData(KeyedRecord(1, "late", 12)) // older than the marker → suppressed
-        q.processAllAvailable()
-        ms.addData(KeyedRecord(2, null, 7), KeyedRecord(2, "back", 9)) // delete then re-insert
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table("lwt_test").as[KeyedRecord].collect()
-        .sortBy(r => (r.id, r.version))
-    }
+    // families, which the drain's RocksDB provider gives it
+    val ms = MemoryStream[KeyedRecord]
+    val rows = StreamingIngest.drainTable(
+        StreamingIngest.latestWinsUpdatesTombstonesTws(ms.toDS()), "lwt_test", "update",
+        flush = Seq[() => Unit](
+          () => ms.addData(KeyedRecord(1, "a", 10), KeyedRecord(2, "x", 5)),
+          () => ms.addData(KeyedRecord(1, null, 15)), // tombstone: key 1 deleted
+          () => ms.addData(KeyedRecord(1, "late", 12)), // older than the marker → suppressed
+          () => ms.addData(KeyedRecord(2, null, 7), KeyedRecord(2, "back", 9)))) // delete then re-insert
+      .as[KeyedRecord].collect()
+      .sortBy(r => (r.id, r.version))
     assert(rows.toSeq == Seq(
       KeyedRecord(1, "a", 10), KeyedRecord(1, null, 15),
       KeyedRecord(2, "x", 5), KeyedRecord(2, "back", 9)),

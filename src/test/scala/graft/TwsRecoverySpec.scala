@@ -75,32 +75,24 @@ class TwsRecoverySpec extends SparkSpec {
     */
   private def drive(log: String, ckpt: String, out: String,
       bombAtBatch: Option[Long], bombAfterBatch: Option[Long] = None): Unit = {
-    StreamingIngest.withRocksDbState(spark) {
-      StreamingIngest.withStateShards(spark, 4) {
-        val parsed = spark.readStream.format("kafkalog")
-          .option("maxOffsetsPerTrigger", 10)
-          .load(log)
-          .select(from_json(col("value"), schema).as("r"))
-          .select(col("r.id"), col("r.msg"), col("r.version"))
-          .as[KeyedRecord]
-        val q = StreamingIngest.latestWinsUpdatesTws(parsed)
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[KeyedRecord], bid: Long) =>
-            if (bombAtBatch.exists(bid >= _))
-              throw new RuntimeException("injected crash")
-            batch.write.mode("overwrite").parquet(s"$out/gen-$bid")
-            TwsRecoverySpec.bump(out, bid)
-            if (bombAfterBatch.exists(bid >= _))
-              throw new RuntimeException("injected crash after sink write")
-          }
-          .start()
-        try q.processAllAvailable()
-        catch { case _: Throwable => () } // injected crash surfaces here
-        finally q.stop()
-      }
-    }
+    val parsed = spark.readStream.format("kafkalog")
+      .option("maxOffsetsPerTrigger", 10)
+      .load(log)
+      .select(from_json(col("value"), schema).as("r"))
+      .select(col("r.id"), col("r.msg"), col("r.version"))
+      .as[KeyedRecord]
+    try StreamingIngest.drain(StreamingIngest.latestWinsUpdatesTws(parsed)) {
+      _.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[KeyedRecord], bid: Long) =>
+          if (bombAtBatch.exists(bid >= _))
+            throw new RuntimeException("injected crash")
+          batch.write.mode("overwrite").parquet(s"$out/gen-$bid")
+          TwsRecoverySpec.bump(out, bid)
+          if (bombAfterBatch.exists(bid >= _))
+            throw new RuntimeException("injected crash after sink write")
+        }
+    } catch { case _: Throwable => () } // injected crash surfaces here
   }
 
   private def gens(out: String): Map[Long, Seq[(Long, String, Long)]] =

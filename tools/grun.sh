@@ -13,6 +13,10 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# `sbt compile` leaves out src/main/resources (the META-INF/services
+# entry that registers the kafkalog source); copy it in as sbt's
+# copyResources would, so a bare compile is enough before this script.
+cp -R src/main/resources/. target/scala-2.13/classes/
 exec java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   $SPARK_GRAFT_JAVA_OPTS \
