@@ -56,13 +56,19 @@ class DrainSpec extends SparkSpec {
   private def onRocksDb(q: StreamingQuery): Boolean =
     stateMetrics(q).exists(_.startsWith("rocksdb"))
 
-  test("drain runs transformWithState on RocksDB with the provider unset, and leaves it unset") {
+  test("drain sets the RocksDB provider inside a transformWithState stream") {
     withSessionConf(provider, None) {
       var inside: Option[String] = None
       val q = replay(StreamingIngest.latestWinsUpdatesTws,
         () => inside = spark.conf.getOption(provider))
       assert(inside.contains(rocks))
       assert(onRocksDb(q), s"no RocksDB metrics in ${stateMetrics(q)}")
+    }
+  }
+
+  test("drain leaves an unset provider unset after a transformWithState stream") {
+    withSessionConf(provider, None) {
+      replay(StreamingIngest.latestWinsUpdatesTws)
       assert(!spark.conf.getAll.contains(provider),
         s"provider must be unset again, found ${spark.conf.getOption(provider)}")
     }
