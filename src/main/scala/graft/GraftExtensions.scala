@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * via `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
   * Sessions built by [[GraftSession]] get the same function table but
-  * not the rules: the engine's queries add and remove those rules per
-  * query, and its specs compare results with and without each rule.
+  * not the rules: the engine's queries install a rule for one query
+  * with [[GraftSession.scoped]], and its specs compare results with and
+  * without each rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -1,12 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
-/** The engine's one session factory: every main and the test session
-  * are built here, so they share one set of defaults and one function
-  * table ([[GraftExtensions.functions]], installed through
-  * `withExtensions`; the optimizer rules are not installed, see
-  * [[GraftExtensions]]).
+/** The engine's one session factory and its one session scope.
+  *
+  * Every main and the test session are built here, so they share one
+  * set of defaults and one function table ([[GraftExtensions.functions]],
+  * installed through `withExtensions`; the optimizer rules are not
+  * installed, see [[GraftExtensions]]).
+  *
+  * Every query-time change to a session, a conf or an optimizer rule,
+  * goes through [[scoped]] (or [[pinned]], which also fixes a frame's
+  * plan inside the scope), so each change is restored the same way;
+  * `GraftSessionSpec` fails on a hand-written one in src/main. Two
+  * changes are not query-time and stay put: `Tables` sets the parquet
+  * nanos reader conf for the session's life, and `BandJoin` installs
+  * its strategy once, since its node can be planned at any later
+  * execution.
   *
   * Environment, read only here:
   *  - `SPARK_GRAFT_CPUS`: local worker threads (default: the JVM's
@@ -52,4 +64,41 @@ object GraftSession {
       .config(confs(cores, aqe, extra))
       .withExtensions(GraftExtensions.injectFunctions)
       .getOrCreate()
+
+  /** Set `confs` and append each of `rules` not already installed in
+    * the optimizer's extra rules, run `body`, then restore both, also
+    * when `body` throws: a conf that had an explicit value gets it
+    * back, a conf that was only a default is unset again, and only the
+    * rules this scope appended are removed.
+    *
+    * Runs under the session's lock, so scopes on one session never
+    * interleave. A query on another thread that does not take the lock
+    * still reads the scoped values while the scope is open.
+    */
+  def scoped[A](s: SparkSession, confs: Map[String, String] = Map.empty,
+      rules: Seq[Rule[LogicalPlan]] = Nil)(body: => A): A = s.synchronized {
+    val explicit = s.conf.getAll // explicit settings only, not defaults
+    val prev = confs.keys.map(k => k -> explicit.get(k))
+    val added = rules.filterNot(s.experimental.extraOptimizations.contains)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s.experimental.extraOptimizations ++= added
+    try body
+    finally {
+      s.experimental.extraOptimizations =
+        s.experimental.extraOptimizations.filterNot(r => added.exists(_ eq r))
+      prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
+  }
+
+  /** [[scoped]] around `build`, with the built frame's `executedPlan`
+    * forced inside the scope. A Dataset keeps its first QueryExecution,
+    * so the frame runs later (after the confs and rules are restored)
+    * with the plan they produced.
+    */
+  def pinned(s: SparkSession, confs: Map[String, String] = Map.empty,
+      rules: Seq[Rule[LogicalPlan]] = Nil)(build: => DataFrame): DataFrame =
+    scoped(s, confs, rules) { val df = build; df.queryExecution.executedPlan; df }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, GraftSession, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,10 +30,7 @@ object EventOps {
         // and if the rule silently stops firing. At 100 TB with a
         // date-partitioned layout this is scan-a-day vs scan-the-corpus.
         import graft.plans.SargableDateRule
-        val added = !s.experimental.extraOptimizations.contains(SargableDateRule)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SargableDateRule
-        try {
+        GraftSession.pinned(s, rules = Seq(SargableDateRule)) {
           val q = Tables.t(s, dir, "events")
             .where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-15")
             .groupBy("event_type")
@@ -42,12 +39,7 @@ object EventOps {
             .orderBy("event_type")
           val rewritten = !q.queryExecution.optimizedPlan.toString
             .contains("date_format")
-          val out = q.withColumn("rewritten", lit(rewritten))
-          out.queryExecution.optimizedPlan // force under the rule
-          out
-        } finally {
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq SargableDateRule)
+          q.withColumn("rewritten", lit(rewritten))
         }
       },
       Some("""SELECT event_type, CAST(count(*) AS BIGINT) AS n,

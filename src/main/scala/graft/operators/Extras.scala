@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, GraftSession, Tables}
 import graft.functions.LatestAggregator
 import graft.functions.LatestAggregator.VersionedValue
 import graft.multimodal.Multimodal
@@ -798,10 +798,7 @@ object Extras {
         ConstraintRules.clear()
         ConstraintRules.declareForeignKey("orders_customer",
           orders, "o_custkey", customer, "c_custkey")
-        val added = !s.experimental.extraOptimizations.contains(ConstraintRules)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ ConstraintRules
-        try {
+        try GraftSession.pinned(s, rules = Seq(ConstraintRules)) {
           val q = orders
             .join(customer, col("o_custkey") === col("c_custkey"))
             .groupBy("o_orderpriority")
@@ -810,14 +807,8 @@ object Extras {
             .orderBy("o_orderpriority")
           val eliminated =
             q.queryExecution.optimizedPlan.collectLeaves().length == 1
-          val out = q.withColumn("eliminated", lit(eliminated))
-          out.queryExecution.optimizedPlan // force under the rule
-          out
-        } finally {
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq ConstraintRules)
-          ConstraintRules.clear()
-        }
+          q.withColumn("eliminated", lit(eliminated))
+        } finally ConstraintRules.clear()
       },
       Some("""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
              |       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,

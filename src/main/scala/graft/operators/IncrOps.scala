@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.{GQuery, Scratch, Tables}
-import org.apache.spark.sql.DataFrame
+import graft.{GQuery, GraftSession, Scratch, Tables}
+import graft.plans.SummaryRewriteRule
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental-maintenance operators: refreshing derived tables from a
@@ -76,6 +77,23 @@ object IncrOps {
       .agg(
         count(lit(1)).as("n_orders"),
         sum(round(col("l_extendedprice") * 100).cast("long")).as("cents"))
+
+  /** A view-serving differential's answer: `query`, built and pinned
+    * while [[SummaryRewriteRule]] serves the view `name` (`definition`,
+    * stored as `materialized` under `mvPath`), plus `used_mv`: whether
+    * the query's own optimized plan reads `mvPath`. The registry is
+    * cleared and the rule removed before this returns, so no view
+    * reaches another query.
+    */
+  private def servedFromView(s: SparkSession, name: String, definition: DataFrame,
+      materialized: DataFrame, mvPath: String)(query: => DataFrame): DataFrame =
+    SummaryRewriteRule.serving(s, (name, definition, materialized)) {
+      GraftSession.pinned(s) {
+        val q = query
+        q.withColumn("used_mv",
+          lit(SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, mvPath)))
+      }
+    }
 
   val all: Seq[GQuery] = Seq(
 
@@ -207,35 +225,15 @@ object IncrOps {
         // the rewrite corrupts results, but also if the rule silently
         // stops firing. At 100 TB the rewritten plan reads KBs instead
         // of scanning the fact table.
-        import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
         val mvPath = Scratch.dir("monthly_orders")
         monthlyPartials(orders).write.mode("overwrite").parquet(mvPath)
-        val mat = s.read.parquet(mvPath)
-        SummaryRewriteRule.clear()
-        SummaryRewriteRule.register("monthly_orders", monthlyPartials(orders), mat)
-        val added = !s.experimental.extraOptimizations.contains(SummaryRewriteRule)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SummaryRewriteRule
-        try {
-          val q = monthlyPartials(orders)
+        servedFromView(s, "monthly_orders", monthlyPartials(orders),
+            s.read.parquet(mvPath), mvPath) {
+          monthlyPartials(orders)
             .select(date_format(col("month"), "yyyy-MM").as("month"),
               col("n_orders"), col("cents").as("revenue_cents"))
             .orderBy("month")
-          val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, mvPath)
-          val out = q.withColumn("used_mv", lit(usedMv))
-          // force the plan while the rule is active — the cached
-          // QueryExecution is what Verify executes after this returns
-          out.queryExecution.optimizedPlan
-          out
-        } finally {
-          // deregister: the rule must not leak into other queries on
-          // this shared session (it would be a no-op, but scoping it
-          // keeps every other differential's plan byte-identical)
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-          SummaryRewriteRule.clear()
         }
       },
       Some("""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
@@ -259,33 +257,18 @@ object IncrOps {
         // integral (cents as long), so both engines divide the same two
         // exact doubles — bit-identical results with DuckDB's
         // sum/count division.
-        import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
         val mvPath = Scratch.dir("monthly_avg_orders")
         monthlyAvgPartials(orders).write.mode("overwrite").parquet(mvPath)
-        SummaryRewriteRule.clear()
-        SummaryRewriteRule.register("monthly_avg_orders",
-          monthlyAvgPartials(orders), s.read.parquet(mvPath))
-        val added = !s.experimental.extraOptimizations.contains(SummaryRewriteRule)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SummaryRewriteRule
-        try {
+        servedFromView(s, "monthly_avg_orders", monthlyAvgPartials(orders),
+            s.read.parquet(mvPath), mvPath) {
           val cents = round(col("o_totalprice") * 100).cast("long")
-          val q = orders
+          orders
             .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
             .agg(avg(cents).as("avg_cents"))
             .select(date_format(col("month"), "yyyy-MM").as("month"),
               col("avg_cents"))
             .orderBy("month")
-          val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, mvPath)
-          val out = q.withColumn("used_mv", lit(usedMv))
-          out.queryExecution.optimizedPlan
-          out
-        } finally {
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-          SummaryRewriteRule.clear()
         }
       },
       Some("""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
@@ -309,19 +292,13 @@ object IncrOps {
         // recomputes from history with the same WHERE and asserts
         // true, so a wrong filter rebase and a silently-dead tier both
         // fail the hash compare.
-        import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
         val mvPath = Scratch.dir("monthly_orders_f")
         monthlyPartials(orders).write.mode("overwrite").parquet(mvPath)
-        SummaryRewriteRule.clear()
-        SummaryRewriteRule.register("monthly_orders_f",
-          monthlyPartials(orders), s.read.parquet(mvPath))
-        val added = !s.experimental.extraOptimizations.contains(SummaryRewriteRule)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SummaryRewriteRule
-        try {
+        servedFromView(s, "monthly_orders_f", monthlyPartials(orders),
+            s.read.parquet(mvPath), mvPath) {
           val cut = lit("1997-01-01").cast("timestamp")
-          val q = orders
+          orders
             .where(date_trunc("month", col("o_orderdate")) >= cut)
             .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
             .agg(count(lit(1)).as("n_orders"),
@@ -329,15 +306,6 @@ object IncrOps {
             .select(date_format(col("month"), "yyyy-MM").as("month"),
               col("n_orders"), col("cents").as("revenue_cents"))
             .orderBy("month")
-          val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, mvPath)
-          val out = q.withColumn("used_mv", lit(usedMv))
-          out.queryExecution.optimizedPlan
-          out
-        } finally {
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-          SummaryRewriteRule.clear()
         }
       },
       Some("""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
@@ -406,7 +374,6 @@ object IncrOps {
         // aggregate plus used_mv=true from the query's own optimized
         // plan, so this fails if the fold mis-merges a batch OR the
         // rewrite stops firing.
-        import graft.plans.SummaryRewriteRule
         import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
         val (path, n) = KafkaLogOps.eventsTimedLog(s, dir)
         val out = Scratch.dir("mv_serve_state")
@@ -439,24 +406,10 @@ object IncrOps {
         def baseAgg = partials(events.select(
           date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("value")))
-        SummaryRewriteRule.clear()
-        SummaryRewriteRule.register("daily_events",
-          baseAgg, graft.streaming.GenFold.read(s, out, aggSchema))
-        val mvPath = graft.streaming.GenFold.latestGen(out).get
-        val added = !s.experimental.extraOptimizations.contains(SummaryRewriteRule)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SummaryRewriteRule
-        try {
-          val q = baseAgg.orderBy("day", "event_type")
-          val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, mvPath)
-          val res = q.withColumn("used_mv", lit(usedMv))
-          res.queryExecution.optimizedPlan
-          res
-        } finally {
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-          SummaryRewriteRule.clear()
+        servedFromView(s, "daily_events", baseAgg,
+            graft.streaming.GenFold.read(s, out, aggSchema),
+            graft.streaming.GenFold.latestGen(out).get) {
+          baseAgg.orderBy("day", "event_type")
         }
       },
       Some("""SELECT strftime(date_trunc('day', ts::TIMESTAMP), '%Y-%m-%d') AS day, event_type,
@@ -478,7 +431,6 @@ object IncrOps {
         // both a wrong re-aggregation and a silently-dead rewrite fail.
         // At 100 TB the rollup input is |days|·|groups| rows, not the
         // fact table.
-        import graft.plans.SummaryRewriteRule
         val orders = Tables.t(s, dir, "orders")
         def dailyPartials = orders
           .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
@@ -486,26 +438,12 @@ object IncrOps {
             sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
         val mvPath = Scratch.dir("daily_orders")
         dailyPartials.write.mode("overwrite").parquet(mvPath)
-        SummaryRewriteRule.clear()
-        SummaryRewriteRule.register("daily_orders", dailyPartials,
-          s.read.parquet(mvPath))
-        val added = !s.experimental.extraOptimizations.contains(SummaryRewriteRule)
-        if (added) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SummaryRewriteRule
-        try {
-          val q = monthlyPartials(orders)
+        servedFromView(s, "daily_orders", dailyPartials,
+            s.read.parquet(mvPath), mvPath) {
+          monthlyPartials(orders)
             .select(date_format(col("month"), "yyyy-MM").as("month"),
               col("n_orders"), col("cents").as("revenue_cents"))
             .orderBy("month")
-          val usedMv = SummaryRewriteRule.scansPath(
-            q.queryExecution.optimizedPlan, mvPath)
-          val out = q.withColumn("used_mv", lit(usedMv))
-          out.queryExecution.optimizedPlan
-          out
-        } finally {
-          if (added) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-          SummaryRewriteRule.clear()
         }
       },
       Some("""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,

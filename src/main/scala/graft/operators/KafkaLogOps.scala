@@ -597,7 +597,7 @@ object KafkaLogOps {
             get_json_object(col("value"), "$.ver").cast("long").as("version"))
           .as[KeyedRecord]
         StreamingIngest.drainUpserts(
-          StreamingIngest.latestWinsUpdatesTombstonesTws(src),
+          StreamingIngest.latestWinsUpdatesTws(src),
           "kafkalog_tombstone_upsert_sink")
           .where(col("msg").isNotNull) // final tombstone = deleted key
       },

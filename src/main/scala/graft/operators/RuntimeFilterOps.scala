@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Scratch, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GQuery, GraftSession, Scratch, Tables}
 import org.apache.spark.sql.functions._
 
 /** Runtime data-skipping at PLAN level — the three mechanisms that decide
@@ -35,30 +34,12 @@ import org.apache.spark.sql.functions._
   * so a mechanism that silently stops firing fails the differential —
   * not just a benchmark.
   *
-  * Conf scoping: confs are set, the QueryExecution is forced (lazy-val
-  * pinned) inside the scope, then confs are restored — same pattern the
-  * MV differentials use for `extraOptimizations`, safe under Verify's
-  * sequential drive.
+  * Conf scoping: every query builds its frame inside
+  * [[graft.GraftSession.pinned]], which sets the query's confs, forces
+  * the frame's executed plan while they hold, and restores them, the
+  * same scope the MV differentials use for their optimizer rule.
   */
 object RuntimeFilterOps {
-
-  /** Set `confs`, run `body`, restore previous values (unset → restore
-    * to Spark's default via `unset`).
-    */
-  private def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
-  /** Pin every phase of `df`'s QueryExecution while the scoping confs
-    * are still active — what Verify executes later is this frozen plan.
-    */
-  private def pin(df: DataFrame): DataFrame = { df.queryExecution.executedPlan; df }
 
   val all: Seq[GQuery] = Seq(
 
@@ -99,7 +80,7 @@ object RuntimeFilterOps {
           .agg(count(lit(1)).as("n"), sum("cents").as("cents"))
         val usedDpp = q.queryExecution.executedPlan.toString
           .toLowerCase.contains("dynamicpruning")
-        pin(q.select(col("year").cast("long").as("year"), col("n"),
+        GraftSession.pinned(s)(q.select(col("year").cast("long").as("year"), col("n"),
             col("cents"))
           .withColumn("used_dpp", lit(usedDpp)).orderBy("year"))
       },
@@ -130,11 +111,11 @@ object RuntimeFilterOps {
         val pt = Tables.t(s, dir, "part")
           .where(col("p_size") === 1)
           .select(col("p_partkey"), col("p_brand"))
-        withConfs(s,
+        GraftSession.pinned(s, Map(
           "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
           "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
           "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB",
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
           val q = li.join(pt, col("l_partkey") === col("p_partkey"))
             .groupBy("p_brand")
             .agg(count(lit(1)).as("n"),
@@ -142,7 +123,7 @@ object RuntimeFilterOps {
               round(avg("l_quantity"), 4).as("avg_qty"))
           val usedBloom = q.queryExecution.optimizedPlan.toString
             .contains("might_contain")
-          pin(q.withColumn("used_bloom", lit(usedBloom)).orderBy("p_brand"))
+          q.withColumn("used_bloom", lit(usedBloom)).orderBy("p_brand")
         }
       },
       Some("""SELECT p_brand,
@@ -187,9 +168,9 @@ object RuntimeFilterOps {
           .repartition(8, col("c_custkey"))
           .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
           .option("path", rc).saveAsTable(tc)
-        withConfs(s,
+        GraftSession.pinned(s, Map(
           "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.enabled" -> "false") {
+          "spark.sql.adaptive.enabled" -> "false")) {
           val q = s.table(to)
             .join(s.table(tc), col("o_custkey") === col("c_custkey"))
             .groupBy("c_mktsegment")
@@ -202,7 +183,7 @@ object RuntimeFilterOps {
             .withColumn("exchanges_before_join",
               lit(joinShuffles.getOrElse(-1).toLong))
             .orderBy("c_mktsegment")
-          pin(out)
+          out
         }
       },
       Some("""SELECT c_mktsegment,
@@ -223,16 +204,16 @@ object RuntimeFilterOps {
         // this is the difference between a metadata-only operation and
         // a full-table scan for every "how many rows / what's the id
         // range" operational query.
-        withConfs(s,
+        GraftSession.pinned(s, Map(
           "spark.sql.parquet.aggregatePushdown" -> "true",
-          "spark.sql.sources.useV1SourceList" -> "") {
+          "spark.sql.sources.useV1SourceList" -> "")) {
           val q = s.read.parquet(s"$dir/orders.parquet")
             .agg(count(lit(1)).as("n_rows"),
               min("o_orderkey").as("min_key"),
               max("o_orderkey").as("max_key"))
           val pushed = q.queryExecution.executedPlan.toString
             .contains("PushedAggregation: [COUNT(*)")
-          pin(q.withColumn("used_footer", lit(pushed)))
+          q.withColumn("used_footer", lit(pushed))
         }
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -268,7 +249,7 @@ object RuntimeFilterOps {
         val plan = q.queryExecution.executedPlan.toString
         val pushed = plan.contains("EqualTo(status,F)") &&
           plan.contains("GreaterThanOrEqual(cents,10000000)")
-        pin(q.withColumn("pushed_orc", lit(pushed)).orderBy("priority"))
+        GraftSession.pinned(s)(q.withColumn("pushed_orc", lit(pushed)).orderBy("priority"))
       },
       Some("""SELECT o_orderpriority AS priority,
              |       CAST(count(*) AS BIGINT) AS n,
@@ -331,7 +312,7 @@ object RuntimeFilterOps {
           .select(col("o_custkey"), col("o_orderkey"), col("rn"))
         val plan = q.queryExecution.executedPlan.toString
         val limited = plan.contains("WindowGroupLimit")
-        pin(q.withColumn("group_limited", lit(limited))
+        GraftSession.pinned(s)(q.withColumn("group_limited", lit(limited))
           .orderBy("o_custkey", "rn"))
       },
       Some("""SELECT o_custkey, o_orderkey, rn, true AS group_limited FROM (
@@ -355,10 +336,10 @@ object RuntimeFilterOps {
         // adaptive threshold can trigger the switch; both flags come
         // from the plans (static = SMJ, final = BHJ after execution),
         // so a silently-dead runtime replan fails the oracle.
-        withConfs(s,
+        GraftSession.scoped(s, Map(
           "spark.sql.adaptive.enabled" -> "true",
           "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB") {
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB")) {
           val li = Tables.t(s, dir, "lineitem")
             .select(col("l_partkey"), round(col("l_extendedprice") * 100)
               .cast("long").as("cents"))
@@ -395,11 +376,11 @@ object RuntimeFilterOps {
         // AQEShuffleRead actually merged (fewer partitions than the
         // static shuffle), read from the executed adaptive plan. The
         // hash certifies merging changed nothing.
-        withConfs(s,
+        GraftSession.scoped(s, Map(
           "spark.sql.adaptive.enabled" -> "true",
           "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
           "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1MB",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB") {
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB")) {
           val q = Tables.t(s, dir, "orders")
             .groupBy(col("o_orderpriority").as("priority"))
             .agg(count(lit(1)).as("n"),
@@ -435,7 +416,7 @@ object RuntimeFilterOps {
         // flag AND the hash — a split that dropped or duplicated hot-key
         // rows fails the compare, a silently-disabled split fails the
         // flag.
-        withConfs(s,
+        GraftSession.scoped(s, Map(
           "spark.sql.adaptive.enabled" -> "true",
           "spark.sql.adaptive.skewJoin.enabled" -> "true",
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
@@ -443,7 +424,7 @@ object RuntimeFilterOps {
           "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
           "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
           "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
           val probe = Tables.t(s, dir, "lineitem").select(
             when(col("l_orderkey") % 20 === 0, col("l_suppkey"))
               .otherwise(lit(1L)).as("k"),

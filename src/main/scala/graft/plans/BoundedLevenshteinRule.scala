@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * by the built-in's contract: distance ≤ k ⟺ bounded result ≥ 0.
   *
   * Installed via [[graft.GraftExtensions]] (injectOptimizerRule) or
-  * `spark.experimental.extraOptimizations`. Only FILTER comparisons
+  * per query with [[graft.GraftSession.scoped]]. Only FILTER comparisons
   * rewrite; a projected `levenshtein(a, b)` value still computes the
   * exact distance.
   */

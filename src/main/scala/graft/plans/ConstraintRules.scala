@@ -32,6 +32,10 @@ import scala.jdk.CollectionConverters._
   * Matching uses the same machinery as the view-rewrite rule:
   * `sameResult` against the declared plans, positional attribute
   * mapping, pruning-Project peeling. `clear()` scopes declarations.
+  *
+  * Installed via [[graft.GraftExtensions]] (injectOptimizerRule) or
+  * per query with [[graft.GraftSession.scoped]]; a no-op until a
+  * constraint is declared.
   */
 object ConstraintRules extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {

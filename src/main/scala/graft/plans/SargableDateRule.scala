@@ -45,7 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * as a wall-clock for the latter).
   *
   * Installed via [[graft.GraftExtensions]] (injectOptimizerRule) or
-  * `spark.experimental.extraOptimizations`.
+  * per query with [[graft.GraftSession.scoped]].
   */
 object SargableDateRule extends Rule[LogicalPlan] {
 

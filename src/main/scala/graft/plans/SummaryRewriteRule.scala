@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import graft.GraftSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, AttributeReference, Cast, Divide, EvalMode, Expression, IsNotNull, Literal, NamedExpression, PredicateHelper, TruncTimestamp}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
@@ -54,12 +55,13 @@ import scala.jdk.CollectionConverters._
   *
   * Freshness is the registrar's contract: register a view only while
   * its materialization is current (the IncrOps refresh makes that cheap
-  * to maintain). `clear()` deregisters everything — tests and Verify
-  * wrap usage so no view leaks across queries.
+  * to maintain). `clear()` deregisters everything; [[serving]]
+  * registers, installs the rule and clears again, so no view leaks
+  * across queries.
   *
-  * Install via `spark.experimental.extraOptimizations` (scoped) or
-  * [[graft.GraftExtensions]] (cluster-wide); the rule is a no-op while
-  * the registry is empty.
+  * Install per query via [[serving]] (a [[graft.GraftSession.scoped]]
+  * scope) or cluster-wide via [[graft.GraftExtensions]]; the rule is a
+  * no-op while the registry is empty.
   */
 object SummaryRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -99,6 +101,18 @@ object SummaryRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   def clear(): Unit = mvs.clear()
+
+  /** Register `views` (name, defining aggregate, materialization), run
+    * `body` with this rule installed by [[graft.GraftSession.scoped]],
+    * then clear the registry, also when `body` throws.
+    */
+  def serving[A](s: SparkSession, views: (String, DataFrame, DataFrame)*)(body: => A): A =
+    try {
+      clear()
+      views.foreach { case (name, definition, materialized) =>
+        register(name, definition, materialized) }
+      GraftSession.scoped(s, rules = Seq(this))(body)
+    } finally clear()
 
   /** Does any leaf of `plan` scan the directory `dir` itself? Both
     * sides are qualified the same way and compared whole, so a view at

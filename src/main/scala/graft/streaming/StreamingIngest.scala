@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.operators.Ingest
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -57,8 +58,9 @@ object StreamingIngest {
     * is always stopped, even when a step or the stream throws. Returns
     * the stopped query, whose progress log stays readable.
     *
-    * Two session confs are scoped to the stream and restored after
-    * (unset again if they were only defaults):
+    * Two session confs are scoped to the stream by
+    * [[graft.GraftSession.scoped]] and restored after (unset again if
+    * they were only defaults):
     *  - `spark.sql.shuffle.partitions` is capped at [[StateShards]].
     *    State sharding is fixed at a query's first batch by this conf
     *    (it persists in the checkpoint), so it is a sizing decision, not
@@ -71,10 +73,14 @@ object StreamingIngest {
     *    families, which only RocksDB has); any other stream keeps the
     *    session's provider.
     *
-    * Not reentrant across threads: both scopes read-modify-write the
-    * SESSION-shared conf. Drains are serialized on the session, but a
-    * query on another thread reading the conf mid-drain sees the scoped
-    * values (Verify, Bench and the specs run the registry on one thread).
+    * Not reentrant across threads: the scope read-modify-writes the
+    * SESSION-shared conf. Drains are serialized on the session's lock,
+    * but a query on another thread reading the conf mid-drain sees the
+    * scoped values (Verify, Bench and the specs run the registry on one
+    * thread). A flush step runs on the draining thread and may open a
+    * scope of its own; a `foreachBatch` body runs on the stream's thread
+    * and must not open one on this session, since it would wait for the
+    * lock the drain holds.
     */
   def drain[T](ds: Dataset[T], flush: Seq[() => Unit] = Nil)(
       sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
@@ -82,15 +88,15 @@ object StreamingIngest {
     val tws = ds.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
     // A non-numeric partition conf (possible via user override) leaves
     // the cap off rather than failing the query before it starts.
-    withConf(s, ShardsKey, _.flatMap(_.toIntOption).map(p => math.min(p, StateShards).toString)) {
-      withConf(s, ProviderKey, _ => Option.when(tws)(RocksDb)) {
-        val q = sink(ds.writeStream).start()
-        try {
-          q.processAllAvailable()
-          flush.foreach { step => step(); q.processAllAvailable() }
-        } finally q.stop()
-        q
-      }
+    val cap = s.conf.getOption(ShardsKey).flatMap(_.toIntOption)
+      .map(p => ShardsKey -> math.min(p, StateShards).toString)
+    GraftSession.scoped(s, (cap ++ Option.when(tws)(ProviderKey -> RocksDb)).toMap) {
+      val q = sink(ds.writeStream).start()
+      try {
+        q.processAllAvailable()
+        flush.foreach { step => step(); q.processAllAvailable() }
+      } finally q.stop()
+      q
     }
   }
 
@@ -114,21 +120,6 @@ object StreamingIngest {
   def sentinelSteps(endMs: Long, rounds: Int, stepMs: Long)(
       push: java.sql.Timestamp => Unit): Seq[() => Unit] =
     (1 to rounds).map(i => () => push(new java.sql.Timestamp(endMs + i * stepMs)))
-
-  /** Set session conf `key` to `next(effective value)` for `body`, then
-    * restore the prior setting — unset again if it was only a default.
-    * `next` returning `None` leaves the conf untouched.
-    */
-  private def withConf[T](s: SparkSession, key: String,
-      next: Option[String] => Option[String])(body: => T): T = s.synchronized {
-    val prev = s.conf.getAll.get(key) // explicit setting only, not the default
-    val value = next(s.conf.getOption(key))
-    value.foreach(s.conf.set(key, _))
-    try body finally if (value.isDefined) prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** One keyed record in flight: payload + version (the Kafka offset in
     * the reference, `KafkaMessageWithOffset.java:11-13`).
@@ -268,6 +259,14 @@ object StreamingIngest {
     * and a RocksDB-backed store. Semantics are IDENTICAL to
     * [[latestWinsUpdates]] — `Round4dStreamSpec` differentially replays
     * the same corpus through both and asserts equal update logs.
+    *
+    * Kafka tombstones (a NULL `msg`) need nothing extra: a tombstone
+    * that wins its key is stored as the key's latest record, so it
+    * suppresses a later straggler with an older version (which would
+    * otherwise resurrect the deleted key), and it is emitted like any
+    * update, so a snapshot folded from the log applies the delete. A
+    * deleted key keeps its tombstone in state for good: there is no
+    * TTL, where Kafka drops a tombstone after `delete.retention.ms`.
     */
   class LatestWinsProcessor extends StatefulProcessor[Long, KeyedRecord, KeyedRecord] {
     @transient private var latest: ValueState[KeyedRecord] = _
@@ -291,58 +290,6 @@ object StreamingIngest {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.id)
       .transformWithState(new LatestWinsProcessor, TimeMode.None(), OutputMode.Update)
-  }
-
-  /** Latest-wins with KAFKA TOMBSTONE semantics in the state store: a
-    * record whose `msg` is NULL deletes its key. The live value and the
-    * delete marker live in SEPARATE state variables so the marker can
-    * carry its own TTL — the exact shape of Kafka's
-    * `delete.retention.ms`: the tombstone must stay remembered long
-    * enough to suppress LATE out-of-order upserts with older versions
-    * (without it, a straggler would resurrect the deleted key), yet
-    * must eventually leave the store so state is O(live keys), not
-    * O(ever-deleted keys). A tombstoned key holds only the tiny marker
-    * (the live value is cleared immediately); with a retention TTL the
-    * marker expires too. Emits every state CHANGE — upsert rows and
-    * tombstone rows — so a downstream snapshot can apply deletes.
-    */
-  class LatestWinsTombstoneProcessor(retention: TTLConfig)
-      extends StatefulProcessor[Long, KeyedRecord, KeyedRecord] {
-    @transient private var latest: ValueState[KeyedRecord] = _
-    @transient private var tomb: ValueState[KeyedRecord] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      latest = getHandle.getValueState[KeyedRecord](
-        "latest", org.apache.spark.sql.Encoders.product[KeyedRecord], TTLConfig.NONE)
-      tomb = getHandle.getValueState[KeyedRecord](
-        "tomb", org.apache.spark.sql.Encoders.product[KeyedRecord], retention)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[KeyedRecord],
-        tv: TimerValues): Iterator[KeyedRecord] = {
-      val prevVer = Seq(latest, tomb).filter(_.exists()).map(_.get().version).maxOption
-      newerThan(prevVer, rows).map { b =>
-        if (b.msg == null) { latest.clear(); tomb.update(b) }
-        else { latest.update(b); tomb.clear() }
-        b
-      }.iterator
-    }
-  }
-
-  /** [[latestWinsUpdatesTws]] with tombstone deletes. `retention` is the
-    * delete-marker TTL (Kafka `delete.retention.ms`); the default NONE
-    * keeps markers forever (strongest late-data correctness) and runs
-    * in TimeMode.None — pass a TTL to bound marker state, which flips
-    * the query to processing-time mode.
-    */
-  def latestWinsUpdatesTombstonesTws(ds: Dataset[KeyedRecord],
-      retention: TTLConfig = TTLConfig.NONE): Dataset[KeyedRecord] = {
-    import ds.sparkSession.implicits._
-    val mode = if (retention == TTLConfig.NONE) TimeMode.None()
-               else TimeMode.ProcessingTime()
-    ds.groupByKey(_.id)
-      .transformWithState(new LatestWinsTombstoneProcessor(retention), mode,
-        OutputMode.Update)
   }
 
   /** One event keyed to a (user, time-bucket) rate-limit cell. */

@@ -19,13 +19,8 @@ class ConstraintRulesSpec extends SparkSpec {
     ConstraintRules.clear()
     ConstraintRules.declareForeignKey("orders_customer",
       orders, "o_custkey", customer, "c_custkey")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ConstraintRules
-    try body finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq ConstraintRules)
-      ConstraintRules.clear()
-    }
+    try GraftSession.scoped(spark, rules = Seq(ConstraintRules))(body)
+    finally ConstraintRules.clear()
   }
 
   private def scanCount(df: DataFrame): Int =

@@ -1,14 +1,19 @@
 package graft
 
 import graft.functions.SimHash32
+import graft.plans.SargableDateRule
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The session factory's contract: its function table resolves by name
   * in every session it builds, [[GraftExtensions]] injects the same
   * table, the bench's confs are pinned, and no other file builds a
-  * session.
+  * session. The session scope's contract: [[GraftSession.scoped]]
+  * restores every conf and rule it changed, a [[GraftSession.pinned]]
+  * frame keeps its scoped plan, and no other src/main file changes the
+  * optimizer's rules or unsets a conf.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -93,5 +98,76 @@ class GraftSessionSpec extends SparkSpec {
     val hits = SourceTree.files.collect { case (p, text) if text.contains(needle) => p }
     assert(SourceTree.files.size > 100, s"scanned only ${SourceTree.files.size} files")
     assert(hits == Seq("src/main/scala/graft/GraftSession.scala"), hits.mkString(", "))
+  }
+
+  private val partitions = "spark.sql.shuffle.partitions"
+  private val untouched = "spark.sql.files.maxRecordsPerFile" // no file sets it
+  private def installed = spark.experimental.extraOptimizations
+
+  test("scoped puts an explicitly set conf back to its value") {
+    val before = spark.conf.getAll(partitions)
+    GraftSession.scoped(spark, Map(partitions -> "7")) {
+      assert(spark.conf.get(partitions) == "7")
+    }
+    assert(spark.conf.getAll.get(partitions).contains(before))
+  }
+
+  test("scoped unsets a conf that was only a default") {
+    assert(!spark.conf.getAll.contains(untouched), s"$untouched is set before the test")
+    val default = spark.conf.get(untouched)
+    GraftSession.scoped(spark, Map(untouched -> "5")) {
+      assert(spark.conf.get(untouched) == "5")
+    }
+    assert(!spark.conf.getAll.contains(untouched),
+      s"$untouched came back as an explicit ${spark.conf.getAll.get(untouched)}")
+    assert(spark.conf.get(untouched) == default)
+  }
+
+  test("scoped keeps a rule that was installed before it") {
+    assert(!installed.contains(SargableDateRule))
+    GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
+      GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
+        assert(installed.count(_ eq SargableDateRule) == 1)
+      }
+      assert(installed.contains(SargableDateRule), "the inner scope removed the outer's rule")
+    }
+    assert(!installed.contains(SargableDateRule))
+  }
+
+  test("scoped restores confs and rules when its body throws") {
+    val before = spark.conf.getAll(partitions)
+    intercept[IllegalStateException] {
+      GraftSession.scoped(spark, Map(partitions -> "7", untouched -> "5"),
+          Seq(SargableDateRule)) {
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(spark.conf.getAll.get(partitions).contains(before))
+    assert(!spark.conf.getAll.contains(untouched))
+    assert(!installed.contains(SargableDateRule))
+  }
+
+  test("a pinned frame keeps its scoped plan after the scope closes") {
+    val events = Tables.t(spark, sf, "events")
+    def build = events.where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-15")
+    val df = GraftSession.pinned(spark, rules = Seq(SargableDateRule))(build)
+    assert(!installed.contains(SargableDateRule))
+    assert(df.count() == build.count())
+    assert(!df.queryExecution.executedPlan.toString.contains("date_format"),
+      df.queryExecution.executedPlan.toString)
+    assert(build.queryExecution.executedPlan.toString.contains("date_format"),
+      "the control, built outside the scope, must keep date_format")
+  }
+
+  test("in src/main only GraftSession.scala changes optimizer rules or unsets a conf") {
+    val needles = Seq("extraOptimizations", "conf.unset")
+    val main = SourceTree.files.filter(_._1.startsWith("src/main/"))
+    val hits = for {
+      (p, text) <- main
+      if p != "src/main/scala/graft/GraftSession.scala"
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(main.size > 50, s"scanned only ${main.size} files")
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -48,9 +48,9 @@ class LayoutSpec extends SparkSpec {
     cust.write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable("b_cust")
     try {
-      val joined = withConf(
+      val joined = GraftSession.scoped(spark, Map(
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.enabled" -> "false") {
+        "spark.sql.adaptive.enabled" -> "false")) {
         val j = spark.table("b_orders")
           .join(spark.table("b_cust"),
             col("o_custkey") === col("c_custkey"))
@@ -104,14 +104,5 @@ class LayoutSpec extends SparkSpec {
     assert(!readSchema.contains("prio") && !readSchema.contains("total"),
       s"unused struct fields must be pruned from the parquet scan: $readSchema")
     assert(q.count() == Tables.t(spark, sf, "orders").count())
-  }
-
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

@@ -46,11 +46,9 @@ class PlanLintFixturesSpec extends SparkSpec {
   }
 
   test("bnlj / single-partition / wide-shuffle lists match committed fixtures") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    GraftSession.scoped(spark, Map(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "4")) {
       val r = PlanLint.audit(spark, sf, compileCodegen = false)
       assert(r.errors.isEmpty, s"plan-build errors: ${r.errors}")
       assert(r.cartesian.isEmpty, s"cartesian products: ${r.cartesian}")
@@ -60,9 +58,6 @@ class PlanLintFixturesSpec extends SparkSpec {
       assertMatches("wide_shuffles", r.wideShuffle)
       assertMatches("broadcast_fact", r.broadcastFact)
       assertMatches("broadcast_exploded", r.broadcastExploded)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevPart)
     }
   }
 
@@ -146,25 +141,20 @@ class PlanLintFixturesSpec extends SparkSpec {
     val narrow = base.select(col("id"), aggregate(col("vec"),
         lit(0.0), (a, x) => a + x).as("s"))
       .repartition(4, col("id"))
-    for (aqe <- Seq("true", "false")) {
-      val prev = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      try {
+    for (aqe <- Seq("true", "false"))
+      GraftSession.scoped(spark, Map("spark.sql.adaptive.enabled" -> aqe)) {
         assert(PlanLint.anyWideShuffle(wide.queryExecution.executedPlan),
           s"array-through-shuffle missed with aqe=$aqe")
         assert(!PlanLint.anyWideShuffle(narrow.queryExecution.executedPlan),
           s"false positive on scalar shuffle with aqe=$aqe")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-    }
+      }
     // …and on an ALREADY-MATERIALIZED adaptive plan, where executed
     // shuffles are wrapped in ShuffleQueryStageExec LEAVES that
     // TreeNode.collect does not descend into — the r13 advisor finding:
     // the pre-r14 detector returned false here, so any post-execution
     // caller (shufflesAreArrayFree runs inside the query it audits) was
     // silently blind.
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
+    GraftSession.scoped(spark, Map("spark.sql.adaptive.enabled" -> "true")) {
       val executedWide = base.repartition(4, col("id"))
       val executedNarrow = narrow.select(col("id"), col("s") + 1)
       executedWide.collect(); executedNarrow.collect()
@@ -172,6 +162,6 @@ class PlanLintFixturesSpec extends SparkSpec {
         "array-through-shuffle missed once the stage materialized")
       assert(!PlanLint.anyWideShuffle(executedNarrow.queryExecution.executedPlan),
         "false positive on a materialized scalar shuffle")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 }

@@ -209,16 +209,10 @@ object PropertySpec extends Properties("graft") {
         .select(expr(s"date_format(ts, '$pat')")).as[String].collect()(0)
       val cond = expr(s"date_format(ts, '$pat') $o '$lit0'")
       val brute = df.where(cond).select("us").as[Long].collect().toSet
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SargableDateRule
-      try {
+      GraftSession.scoped(spark, rules = Seq(graft.plans.SargableDateRule)) {
         val q = df.where(cond)
         val rewritten = !q.queryExecution.optimizedPlan.toString.contains("date_format")
         rewritten && q.select("us").as[Long].collect().toSet == brute
-      } finally {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations
-            .filterNot(_ eq graft.plans.SargableDateRule)
       }
     }
   }

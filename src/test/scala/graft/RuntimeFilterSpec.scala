@@ -24,10 +24,8 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 
   test("join_dpp_prune control: disabled DPP leaves the scan unpruned but agrees") {
-    val key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
+    GraftSession.scoped(spark,
+        Map("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false")) {
       val out = q("join_dpp_prune")
       assert(!out.queryExecution.executedPlan.toString.toLowerCase
         .contains("dynamicpruningexpression"))
@@ -39,7 +37,7 @@ class RuntimeFilterSpec extends SparkSpec {
       val on = q("join_dpp_prune").collect() // still disabled
       assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
         on.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("join_runtime_bloom plants might_contain on the probe side") {
@@ -71,11 +69,9 @@ class RuntimeFilterSpec extends SparkSpec {
       rows.forall(_.getAs[Long]("exchanges_before_join") == 0L))
     // control: the same SMJ over the raw (unbucketed) parquet shuffles
     // both sides
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.scoped(spark, Map(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false")) {
       val ctl = Tables.t(spark, sf, "orders")
         .select(col("o_custkey"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -93,9 +89,6 @@ class RuntimeFilterSpec extends SparkSpec {
       // and the bucketed result equals the control result
       assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
         ctl.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
 }

@@ -11,15 +11,6 @@ import org.apache.spark.sql.functions._
 class SargableDateSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SargableDateRule
-    try body finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SargableDateRule)
-    }
-  }
-
   private lazy val events = Tables.t(spark, sf, "events")
 
   private def hasDateFormat(df: DataFrame): Boolean =
@@ -35,7 +26,7 @@ class SargableDateSpec extends SparkSpec {
       lit("2024-01-15") === date_format(col("ts"), "yyyy-MM-dd"))
     shapes.foreach { cond =>
       val brute = events.where(cond).count()
-      withRule {
+      GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
         val q = events.where(cond)
         assert(!hasDateFormat(q), s"not rewritten: $cond\n" +
           q.queryExecution.optimizedPlan)
@@ -45,7 +36,7 @@ class SargableDateSpec extends SparkSpec {
   }
 
   test("year and month patterns rewrite too") {
-    withRule {
+    GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
       val y = events.where(date_format(col("ts"), "yyyy") === "2024")
       assert(!hasDateFormat(y))
       assert(y.count() == events.count()) // the whole fixture is 2024
@@ -56,7 +47,7 @@ class SargableDateSpec extends SparkSpec {
   }
 
   test("the rewritten bounds reach the parquet scan's pushed filters") {
-    withRule {
+    GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
       val q = events.where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-15")
         .select("event_id")
       val physical = q.queryExecution.executedPlan.toString
@@ -93,7 +84,7 @@ class SargableDateSpec extends SparkSpec {
         date_format(col("ts"), pat) < lit0)
     } {
       val brute = wild.where(cond).collect().map(_.toString).sorted.toSeq
-      withRule {
+      GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
         val q = wild.where(cond)
         assert(!hasDateFormat(q), s"not rewritten: $cond")
         assert(q.collect().map(_.toString).sorted.toSeq == brute,
@@ -103,7 +94,7 @@ class SargableDateSpec extends SparkSpec {
   }
 
   test("malformed literals and unsupported patterns are untouched") {
-    withRule {
+    GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
       // wrong width, invalid month, garbage, unsupported pattern
       Seq(
         date_format(col("ts"), "yyyy-MM-dd") === "2024-1-15",
@@ -125,7 +116,7 @@ class SargableDateSpec extends SparkSpec {
       .select(col("id"), col("s").cast("timestamp").as("ts"))
     val cond = date_format(col("ts"), "yyyy-MM-dd") === "2024-01-15"
     val brute = withNulls.where(cond).select("id").as[Long].collect().toSet
-    withRule {
+    GraftSession.scoped(spark, rules = Seq(SargableDateRule)) {
       val q = withNulls.where(cond)
       assert(!hasDateFormat(q))
       assert(q.select("id").as[Long].collect().toSet == brute)

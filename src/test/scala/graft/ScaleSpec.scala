@@ -31,17 +31,14 @@ class ScaleSpec extends SparkSpec {
     // statically; AQE's skew-join handles skewed JOINS at runtime by
     // splitting oversized partitions after seeing map output sizes.
     // Thresholds are production-sized (256MB) — shrink to fixture scale.
-    val keys = Seq(
+    GraftSession.scoped(spark, Map(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val old = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
       // hot key 0 holds ~90% of the left side
       val left = spark.range(60000)
         .selectExpr("IF(id % 10 = 0, id, 0L) AS k", "id AS payload")
@@ -52,9 +49,6 @@ class ScaleSpec extends SparkSpec {
       val finalPlan = j.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true") || finalPlan.contains("skewed"),
         s"expected AQE skew-join split markers in final plan:\n$finalPlan")
-    } finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -63,17 +57,11 @@ class ScaleSpec extends SparkSpec {
     // should inject a bloom-filter probe into the big side's scan, so
     // non-matching fact rows die before the shuffle. Thresholds are
     // production-sized; shrink them to this fixture's scale.
-    val old = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "50MB")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join path
+    GraftSession.scoped(spark, Map(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "50MB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) { // force shuffle join path
       val li = Tables.t(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
       val sel = Tables.t(spark, sf, "orders")
         .where(col("o_orderpriority") === "1-URGENT")
@@ -89,9 +77,6 @@ class ScaleSpec extends SparkSpec {
           .where(col("o_orderpriority") === "1-URGENT"),
           col("l_orderkey") === col("o_orderkey")).count()
       assert(j.count() == expected)
-    } finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -139,9 +124,7 @@ class ScaleSpec extends SparkSpec {
         levenshtein(col("a.p_name"), col("b.p_name")).cast("long").as("dist"))
       .where(col("dist") <= 3)
     val before = q().collect().toSet
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.BoundedLevenshteinRule
-    try {
+    GraftSession.scoped(spark, rules = Seq(graft.plans.BoundedLevenshteinRule)) {
       val opt = q()
       val boundedInPlan = opt.queryExecution.optimizedPlan
         .collect { case node => node.expressions }.flatten
@@ -151,10 +134,6 @@ class ScaleSpec extends SparkSpec {
         })
       assert(boundedInPlan, "filter must carry the thresholded levenshtein form")
       assert(opt.collect().toSet == before, "rewrite must not change results")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.BoundedLevenshteinRule)
     }
   }
 }

@@ -182,9 +182,7 @@ class SimilarityScaleSpec extends SparkSpec {
     // broadcast is disabled so the tiny test corpus can't mask the
     // at-scale plan — the same plan the optimizer picks once the
     // corpus outgrows the threshold.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.scoped(spark, Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val e = Tables.t(spark, sf, "embeddings").select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("em"))
       val plan = SimilarityOps.annTopKPortableGrown(e, k = 5, dims = 64)
@@ -194,7 +192,7 @@ class SimilarityScaleSpec extends SparkSpec {
           "(not a corpus broadcast) once size-based broadcast is off")
       assert(!plan.toString.contains("BroadcastExchange"),
         "no hinted broadcast may survive with the size threshold off")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("adaptive SRP width: planted pairs survive above the plane floor") {

@@ -83,11 +83,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tombstone upsert: deletes clear keys, markers suppress late stragglers") {
-    // two state variables (live value + delete marker) = multiple column
-    // families, which the drain's RocksDB provider gives it
+    // a tombstone is stored as its key's latest record: that stored
+    // marker is what suppresses the late straggler
     val ms = MemoryStream[KeyedRecord]
     val rows = StreamingIngest.drainTable(
-        StreamingIngest.latestWinsUpdatesTombstonesTws(ms.toDS()), "lwt_test", "update",
+        StreamingIngest.latestWinsUpdatesTws(ms.toDS()), "lwt_test", "update",
         flush = Seq[() => Unit](
           () => ms.addData(KeyedRecord(1, "a", 10), KeyedRecord(2, "x", 5)),
           () => ms.addData(KeyedRecord(1, null, 15)), // tombstone: key 1 deleted

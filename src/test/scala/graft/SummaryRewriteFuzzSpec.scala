@@ -76,12 +76,8 @@ class SummaryRewriteFuzzSpec extends SparkSpec {
       val aggPick = rnd.nextInt(6)
       val predPick = rnd.nextInt(5)
       val expected = canon(buildQuery(qGrain, aggPick, predPick))
-      SummaryRewriteRule.clear()
-      SummaryRewriteRule.register(s"fuzz_$viewGrain", viewDf(viewGrain),
-        spark.read.parquet(mvDirs(viewGrain)))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SummaryRewriteRule
-      try {
+      SummaryRewriteRule.serving(spark,
+          (s"fuzz_$viewGrain", viewDf(viewGrain), spark.read.parquet(mvDirs(viewGrain)))) {
         val q = buildQuery(qGrain, aggPick, predPick)
         val usedMv = SummaryRewriteRule.scansPath(
           q.queryExecution.optimizedPlan, mvDirs(viewGrain))
@@ -89,10 +85,6 @@ class SummaryRewriteFuzzSpec extends SparkSpec {
         assert(canon(q) == expected,
           s"case $i diverged: view=$viewGrain query=$qGrain agg=$aggPick " +
             s"pred=$predPick fired=$usedMv\n" + q.queryExecution.optimizedPlan)
-      } finally {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-        SummaryRewriteRule.clear()
       }
     }
     // the mix must actually exercise the rule — day/month views serve

@@ -19,18 +19,8 @@ class SummaryRewriteSpec extends SparkSpec {
     d
   }
 
-  private def withRule[T](body: => T): T = {
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("monthly_orders",
-      IncrOps.monthlyPartials(orders), spark.read.parquet(mvDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try body finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
-    }
-  }
+  private def monthlyView =
+    ("monthly_orders", IncrOps.monthlyPartials(orders), spark.read.parquet(mvDir))
 
   private def scansMv(df: DataFrame): Boolean =
     SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, mvDir)
@@ -38,7 +28,7 @@ class SummaryRewriteSpec extends SparkSpec {
   test("exact-match aggregate rewrites to the summary scan with identical results") {
     val expected = IncrOps.monthlyPartials(orders)
       .orderBy("month").collect()
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = IncrOps.monthlyPartials(orders).orderBy("month")
       assert(scansMv(q), "rewrite did not fire:\n" + q.queryExecution.optimizedPlan)
       assert(q.collect().toSeq == expected.toSeq)
@@ -46,7 +36,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("a query needing a subset of the view's columns rewrites too") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(count(lit(1)).as("n"))
         .orderBy("month")
@@ -60,7 +50,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("a filtered query must NOT rewrite (the view has no filter)") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = IncrOps.monthlyPartials(
         orders.where(col("o_orderdate") >= lit("1995-01-01").cast("timestamp")))
       assert(!scansMv(q), "rewrite fired on a filtered child:\n" +
@@ -69,7 +59,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("an unrelated grouping must NOT rewrite; an ALIGNED coarser one rolls up") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       // grouping by a column unrelated to the view's month key: refuse
       val q = orders.groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
@@ -88,7 +78,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("an aggregate the view does not store must NOT rewrite") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(max(col("o_totalprice")).as("mx"))
       assert(!scansMv(q), "rewrite fired for an unstored aggregate:\n" +
@@ -97,7 +87,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("scalar computation over stored aggregates rebases (date_format, div)") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = IncrOps.monthlyPartials(orders)
         .select(date_format(col("month"), "yyyy-MM").as("m"),
           expr("cents div n_orders").as("avg_cents"))
@@ -114,7 +104,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("an avg() the view stores only as sum/count parts must NOT rewrite") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(avg(col("o_totalprice")).as("a"))
       assert(!scansMv(q), "avg() wrongly rewrote:\n" + q.queryExecution.optimizedPlan)
@@ -135,7 +125,7 @@ class SummaryRewriteSpec extends SparkSpec {
     assert(expected.nonEmpty && expected.length <
       IncrOps.monthlyPartials(orders).count(),
       "fixture must straddle the cut for the test to mean anything")
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = build()
       assert(scansMv(q), "group-key filter did not rewrite:\n" +
         q.queryExecution.optimizedPlan)
@@ -151,7 +141,7 @@ class SummaryRewriteSpec extends SparkSpec {
       .orderBy("month")
     val expected = build().collect()
     assert(expected.nonEmpty)
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = build()
       assert(scansMv(q), "scalar-over-group filter did not rewrite:\n" +
         q.queryExecution.optimizedPlan)
@@ -160,7 +150,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("filter tier: a predicate on a NON-grouping column must still refuse") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = orders
         .where(col("o_totalprice") > 1000.0)
         .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
@@ -188,7 +178,7 @@ class SummaryRewriteSpec extends SparkSpec {
       .orderBy("month")
     val expected = build().collect()
     assert(expected.nonEmpty)
-    withDayRule {
+    SummaryRewriteRule.serving(spark, dayView) {
       val q = build()
       assert(scansDayMv(q), "day-level filter rollup did not fire:\n" +
         q.queryExecution.optimizedPlan)
@@ -206,18 +196,8 @@ class SummaryRewriteSpec extends SparkSpec {
     d
   }
 
-  private def withAvgRule[T](body: => T): T = {
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("monthly_avg_orders",
-      IncrOps.monthlyAvgPartials(orders), spark.read.parquet(avgMvDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try body finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
-    }
-  }
+  private def avgView =
+    ("monthly_avg_orders", IncrOps.monthlyAvgPartials(orders), spark.read.parquet(avgMvDir))
 
   private def scansAvgMv(df: DataFrame): Boolean =
     SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, avgMvDir)
@@ -227,7 +207,7 @@ class SummaryRewriteSpec extends SparkSpec {
       .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
       .agg(avg(centsE).as("a")).orderBy("month")
     val expected = build().collect()
-    withAvgRule {
+    SummaryRewriteRule.serving(spark, avgView) {
       val q = build()
       assert(scansAvgMv(q), "derived avg did not fire:\n" +
         q.queryExecution.optimizedPlan)
@@ -239,7 +219,7 @@ class SummaryRewriteSpec extends SparkSpec {
     // monthlyPartials stores count(1) + sum(cents); cents is nullable
     // (o_totalprice is), so avg(cents) must refuse — count(*) counts
     // rows avg must not divide by.
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(avg(centsE).as("a"))
       assert(!scansMv(q), "avg wrongly derived from count(*) with nullable child:\n" +
@@ -248,7 +228,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("derived avg: DISTINCT and decimal averages refuse") {
-    withAvgRule {
+    SummaryRewriteRule.serving(spark, avgView) {
       val qd = orders.groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(expr("avg(DISTINCT CAST(round(o_totalprice * 100) AS BIGINT))").as("a"))
       assert(!scansAvgMv(qd), "avg(DISTINCT) wrongly derived")
@@ -267,20 +247,12 @@ class SummaryRewriteSpec extends SparkSpec {
       .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
       .agg(avg(centsE).as("a")).orderBy("month")
     val expected = build().collect()
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("daily_avg_orders", dayAvg,
-      spark.read.parquet(dayAvgDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try {
+    SummaryRewriteRule.serving(spark,
+        ("daily_avg_orders", dayAvg, spark.read.parquet(dayAvgDir))) {
       val q = build()
       assert(SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, dayAvgDir),
         "rollup derived avg did not fire:\n" + q.queryExecution.optimizedPlan)
       assert(q.collect().toSeq == expected.toSeq)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
     }
   }
 
@@ -304,19 +276,12 @@ class SummaryRewriteSpec extends SparkSpec {
       .groupBy(col("m2"), date_trunc("month", col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("n")).orderBy("m")
     val expected = build().collect()
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("month_prio_orders", mv, spark.read.parquet(dupDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try {
+    SummaryRewriteRule.serving(spark,
+        ("month_prio_orders", mv, spark.read.parquet(dupDir))) {
       val q = build()
       assert(q.collect().toSeq == expected.toSeq,
         "duplicate-group query corrupted by view match:\n" +
           q.queryExecution.optimizedPlan)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
     }
   }
 
@@ -333,25 +298,14 @@ class SummaryRewriteSpec extends SparkSpec {
     d
   }
 
-  private def withDayRule[T](body: => T): T = {
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("daily_orders",
-      dailyPartials, spark.read.parquet(dayMvDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try body finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
-    }
-  }
+  private def dayView = ("daily_orders", dailyPartials, spark.read.parquet(dayMvDir))
 
   private def scansDayMv(df: DataFrame): Boolean =
     SummaryRewriteRule.scansPath(df.queryExecution.optimizedPlan, dayMvDir)
 
   test("rollup: a MONTH aggregate is served from the DAY view by re-aggregation") {
     val expected = IncrOps.monthlyPartials(orders).orderBy("month").collect()
-    withDayRule {
+    SummaryRewriteRule.serving(spark, dayView) {
       val q = IncrOps.monthlyPartials(orders).orderBy("month")
       assert(scansDayMv(q), "month-from-day rollup did not fire:\n" +
         q.queryExecution.optimizedPlan)
@@ -367,7 +321,7 @@ class SummaryRewriteSpec extends SparkSpec {
       .select(col("y"), col("n"), expr("cents div n").as("avg_cents"))
       .orderBy("y")
     val expected = build().collect()
-    withDayRule {
+    SummaryRewriteRule.serving(spark, dayView) {
       val q = build()
       assert(scansDayMv(q), "year-from-day rollup did not fire:\n" +
         q.queryExecution.optimizedPlan)
@@ -376,7 +330,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("rollup: week-from-day fires, but month-from-WEEK view must refuse") {
-    withDayRule {
+    SummaryRewriteRule.serving(spark, dayView) {
       val wk = orders.groupBy(date_trunc("week", col("o_orderdate")).as("w"))
         .agg(count(lit(1)).as("n"))
       assert(scansDayMv(wk), "week-from-day rollup did not fire")
@@ -386,24 +340,17 @@ class SummaryRewriteSpec extends SparkSpec {
     val weekly = orders.groupBy(date_trunc("week", col("o_orderdate")).as("w"))
       .agg(count(lit(1)).as("n"))
     weekly.write.mode("overwrite").parquet(weekDir)
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("weekly_orders", weekly, spark.read.parquet(weekDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try {
+    SummaryRewriteRule.serving(spark,
+        ("weekly_orders", weekly, spark.read.parquet(weekDir))) {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("m"))
         .agg(count(lit(1)).as("n"))
       assert(!SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, weekDir),
         "month wrongly served from week buckets:\n" + q.queryExecution.optimizedPlan)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
     }
   }
 
   test("rollup: avg() and DISTINCT aggregates refuse") {
-    withDayRule {
+    SummaryRewriteRule.serving(spark, dayView) {
       val qAvg = orders.groupBy(date_trunc("month", col("o_orderdate")).as("m"))
         .agg(avg(col("o_totalprice")).as("a"))
       assert(!scansDayMv(qAvg), "avg wrongly rolled up")
@@ -418,31 +365,17 @@ class SummaryRewriteSpec extends SparkSpec {
     val dbl = orders.groupBy(date_trunc("day", col("o_orderdate")).as("day"))
       .agg(sum(col("o_totalprice")).as("s"))
     dbl.write.mode("overwrite").parquet(dblDir)
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("daily_dbl", dbl, spark.read.parquet(dblDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try {
+    SummaryRewriteRule.serving(spark,
+        ("daily_dbl", dbl, spark.read.parquet(dblDir))) {
       val q = orders.groupBy(date_trunc("month", col("o_orderdate")).as("m"))
         .agg(sum(col("o_totalprice")).as("s"))
       assert(!SummaryRewriteRule.scansPath(q.queryExecution.optimizedPlan, dblDir),
         "double sum wrongly rolled up")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
     }
   }
 
   test("with both grains registered, a month query prefers the exact monthly view") {
-    SummaryRewriteRule.clear()
-    SummaryRewriteRule.register("daily_orders",
-      dailyPartials, spark.read.parquet(dayMvDir))
-    SummaryRewriteRule.register("monthly_orders",
-      IncrOps.monthlyPartials(orders), spark.read.parquet(mvDir))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SummaryRewriteRule
-    try {
+    SummaryRewriteRule.serving(spark, dayView, monthlyView) {
       val q = IncrOps.monthlyPartials(orders)
       assert(scansMv(q), "exact monthly view not chosen:\n" +
         q.queryExecution.optimizedPlan)
@@ -451,15 +384,11 @@ class SummaryRewriteSpec extends SparkSpec {
       val wk = orders.groupBy(date_trunc("week", col("o_orderdate")).as("w"))
         .agg(count(lit(1)).as("n"))
       assert(scansDayMv(wk), "weekly rollup lost when both views registered")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq SummaryRewriteRule)
-      SummaryRewriteRule.clear()
     }
   }
 
   test("rollup: rolled result joins downstream like any aggregate") {
-    withDayRule {
+    SummaryRewriteRule.serving(spark, dayView) {
       val m = IncrOps.monthlyPartials(orders)
       val joined = m.as("a").join(m.as("b"), "month")
         .select(col("month"), col("a.cents"))
@@ -469,7 +398,7 @@ class SummaryRewriteSpec extends SparkSpec {
   }
 
   test("rewritten output composes with downstream operators (exprIds preserved)") {
-    withRule {
+    SummaryRewriteRule.serving(spark, monthlyView) {
       val m = IncrOps.monthlyPartials(orders)
       // join the rewritten aggregate with itself through a projection —
       // any broken exprId would fail analysis or return garbage
