@@ -26,8 +26,9 @@ import org.apache.spark.sql.graftinternal.GraftParquet
   * dedup by offset, JSON-lines snapshot that replaces the previous one.
   *
   * One pass: the job is a single Spark write that parses each record
-  * once ([[Ingest.parseTagged]]: the byte-level kernel, with `from_json`
-  * for the records it declines) and reports its counts from that write
+  * once ([[Ingest.parseTagged]]: one expression in whole-stage generated
+  * code — a byte scanner and a Jackson kernel, with `from_json`'s
+  * evaluator for the records they decline) and reports its counts from that write
   * ([[Report]]) — there is no trailing `count()`. The kafka-parquet scan
   * is planned from one footer read on the driver
   * ([[org.apache.spark.sql.graftinternal.GraftParquet.footerSchema]]),

@@ -1,8 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Writes the rows of `df`'s own plan to `path` as one parquet file.
+    * A scoped query builds and pins its plan inside its scope
+    * (`GraftSession.pinned`); `df.coalesce(1)` would be a new Dataset,
+    * optimized again after the scope has closed, without its rules or
+    * confs. `localCheckpoint` runs `df`'s own executed plan.
+    */
+  def dump(df: DataFrame, path: String): Unit =
+    df.localCheckpoint().coalesce(1).write.mode("overwrite").parquet(path)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     // Optional 3rd+ args: restrict the dump to the named queries (local
@@ -32,8 +42,7 @@ object Verify {
     val ran = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
     ran.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try dump(fn(spark, sfDir), s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.toString)
         failed += name -> msg

@@ -23,11 +23,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (`HadoopKafkaConsumer.java:92-101,139-148`).
   *
   * Here that becomes a declarative DataFrame pipeline:
-  * one parse per record — a byte-level kernel, with `from_json` for the
-  * records it declines (malformed = skip-bad-records, or a dead-letter
-  * slice) → `groupBy(key)` + `max_by(struct(payload), version)` (one
-  * shuffle between a partial and a final sort aggregate — unlike the
-  * reference's per-reducer in-heap HashMap, the sort can spill) →
+  * one parse per record — one compiled expression with three tiers: a
+  * byte scanner and a Jackson kernel for the flat records they are sure
+  * of, and `from_json`'s evaluator for every record they decline
+  * (malformed = skip-bad-records, or a dead-letter slice) →
+  * `groupBy(key)` + `max_by(struct(payload), version)` (one shuffle
+  * between a partial and a final sort aggregate — unlike the reference's
+  * per-reducer in-heap HashMap, the sort can spill) →
   * `to_json` → a sink that publishes the snapshot through a temp
   * directory and a rename, so a failed write keeps the old one.
   *
@@ -51,12 +53,13 @@ object Ingest {
     * `df` plus the parsed struct `__j` (the schema's fields, `null` when
     * absent) and [[ParsedOk]]. No row is dropped.
     *
-    * The parse is `coalesce(FlatJsonParse(json), from_json(json))`. The
-    * byte-level kernel ([[graft.functions.FlatJsonParse]]) returns the
-    * struct `from_json` would for the flat records it is sure of, and
-    * null for the rest; `coalesce` evaluates `from_json` only for those
-    * declined records (in the benchmark's log, the malformed 1%). So
-    * `from_json` stays the single definition of the semantics.
+    * The parse is one expression, [[graft.functions.FlatJsonParse]],
+    * with three tiers: a byte scanner takes flat objects of ASCII bytes,
+    * a Jackson kernel takes the other flat records it is sure of, and
+    * `from_json`'s own evaluator answers every record both decline (in
+    * the benchmark's log, the malformed 1%). So `from_json` stays the
+    * single definition of the semantics, and with no `CodegenFallback`
+    * in the expression the parse compiles into whole-stage code.
     *
     * The parse is evaluated once per record. It sits inside a
     * one-element `inline(array(struct(...)))` — a Generate node — which
@@ -71,10 +74,8 @@ object Ingest {
     // from_json in PERMISSIVE mode yields an all-null row (not a null
     // struct) on malformed input, so null-struct checks can't detect it;
     // a corrupt-record sentinel column can.
-    val exact = from_json(col(jsonCol), FlatJsonParse.withCorrupt(schema),
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> FlatJsonParse.Corrupt))
-    val fast = GraftDataset.column(FlatJsonParse(GraftDataset.expr(col(jsonCol)), schema))
-    val j = coalesce(fast, exact)
+    val j = GraftDataset.column(FlatJsonParse(GraftDataset.expr(col(jsonCol)), schema,
+      Some(FlatJsonParse.fromJson(df.sparkSession, schema))))
     df.select(df.columns.toIndexedSeq.map(col) :+ inline(array(struct(j.as("__j")))): _*)
       .withColumn(ParsedOk, col("__j").isNotNull && col(s"__j.${FlatJsonParse.Corrupt}").isNull)
   }

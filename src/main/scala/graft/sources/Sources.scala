@@ -51,10 +51,10 @@ object Sources {
     * reference's per-partition dedup (`KafkaContext.java:103`);
     * `false` is the principled global dedup.
     *
-    * One parse per record ([[Ingest.parseTagged]]: the byte-level
-    * kernel, and `from_json` only for the records it declines).
-    * `observeTagged`
-    * sees every tagged record — `partition`, `offset`, `value`,
+    * One parse per record ([[Ingest.parseTagged]]: one compiled
+    * expression — a byte scanner and a Jackson kernel, and `from_json`'s
+    * evaluator only for the records they decline). `observeTagged` sees
+    * every tagged record — `partition`, `offset`, `value`,
     * [[Ingest.ParsedOk]] — before malformed ones are dropped; `IngestJob`
     * hangs its `Dataset.observe` counters there.
     */

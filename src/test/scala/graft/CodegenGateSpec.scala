@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -198,6 +199,23 @@ class CodegenGateSpec extends AnyFunSuite {
   gate("FlatJsonParse binary input cast",
     FlatJsonParse(Cast(ref(0, BinaryType), StringType), graft.operators.Ingest.msgSchema),
     Seq(InternalRow("""{"id":1,"msg":"b"}""".getBytes("UTF-8")), InternalRow(null)))
+
+  // the parse as Ingest.parseTagged builds it: declined rows answered by
+  // from_json's evaluator
+  private val fused = FlatJsonParse(ref(0, StringType), graft.operators.Ingest.msgSchema,
+    Some(JsonToStructsEvaluator(FlatJsonParse.Options, FlatJsonParse.withCorrupt(graft.operators.Ingest.msgSchema),
+      "_corrupt_record", Some("UTC"), variantAllowDuplicateKeys = false)))
+  gate("FlatJsonParse with the from_json fallback", fused, jsonRows)
+
+  test("FlatJsonParse with the fallback: compiled declined and corrupt rows are from_json's") {
+    val proj = GenerateUnsafeProjection.generate(Seq(fused))
+    val st = FlatJsonParse.withCorrupt(graft.operators.Ingest.msgSchema)
+    def out(row: InternalRow) = norm(proj(row).getStruct(0, 3), st)
+    assert(out(jsonRows(0)) === Seq(7L, "a", null))
+    assert(out(jsonRows(2)) === norm(fused.exact.get.evaluate(jsonRows(2).getUTF8String(0)), st))
+    assert(out(jsonRows(3)) === Seq(null, null, "not json"))
+    assert(proj(jsonRows(4)).isNullAt(0))
+  }
 
   test("FlatJsonParse: compiled rows carry the fields, a null _corrupt, and null where declined") {
     val proj = GenerateUnsafeProjection.generate(

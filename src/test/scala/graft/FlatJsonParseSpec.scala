@@ -11,13 +11,15 @@ import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Differential spec of [[Ingest.parseTagged]]'s byte-level kernel
-  * ([[FlatJsonParse]] in front of `from_json`) against `from_json`
-  * alone, over a seeded corpus of well-formed and broken payloads: every
-  * record must come out with the same [[Ingest.ParsedOk]] tag and the
-  * same parsed struct. It also pins that the kernel does the work (it
-  * takes at least 90% of the well-formed records) and that it never
-  * takes a record `from_json` tags corrupt.
+/** Differential spec of [[Ingest.parseTagged]]'s parse
+  * ([[FlatJsonParse]]: byte scanner, Jackson kernel, then `from_json`'s
+  * evaluator) against `from_json` alone, over a seeded corpus of
+  * well-formed and broken payloads: every record must come out with the
+  * same [[Ingest.ParsedOk]] tag and the same parsed struct. It also pins
+  * that the fast tiers do the work (they take at least 90% of the
+  * well-formed records, and the scanner takes every benchmark-shaped
+  * record), that they never take a record `from_json` tags corrupt, and
+  * which records the scanner hands on.
   */
 class FlatJsonParseSpec extends SparkSpec {
   import spark.implicits._
@@ -155,6 +157,69 @@ class FlatJsonParseSpec extends SparkSpec {
     assert(parse(b("""{"msg":"""") ++ bytes(0xC0, 0xAF) ++ b(""""}""")) == null, "overlong UTF-8")
     assert(kernel(StructType(Seq(StructField("d", DoubleType))))
       .eval(InternalRow(UTF8String.fromString("""{"d":1}"""))) == null, "non-flat schema")
+  }
+
+  private def scan(schema: StructType, bs: Array[Byte]): InternalRow =
+    FlatJsonParse.scan(UTF8String.fromBytes(bs), schema.fieldNames,
+      schema.fields.map(f => FlatJsonParse.kind(f.dataType)))
+
+  test("byte tier: takes flat objects of ASCII bytes with exactly the schema's keys") {
+    def fields(j: String) = {
+      val r = scan(Ingest.msgSchema, b(j))
+      assert(r != null, j)
+      (if (r.isNullAt(0)) null else r.getLong(0), Option(r.getUTF8String(1)).map(_.toString).orNull,
+        r.isNullAt(2))
+    }
+    assert(fields("""{"id":1,"msg":"a"}""") == ((1L, "a", true)))
+    assert(fields("""{"msg":"a","id":1}""") == ((1L, "a", true)))
+    assert(fields("{\t\"id\" :\r\n-12 ,  \"msg\"\n:\"b c/d\u007f\" }") == ((-12L, "b c/d\u007f", true)))
+    assert(fields("""{"id":null,"msg":null}""") == ((null, null, true)))
+    assert(fields("""{"msg":"","id":0}""") == ((0L, "", true)))
+    assert(fields("""{"id":999999999999999999}""") == ((999999999999999999L, null, true)))
+    assert(fields("""{"id":-999999999999999999}""") == ((-999999999999999999L, null, true)))
+    assert(fields("{}") == ((null, null, true)))
+    assert(fields("{ \n}") == ((null, null, true)))
+    val k = scan(kSchema, b("""{"k":42}"""))
+    assert(k != null && k.getLong(0) == 42L && k.isNullAt(1))
+  }
+
+  test("byte tier: hands everything else on to the Jackson kernel") {
+    val handed = Seq(
+      """{"msg":"a\"b"}""", "{\"msg\":\"\\u0061\"}", """{"msg":"a\/b"}""",   // escapes
+      "{\"msg\":\"a\tb\"}", "{\"msg\":\"a\u0001b\"}",                   // control bytes
+      """{"id":1,"x":2}""", """{"x":null}""",                               // unknown keys
+      """{"ID":1}""", """{"Msg":"a"}""", """{"_corrupt":"x"}""",             // case clash, corrupt column
+      """{"id":1,"id":2}""", """{"msg":null,"msg":"a"}""",                  // duplicate keys
+      """{"id":1.5}""", """{"id":1.0}""", """{"id":1e3}""", """{"id":1E3}""", // floats, exponents
+      """{"id":01}""", """{"id":00}""", """{"id":-01}""",                   // leading zeros
+      """{"id":1000000000000000000}""", """{"id":-9223372036854775808}""",  // 19 digits
+      """{"id":-}""", """{"id":-,"msg":"a"}""", """{"id":+1}""",            // bare sign
+      """{"id":"1"}""", """{"msg":1}""", """{"id":true}""", """{"msg":{}}""", """{"id":[1]}""", // kinds
+      """{"id":nul}""", """{"id":nulll}""", """{"id":1,}""", """{,"id":1}""", """{"id" 1}""", // syntax
+      """{"id":1""", """{"id":1,""", """{"msg":"a""", "{", "",              // truncated
+      """ {"id":1}""", "\n{}",                                               // leading whitespace
+      """{"id":1} """, """{"id":1}x""", """{"id":1}}""", "{}\n")           // trailing bytes
+    for (j <- handed) assert(scan(Ingest.msgSchema, b(j)) == null, j)
+    val raw = Seq(
+      bytes(0xEF, 0xBB, 0xBF) ++ b("""{"id":1}"""),                         // BOM
+      b("""{"msg":"caf""") ++ bytes(0xC3, 0xA9) ++ b(""""}"""),             // non-ASCII
+      b("""{"msg":"""") ++ bytes(0xFF) ++ b(""""}"""),
+      b("""{"""") ++ bytes(0xC3, 0xA9) ++ b("""":1}"""),
+      bytes('{', 0) ++ b(""""id":1}"""))
+    for (bs <- raw) assert(scan(Ingest.msgSchema, bs) == null, bs.toSeq)
+  }
+
+  test("byte tier: takes every benchmark-shaped payload") {
+    // the keyed log's well-formed records: ids 7 * idx + 1 over the ids of
+    // a 200,000-record log, messages of 90 lowercase ASCII letters
+    val rnd = new scala.util.Random(20261020L)
+    for (_ <- 0 until 5000) {
+      val id = rnd.nextInt(20000) * 7L + 1
+      val msg = Array.fill(90)(('a' + rnd.nextInt(26)).toChar).mkString
+      val j = s"""{"id":$id,"msg":"$msg"}"""
+      val r = scan(Ingest.msgSchema, b(j))
+      assert(r != null && r.getLong(0) == id && r.getUTF8String(1).toString == msg && r.isNullAt(2), j)
+    }
   }
 
   test("corpus: seeded, at least 2,000 payloads, every category present") {
